@@ -55,17 +55,17 @@ object MmProbe {
     {
       import spark.implicits._
       import java.nio.file.{Files, Paths}
-      val users = Option(new java.io.File("/root/reference").listFiles())
-        .getOrElse(Array.empty)
+      val root = graft.ig.Instagram.referenceDir()
+      val users = new java.io.File(root).listFiles()
         .filter(d => d.isDirectory && new java.io.File(d, s"${d.getName}.jpg").exists())
         .map(_.getName).sorted.take(3)
       if (users.length < 2) {
-        println("JPEG probe skipped: need >=2 creator dirs with JPEGs under /root/reference")
+        println(s"JPEG probe skipped: need >=2 creator dirs with JPEGs under $root")
         spark.stop()
         return
       }
-      val orig = Files.readAllBytes(Paths.get(s"/root/reference/${users(0)}/${users(0)}.jpg"))
-      val other = Files.readAllBytes(Paths.get(s"/root/reference/${users(1)}/${users(1)}.jpg"))
+      val orig = Files.readAllBytes(Paths.get(s"$root/${users(0)}/${users(0)}.jpg"))
+      val other = Files.readAllBytes(Paths.get(s"$root/${users(1)}/${users(1)}.jpg"))
       val perturbed = orig.clone()
       for (off <- Seq(orig.length / 2, orig.length / 2 + 101, orig.length / 2 + 257))
         perturbed(off) = (perturbed(off) ^ 0x5a).toByte

@@ -2,20 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single place to build correctly-configured local sessions.
-  *
-  * Settings that matter for correctness & scale:
-  *  - `session.timeZone=UTC`: reference uses local-time epoch conversion
-  *    (SURVEY §1.2); we pin UTC so hour/date derivations are reproducible.
-  *  - `legacy.parquet.nanosAsLong=true`: tolerance for TIMESTAMP(NANOS)
-  *    parquet (one historical testdata generation used it; the current
-  *    data is TIMESTAMP_NTZ micros, which this flag doesn't affect).
-  *    [[graft.sources.Tables.events]] branches on the scanned schema and
-  *    handles both encodings.
-  *  - shuffle partitions = cores for local runs (not the 200 default);
-  *    on a real cluster this would be sized to data volume / AQE target.
-  *  - AQE on: runtime coalescing + skew-join splitting at scale.
-  */
 /** Dedicated sessions for iterative loop operators (ADVICE r10): loops
   * want AQE off and data-sized reducer counts, and mutating the USER's
   * session conf for that is neither reentrant nor thread-safe. Each base
@@ -42,6 +28,35 @@ object LoopSessions {
   def locked[T](body: => T): T = synchronized(body)
 }
 
+/** Single place to build correctly-configured local sessions.
+  *
+  * Settings that matter for correctness & scale:
+  *  - `session.timeZone=UTC`: reference uses local-time epoch conversion
+  *    (SURVEY §1.2); we pin UTC so hour/date derivations are reproducible.
+  *  - `legacy.parquet.nanosAsLong=true`: tolerance for TIMESTAMP(NANOS)
+  *    parquet (one historical testdata generation used it; the current
+  *    data is TIMESTAMP_NTZ micros, which this flag doesn't affect).
+  *    [[graft.sources.Tables.events]] branches on the scanned schema and
+  *    handles both encodings.
+  *  - shuffle partitions = cores for local runs (not the 200 default);
+  *    on a real cluster this would be sized to data volume / AQE target.
+  *  - AQE on: runtime coalescing + skew-join splitting at scale.
+  *  - generated classes are reused across calls. One `ig_report_synth`
+  *    call compiles ~170 distinct whole-stage classes and repeated calls
+  *    walk the same sequence, so Spark's 100-entry LRU codegen cache
+  *    evicted each class just before it was needed again: every call
+  *    recompiled all of them, each new class cold in the JIT. Two
+  *    settings fix it:
+  *    - `codegen.cache.maxEntries=1000` (static conf, so builder-only):
+  *      headroom over one report;
+  *    - `codegen.useIdInClassName=false`: AQE numbers whole-stage codegen
+  *      stages in stage-completion order, which varies from call to call,
+  *      and the id in the class name made 0–16 classes per repeat call
+  *      new cache keys. Without it a repeat call compiles 0 classes, and
+  *      the first compiles 148 instead of 169 (stages whose code is
+  *      identical share one class). The plan's `*(id)` still names the
+  *      stage.
+  */
 object Sessions {
   def local(cpus: String, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -52,6 +67,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // localCheckpoint blocks are freed by the ContextCleaner only after

@@ -121,6 +121,17 @@ object Instagram {
 
   /** Default reference-data location (shipped goldens). */
   val referenceRoot = "/root/reference"
-  def profilesGlob(root: String = referenceRoot): String = s"$root/*/userInfo.json"
-  def postsGlob(root: String = referenceRoot): String = s"$root/*/postInfo.json"
+  /** The reference fixtures in use: `GRAFT_REFERENCE_ROOT` if set, else
+    * [[referenceRoot]]. Every reader of the shipped fixtures resolves the
+    * root here, so an absent root fails with this one message instead of
+    * a `PATH_NOT_FOUND` per read or an NPE from `File.listFiles()`. */
+  def referenceDir(): String = {
+    val root = sys.env.getOrElse("GRAFT_REFERENCE_ROOT", referenceRoot)
+    if (!new java.io.File(root).isDirectory)
+      throw new java.io.FileNotFoundException(
+        s"reference fixtures absent at $root (set GRAFT_REFERENCE_ROOT to their directory)")
+    root
+  }
+  def profilesGlob(root: String = referenceDir()): String = s"$root/*/userInfo.json"
+  def postsGlob(root: String = referenceDir()): String = s"$root/*/postInfo.json"
 }

@@ -116,7 +116,8 @@ object SynthIg {
     *  - partitions are sized to the data (the pageRankConvergedLoop
     *    rule): at base scale the window would otherwise fan 150 k rows
     *    across 32 tasks per downstream stage; growing data raises the
-    *    count back to the deployment setting.
+    *    count back to the deployment setting. The orders row count comes
+    *    from the parquet footer, so sizing runs no job.
     * The profile side keeps its parquet stats, so the blocks' dim-side
     * broadcasts are unaffected (the r13 stat-loss failure mode flipped
     * joins whose BROADCAST side was checkpointed — here the checkpointed
@@ -129,7 +130,8 @@ object SynthIg {
     graft.LoopSessions.locked {
       val nPart = math.min(
         spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-        math.max(4L, Tables.orders(spark, dir).count() / 100000L)).toInt
+        math.max(4L, Tables.footerRowCount(spark, dir, "orders")
+          .getOrElse(Tables.orders(spark, dir).count()) / 100000L)).toInt
       loopSession.conf.set("spark.sql.shuffle.partitions", nPart.toString)
       val p = ofRows(loopSession, logicalPlan(syntheticPosts(spark, dir)))
       ofRows(spark, logicalPlan(p.localCheckpoint()))

@@ -16,7 +16,7 @@ object Views {
       case t => Tables.table(spark, dir, t).createOrReplaceTempView(t)
     }
 
-  def registerIg(spark: SparkSession, root: String = graft.ig.Instagram.referenceRoot): Unit = {
+  def registerIg(spark: SparkSession, root: String = graft.ig.Instagram.referenceDir()): Unit = {
     graft.ig.Instagram.readProfiles(spark, graft.ig.Instagram.profilesGlob(root))
       .createOrReplaceTempView("ig_profiles")
     graft.ig.Instagram.readPosts(spark, graft.ig.Instagram.postsGlob(root))

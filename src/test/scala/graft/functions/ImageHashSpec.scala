@@ -13,13 +13,13 @@ class ImageHashSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-imagehash-test")
 
   private def refUsers: Array[String] =
-    new java.io.File("/root/reference").listFiles()
+    new java.io.File(graft.ig.Instagram.referenceDir()).listFiles()
       .filter(d => d.isDirectory && new java.io.File(d, s"${d.getName}.jpg").exists())
       .map(_.getName).sorted
 
   private def jpegBytes(user: String): Array[Byte] =
     java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/reference/$user/$user.jpg"))
+      java.nio.file.Paths.get(graft.ig.Instagram.referenceDir(), user, s"$user.jpg"))
 
   /** Independent reference dHash: plain ImageIO decode + BigInt-exact
     * 6x11 cell-mean comparison — shares no code with ImageUtil. */

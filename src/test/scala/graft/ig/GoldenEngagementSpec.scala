@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden replay (SURVEY §5 item 1): run the Spark pipeline over the 9
   * shipped creator dirs with the frozen golden clock and field-compare
-  * against /root/reference/analyzed.json. */
+  * against the reference root's analyzed.json. */
 object Golden {
   lazy val spark: SparkSession = graft.Sessions.local("4", "graft-test")
 
@@ -15,7 +15,7 @@ object Golden {
 
   /** analyzed.json creators exploded, keyed by username. */
   lazy val golden: DataFrame = spark.read.option("multiLine", true)
-    .json("/root/reference/analyzed.json")
+    .json(s"${Instagram.referenceDir()}/analyzed.json")
     .select(explode(col("creators")).as("c"))
     .select(col("c.*"))
 
@@ -135,7 +135,7 @@ class GoldenEngagementSpec extends AnyFunSuite {
         // null mine ⇒ either the creator dir isn't shipped (golden has 12,
         // repo has 9) or it has no posts in the 90-day window (defaults
         // 0/[]/0 are applied at report assembly)
-        val shipped = new java.io.File("/root/reference/" + k).isDirectory
+        val shipped = new java.io.File(Instagram.referenceDir(), k).isDirectory
         if (shipped) assert(gTotal == 0, s"$k: mine missing but golden total=$gTotal")
       }
     }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Exhaustive golden diff: EVERY leaf field of the assembled report vs
-  * /root/reference/analyzed.json, for all nine shipped creators.
+  * the reference root's analyzed.json, for all nine shipped creators.
   *
   * Documented allowances (structural, not semantic):
   *  - golden `{}` / `null` vs our omitted-null field (Spark toJSON drops
@@ -69,7 +69,7 @@ class GoldenFullDiffSpec extends AnyFunSuite {
 
   private lazy val goldenByUser = {
     val goldenDoc = mapper.readTree(
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/root/reference/analyzed.json")))
+      java.nio.file.Files.readString(java.nio.file.Paths.get(Instagram.referenceDir(), "analyzed.json")))
     goldenDoc.get("creators").elements().asScala
       .map(c => c.get("username").asText() -> c).toMap
   }

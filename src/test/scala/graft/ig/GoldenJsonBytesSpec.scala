@@ -69,7 +69,7 @@ class GoldenJsonBytesSpec extends AnyFunSuite {
   }
 
   private lazy val goldenText = java.nio.file.Files
-    .readString(java.nio.file.Paths.get("/root/reference/analyzed.json"))
+    .readString(java.nio.file.Paths.get(Instagram.referenceDir(), "analyzed.json"))
   private lazy val goldenLf = canonSetFields(goldenText.replace("\r\n", "\n"))
   private lazy val goldenBlocks = creatorBlocks(goldenLf)
 

@@ -121,7 +121,7 @@ class GoldenReportSpec extends AnyFunSuite {
       .filter(col("creator_key") === "lorrainesugc")
       .collect()(0).getAs[String]("text")
     val goldenTxt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/lorrainesugc/lorrainesugc_analysis.txt")), "UTF-8")
+      java.nio.file.Paths.get(Instagram.referenceDir(), "lorrainesugc/lorrainesugc_analysis.txt")), "UTF-8")
     Seq("COMPREHENSIVE INSTAGRAM PROFILE ANALYSIS & INSIGHTS REPORT",
       "📊 PROFILE OVERVIEW", "📈 ENGAGEMENT METRICS", "🎨 CONTENT ANALYSIS",
       "📖 BIOGRAPHY", "📱 Platform: Instagram",

@@ -13,7 +13,7 @@ class GoldenTxtSpec extends AnyFunSuite {
       .collect().map(r => r.getAs[String]("creator_key") -> r.getAs[String]("text")).toMap
     assert(texts.size == 9)
     val diffs = texts.toSeq.sortBy(_._1).flatMap { case (user, mine) =>
-      val p = java.nio.file.Paths.get(s"/root/reference/$user/${user}_analysis.txt")
+      val p = java.nio.file.Paths.get(s"${Instagram.referenceDir()}/$user/${user}_analysis.txt")
       if (!java.nio.file.Files.exists(p)) Seq(s"$user: no golden txt")
       else {
         val golden = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-mm-test")
   val dir = "/root/testdata/sf0.001"
+  private def refRoot: String = graft.ig.Instagram.referenceDir()
 
   lazy val decoded = Multimodal.decode(Multimodal.binaryized(spark, dir)).cache()
 
@@ -63,12 +64,12 @@ class MultimodalSpec extends AnyFunSuite {
   test("byte near-dup pairs a real JPEG with a few-bytes-perturbed copy of itself") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val users = new java.io.File("/root/reference").listFiles()
+    val users = new java.io.File(refRoot).listFiles()
       .filter(d => d.isDirectory && new java.io.File(d, s"${d.getName}.jpg").exists())
       .map(_.getName).sorted.take(3)
     assert(users.length >= 2, "need at least two reference JPEGs")
-    val orig = Files.readAllBytes(Paths.get(s"/root/reference/${users(0)}/${users(0)}.jpg"))
-    val other = Files.readAllBytes(Paths.get(s"/root/reference/${users(1)}/${users(1)}.jpg"))
+    val orig = Files.readAllBytes(Paths.get(s"$refRoot/${users(0)}/${users(0)}.jpg"))
+    val other = Files.readAllBytes(Paths.get(s"$refRoot/${users(1)}/${users(1)}.jpg"))
     // flip 3 bytes mid-payload (entropy-coded region; header untouched)
     val perturbed = orig.clone()
     for (off <- Seq(orig.length / 2, orig.length / 2 + 101, orig.length / 2 + 257))
@@ -92,12 +93,12 @@ class MultimodalSpec extends AnyFunSuite {
   test("default k=3 contract: a 1-byte tweak pairs, an unrelated JPEG doesn't") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val users = new java.io.File("/root/reference").listFiles()
+    val users = new java.io.File(refRoot).listFiles()
       .filter(d => d.isDirectory && new java.io.File(d, s"${d.getName}.jpg").exists())
       .map(_.getName).sorted.take(2)
     assert(users.length >= 2, "need at least two reference JPEGs")
-    val orig = Files.readAllBytes(Paths.get(s"/root/reference/${users(0)}/${users(0)}.jpg"))
-    val other = Files.readAllBytes(Paths.get(s"/root/reference/${users(1)}/${users(1)}.jpg"))
+    val orig = Files.readAllBytes(Paths.get(s"$refRoot/${users(0)}/${users(0)}.jpg"))
+    val other = Files.readAllBytes(Paths.get(s"$refRoot/${users(1)}/${users(1)}.jpg"))
     val perturbed = orig.clone()
     perturbed(orig.length / 2) = (perturbed(orig.length / 2) ^ 0x5a).toByte
     val bin = Seq((0L, orig), (1L, perturbed), (2L, other)).toDF("doc_id", "payload")
@@ -138,11 +139,11 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("profilePictures ingests the 9 shipped JPEGs with exact bytes") {
     import java.nio.file.{Files, Paths}
-    val rows = Multimodal.profilePictures(spark, "/root/reference")
+    val rows = Multimodal.profilePictures(spark, refRoot)
       .collect().map(r => r.getAs[String]("creator_key") -> r).toMap
     assert(rows.size == 9, s"expected 9 creators, got ${rows.keySet}")
     rows.foreach { case (user, r) =>
-      val f = Paths.get(s"/root/reference/$user/$user.jpg")
+      val f = Paths.get(s"$refRoot/$user/$user.jpg")
       val bytes = Files.readAllBytes(f)
       assert(r.getAs[Long]("n_bytes") == bytes.length, s"$user length")
       val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -156,19 +157,19 @@ class MultimodalSpec extends AnyFunSuite {
   test("writeProfilePictures round-trips the shipped JPEGs byte-for-byte") {
     import java.nio.file.{Files, Paths}
     val out = Files.createTempDirectory("graft_pics").toString
-    val src = Multimodal.profilePictures(spark, "/root/reference")
+    val src = Multimodal.profilePictures(spark, refRoot)
     Multimodal.writeProfilePictures(src, out)
     val creators = src.select("creator_key").collect().map(_.getString(0))
     assert(creators.length == 9)
     creators.foreach { user =>
       val written = Files.readAllBytes(Paths.get(s"$out/$user/$user.jpg"))
-      val original = Files.readAllBytes(Paths.get(s"/root/reference/$user/$user.jpg"))
+      val original = Files.readAllBytes(Paths.get(s"$refRoot/$user/$user.jpg"))
       assert(java.util.Arrays.equals(written, original), s"$user bytes differ")
     }
   }
 
   test("decode parses the TRUE dimensions of all 9 shipped JPEGs (vs ImageIO)") {
-    val rows = Multimodal.decode(Multimodal.profilePictures(spark, "/root/reference"))
+    val rows = Multimodal.decode(Multimodal.profilePictures(spark, refRoot))
       .select("creator_key", "decoded.width", "decoded.height", "decoded.n_frames")
       .collect()
     assert(rows.length == 9)
@@ -176,7 +177,7 @@ class MultimodalSpec extends AnyFunSuite {
       val user = r.getString(0)
       // independent oracle: the JDK's own JPEG reader
       val img = javax.imageio.ImageIO.read(
-        new java.io.File(s"/root/reference/$user/$user.jpg"))
+        new java.io.File(s"$refRoot/$user/$user.jpg"))
       assert(img != null, s"$user: ImageIO could not read fixture")
       assert(r.getInt(1) == img.getWidth, s"$user width ${r.getInt(1)} != ${img.getWidth}")
       assert(r.getInt(2) == img.getHeight, s"$user height ${r.getInt(2)} != ${img.getHeight}")
@@ -187,7 +188,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("the decode pipeline takes the REAL pixel branches over real JPEGs") {
     val out = Multimodal.features(
       Multimodal.resize(
-        Multimodal.decode(Multimodal.profilePictures(spark, "/root/reference"))))
+        Multimodal.decode(Multimodal.profilePictures(spark, refRoot))))
       .select("creator_key", "decoded.n_frames", "resized.width",
         "resized.height", "features", "resized_payload")
     val rows = out.collect()
