@@ -59,9 +59,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "5").toInt
-    val spark = Sessions.local(cpus, appName = "graft-bench")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-bench")
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // JVM/codegen warm-up on a tiny query so per-query numbers measure
@@ -155,8 +154,9 @@ object Bench {
             // recomputed without re-caching and regressed the
             // persist-reliant queries ~2×, and a per-query System.gc()
             // (tried second) perturbed the queries that followed it.
-            // Leaked localCheckpoint blocks are left to the 32g heap +
-            // the ContextCleaner's own GC cadence. Within a query's n
+            // Leaked localCheckpoint blocks are left to the heap
+            // (sized from the host by build.sbt) + the ContextCleaner's
+            // own GC cadence. Within a query's n
             // runs the cache stays warm (CacheManager dedupes by plan
             // equality), matching prior rounds' measurement semantics.
             try spark.catalog.clearCache()

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = Sessions.local("4", appName = "graft-plans")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-plans")
     val picks = Seq(
       "agg_pricing_summary", "rel_star_join_revenue", "rel_anti_join_resume",
       "rel_theta_contains_join", "win_topk_per_customer", "dd_minhash_lsh_pairs",

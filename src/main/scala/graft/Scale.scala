@@ -35,8 +35,7 @@ object Scale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, appName = "graft-scale")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-scale")
     sys.env.get("SPARK_GRAFT_SHUFFLE")
       .foreach(s => spark.conf.set("spark.sql.shuffle.partitions", s))
     // broadcast-threshold sensitivity (SCALE.md): the report DAG's

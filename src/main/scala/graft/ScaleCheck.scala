@@ -67,8 +67,7 @@ object ScaleCheck {
     // optional comma-list restricting the sweep (the --sf10 headline
     // mode); default = every registered query
     val only = if (args.length > 4) Some(args(4).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, appName = "graft-scale-check")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-scale-check")
     // reducer count must scale with the data, exactly as a cluster
     // deployment sizes it (AQE advisory target / dynamic allocation):
     // SPARK_GRAFT_SHUFFLE_BIG sets shuffle partitions for BIG-side runs

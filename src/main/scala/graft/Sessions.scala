@@ -58,6 +58,11 @@ object LoopSessions {
   *      stage.
   */
 object Sessions {
+  /** Local parallelism for the mains: `SPARK_GRAFT_CPUS`, else every
+    * core of this host. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def local(cpus: String, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -72,8 +77,8 @@ object Sessions {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // localCheckpoint blocks are freed by the ContextCleaner only after
-      // their DataFrame is GC'd, and a 32g pre-touched heap rarely GCs on
-      // its own — over a long registry sweep leaked blocks accumulate
+      // their DataFrame is GC'd, and a large pre-touched heap rarely GCs
+      // on its own — over a long registry sweep leaked blocks accumulate
       // (LEAKPROBE.json r14: ~1.5 GB after one pass of the dd_/mm_/rel_
       // families). The cleaner's own periodic GC defaults to 30 min;
       // 5 min bounds the accumulation at a negligible cost (one

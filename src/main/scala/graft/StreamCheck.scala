@@ -60,8 +60,7 @@ object StreamCheck {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val big = if (args.length > 1) args(1) else "target/sf1"
-    val spark =
-      Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-streamcheck")
+    val spark = Sessions.local(Sessions.cpus, "graft-streamcheck")
     // peak/input metrics fold over q.recentProgress, a ring buffer
     // capped by this conf (default 100); the x10 join runs already
     // produce ~81 micro-batches, so a chunk-count bump would silently

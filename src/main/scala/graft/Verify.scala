@@ -7,8 +7,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, appName = "graft-verify")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Per-query status, written to outDir/_status.json at the end. A
     // query that fails at CONSTRUCTION time (e.g. a source schema drift)

@@ -5,8 +5,7 @@ package graft
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, outDir) = args
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
-      appName = "graft-verify-one")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-verify-one")
     SparkEntry.queries(name)(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     SparkEntry.oracleSql.get(name).foreach(sql =>

@@ -7,9 +7,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Read-or-build persistence for derived "index" tables — the build-once
   * lifecycle of every signature/band/assignment artifact a 100 TB
   * pipeline derives from a corpus: MinHash band tables, byte-gram
-  * signatures, IVF assignments. Deriving them inline makes every query
-  * re-pay the full derivation; a real deployment materializes them at
-  * ingest and appends per batch.
+  * signatures, IVF centroids and assignments, BM25 postings, stats and
+  * document frequencies. Deriving them inline makes every query re-pay
+  * the full derivation; a real deployment materializes them at ingest
+  * and appends per batch.
+  *
+  * Every persisted index resolves here: this is the only module that
+  * knows where index tables live (`SPARK_GRAFT_INDEX_ROOT`, else
+  * `target/index`), how they are laid out on storage and when they are
+  * rebuilt. Builders name a table and hand over the frame.
   *
   * `orBuild` resolves in three steps, cheapest first:
   *  1. session-catalog hit → zero work, read the stored bucketed table;
@@ -30,6 +36,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * key set changed between code versions) fails the match and the index
   * is rebuilt — a stale layout can degrade to a rebuild, never to wrong
   * bucketing metadata.
+  *
+  * Because an index outlives the JVM that built it, the corpus key is
+  * its ONLY version: a change to a builder's logic (a new column, a
+  * different tokenization, another fit) is not seen by the key and the
+  * old table is served. Such a change must rename the table (or the
+  * index directory must be deleted) until builds are versioned here.
+  * Index directories without a sidecar (written before their builder
+  * resolved through here) fail the match and are rebuilt once.
   *
   * All storage probing goes through the Hadoop [[FileSystem]] API (the
   * same pattern as [[Tables.footerRowCount]]), never `java.io.File`: a

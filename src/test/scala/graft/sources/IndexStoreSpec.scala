@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,6 +84,43 @@ class IndexStoreSpec extends AnyFunSuite {
         "including when the corpus is addressed by a Hadoop URI")
     // and the same dir addressed with vs without scheme sees the same inventory
     assert(IndexStore.keyOf(dir.getAbsolutePath) != k1, "path string participates in the key")
+  }
+
+  test("bm25 and IVF indexes resolve through orBuild: a catalog loss re-registers their files") {
+    val dir = "/root/testdata/sf0.001"
+    def build(): Seq[String] = {
+      val (post, stats) = graft.functions.TextAnalysis.buildBm25Index(spark, dir)
+      val df = graft.functions.TextAnalysis.buildBm25DfTable(spark, dir)
+      val (assign, cents) = graft.operators.Similarity.buildIvfIndex(spark, dir)
+      Seq(post, stats, df, assign, cents)
+    }
+    def location(table: String): Path =
+      new Path(spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).location)
+    /** table -> (file path -> (length, mtime)) under its catalog location */
+    def inventory(tables: Seq[String]): Map[String, Map[String, (Long, Long)]] =
+      tables.map { t =>
+        val loc = location(t)
+        val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+        val it = fs.listFiles(loc, true)
+        val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => f.getPath.toString -> ((f.getLen, f.getModificationTime))).toMap
+        t -> files
+      }.toMap
+
+    val tables = build()
+    val before = inventory(tables)
+    assert(tables.forall(t => before(t).nonEmpty), "every index table holds files")
+    tables.foreach(t => spark.sql(s"DROP TABLE `$t`"))
+    assert(build() == tables)
+    val after = inventory(tables)
+    val rewritten = tables.filter(t => after(t) != before(t))
+    assert(rewritten.isEmpty,
+      s"after a catalog loss these indexes were rewritten instead of re-registered: $rewritten")
+    tables.foreach { t =>
+      val loc = location(t)
+      assert(loc.getFileSystem(spark.sessionState.newHadoopConf())
+        .exists(new Path(loc, "_graft_meta.json")), s"$t has no _graft_meta.json sidecar")
+    }
   }
 
   test("geometry drift (bucket count or keys) falls back to rebuild, not wrong metadata") {
