@@ -4,7 +4,7 @@ package graft
   * public SparkEntry.entry the way the driver's smoke check does. */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.local("4", appName = "graft-probe")
+    val spark = Sessions.local(Sessions.cpus, appName = "graft-probe")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"ENTRY ROWS: ${rows.length}")

@@ -2,32 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dedicated sessions for iterative loop operators (ADVICE r10): loops
-  * want AQE off and data-sized reducer counts, and mutating the USER's
-  * session conf for that is neither reentrant nor thread-safe. Each base
-  * session gets ONE cached companion session (shared SparkContext +
-  * shared external catalog, isolated SQLConf) created lazily — per-call
-  * `newSession()` was measured at ~0.5 s/call of SessionState setup,
-  * a 20-40% regression on the loop queries. User queries never run on
-  * the companion, and loop bodies serialize on [[locked]], so its conf
-  * mutations are private to exactly one loop at a time. */
-object LoopSessions {
-  private val cache = new java.util.WeakHashMap[SparkSession, SparkSession]
-  def of(spark: SparkSession): SparkSession = synchronized {
-    val got = cache.get(spark)
-    if (got != null) got
-    else {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      cache.put(spark, s)
-      s
-    }
-  }
-  /** Serializes loop bodies: one loop owns the companion session's conf
-    * at a time (the monitor is reentrant, so nested loop calls are safe). */
-  def locked[T](body: => T): T = synchronized(body)
-}
-
 /** Single place to build correctly-configured local sessions.
   *
   * Settings that matter for correctness & scale:
@@ -41,6 +15,8 @@ object LoopSessions {
   *  - shuffle partitions = cores for local runs (not the 200 default);
   *    on a real cluster this would be sized to data volume / AQE target.
   *  - AQE on: runtime coalescing + skew-join splitting at scale.
+  *    Materialized loop intermediates are planned without it, per call
+  *    ([[Materialize]]); the session's own conf is never changed.
   *  - generated classes are reused across calls. One `ig_report_synth`
   *    call compiles ~170 distinct whole-stage classes and repeated calls
   *    walk the same sequence, so Spark's 100-entry LRU codegen cache
@@ -76,7 +52,8 @@ object Sessions {
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // localCheckpoint blocks are freed by the ContextCleaner only after
+      // blocks kept by graft.Materialize (and the remaining plain
+      // localCheckpoints) are freed by the ContextCleaner only after
       // their DataFrame is GC'd, and a large pre-touched heap rarely GCs
       // on its own — over a long registry sweep leaked blocks accumulate
       // (LEAKPROBE.json r14: ~1.5 GB after one pass of the dd_/mm_/rel_

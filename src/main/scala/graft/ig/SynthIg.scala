@@ -95,48 +95,25 @@ object SynthIg {
     * report's ER-descending order (ER ties are pervasive in synthesis —
     * every orderless creator has ER 0.0 — so the report order is not a
     * hashable contract). */
-  /** The posts table materialized ONCE, carrying hash(creator_key)
-    * partitioning into downstream planning.
-    *
-    * Two layers (both r14):
+  /** The posts table materialized ONCE through [[graft.Materialize]],
+    * carrying hash(creator_key) partitioning into downstream planning.
     *  - the posts subtree (a full row_number window over orders) feeds
     *    ~10 analysis blocks in Report.assemble, and each block prunes it
     *    differently — exchange reuse never fires, so the unshared plan
     *    re-derived it EIGHT times (8 o_custkey exchanges, 14 orders
-    *    scans, 82 Exchanges total). The checkpoint computes the window
+    *    scans, 82 Exchanges total). Materializing computes the window
     *    once.
-    *  - the checkpoint is created under the AQE-OFF companion session
-    *    (the graph-loop machinery): an AQE-created checkpoint captures
-    *    UnknownPartitioning, which left every block re-exchanging the
-    *    materialized posts on creator_key anyway. Under the loop session
-    *    the LogicalRDD keeps the window's hash(creator_key, nPart), and
-    *    since EVERY block aggregation/window keys on creator_key (or a
-    *    superset — hash(creator_key) satisfies those clusterings too),
-    *    the blocks plan with ZERO posts exchanges.
-    *  - partitions are sized to the data (the pageRankConvergedLoop
-    *    rule): at base scale the window would otherwise fan 150 k rows
-    *    across 32 tasks per downstream stage; growing data raises the
-    *    count back to the deployment setting. The orders row count comes
-    *    from the parquet footer, so sizing runs no job.
+    *  - the materialized leaf keeps the window's hash(creator_key,
+    *    nPart), and since EVERY block aggregation/window keys on
+    *    creator_key (or a superset — hash(creator_key) satisfies those
+    *    clusterings too), the blocks plan with ZERO posts exchanges.
+    *  - partitions are sized to the orders row count, read from the
+    *    parquet footer, so sizing runs no job.
     * The profile side keeps its parquet stats, so the blocks' dim-side
-    * broadcasts are unaffected (the r13 stat-loss failure mode flipped
-    * joins whose BROADCAST side was checkpointed — here the checkpointed
-    * side is the fact side; the block-output joins in assemble were
-    * already stat-less under the old checkpoint and rely on AQE's
-    * runtime sizing exactly as before). */
-  private def shapedPosts(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{logicalPlan, ofRows}
-    val loopSession = graft.LoopSessions.of(spark)
-    graft.LoopSessions.locked {
-      val nPart = math.min(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-        math.max(4L, Tables.footerRowCount(spark, dir, "orders")
-          .getOrElse(Tables.orders(spark, dir).count()) / 100000L)).toInt
-      loopSession.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-      val p = ofRows(loopSession, logicalPlan(syntheticPosts(spark, dir)))
-      ofRows(spark, logicalPlan(p.localCheckpoint()))
-    }
-  }
+    * broadcasts are unaffected. */
+  private def shapedPosts(spark: SparkSession, dir: String): DataFrame =
+    graft.Materialize(syntheticPosts(spark, dir), graft.Materialize.partitionsFor(spark,
+      Tables.footerRowCount(spark, dir, "orders").getOrElse(Tables.orders(spark, dir).count())))
 
   def igReportSynth(spark: SparkSession, dir: String): DataFrame =
     Report.assemble(syntheticProfiles(spark, dir),

@@ -524,87 +524,36 @@ object Dedup {
     * its own label and its neighbors' — and (2) a pointer-jump join —
     * label := label(label) — so labels race down chains exponentially
     * and the loop converges in O(log n) rounds instead of O(diameter).
-    * Per-round lineage is truncated with localCheckpoint (an iterative
-    * self-join otherwise compounds the plan), and the fixpoint test is a
-    * changed-row count — a control-flow scalar, not a data collect. At
-    * 100 TB this is the standard iterative-CC shape: edges are persisted
-    * once and every round is two shuffles on the node key.
+    * Every round is materialized through [[graft.Materialize]] (an
+    * iterative self-join otherwise compounds the plan), and the fixpoint
+    * test is a changed-row count — a control-flow scalar, not a data
+    * collect. At 100 TB this is the standard iterative-CC shape: edges
+    * are persisted once and every round is two shuffles on the node key.
     *
-    * `checkpointDir`: when set, per-round lineage truncation uses
-    * RELIABLE `checkpoint()` into that directory instead of
-    * executor-local blocks — the cluster-grade variant: localCheckpoint
-    * blocks die with their executor, so on a real cluster an executor
-    * loss mid-loop kills the job; reliable checkpoints survive it at the
-    * cost of a distributed-FS write per round. Default (None) keeps the
-    * single-box behavior. */
+    * `checkpointDir`: when set, every round is a RELIABLE checkpoint in
+    * that directory instead of executor-local blocks — the cluster-grade
+    * variant: local blocks die with their executor, so on a real cluster
+    * an executor loss mid-loop kills the job; reliable checkpoints
+    * survive it at the cost of a distributed-FS write per round. Default
+    * (None) keeps the single-box behavior. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           maxIters: Int = 50,
                           checkpointDir: Option[String] = None): DataFrame = {
-    // same runtime shaping as Graph.pageRankConvergedOf (r10): the loop
-    // runs a handful of small two-shuffle rounds whose inputs are all
-    // checkpointed tables with exact stats — AQE's stage-wise execution
-    // only adds driver round-trips per round, and node-sized exchanges
-    // drown in full-width task scheduling. The overrides live in the
-    // caller session's cached companion loop session
-    // ([[graft.LoopSessions]] — shared SparkContext + shared external
-    // catalog, isolated SQLConf; ADVICE r10) instead of
-    // mutate-and-restore on the caller's session, which was neither
-    // reentrant nor thread-safe (and a fresh newSession per call
-    // measured ~0.5 s of SessionState setup per run). Input/output
-    // plans are re-rooted across sessions (already-analyzed plans;
-    // catalog tables resolve identically through the shared external
-    // catalog), so the caller's downstream frame executes under its
-    // own conf.
-    import org.apache.spark.sql.GraftColumnBridge.{logicalPlan, ofRows}
-    val spark = pairs.sparkSession
-    val loopSession = graft.LoopSessions.of(spark)
-    graft.LoopSessions.locked {
-      val out = connectedComponentsLoop(
-        ofRows(loopSession, logicalPlan(nodes)),
-        ofRows(loopSession, logicalPlan(pairs)),
-        maxIters, checkpointDir,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      ofRows(spark, logicalPlan(out))
-    }
-  }
-
-  private def connectedComponentsLoop(nodes: DataFrame, pairs: DataFrame,
-                                      maxIters: Int,
-                                      checkpointDir: Option[String],
-                                      sessionShuffle: Int): DataFrame = {
-    checkpointDir.foreach(d => pairs.sparkSession.sparkContext.setCheckpointDir(d))
-    // eager=false in both modes: the changed-count job each round is what
-    // materializes the checkpoint, so every round stays ONE compute.
-    // Reliable mode additionally persists the frame BEFORE checkpointing:
-    // Spark writes reliable checkpoint files in a follow-up job that
-    // otherwise RECOMPUTES the full lineage (the documented
-    // persist-before-checkpoint rule) — cached, that job is a cache scan.
-    // The cache is dropped right after the round's action materializes
-    // the checkpoint files.
-    var roundCache: Option[DataFrame] = None
-    def truncate(df: DataFrame, eager: Boolean): DataFrame =
-      if (checkpointDir.isDefined) {
-        val cached = df.persist()
-        roundCache.foreach(_.unpersist())
-        roundCache = Some(cached)
-        cached.checkpoint(eager)
-      } else df.localCheckpoint(eager)
-    val edgesRaw = pairs
+    // the rounds are small two-shuffle joins over materialized tables,
+    // planned without AQE at a partition count sized to the edge list
+    // (the Graph.pageRankConvergedOf shaping). The raw edge union is
+    // materialized once: its measured row count sizes the loop, and the
+    // shaping pass below reads it instead of re-deriving the pairs.
+    val edgesRaw = graft.Materialize(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    val nPart = math.min(sessionShuffle,
-      math.max(4L, edgesRaw.count() / 100000L)).toInt
-    pairs.sparkSession.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-    // pre-partitioned + pre-sorted on the per-round join key (r14, the
-    // pageRankConvergedLoop move): stat-less checkpoints pin the round
-    // join to SMJ, so an unshaped edge table re-exchanges + re-sorts in
-    // FULL every round; shaped once here (one pass over the cached
-    // union at the loop's nPart), it moves zero rows per round.
-    val edges = edgesRaw
-      .repartition(nPart, col("src")).sortWithinPartitions("src")
-      .localCheckpoint()
-    edgesRaw.unpersist()
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+    val nPart = graft.Materialize.partitionsFor(pairs.sparkSession,
+      graft.Materialize.rows(edgesRaw))
+    def materialize(df: DataFrame): DataFrame = graft.Materialize(df, nPart, checkpointDir)
+    // pre-partitioned + pre-sorted on the per-round join key: shaped once
+    // here, the edge table moves zero rows per round.
+    val edges = graft.Materialize(
+      edgesRaw.repartition(nPart, col("src")).sortWithinPartitions("src"), nPart)
     // Iterate ONLY over nodes that appear in a pair: every other node is
     // a singleton by construction (its label can never change), so it
     // joins back at the end. At corpus scale this is the difference
@@ -612,48 +561,36 @@ object Dedup {
     // (tiny) near-dup graph — the loop's joins shrink from O(corpus) to
     // O(pairs) rows per round.
     val pairNodes = edges.select(col("src").as("node")).distinct()
-    var labels = truncate(pairNodes.select(col("node"), col("node").as("label")), eager = true)
+    var labels = materialize(pairNodes.select(col("node"), col("node").as("label")))
     var converged = false
     var iter = 0
-    // Convergence is probed every 2 rounds (same job-count lever as
-    // Graph.pageRankConvergedOf's fused probes): labels are min-MONOTONE
-    // — they only ever decrease — so zero diff across two rounds proves
-    // both rounds were fixpoints. The skipped round's lazy checkpoint is
-    // materialized by the NEXT round's probe job (its lineage is cut
-    // either way), so each probe stays one compute; at fixed data the
-    // loop's wall time is jobs × scheduling overhead, and this halves
-    // the jobs for at most one extra (no-change) round of work. In
-    // reliable-checkpoint mode every round keeps its own probe: the
-    // round cache that protects the checkpoint writer from lineage
-    // recomputation is dropped per round, so rounds must materialize
-    // as they are created.
-    val probeEvery = if (checkpointDir.isDefined) 1 else 2
+    // Convergence is probed every 2 rounds: labels are min-MONOTONE —
+    // they only ever decrease — so zero diff across two rounds proves
+    // both rounds were fixpoints. At fixed data the loop's wall time is
+    // jobs × scheduling overhead, and this halves the probe jobs for at
+    // most one extra (no-change) round of work.
     var checkBase = labels
     while (!converged && iter < maxIters) {
-      val neighborMin = edges.join(labels, edges("src") === labels("node"))
+      // the merge hint keeps the edge rows in place: a later round's labels
+      // carry a product size estimate, against which the planner would
+      // broadcast the whole edge table every round
+      val neighborMin = edges.hint("merge").join(labels, edges("src") === labels("node"))
         .select(col("dst").as("node"), col("label"))
       val propagated = labels.select("node", "label").union(neighborMin)
         .groupBy("node").agg(min(col("label")).as("label"))
       val jump = propagated.select(col("node").as("jn"), col("label").as("jl"))
-      // lazy checkpoint: the probe job below (or the next round feeding
-      // the following probe) materializes it, so each round runs at most
-      // ONE job (lineage is still truncated for the next round)
-      val next = truncate(
+      labels = materialize(
         propagated.join(jump, propagated("label") === jump("jn"), "left")
           .select(propagated("node"),
-            coalesce(col("jl"), propagated("label")).as("label")),
-        eager = false)
-      labels = next
+            coalesce(col("jl"), propagated("label")).as("label")))
       iter += 1
-      if (iter % probeEvery == 0 || iter >= maxIters) {
-        val changed = labels
+      if (iter % 2 == 0 || iter >= maxIters) {
+        converged = graft.Materialize.rows(graft.Materialize(labels
           .join(checkBase.select(col("node"), col("label").as("prev")), "node")
-          .filter(col("label") =!= col("prev")).limit(1).count()
-        converged = changed == 0
+          .filter(col("label") =!= col("prev")).limit(1), nPart)) == 0
         checkBase = labels
       }
     }
-    roundCache.foreach(_.unpersist())
     require(converged, s"label propagation did not converge in $maxIters rounds")
     // singletons (nodes with no pair) keep their own id as the group id
     nodes.join(labels, Seq("node"), "left")

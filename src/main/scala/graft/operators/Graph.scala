@@ -34,14 +34,15 @@ object Graph {
     * supplier → 2k+1). One fact-table shuffle builds the edge list; the
     * distinct collapses the ~linear duplicate pairs before iteration. */
   private def tradeEdges(spark: SparkSession, dir: String): DataFrame = {
-    val be = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
+    val pairs = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
       .distinct()
-      // both union branches read this subtree: checkpointed, the
-      // orders⋈lineitem distinct runs once instead of twice
-      .localCheckpoint()
+    // both union branches read this subtree: materialized, the
+    // orders⋈lineitem distinct runs once instead of twice, and the loops
+    // size their partitions from its measured row count
+    val be = graft.Materialize(pairs)
     be.select(col("c").as("src"), col("s").as("dst"))
       .unionAll(be.select(col("s").as("src"), col("c").as("dst")))
   }
@@ -54,70 +55,39 @@ object Graph {
     // every iteration references the edge list and the degree table; an
     // un-materialized plan re-derives BOTH from the fact join per
     // reference (measured: 14 lineitem scans, 0 reused exchanges for 3
-    // iterations). localCheckpoint computes each once and truncates
-    // lineage — the same iterate-over-cached-graph shape
-    // Dedup.connectedComponents uses.
-    // degree is FUSED into the edge list before the loop (one join at
-    // build time) — the per-step plan is then a single equi-join plus a
-    // partial agg; an un-fused loop re-joins the degree table every
-    // iteration (measured: ~1/3 of the converged variant's wall-clock)
-    // the fused edge table is the ONLY full materialization (r14): the
-    // old shape checkpointed the raw union too, paying a second full
-    // edge write+read for a subtree that is two map-side projections
-    // over tradeEdges' already-checkpointed pair table.
-    // the degree-fused edge table is built and checkpointed INSIDE the
-    // AQE-off loop session (r14): a checkpoint created under AQE captures
-    // UnknownPartitioning (AdaptiveSparkPlanExec does not expose its
-    // final partitioning to Dataset.checkpoint), which put an
-    // Exchange+Sort of the FULL edge list back under every iteration's
-    // SMJ — measured in the r13/r14 before-plans. Under the loop session
-    // the deg fuse is deterministically an SMJ on src whose output is
-    // hash(src, N)-partitioned and src-sorted, and the LogicalRDD keeps
-    // both, so each iteration's join moves and sorts ZERO edge rows; the
-    // rank side arrives hash-partitioned on `node` from its own groupBy.
-    // The unrolled iterations stay LAZY and are re-rooted to the caller,
-    // so the query itself still plans and runs under the caller's conf
-    // (AQE on) exactly as before.
-    import org.apache.spark.sql.GraftColumnBridge.{logicalPlan, ofRows}
-    val spark = edgesIn.sparkSession
-    val loopSession = graft.LoopSessions.of(spark)
-    graft.LoopSessions.locked {
-      val edgesL = ofRows(loopSession, logicalPlan(edgesIn))
-      // partition count sized to the data, never above the caller's
-      // configured value (the [[pageRankConvergedLoop]] sizing): without
-      // this the r14 end-of-round probe showed the AQE-off loop drowning
-      // a ~1M-row edge list in 32-task stage overhead (2.3 s → 4.1 s at
-      // sf0.1); growing data raises the count back to the deployment
-      // setting.
-      val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val nPart = math.min(sessionShuffle.toLong,
-        math.max(4L, edgesL.count() / 100000L)).toInt
-      loopSession.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-      val deg = edgesL.groupBy("src").agg(count(lit(1)).as("deg"))
-      val edges = edgesL.join(deg, "src")
-        .select(col("src"), col("dst"), col("deg"))
-        .sortWithinPartitions("src").localCheckpoint()
-      // rank seed off the checkpointed table (same key set as deg —
-      // every node appears as a src): distinct over hash(src)-partitioned
-      // rows is exchange-free, where seeding from `deg` re-ran the
-      // full-edge aggregation a second time.
-      var ranks = edges.select(col("src").as("node")).distinct()
-        .select(col("node"), lit(1000000L).as("r"))
-      (1 to iters).foreach { _ =>
-        ranks = edges
-          .join(ranks, edges("src") === ranks("node"))
-          .select(col("dst"), expr("r div deg").as("contrib"))
-          .groupBy("dst")
-          .agg(expr("CAST(150000 + (85 * sum(contrib)) div 100 AS BIGINT)").as("r"))
-          .select(col("dst").as("node"), col("r"))
-      }
-      // materialize the final ranks HERE so the whole 3-iteration chain
-      // plans and runs at the loop's nPart (re-rooting the lazy chain
-      // would re-plan it at the caller's partition count against
-      // nPart-partitioned leaves, re-introducing per-iteration
-      // exchanges); node-sized, one cheap extra write.
-      ofRows(spark, logicalPlan(ranks.localCheckpoint()))
+    // iterations). Degree is FUSED into the edge list before the loop
+    // (one join at build time), so the per-step plan is a single
+    // equi-join plus a partial agg, and the fused table is the only full
+    // materialization. Materialized through [[graft.Materialize]], the
+    // deg fuse is an SMJ on src whose hash(src, nPart) partitioning and
+    // src ordering the leaf keeps, so each iteration's join moves and
+    // sorts ZERO edge rows; the rank side arrives hash-partitioned on
+    // `node` from its own groupBy.
+    val nPart = graft.Materialize.partitionsFor(edgesIn.sparkSession,
+      graft.Materialize.rows(edgesIn))
+    val deg = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
+    val edges = graft.Materialize(edgesIn.join(deg, "src")
+      .select(col("src"), col("dst"), col("deg"))
+      .sortWithinPartitions("src"), nPart)
+    // rank seed off the materialized table (same key set as deg — every
+    // node appears as a src): distinct over hash(src)-partitioned rows is
+    // exchange-free, where seeding from `deg` re-ran the full-edge
+    // aggregation a second time.
+    var ranks = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1000000L).as("r"))
+    (1 to iters).foreach { _ =>
+      ranks = edges
+        .join(ranks, edges("src") === ranks("node"))
+        .select(col("dst"), expr("r div deg").as("contrib"))
+        .groupBy("dst")
+        .agg(expr("CAST(150000 + (85 * sum(contrib)) div 100 AS BIGINT)").as("r"))
+        .select(col("dst").as("node"), col("r"))
     }
+    // the final ranks materialize HERE so the whole chain plans at nPart
+    // against the nPart-partitioned edge leaf (planned at the caller's
+    // partition count it would re-exchange the edges per iteration);
+    // node-sized, one cheap extra write.
+    graft.Materialize(ranks, nPart)
   }
 
   /** Integer PageRank, `iters` unrolled power-iteration steps over the
@@ -147,119 +117,56 @@ object Graph {
     * 0.85 constant.
     *
     * Scale/lineage: each round advances `checkEvery` lazily-chained
-    * steps and `localCheckpoint`s each — lineage is bounded at
+    * steps and materializes the last — lineage is bounded at
     * `checkEvery` join-agg layers no matter how many rounds run (a
     * convergence loop without the cadence re-derives the whole history
     * each action), and the convergence probe is one join over two
-    * checkpointed rank tables, run once per round rather than per step.
+    * materialized rank tables, run once per round rather than per step.
     * `maxIters` caps pathological graphs; the output stays the same
     * deterministic least-of-last-two either way. */
   def pageRankConvergedOf(edgesIn: DataFrame, maxIters: Int = 128): DataFrame = {
-    // AQE OFF for the loop body: every input to every step is an
-    // eagerly-checkpointed table whose size the planner knows EXACTLY,
-    // so adaptivity has nothing to discover — it only adds 2-3 driver
-    // round-trips per ~80 ms step job (measured ~150 jobs per run with
-    // AQE on vs ~40 off; the loop is pure fixed overhead at base scale).
-    // Join strategy still scales: small rank tables broadcast off
-    // accurate stats, huge ones fall back to SMJ over the
-    // pre-partitioned edge list below.
-    //
-    // The overrides live in the CALLER session's cached companion loop
-    // session ([[graft.LoopSessions]] — shared SparkContext, isolated
-    // SQLConf; ADVICE r10): mutate-and-restore on the caller's session
-    // was neither reentrant nor thread-safe (a concurrent query on the
-    // same session ran under the loop's conf), and a fresh newSession
-    // per call measured ~0.5 s of SessionState setup per run. The
-    // checkpointed edge RDD and the loop's result are re-rooted across
-    // sessions via their LogicalRDD plans (RDD-backed leaves, no
-    // catalog references), so the caller's frame plans and executes
-    // under the caller's own conf exactly as before.
-    import org.apache.spark.sql.GraftColumnBridge.{logicalPlan, ofRows}
-    val spark = edgesIn.sparkSession
-    val loopSession = graft.LoopSessions.of(spark)
-    graft.LoopSessions.locked {
-      // deployment sizing flows through: the loop's reducer cap follows
-      // the caller's CURRENT runtime value (ScaleCheck's big-side
-      // override), not the context default
-      loopSession.conf.set("spark.sql.shuffle.partitions",
-        spark.conf.get("spark.sql.shuffle.partitions"))
-      // no checkpoint of the raw union (r14): the loop materializes the
-      // degree-FUSED edge table anyway, and the union is two map-side
-      // projections over tradeEdges' already-checkpointed pair table —
-      // checkpointing it here paid a second full edge write+read. The
-      // union plan is still catalog-free (Union over a LogicalRDD leaf),
-      // so the cross-session re-rooting is unchanged.
-      val edges0 = ofRows(loopSession, logicalPlan(edgesIn))
-      val out = pageRankConvergedLoop(loopSession, edges0, maxIters)
-      ofRows(spark, logicalPlan(out))
-    }
-  }
-
-  private def pageRankConvergedLoop(spark: SparkSession, edgesIn: DataFrame,
-                                    maxIters: Int): DataFrame = {
-    // same degree-fused edge list as [[pageRankOf]]: one join per step.
-    // `edgesIn` arrives already checkpointed (RDD-backed) from
-    // [[pageRankConvergedOf]]; `spark` is the loop-scoped session, so
-    // the partition-count override below dies with it.
-    val edges0 = edgesIn
-    // partition count sized to the PER-STEP data, never above the
-    // session's configured value: the loop runs ~27 tiny step stages,
-    // and at base scale a 500k-row step drowns in 32-task scheduling
-    // overhead — measured 2× on the whole query against both the
-    // session default AND a split sizing that kept the edge scan wide
-    // (task count is the cost here, not per-core work; this is exactly
-    // the coalescing AQE would do, done once up front instead of
-    // per-stage per-step). Growing data raises the count back toward
-    // the deployment setting.
-    val nPart = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      math.max(4L, edges0.count() / 100000L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-    val deg = edges0.groupBy("src").agg(count(lit(1)).as("deg"))
-    // hash-partitioned ON THE JOIN KEY before the checkpoint: LogicalRDD
-    // preserves outputPartitioning, and each step's rank table arrives
-    // already hash-partitioned on `node` from its own groupBy — so if a
-    // huge rank table ever forces the join off the broadcast plan, the
-    // per-step SMJ moves ZERO edge rows and sorts nothing (pre-sorted
-    // below); only the node-sized contribution agg shuffles.
-    // no explicit repartition (r14): with AQE off in the loop session and
-    // stat-less inputs, the deg fuse is deterministically an SMJ on src,
-    // whose output is ALREADY hash(src, nPart)-partitioned and src-sorted
-    // — the old explicit repartition re-exchanged the full edge list a
-    // second time for a partitioning the join had just established.
-    val edges = edges0.join(deg, "src")
+    // every step input is a materialized table, planned without AQE
+    // ([[graft.Materialize]]): adaptivity has nothing to discover there
+    // and only adds 2-3 driver round-trips per ~80 ms step job (measured
+    // ~150 jobs per run with AQE on vs ~40 off). Partitions are sized to
+    // the PER-STEP data: the loop runs ~27 tiny step stages, and at base
+    // scale a 500k-row step drowns in full-width task scheduling
+    // (measured 2x on the whole query).
+    val nPart = graft.Materialize.partitionsFor(edgesIn.sparkSession,
+      graft.Materialize.rows(edgesIn))
+    // same degree-fused edge list as [[pageRankOf]]: one join per step,
+    // and the leaf keeps the fuse's hash(src, nPart) partitioning and src
+    // ordering, so even if a huge rank table forces a step join off the
+    // broadcast plan, the SMJ moves and sorts ZERO edge rows; only the
+    // node-sized contribution agg shuffles.
+    val deg = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
+    val edges = graft.Materialize(edgesIn.join(deg, "src")
       .select(col("src"), col("dst"), col("deg"))
-      .sortWithinPartitions("src").localCheckpoint()
+      .sortWithinPartitions("src"), nPart)
     def step(r: DataFrame): DataFrame =
       edges.join(r, edges("src") === r("node"))
         .select(col("dst"), expr("r div deg").as("contrib"))
         .groupBy("dst")
         .agg(expr("CAST(500000 + (50 * sum(contrib)) div 100 AS BIGINT)").as("r"))
         .select(col("dst").as("node"), col("r"))
-    // probe CADENCE (VERDICT r9 ask #2): the fixpoint test runs once per
-    // ROUND of `checkEvery` FUSED steps, not per step. Each round builds
-    // one plan chaining `checkEvery` join-aggs off the last checkpoint
-    // (intermediate states are plain subplans) and checkpoints only the
-    // round's final state — one analyzer/optimizer pass and one
-    // multi-stage job per round, where the per-step loop paid that fixed
-    // overhead 27× (the loop's cost at base scale is overhead, not
-    // compute; lineage stays bounded at checkEvery layers). The probe
-    // compares the new state r_k against the previous round's r_{k-c}:
-    // `checkEvery` must be EVEN — an even lag fires inside the
-    // period-≤2 cycle (r_k = r_{k-2} = r_{k-4} = …) exactly like the
-    // lag-2 test, while an odd lag compares the two ALTERNATING cycle
-    // states and never fires. Detection overshoots cycle entry by up to
-    // checkEvery−1 steps, which is invisible in the output: the emitted
-    // least() of an ADJACENT state pair is the same two cycle states
-    // whatever the detection offset, so the result is bit-identical to
-    // per-step probing. If a huge rank table ever pushes an inner join
-    // off the broadcast plan, the SMJ is still cheap: the edge side is
-    // pre-partitioned AND pre-sorted on the join key, so it moves and
-    // sorts nothing.
-    // rank seed off the checkpointed fused table (distinct over
-    // hash(src)-partitioned rows: exchange-free) instead of re-running
-    // the full-edge degree aggregation a second time (r14)
-    var last = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1000000L).as("r")).localCheckpoint()
+    // probe CADENCE: the fixpoint test runs once per ROUND of
+    // `checkEvery` FUSED steps, not per step. Each round builds one plan
+    // chaining `checkEvery` join-aggs off the last materialized state and
+    // materializes only the round's final state — one planning pass and
+    // one multi-stage job per round instead of per step (the loop's cost
+    // at base scale is overhead, not compute). The probe compares the new
+    // state r_k against the previous round's r_{k-c}: `checkEvery` must
+    // be EVEN — an even lag fires inside the period-≤2 cycle
+    // (r_k = r_{k-2} = r_{k-4} = …) exactly like the lag-2 test, while an
+    // odd lag compares the two ALTERNATING cycle states and never fires.
+    // Detection overshoots cycle entry by up to checkEvery−1 steps, which
+    // is invisible in the output: the emitted least() of an ADJACENT
+    // state pair is the same two cycle states whatever the detection
+    // offset, so the result is bit-identical to per-step probing.
+    // The rank seed comes off the fused table (distinct over
+    // hash(src)-partitioned rows: exchange-free).
+    var last = graft.Materialize(edges.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1000000L).as("r")), nPart)
     var iters = 0
     var converged = false
     val checkEvery = 4
@@ -267,14 +174,15 @@ object Graph {
       var n = last
       var s = 0
       while (s < checkEvery && iters < maxIters) { n = step(n); s += 1; iters += 1 }
-      val nck = n.localCheckpoint() // r_k; `last` is r_{k-checkEvery}
-      converged = nck.join(last.withColumnRenamed("r", "r0"), "node")
-        .filter(col("r") =!= col("r0")).isEmpty
+      val nck = graft.Materialize(n, nPart) // r_k; `last` is r_{k-checkEvery}
+      converged = graft.Materialize.rows(graft.Materialize(
+        nck.join(last.withColumnRenamed("r", "r0"), "node")
+          .filter(col("r") =!= col("r0")).limit(1), nPart)) == 0
       last = nck
     }
     // one adjacent step past the detected state: least(r_k, r_{k+1}) is
     // least of the two cycle states, the convergence-stopped emit
-    val nxt = step(last).localCheckpoint(false)
+    val nxt = graft.Materialize(step(last), nPart)
     last.join(nxt.withColumnRenamed("r", "r1"), "node")
       .select(col("node"), least(col("r"), col("r1")).as("r"))
   }
@@ -320,11 +228,11 @@ object Graph {
     * at its first hop).
     *
     * Scale: each hop is ONE equi-join of the (seed, node) frontier
-    * against the checkpointed edge list on the node key, a distinct, and
+    * against the materialized edge list on the node key, a distinct, and
     * an anti-join against the visited set — all hash-partitioned on the
     * same key. State is bounded by seeds × |V| (seeds is a small
     * constant), and hop count is fixed, so lineage and shuffle count are
-    * both constants; localCheckpoint per hop keeps the plan flat exactly
+    * both constants; materializing per hop keeps the plan flat exactly
     * as [[pageRankOf]] does. A seed that reaches nothing new at hop h
     * simply emits no row for that hop (identical on the oracle side —
     * empty groups are absent, not zero). */
@@ -339,42 +247,26 @@ object Graph {
     * `seed` node set (spec entry): (seed, hop, n_new), unordered. */
   private[operators] def khopReachOf(edgesIn: DataFrame, seedsDf: DataFrame,
                                      hops: Int): DataFrame = {
-    // BFS runs in the AQE-off companion session (r14, same rationale as
-    // [[labelPropagationOfPairs]]): the pre-shaped edge checkpoint keeps
-    // hash(src)+sorted there (AQE-created checkpoints capture
-    // UnknownPartitioning), so each hop's frontier⋈edges SMJ moves only
-    // the small frontier side instead of re-exchanging the full edge
-    // list, and the ~7 small hop jobs skip AQE's per-stage round-trips.
-    import org.apache.spark.sql.GraftColumnBridge.{logicalPlan, ofRows}
-    val spark = edgesIn.sparkSession
-    val loopSession = graft.LoopSessions.of(spark)
-    graft.LoopSessions.locked {
-      // data-adaptive loop partitions (the pageRankConvergedLoop sizing):
-      // the BFS rounds are small keyed joins/distincts whose cost at base
-      // scale is task-scheduling overhead, not per-core work
-      val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      loopSession.conf.set("spark.sql.shuffle.partitions", sessionShuffle)
-      val edges0 = ofRows(loopSession, logicalPlan(edgesIn))
-      val nPart = math.min(sessionShuffle.toLong,
-        math.max(4L, edges0.count() / 100000L)).toInt
-      loopSession.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-      val edges = edges0
-        .repartition(nPart, col("src")).sortWithinPartitions("src").localCheckpoint()
-      var frontier = ofRows(loopSession, logicalPlan(seedsDf))
-        .select(col("seed"), col("seed").as("node")).localCheckpoint()
-      var visited = frontier
-      val levels = (1 to hops).map { h =>
-        val next = frontier.join(edges, frontier("node") === edges("src"))
-          .select(col("seed"), col("dst").as("node"))
-          .distinct()
-          .join(visited, Seq("seed", "node"), "left_anti")
-          .localCheckpoint()
-        visited = visited.unionAll(next).localCheckpoint()
-        frontier = next
-        next.groupBy("seed").agg(count(lit(1)).as("n_new")).withColumn("hop", lit(h))
-      }
-      ofRows(spark, logicalPlan(levels.reduce(_ unionAll _)))
+    // the edge list is shaped once, hash(src)-partitioned and sorted
+    // ([[graft.Materialize]] keeps both), so each hop's frontier⋈edges
+    // SMJ moves only the small frontier side; the ~7 small hop jobs are
+    // planned without AQE at a data-sized partition count.
+    val nPart = graft.Materialize.partitionsFor(edgesIn.sparkSession,
+      graft.Materialize.rows(edgesIn))
+    val edges = graft.Materialize(
+      edgesIn.repartition(nPart, col("src")).sortWithinPartitions("src"), nPart)
+    var frontier = graft.Materialize(seedsDf.select(col("seed"), col("seed").as("node")), nPart)
+    var visited = frontier
+    val levels = (1 to hops).map { h =>
+      val next = graft.Materialize(frontier.join(edges, frontier("node") === edges("src"))
+        .select(col("seed"), col("dst").as("node"))
+        .distinct()
+        .join(visited, Seq("seed", "node"), "left_anti"), nPart)
+      visited = graft.Materialize(visited.unionAll(next), nPart)
+      frontier = next
+      next.groupBy("seed").agg(count(lit(1)).as("n_new")).withColumn("hop", lit(h))
     }
+    levels.reduce(_ unionAll _)
   }
 
   /** CONNECTED COMPONENTS as a first-class graph operator — over the
@@ -391,14 +283,13 @@ object Graph {
     * — so the gate proves the iterated pointer-jumping equivalent to the
     * closure semantics it approximates in O(log n) rounds. */
   def copurchaseComponents(spark: SparkSession, dir: String, minSupport: Int = 2): DataFrame = {
-    // checkpointed (r14): connectedComponents references the pair table
-    // FOUR times (both directions of its edge union + both sides of the
-    // node union) — unmaterialized, the basket-explode aggregation ran
-    // once per reference
-    val pairs = copurchaseCounts(spark, dir)
+    // materialized: connectedComponents references the pair table FOUR
+    // times (both directions of its edge union + both sides of the node
+    // union) — unmaterialized, the basket-explode aggregation ran once
+    // per reference
+    val pairs = graft.Materialize(copurchaseCounts(spark, dir)
       .filter(col("n_orders") >= minSupport)
-      .select(col("part_a").as("doc_a"), col("part_b").as("doc_b"))
-      .localCheckpoint()
+      .select(col("part_a").as("doc_a"), col("part_b").as("doc_b")))
     val nodes = pairs.select(col("doc_a").as("node"))
       .unionAll(pairs.select(col("doc_b").as("node"))).distinct()
     Dedup.connectedComponents(nodes, pairs)
@@ -634,75 +525,52 @@ object Graph {
     *
     * Scale: each round is ONE adjacency⋈labels equi-join, a partial agg
     * on (node, label), and a per-node window top-1 — all hash-partitioned
-    * on the node key; labels localCheckpoint per round so lineage stays
+    * on the node key; labels materialize per round so lineage stays
     * flat at any round count (the [[pageRankConvergedOf]] cadence). */
   def labelPropagation(spark: SparkSession, dir: String, iters: Int = 4,
                        minSupport: Int = 2): DataFrame = {
-    // checkpointed (r14): the loop's adjacency union references the pair
-    // table twice — unmaterialized, the basket explode ran once per side
-    val pairs = copurchaseCounts(spark, dir)
+    // materialized: the loop's adjacency union references the pair table
+    // twice — unmaterialized, the basket explode ran once per side
+    val pairs = graft.Materialize(copurchaseCounts(spark, dir)
       .filter(col("n_orders") >= minSupport)
-      .select(col("part_a"), col("part_b"))
-      .localCheckpoint()
+      .select(col("part_a"), col("part_b")))
     labelPropagationOfPairs(pairs, iters)
   }
 
   /** [[labelPropagation]] core over an unweighted canonical pair list
     * (spec entry): (community_id, n_parts), ordered. */
   private[operators] def labelPropagationOfPairs(pairs: DataFrame, iters: Int): DataFrame = {
-    // the loop runs in the AQE-off companion session (r14, the
-    // connectedComponents/pageRankConverged pattern): under AQE a
-    // checkpoint captures UnknownPartitioning, which re-exchanged the
-    // FULL adjacency every round; under the loop session the pre-shaped
-    // checkpoint keeps hash(src)+sorted, so the round join moves zero
-    // adjacency rows, and the ~4 small round jobs skip AQE's per-stage
-    // driver round-trips. The final inventory is re-rooted to the
-    // caller and plans under the caller's own conf.
-    import org.apache.spark.sql.GraftColumnBridge.{logicalPlan, ofRows}
-    val spark = pairs.sparkSession
-    val loopSession = graft.LoopSessions.of(spark)
-    graft.LoopSessions.locked {
-      // the pair subtree (expensive: the basket-explode aggregation)
-      // materializes ONCE at the caller's partition count; the loop then
-      // sizes its own partitions to the adjacency (the
-      // pageRankConvergedLoop sizing — a ~20k-row adjacency drowns in
-      // 32-task stage overhead) and shapes the small checkpointed union
-      // in one cheap pass.
-      val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      loopSession.conf.set("spark.sql.shuffle.partitions", sessionShuffle)
-      val pairsL = ofRows(loopSession, logicalPlan(pairs))
-      val adjRaw = pairsL
-        .select(col("part_a").as("src"), col("part_b").as("dst"))
-        .unionAll(pairsL.select(col("part_b").as("src"), col("part_a").as("dst")))
-        .localCheckpoint()
-      val nPart = math.min(sessionShuffle.toLong,
-        math.max(4L, adjRaw.count() / 100000L)).toInt
-      loopSession.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-      val adj = adjRaw.repartition(nPart, col("src"))
-        .sortWithinPartitions("src").localCheckpoint()
-      var labels = adj.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl")).localCheckpoint()
-      (1 to iters).foreach { _ =>
-        // the mode (count desc, label asc) as a two-level hash
-        // aggregation instead of exchange+sort+WindowExec (r14): max of
-        // the orderable struct (cnt, -lbl) is exactly the argmax under
-        // that order — labels are nonnegative part keys, so negating
-        // flips the tie-break to label-ascending. Same two exchanges
-        // ((dst,lbl) then dst), but the second is a partial-aggregable
-        // codegen'd max, not a per-partition sort + single-pass window.
-        labels = adj.join(labels, adj("src") === labels("node"))
-          .groupBy(col("dst"), col("lbl"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy(col("dst"))
-          .agg(max(struct(col("cnt").as("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("dst").as("node"), (-col("m.nl")).as("lbl"))
-          .localCheckpoint()
-      }
-      val out = labels.groupBy(col("lbl").as("community_id"))
-        .agg(count(lit(1)).as("n_parts"))
-        .orderBy("community_id")
-      ofRows(spark, logicalPlan(out))
+    // the adjacency is shaped once, hash(src)-partitioned and sorted
+    // ([[graft.Materialize]] keeps both), so the round join moves zero
+    // adjacency rows; the ~4 small round jobs are planned without AQE,
+    // sized to the adjacency (a ~20k-row adjacency drowns in full-width
+    // stage overhead). The final inventory plans under the caller's conf.
+    val adjRaw = pairs.select(col("part_a").as("src"), col("part_b").as("dst"))
+      .unionAll(pairs.select(col("part_b").as("src"), col("part_a").as("dst")))
+    val nPart = graft.Materialize.partitionsFor(pairs.sparkSession,
+      graft.Materialize.rows(adjRaw))
+    val adj = graft.Materialize(
+      adjRaw.repartition(nPart, col("src")).sortWithinPartitions("src"), nPart)
+    var labels = graft.Materialize(adj.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl")), nPart)
+    (1 to iters).foreach { _ =>
+      // the mode (count desc, label asc) as a two-level hash aggregation
+      // instead of exchange+sort+WindowExec: max of the orderable struct
+      // (cnt, -lbl) is exactly the argmax under that order — labels are
+      // nonnegative part keys, so negating flips the tie-break to
+      // label-ascending. Same two exchanges ((dst,lbl) then dst), but the
+      // second is a partial-aggregable codegen'd max, not a per-partition
+      // sort + single-pass window.
+      labels = graft.Materialize(adj.join(labels, adj("src") === labels("node"))
+        .groupBy(col("dst"), col("lbl"))
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy(col("dst"))
+        .agg(max(struct(col("cnt").as("c"), (-col("lbl")).as("nl"))).as("m"))
+        .select(col("dst").as("node"), (-col("m.nl")).as("lbl")), nPart)
     }
+    labels.groupBy(col("lbl").as("community_id"))
+      .agg(count(lit(1)).as("n_parts"))
+      .orderBy("community_id")
   }
 
   /** Triangle counting over the co-purchase graph, k-NN sparsified.

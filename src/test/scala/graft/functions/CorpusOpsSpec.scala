@@ -122,4 +122,29 @@ class CorpusOpsSpec extends AnyFunSuite {
       (3L, 3L, 12L, 18L))  // "widest" ×3
     assert(enc.toSeq == wantEnc, s"encode mismatch:\n got  ${enc.toSeq}\n want $wantEnc")
   }
+
+  test("chunkDocuments: in-array chunking (closed-form n_tok, transform-" +
+    "then-explode fp) matches a sequential re-chunking of the corpus") {
+    val width = 64
+    val stride = 48
+    def md5hex(s: String): String = java.security.MessageDigest
+      .getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val expect = docs.toSeq.flatMap { case (id, text) =>
+      val ts = text.toLowerCase.split(" ", -1).toSeq.filter(_.nonEmpty)
+      Range(0, ts.length, stride).map { s =>
+        val chunk = ts.slice(s, s + width)
+        (id, (s / stride).toLong, s.toLong, chunk.length.toLong,
+          md5hex(chunk.mkString(" ")))
+      }
+    }.toSet
+    val got = TextAnalysis.chunkDocuments(spark, "/root/testdata/sf0.001")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getString(4))).toSet
+    assert(got === expect)
+  }
 }

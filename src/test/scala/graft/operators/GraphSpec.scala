@@ -49,4 +49,16 @@ class GraphSpec extends AnyFunSuite {
     assert(df.length === nSupp)
     df.foreach(r => assert(r.getAs[Long]("rank_micro") > 150000L, s"rank too low: $r"))
   }
+
+  test("labelPropagation mode: the max(struct(cnt, -lbl)) encoding keeps " +
+    "the (count desc, label asc) tie-break") {
+    import spark.implicits._
+    // node 10's two neighbors carry equal-count labels {1, 2}: it must
+    // adopt 1 (the lower label), never 2
+    val pairs = Seq((10L, 1L), (10L, 2L)).toDF("part_a", "part_b")
+    val got = Graph.labelPropagationOfPairs(pairs, 1).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // after one synchronous round: 1 -> 10, 2 -> 10, 10 -> 1
+    assert(got === Map(1L -> 1L, 10L -> 2L))
+  }
 }

@@ -1,7 +1,14 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec,
+  QueryExecution, RDDScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions — the scale contract, not just results.
@@ -410,15 +417,15 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("partial_count"), s"dictionary build must partial-agg:\n${plan.take(2000)}")
   }
 
-  test("pagerank: iterations materialize in the companion loop session; " +
+  test("pagerank: iterations materialize before the caller plans; " +
        "the caller-visible plan serves the checkpointed ranks (scan + " +
        "filter + bounded sort, no joins, no cartesian)") {
-    // r14: the 3-iteration chain plans and runs under the AQE-off loop
-    // session (data-adaptive nPart, partitioning-preserving checkpoints
-    // — zero per-iteration edge exchanges, asserted by the committed
-    // plans/r14/rel_pagerank_after.txt dump); what the caller replans is
-    // only the supplier projection over the materialized rank table.
-    // Bit-exactness of the iteration itself is pinned by GraphSpec.
+    // the 3-iteration chain is planned and run by graft.Materialize
+    // (data-adaptive nPart, partitioning-preserving leaves — zero
+    // per-iteration edge exchanges, pinned by the loop-plan test below);
+    // what the caller replans is only the supplier projection over the
+    // materialized rank table. Bit-exactness of the iteration itself is
+    // pinned by GraphSpec.
     val df = Graph.pageRankSuppliers(spark, dir)
     val plan = planOf(df)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
@@ -427,6 +434,83 @@ class PlanSpec extends AnyFunSuite {
       s"served ranks must read the loop's checkpoint:\n${plan.take(2000)}")
     assert(!plan.contains("Join"),
       s"iteration work must not re-plan in the caller:\n${plan.take(2000)}")
+  }
+
+  /** Physical plans of every `graft.Materialize` execution `body` runs,
+    * captured by a QueryExecutionListener on the caller's session. */
+  private def materializedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "materialize") plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** Exchanges in a plan, following adaptive stages into their plans. */
+  private def exchangesOf(plan: SparkPlan): Seq[Exchange] = plan match {
+    case a: AdaptiveSparkPlanExec => exchangesOf(a.executedPlan)
+    case q: QueryStageExec => exchangesOf(q.plan)
+    case e: Exchange => e +: e.children.flatMap(exchangesOf)
+    case p => p.children.flatMap(exchangesOf)
+  }
+
+  private def scansOf(plan: SparkPlan): Seq[RDDScanExec] = plan match {
+    case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
+    case q: QueryStageExec => scansOf(q.plan)
+    case s: RDDScanExec => Seq(s)
+    case p => p.children.flatMap(scansOf)
+  }
+
+  /** The rows an operator consumes: its input seen through row-wise
+    * operators, so an exchange over `rowsOf(e.child)` moves those rows. */
+  private def rowsOf(p: SparkPlan): SparkPlan = p match {
+    case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec | _: InputAdapter |
+         _: ColumnarToRowExec => rowsOf(p.children.head)
+    case other => other
+  }
+
+  /** The loops' shaped edge table: a materialized (src, dst, …) leaf
+    * sorted on src (the raw edge union it is shaped from is unsorted). */
+  private def isEdgeScan(s: RDDScanExec): Boolean =
+    s.output.map(_.name).take(2) == Seq("src", "dst") &&
+      s.outputOrdering.headOption.exists(_.child.references.map(_.name).toSet == Set("src"))
+
+  test("pagerank and connected components: no loop plan has an Exchange " +
+       "or a Sort over the edge table's scan") {
+    def check(name: String, body: => Unit): Unit = {
+      val plans = materializedPlans(body)
+      val loop = plans.filter(p => scansOf(p).exists(isEdgeScan))
+      assert(loop.nonEmpty,
+        s"$name: none of ${plans.size} materializations reads the edge table")
+      loop.foreach { p =>
+        val movers = exchangesOf(p) ++ p.collect { case s: SortExec => s }
+        val moved = movers.map(m => rowsOf(m.children.head)).collect {
+          case s: RDDScanExec if isEdgeScan(s) => s
+        }
+        assert(moved.isEmpty, s"$name: edge rows are exchanged or sorted:\n$p")
+      }
+    }
+    check("pageRankOf", Graph.pageRankSuppliers(spark, dir).collect())
+    check("connectedComponents", Graph.copurchaseComponents(spark, dir).collect())
+  }
+
+  test("ig_report_synth: no Exchange sits directly above the materialized posts scan") {
+    val df = graft.ig.SynthIg.igReportSynth(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    def isPosts(s: RDDScanExec): Boolean = s.output.exists(_.name == "caption_text")
+    assert(scansOf(plan).exists(isPosts), s"no materialized posts scan:\n$plan")
+    val moved = exchangesOf(plan).map(e => rowsOf(e.child)).collect {
+      case s: RDDScanExec if isPosts(s) => s
+    }
+    assert(moved.isEmpty, s"posts rows are exchanged:\n$plan")
   }
 
   test("tokenize ids: the vocab id join broadcasts (token stream never " +

@@ -64,4 +64,21 @@ class WindowStatsSpec extends AnyFunSuite {
     val df = eventsDf((1 to 30).map(i => (i.toLong, i.toLong * 1000L, 1L, 5.00)))
     assert(Windows.bollingerBreakoutsOf(df, 5).count() === 0L)
   }
+
+  test("win_rank_changes: distributed global ranks equal a sequential " +
+    "(total desc, user asc) ranking of the query's own per-user totals") {
+    val got = Windows.rankChanges(spark, "/root/testdata/sf0.001").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5)))
+    assert(got.nonEmpty)
+    val byP1 = got.map(t => (t._1, t._2)).sortBy { case (u, c) => (-c, u) }
+      .map(_._1).zipWithIndex.toMap
+    val byP2 = got.map(t => (t._1, t._3)).sortBy { case (u, c) => (-c, u) }
+      .map(_._1).zipWithIndex.toMap
+    got.foreach { case (u, _, _, r1, r2, mv) =>
+      assert(r1 === byP1(u) + 1L, s"rank_p1 of user $u")
+      assert(r2 === byP2(u) + 1L, s"rank_p2 of user $u")
+      assert(mv === r1 - r2)
+    }
+  }
 }
