@@ -146,4 +146,13 @@ object VectorOps {
 
   /** Quantized squared norm Σ round(aᵢ·1000)². */
   def quantNormSq(a: Column): Column = quantDot(a, a)
+
+  /** Quantized cosine dot(a, b) / (√na · √nb) over precomputed squared
+    * norms — the one floating-point step of every similarity score, a
+    * single IEEE expression over exact integers that the DuckDB oracles
+    * evaluate identically. */
+  def quantCos(a: Column, b: Column, na: Column, nb: Column): Column = {
+    import org.apache.spark.sql.functions.sqrt
+    quantDot(a, b).cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
+  }
 }

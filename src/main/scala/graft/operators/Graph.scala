@@ -65,8 +65,11 @@ object Graph {
     // `node` from its own groupBy.
     val nPart = graft.Materialize.partitionsFor(edgesIn.sparkSession,
       graft.Materialize.rows(edgesIn))
+    // the merge hint keeps the fuse a sort-merge join whatever the size
+    // estimates say: a broadcast of `deg` would leave the leaf
+    // unpartitioned, and every step would re-exchange the edges
     val deg = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edges = graft.Materialize(edgesIn.join(deg, "src")
+    val edges = graft.Materialize(edgesIn.hint("merge").join(deg, "src")
       .select(col("src"), col("dst"), col("deg"))
       .sortWithinPartitions("src"), nPart)
     // rank seed off the materialized table (same key set as deg — every
@@ -76,7 +79,11 @@ object Graph {
     var ranks = edges.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1000000L).as("r"))
     (1 to iters).foreach { _ =>
-      ranks = edges
+      // the merge hint keeps the edge rows in place whatever the size
+      // estimates say: under a truthful edge size below the broadcast
+      // threshold the planner would broadcast the whole edge table per
+      // step (the hazard Dedup.connectedComponents guards the same way)
+      ranks = edges.hint("merge")
         .join(ranks, edges("src") === ranks("node"))
         .select(col("dst"), expr("r div deg").as("contrib"))
         .groupBy("dst")
@@ -136,15 +143,14 @@ object Graph {
       graft.Materialize.rows(edgesIn))
     // same degree-fused edge list as [[pageRankOf]]: one join per step,
     // and the leaf keeps the fuse's hash(src, nPart) partitioning and src
-    // ordering, so even if a huge rank table forces a step join off the
-    // broadcast plan, the SMJ moves and sorts ZERO edge rows; only the
-    // node-sized contribution agg shuffles.
+    // ordering, so each merge-hinted step join moves and sorts ZERO edge
+    // rows; only the node-sized contribution agg shuffles.
     val deg = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edges = graft.Materialize(edgesIn.join(deg, "src")
+    val edges = graft.Materialize(edgesIn.hint("merge").join(deg, "src") // see pageRankOf
       .select(col("src"), col("dst"), col("deg"))
       .sortWithinPartitions("src"), nPart)
-    def step(r: DataFrame): DataFrame =
-      edges.join(r, edges("src") === r("node"))
+    def step(r: DataFrame): DataFrame = // merge hint: see pageRankOf
+      edges.hint("merge").join(r, edges("src") === r("node"))
         .select(col("dst"), expr("r div deg").as("contrib"))
         .groupBy("dst")
         .agg(expr("CAST(500000 + (50 * sum(contrib)) div 100 AS BIGINT)").as("r"))

@@ -5,8 +5,22 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** Similarity search over the `embeddings` table (builder brief):
-  * brute-force cosine top-k baseline + bounded near-dup pair search.
+/** Similarity search over the `embeddings` table: exact, IVF, SQ8, PQ,
+  * IVF-PQ, prefix (matryoshka), filtered, NN-descent and graph-search
+  * ANN, plus near-dup pairs and groups.
+  *
+  * One filter→refine scaffold (the REPOSE / adaptive-similarity-search
+  * split): each ANN family contributes only its CANDIDATE generator —
+  * the cell join, SQ8 codes, PQ codes + ADC, prefix slices, the label
+  * filter, graph hops — and everything after it is shared:
+  *  - [[graft.functions.VectorOps.quantCos]], the one cosine;
+  *  - [[probeTopK]]: probe table broadcast, candidates scored, bounded
+  *    per-probe top-k (`(q_id, rnk, vec_id, cos)`); [[probe0TopK]] is
+  *    its single-probe (vec_id = 0) form and [[scoreKeyed]] the
+  *    key-joined pair scoring of the graph loops;
+  *  - [[pqAdcServe]], the one ADC sum/rank tail;
+  *  - [[recallAt]], the one recall tail every `*Recall` query projects
+  *    its published columns from.
   *
   * Determinism: components are quantized to integer milli-units per
   * element (`round(x*1000)` as long), so dot products and norms are
@@ -23,7 +37,7 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  import graft.functions.VectorOps.{quantDot, quantNormSq}
+  import graft.functions.VectorOps.{quantCos, quantDot, quantNormSq}
   import org.apache.spark.sql.Column
 
   /** Global top-k with a rank column, WITHOUT the single-partition
@@ -39,18 +53,82 @@ object Similarity {
     df.orderBy(order: _*).limit(k)
       .withColumn("rnk", row_number().over(Window.orderBy(order: _*)))
 
+  /** Single-probe refine: candidate rows scored against the vec_id = 0
+    * query (a 1-row broadcast) by the one cosine — `na` is the
+    * candidate's norm — then the global [[rankedTopK]] with the family's
+    * (cos desc, vec_id asc) tie-break. */
+  private def probe0TopK(e: DataFrame, candidates: DataFrame, na: Column,
+                         k: Int): DataFrame = {
+    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
+    rankedTopK(candidates.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
+        .withColumn("cos", quantCos(col("embedding"), col("qe"), na, quantNormSq(col("qe")))),
+      k, col("cos").desc, col("vec_id").asc)
+  }
+
+  /** The refine half of every multi-probe ANN query: the probe table
+    * (`q_id`, its vector and norm, and whatever `on` reads) broadcast
+    * against the candidate side on `on` — the family's candidate filter
+    * — each pair scored by the one cosine, then the bounded per-probe
+    * [[graft.functions.TopKByScore.serveTopK]] (map-side partial keeps
+    * ≤ k rows per (probe, mapper), so the one shuffle stays bounded).
+    * `vec`/`norm` pair a candidate column with its probe column. Returns
+    * `(q_id, rnk, vec_id, cos)`, ties to the lower vec_id. */
+  private def probeTopK(corpus: DataFrame, probes: DataFrame, on: Column,
+                        vec: (String, String), norm: (String, String),
+                        k: Int): DataFrame = {
+    val scored = corpus.join(broadcast(probes), on)
+      .withColumn("cos", quantCos(col(vec._1), col(vec._2), col(norm._1), col(norm._2)))
+    graft.functions.TopKByScore.serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
+      .select(col("q_id"), col("rnk"), col("key").as("vec_id"), col("score").as("cos"))
+  }
+
+  /** Key-joined pair scoring, the refine step of the graph loops: each
+    * candidate pair fetches both endpoints by key — `first` joined
+    * before `second`, each a `(key, vector, norm)` frame — and is scored
+    * by the one cosine (first's vector · second's). */
+  private def scoreKeyed(pairs: DataFrame, first: DataFrame,
+                         second: DataFrame): DataFrame = {
+    val Array(k1, v1, n1) = first.columns
+    val Array(k2, v2, n2) = second.columns
+    pairs.join(first, k1).join(second, k2)
+      .withColumn("cos", quantCos(col(v1), col(v2), col(n1), col(n2)))
+  }
+
+  /** The one recall tail: `served` ⋈ `exact` on (q_id, vec_id), the
+    * matched rows that satisfy `hit` (default: all) counted as `n_hits`
+    * per `groups` (none: one row, 0 when nothing matches), beside
+    * `n_queries` = the row count of `probes`. The denominator comes from
+    * the ACTUAL probe table (a corpus smaller than probeBound would
+    * otherwise misreport) — a 1-row broadcast attachment, not a scan of
+    * the data side. */
+  private[operators] def recallAt(served: DataFrame, exact: DataFrame, probes: DataFrame,
+                                  groups: Seq[String] = Nil, hit: Column = lit(1)): DataFrame =
+    served.join(exact, Seq("q_id", "vec_id"))
+      .groupBy(groups.map(col): _*)
+      .agg(count(hit).as("n_hits"))
+      .crossJoin(broadcast(probes.agg(count(lit(1)).as("n_queries"))))
+
+  /** [[recallAt]] published as (n_queries, n_hits_total, mean_recall):
+    * mean_recall is one exact-integer division (hits / (queries·k)), so
+    * both engines compute the identical double. */
+  private[operators] def meanRecall(r: DataFrame, k: Int): DataFrame =
+    r.select(col("n_queries"), col("n_hits").as("n_hits_total"),
+      (col("n_hits").cast("double") / (col("n_queries") * k)).as("mean_recall"))
+
+  /** [[recallAt]] published as (`lead`…, n_queries, n_hits, recall_ppm),
+    * recall in integer ppm (n_hits·10⁶ div (n_queries·k)). */
+  private[operators] def ppmRecall(r: DataFrame, k: Int, lead: Column*): DataFrame =
+    r.select(lead ++ Seq(col("n_queries"), col("n_hits"),
+      expr(s"n_hits * 1000000 div (n_queries * $k)").as("recall_ppm")): _*)
+
+  /** The probe table of the multi-query family: vec_id < probeBound. */
+  private def probeRows(spark: SparkSession, dir: String, probeBound: Long): DataFrame =
+    Tables.embeddings(spark, dir).filter(col("vec_id") < probeBound)
+
   /** Brute-force cosine top-10 neighbors of the vec_id=0 query vector. */
   def annBruteForceTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    val scored = e.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .withColumn("dot", quantDot(col("embedding"), col("qe")))
-      .withColumn("na", quantNormSq(col("embedding")))
-      .withColumn("nb", quantNormSq(col("qe")))
-      .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-    rankedTopK(scored, 10, col("cos").desc, col("vec_id").asc)
+    probe0TopK(e, e, quantNormSq(col("embedding")), 10)
       .select("rnk", "vec_id", "cos")
       .orderBy("rnk")
   }
@@ -79,11 +157,17 @@ object Similarity {
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * lit(100L) >=
           lit(tauTenths.toLong * tauTenths) * col("na") * col("nb"))
-      .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-      .select("vec_id", "cos")
+      .select(col("vec_id"),
+        quantCos(col("embedding"), col("qe"), col("na"), col("nb")).as("cos"))
       .orderBy("vec_id")
   }
+
+  /** Top-20 scored pairs by (cos desc, id_a asc, id_b asc), projected to
+    * `cols` — the emit of the near-dup pair queries. */
+  private def topPairs(scored: DataFrame, cols: String*): DataFrame =
+    rankedTopK(scored, 20, col("cos").desc, col("id_a").asc, col("id_b").asc)
+      .select(cols.map(col): _*)
+      .orderBy("rnk")
 
   /** Embedding near-dup pairs: top-20 cosine pairs within a bounded id
     * range (the oracle-checkable core of embedding-cosine dedup). */
@@ -91,15 +175,22 @@ object Similarity {
     val e = Tables.embeddings(spark, dir).filter(col("vec_id") < 60)
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("id_b"), col("embedding").as("qe"))
-    val scored = a.join(b, col("id_a") < col("id_b"))
-      .withColumn("dot", quantDot(col("ea"), col("qe")))
-      .withColumn("na", quantNormSq(col("ea")))
-      .withColumn("nb", quantNormSq(col("qe")))
-      .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-    rankedTopK(scored, 20, col("cos").desc, col("id_a").asc, col("id_b").asc)
-      .select("rnk", "id_a", "id_b", "cos")
-      .orderBy("rnk")
+    topPairs(a.join(b, col("id_a") < col("id_b"))
+        .withColumn("cos", quantCos(col("ea"), col("qe"),
+          quantNormSq(col("ea")), quantNormSq(col("qe")))),
+      "rnk", "id_a", "id_b", "cos")
+  }
+
+  /** Every within-bucket pair (id_a < id_b) of a bucketed embeddings
+    * frame, scored by the one cosine — the candidate join of the
+    * sign-LSH near-dup family. */
+  private def bucketPairs(b: DataFrame): DataFrame = {
+    val a = b.select(col("vec_id").as("id_a"), col("embedding").as("ea"), col("bucket"))
+    val c = b.select(col("vec_id").as("id_b"), col("embedding").as("eb"), col("bucket"))
+    a.join(c, Seq("bucket"))
+      .filter(col("id_a") < col("id_b"))
+      .withColumn("cos", quantCos(col("ea"), col("eb"),
+        quantNormSq(col("ea")), quantNormSq(col("eb"))))
   }
 
   /** Scale path for ANN: sign-LSH bucketing on the first `planes`
@@ -133,15 +224,6 @@ object Similarity {
     b
   }
 
-  /** [[lshNearDup]] with the plane count derived from the corpus size —
-    * the production default: fixed planes are asymptotically quadratic
-    * (SCALE.md measures 3 planes at 88× and even 6 planes at 45× for a
-    * 10× corpus), so the knob must follow log2(n). The count comes from
-    * parquet FOOTER metadata (what a catalog serves as table stats at
-    * 100 TB — zero scan, zero jobs), falling back to count() off plain
-    * parquet; the bucket key is the sign-bit string of the first b
-    * components so the DuckDB oracle can size itself from its own
-    * count. */
   /** Embeddings with an auto-sized sign-bit bucket column: b planes from
     * the parquet footer row count ([[autoPlanes]]), bucket = the sign-bit
     * string of the first b components. Shared by [[lshNearDupAuto]] and
@@ -157,21 +239,18 @@ object Similarity {
     e.withColumn("bucket", expr(bucketExpr))
   }
 
-  def lshNearDupAuto(spark: SparkSession, dir: String, targetBucket: Long = 64L): DataFrame = {
-    val b = autoBucketed(spark, dir, targetBucket)
-    val a = b.select(col("vec_id").as("id_a"), col("embedding").as("ea"), col("bucket"))
-    val c = b.select(col("vec_id").as("id_b"), col("embedding").as("eb"), col("bucket"))
-    val scored = a.join(c, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("dot", quantDot(col("ea"), col("eb")))
-      .withColumn("na", quantNormSq(col("ea")))
-      .withColumn("nb", quantNormSq(col("eb")))
-      .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-    rankedTopK(scored, 20, col("cos").desc, col("id_a").asc, col("id_b").asc)
-      .select("rnk", "bucket", "id_a", "id_b", "cos")
-      .orderBy("rnk")
-  }
+  /** [[lshNearDup]] with the plane count derived from the corpus size —
+    * the production default: fixed planes are asymptotically quadratic
+    * (SCALE.md measures 3 planes at 88× and even 6 planes at 45× for a
+    * 10× corpus), so the knob must follow log2(n). The count comes from
+    * parquet FOOTER metadata (what a catalog serves as table stats at
+    * 100 TB — zero scan, zero jobs), falling back to count() off plain
+    * parquet; the bucket key is the sign-bit string of the first b
+    * components so the DuckDB oracle can size itself from its own
+    * count. */
+  def lshNearDupAuto(spark: SparkSession, dir: String, targetBucket: Long = 64L): DataFrame =
+    topPairs(bucketPairs(autoBucketed(spark, dir, targetBucket)),
+      "rnk", "bucket", "id_a", "id_b", "cos")
 
   /** Offline IVF centroid trainer: deterministic spherical k-means over
     * a bounded sample, run ENTIRELY in quantized milli-integer space so
@@ -243,17 +322,10 @@ object Similarity {
       s"named_struct('cell', ${id}L, 'nb', ${nb}L, 'ce', array(${cv.map(_ + "L").mkString(",")}))"
     }.mkString("array(", ", ", ")")
 
-  /** IVF-style ANN: k-means-FITTED coarse centroids ([[fitIvfCentroids]]),
-    * every vector assigned to its nearest centroid, then the query probes
-    * ONLY its own cell and ranks candidates by cosine.
-    *
-    * Scale path: centroids are fitted offline on a bounded sample and
-    * shipped to workers as literal metadata. Assignment is a pure
-    * per-row argmax projection — no crossJoin, no Window shuffle — and
-    * because the projection keeps the quantized vector, candidate
-    * scoring needs no re-join with the source. Zero Exchange before the
-    * final top-k. Tie-break: centroids fold in ascending cent_id order
-    * with a strict `>` (= cos desc, cent_id asc). */
+  /** The default IVF fit ([[fitIvfCentroids]]) as the centroid literal. */
+  private def ivfCentsLit(spark: SparkSession, dir: String): String =
+    fittedCentsLit(fitIvfCentroids(spark, dir))
+
   /** Per-row argmax cell assignment against literal fitted centroids —
     * a pure projection (no crossJoin, no Window shuffle) shared by every
     * IVF variant. Keeps the quantized norm so candidate scoring needs no
@@ -278,21 +350,23 @@ object Similarity {
               named_struct('cos', cast('-Infinity' as double), 'cell', -1L),
               (best, s) -> if(s.cos > best.cos, s, best)).cell"""))
 
+  /** IVF-style ANN: k-means-FITTED coarse centroids ([[fitIvfCentroids]]),
+    * every vector assigned to its nearest centroid, then the query probes
+    * ONLY its own cell and ranks candidates by cosine.
+    *
+    * Scale path: centroids are fitted offline on a bounded sample and
+    * shipped to workers as literal metadata. Assignment is a pure
+    * per-row argmax projection — no crossJoin, no Window shuffle — and
+    * because the projection keeps the quantized vector, candidate
+    * scoring needs no re-join with the source. Zero Exchange before the
+    * final top-k. Tie-break: centroids fold in ascending cent_id order
+    * with a strict `>` (= cos desc, cent_id asc). */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val centsLit = fittedCentsLit(fitIvfCentroids(spark, dir))
     val e = Tables.embeddings(spark, dir)
-    val assigned = assignCells(e, centsLit)
+    val assigned = assignCells(e, ivfCentsLit(spark, dir))
     val queryCell = assigned.filter(col("vec_id") === 0).select(col("cell").as("qcell"))
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    val candidates = assigned
-      .join(broadcast(queryCell), col("cell") === col("qcell"))
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .withColumn("dot", quantDot(col("embedding"), col("qe")))
-      .withColumn("nb", quantNormSq(col("qe")))
-      .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-    rankedTopK(candidates, 10, col("cos").desc, col("vec_id").asc)
+    probe0TopK(e, assigned.join(broadcast(queryCell), col("cell") === col("qcell")),
+        col("na"), 10)
       .select("rnk", "vec_id", "cell", "cos")
       .orderBy("rnk")
   }
@@ -304,7 +378,7 @@ object Similarity {
     * the same literal-centroid fold, and the probe set is a 2-row
     * broadcast. Uses the same FITTED centroids as [[ivfTopK]]. */
   def ivfProbe2TopK(spark: SparkSession, dir: String): DataFrame = {
-    val centsLit = fittedCentsLit(fitIvfCentroids(spark, dir))
+    val centsLit = ivfCentsLit(spark, dir)
     val e = Tables.embeddings(spark, dir)
     // per-row scored cells, sorted by (cos desc, cell asc)
     val cellScores =
@@ -323,16 +397,8 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("scored"), col("embedding"), col("na"))
     val queryCells = assigned.filter(col("vec_id") === 0)
       .select(explode(expr("array(scored[0].cell, scored[1].cell)")).as("qcell"))
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    val candidates = assigned
-      .join(broadcast(queryCells), col("cell") === col("qcell"))
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .withColumn("dot", quantDot(col("embedding"), col("qe")))
-      .withColumn("nb", quantNormSq(col("qe")))
-      .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-    rankedTopK(candidates, 10, col("cos").desc, col("vec_id").asc)
+    probe0TopK(e, assigned.join(broadcast(queryCells), col("cell") === col("qcell")),
+        col("na"), 10)
       .select("rnk", "vec_id", "cell", "cos")
       .orderBy("rnk")
   }
@@ -342,40 +408,28 @@ object Similarity {
     * single hardcoded probe. Every vector is assigned to its fitted cell
     * by the same per-row argmax projection; queries are the (small)
     * broadcast side of ONE cell equi-join — no per-query scans, no
-    * cartesian — and the per-query top-k runs as the typed
-    * [[graft.functions.TopKByScore]] aggregator, whose map-side partial
-    * keeps ≤ k rows per query, so the final exchange carries ≤ k rows
-    * per (query, mapper) rather than every candidate. At 100 TB: the
-    * data side stays put, the probe table broadcasts, one shuffle of
-    * bounded size. Tie-break (cos desc, vec_id asc) matches every other
-    * ANN query. */
+    * cartesian — and the per-query top-k is [[probeTopK]]'s bounded
+    * typed aggregation. At 100 TB: the data side stays put, the probe
+    * table broadcasts, one shuffle of bounded size. Tie-break
+    * (cos desc, vec_id asc) matches every other ANN query. */
   def ivfMultiQueryTopK(spark: SparkSession, dir: String,
-                        probeBound: Long = 20L, k: Int = 5): DataFrame = {
-    val centsLit = fittedCentsLit(fitIvfCentroids(spark, dir))
-    ivfProbeJoinTopK(assignCells(Tables.embeddings(spark, dir), centsLit),
+                        probeBound: Long = 20L, k: Int = 5): DataFrame =
+    ivfProbeJoinTopK(assignCells(Tables.embeddings(spark, dir), ivfCentsLit(spark, dir)),
       probeBound, k)
-  }
 
-  /** The probe-join + per-query-top-k tail shared by the fit-at-query-
-    * time ([[ivfMultiQueryTopK]]) and persisted-index
-    * ([[ivfMultiQueryPersisted]]) variants: queries broadcast, ONE cell
-    * equi-join, typed TopKByScore partial aggregation. `assigned` is any
+  /** The IVF candidate generator — the probe's own cell, as ONE cell
+    * equi-join — shared by the fit-at-query-time
+    * ([[ivfMultiQueryTopK]]), persisted-index ([[ivfMultiQueryPersisted]])
+    * and incremental variants. `assigned` is any
     * (vec_id, cell, embedding, na) frame. */
   private[graft] def ivfProbeJoinTopK(assigned: DataFrame,
-                               probeBound: Long, k: Int): DataFrame = {
-    val queries = assigned.filter(col("vec_id") < probeBound)
-      .select(col("vec_id").as("q_id"), col("cell").as("qcell"),
-        col("embedding").as("qe"), col("na").as("qna"))
-    val scored = assigned
-      .join(broadcast(queries),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        quantDot(col("embedding"), col("qe")).cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
-    graft.functions.TopKByScore
-      .serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
-      .select(col("q_id"), col("rnk"), col("key").as("vec_id"), col("score").as("cos"))
-  }
+                                      probeBound: Long, k: Int): DataFrame =
+    probeTopK(assigned,
+      assigned.filter(col("vec_id") < probeBound)
+        .select(col("vec_id").as("q_id"), col("cell").as("qcell"),
+          col("embedding").as("qe"), col("na").as("qna")),
+      col("cell") === col("qcell") && col("vec_id") =!= col("q_id"),
+      "embedding" -> "qe", "na" -> "qna", k)
 
   /** PERSISTED IVF index: the build-once/store/query-many lifecycle a
     * 100 TB ANN deployment actually runs, instead of refitting centroids
@@ -504,16 +558,12 @@ object Similarity {
   def ivfSq8MultiQuery(spark: SparkSession, dir: String,
                        probeBound: Long = 20L, k: Int = 5): DataFrame = {
     val idx = spark.table(buildIvfSq8Index(spark, dir))
-    val queries = idx.filter(col("vec_id") < probeBound)
-      .select(col("vec_id").as("q_id"), col("cell").as("qcell"),
-        col("code").as("qc"), col("n8").as("qn"))
-    val scored = idx.join(broadcast(queries),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        quantDot(col("code"), col("qc")).cast("double")
-          / (sqrt(col("n8").cast("double")) * sqrt(col("qn").cast("double"))))
-    graft.functions.TopKByScore.serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
-      .select(col("q_id"), col("rnk"), col("key").as("vec_id"), col("score").as("cos"))
+    probeTopK(idx,
+      idx.filter(col("vec_id") < probeBound)
+        .select(col("vec_id").as("q_id"), col("cell").as("qcell"),
+          col("code").as("qc"), col("n8").as("qn")),
+      col("cell") === col("qcell") && col("vec_id") =!= col("q_id"),
+      "code" -> "qc", "n8" -> "qn", k)
   }
 
   /** Embedding near-dup GROUPS — the vector-modality mirror of
@@ -545,16 +595,7 @@ object Similarity {
     * spec entry point). */
   private[graft] def embeddingDedupGroupsInline(spark: SparkSession, dir: String,
                                                 threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val b = autoBucketed(spark, dir)
-    val a = b.select(col("vec_id").as("id_a"), col("embedding").as("ea"), col("bucket"))
-    val c = b.select(col("vec_id").as("id_b"), col("embedding").as("eb"), col("bucket"))
-    val pairs = a.join(c, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos",
-        quantDot(col("ea"), col("eb")).cast("double")
-          / (sqrt(quantNormSq(col("ea")).cast("double"))
-            * sqrt(quantNormSq(col("eb")).cast("double"))))
+    val pairs = bucketPairs(autoBucketed(spark, dir))
       .filter(col("cos") >= threshold)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val nodes = Tables.embeddings(spark, dir).select(col("vec_id").as("node"))
@@ -598,18 +639,14 @@ object Similarity {
     * entry point). */
   private[graft] def semanticDedupInline(spark: SparkSession, dir: String,
                                          threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = fittedCentsLit(fitIvfCentroids(spark, dir))
-    val assigned = assignCells(Tables.embeddings(spark, dir), centsLit)
+    val assigned = assignCells(Tables.embeddings(spark, dir), ivfCentsLit(spark, dir))
     val a = assigned.select(col("cell"), col("vec_id").as("id_a"),
       col("embedding").as("ea"), col("na").as("n_a"))
     val b = assigned.select(col("cell"), col("vec_id").as("id_b"),
       col("embedding").as("eb"), col("na").as("n_b"))
     val pairs = a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cos",
-        quantDot(col("ea"), col("eb")).cast("double")
-          / (sqrt(col("n_a").cast("double")) * sqrt(col("n_b").cast("double"))))
+      .withColumn("cos", quantCos(col("ea"), col("eb"), col("n_a"), col("n_b")))
       .filter(col("cos") >= threshold)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val nodes = Tables.embeddings(spark, dir).select(col("vec_id").as("node"))
@@ -622,53 +659,32 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** Batch multi-query EXACT top-k — the brute-force ground truth the
-    * IVF variant ([[ivfMultiQueryTopK]]) trades recall against, at the
-    * same probe-table shape: the query set broadcasts, the data side is
-    * scanned ONCE (one broadcast nested-loop join, no per-query scans),
-    * and the per-query top-k runs as the typed [[graft.functions.TopKByScore]]
-    * partial aggregation so the one shuffle carries ≤ k rows per
-    * (query, mapper). At 100 TB this is the exact-search baseline you
-    * run on a sample to measure ANN recall. */
+  /** Batch multi-query EXACT top-k — the brute-force ground truth every
+    * ANN family's recall is measured against, at the same probe-table
+    * shape: [[probeTopK]] with no candidate filter beyond the probe's own
+    * id — the query set broadcasts, the data side is scanned ONCE (one
+    * broadcast nested-loop join, no per-query scans). At 100 TB this is
+    * the exact-search baseline you run on a sample to measure ANN
+    * recall. */
   def annMultiQueryTopK(spark: SparkSession, dir: String,
                         probeBound: Long = 20L, k: Int = 5): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .withColumn("na", quantNormSq(col("embedding")))
-    val queries = e.filter(col("vec_id") < probeBound)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        col("na").as("qna"))
-    val scored = e.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        quantDot(col("embedding"), col("qe")).cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
-    graft.functions.TopKByScore.serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
-      .select(col("q_id"), col("rnk"), col("key").as("vec_id"), col("score").as("cos"))
+    probeTopK(e,
+      e.filter(col("vec_id") < probeBound)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("na").as("qna")),
+      col("vec_id") =!= col("q_id"), "embedding" -> "qe", "na" -> "qna", k)
   }
 
   /** The ANN RECALL CONTRACT as a gated query: mean recall@k of the IVF
     * multi-query search against the brute-force exact answer over the
-    * same probe table — the number an ANN deployment actually monitors.
-    * mean_recall is one exact-integer division (hits / (queries·k)), so
-    * both engines compute the identical double. */
+    * same probe table — the number an ANN deployment actually monitors. */
   def ivfMultiQueryRecall(spark: SparkSession, dir: String,
-                          probeBound: Long = 20L, k: Int = 5): DataFrame = {
-    val ivf = ivfMultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id")
-    val brute = annMultiQueryTopK(spark, dir, probeBound, k)
-      .select(col("q_id").as("bq"), col("vec_id").as("bv"))
-    // denominator from the ACTUAL probe-table size (a corpus smaller than
-    // probeBound would otherwise misreport n_queries/mean_recall) — a
-    // 1-row broadcast attachment, not a scan of the data side
-    val nQueries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < probeBound)
-      .agg(count(lit(1)).as("n_queries"))
-    ivf.join(brute, col("q_id") === col("bq") && col("vec_id") === col("bv"))
-      .agg(count(lit(1)).as("n_hits_total"))
-      .crossJoin(broadcast(nQueries))
-      .select(
-        col("n_queries"),
-        col("n_hits_total"),
-        (col("n_hits_total").cast("double") / (col("n_queries") * k)).as("mean_recall"))
-  }
+                          probeBound: Long = 20L, k: Int = 5): DataFrame =
+    meanRecall(recallAt(
+      ivfMultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+      annMultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+      probeRows(spark, dir, probeBound)), k)
 
   // ---------------------------------------------------------------- SQ8
 
@@ -699,22 +715,16 @@ object Similarity {
 
   /** Batch multi-query top-k over the SQ8-COMPRESSED corpus — the
     * compressed-domain search a quantized ANN deployment serves. Same
-    * probe shape as [[annMultiQueryTopK]] (queries broadcast, data side
-    * scanned once, typed TopKByScore partial aggregation bounds the one
-    * shuffle at ≤k rows per (query, mapper)) but the scan reads 1-byte
+    * probe shape as [[annMultiQueryTopK]] but the scan reads 1-byte
     * codes instead of 4-byte floats — at 100 TB the scan is the cost, so
     * the compression IS the speedup. */
   def sq8MultiQueryTopK(spark: SparkSession, dir: String,
                         probeBound: Long = 20L, k: Int = 5): DataFrame = {
     val c = sq8Coded(spark, dir)
-    val queries = c.filter(col("vec_id") < probeBound)
-      .select(col("vec_id").as("q_id"), col("code").as("qc"), col("n8").as("qn"))
-    val scored = c.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        quantDot(col("code"), col("qc")).cast("double")
-          / (sqrt(col("n8").cast("double")) * sqrt(col("qn").cast("double"))))
-    graft.functions.TopKByScore.serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
-      .select(col("q_id"), col("rnk"), col("key").as("vec_id"), col("score").as("cos"))
+    probeTopK(c,
+      c.filter(col("vec_id") < probeBound)
+        .select(col("vec_id").as("q_id"), col("code").as("qc"), col("n8").as("qn")),
+      col("vec_id") =!= col("q_id"), "code" -> "qc", "n8" -> "qn", k)
   }
 
   /** The SQ8 accuracy/footprint CONTRACT as a gated query: mean recall@k
@@ -725,25 +735,16 @@ object Similarity {
     * integer counts, so both engines compute identical values. */
   def sq8Recall(spark: SparkSession, dir: String,
                 probeBound: Long = 20L, k: Int = 5): DataFrame = {
-    val sq8 = sq8MultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id")
-    val brute = annMultiQueryTopK(spark, dir, probeBound, k)
-      .select(col("q_id").as("bq"), col("vec_id").as("bv"))
-    val nQueries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < probeBound)
-      .agg(count(lit(1)).as("n_queries"))
     val stats = Tables.embeddings(spark, dir)
       .agg(count(lit(1)).as("n_vectors"),
         max(size(col("embedding"))).cast("long").as("dims"))
-    sq8.join(brute, col("q_id") === col("bq") && col("vec_id") === col("bv"))
-      .agg(count(lit(1)).as("n_hits_total"))
-      .crossJoin(broadcast(nQueries))
+    meanRecall(recallAt(
+        sq8MultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+        annMultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+        probeRows(spark, dir, probeBound)), k)
       .crossJoin(broadcast(stats))
-      .select(
-        col("n_queries"),
-        col("n_hits_total"),
-        (col("n_hits_total").cast("double") / (col("n_queries") * k)).as("mean_recall"),
-        col("n_vectors"),
-        col("dims"),
+      .select(col("n_queries"), col("n_hits_total"), col("mean_recall"),
+        col("n_vectors"), col("dims"),
         (col("n_vectors") * col("dims") * 4).as("bytes_fp32"),
         (col("n_vectors") * (col("dims") + 8)).as("bytes_sq8"))
   }
@@ -754,21 +755,9 @@ object Similarity {
     * 3 AND 6 planes). Top-20 by cosine keeps the output bounded. At
     * 100 TB, pick planes ≈ log2(n/m) per the sizing note on
     * [[minhashStyleBuckets]] — the bucket join then stays linear in n. */
-  def lshNearDup(spark: SparkSession, dir: String, planes: Int = 3): DataFrame = {
-    val b = minhashStyleBuckets(spark, dir, planes)
-    val a = b.select(col("vec_id").as("id_a"), col("embedding").as("ea"), col("bucket"))
-    val c = b.select(col("vec_id").as("id_b"), col("embedding").as("eb"), col("bucket"))
-    val scored = a.join(c, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("dot", quantDot(col("ea"), col("eb")))
-      .withColumn("na", quantNormSq(col("ea")))
-      .withColumn("nb", quantNormSq(col("eb")))
-      .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-    rankedTopK(scored, 20, col("cos").desc, col("id_a").asc, col("id_b").asc)
-      .select("rnk", "bucket", "id_a", "id_b", "cos")
-      .orderBy("rnk")
-  }
+  def lshNearDup(spark: SparkSession, dir: String, planes: Int = 3): DataFrame =
+    topPairs(bucketPairs(minhashStyleBuckets(spark, dir, planes)),
+      "rnk", "bucket", "id_a", "id_b", "cos")
 
   /** PER-LABEL CENTROIDS — the "mean embedding per class" aggregate every
     * labeled-vector workflow needs (cluster profiling, nearest-class
@@ -840,9 +829,7 @@ object Similarity {
     * Scale: codebook BROADCASTs (64 rows); encoding is one pass over
     * the corpus (argmin over 16 codewords per subspace); the ADC table
     * is |queries|·64 rows broadcast back; scoring touches only the
-    * 4-int codes table + a partial-agg sum. The codes table is the
-    * natural [[graft.sources.IndexStore]] artifact if build cost ever
-    * dominates (cf. sim_ivf_persisted). */
+    * 4-int codes table + a partial-agg sum. */
   def pqTopK(spark: SparkSession, dir: String,
              probeBound: Long = 8L, k: Int = 5): DataFrame =
     pqAdcServe(spark, dir, pqCodesOf(spark, dir), probeBound, k)
@@ -876,9 +863,6 @@ object Similarity {
       .select(col("vec_id"), col("m"), col("cent_id"))
   }
 
-  /** SERVE: integer ADC scoring of a codes table (inline or persisted)
-    * against the probe queries — the corpus embeddings are only read
-    * for the probes' own subvectors. */
   /** The |queries|·64-row ADC lookup table (query×codeword partial dot
     * products) — shared by inline, persisted, and IVF-PQ serving. */
   private def pqAdcTable(spark: SparkSession, dir: String, probeBound: Long): DataFrame =
@@ -889,12 +873,18 @@ object Similarity {
         "aggregate(zip_with(qv, cw, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
       .select(col("q_id"), col("m"), col("cent_id"), col("pdot"))
 
+  /** SERVE: integer ADC scoring of a codes table against the probe
+    * queries — the corpus embeddings are only read for the probes' own
+    * subvectors. `codes` is `(vec_id, m, cent_id)` scored against every
+    * probe (inline or persisted codes), or also carries `q_id` when a
+    * candidate filter has already paired codes with probes (IVF-PQ's
+    * cell filter): the ADC join is on every column the two share. */
   private def pqAdcServe(spark: SparkSession, dir: String, codes: DataFrame,
                          probeBound: Long, k: Int): DataFrame = {
     val adc = pqAdcTable(spark, dir, probeBound)
     val byScore = Window.partitionBy("q_id")
       .orderBy(col("score_adc").desc, col("vec_id").asc)
-    codes.join(broadcast(adc), Seq("m", "cent_id"))
+    codes.join(broadcast(adc), codes.columns.filter(adc.columns.contains).toSeq)
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy("q_id", "vec_id")
       .agg(expr("CAST(sum(pdot) AS BIGINT)").as("score_adc"))
@@ -922,59 +912,38 @@ object Similarity {
     * shape, arXiv:1702.08734 lineage): the IVF coarse quantizer prunes
     * candidates to the query's cell, PQ's ADC scores only what
     * survives. Composition of two existing verified pieces — the
-    * fitted-centroid cell assignment ([[assignCells]]) and the PQ code
-    * table + ADC lookup ([[pqCodesOf]]/[[pqAdcTable]]) — into the index
-    * every production vector store actually ships: candidate count
+    * fitted-centroid cell assignment ([[assignCells]]) as the candidate
+    * filter, then [[pqAdcServe]] over the cell-filtered codes — into the
+    * index every production vector store actually ships: candidate count
     * drops by ~|cells| while the scored bytes stay the 4-int codes.
     *
     * Scale: assignment and encoding are the same single corpus passes
     * as their parents (at build time, cell and code land in ONE stored
-    * table — the inline join on vec_id models that); the ADC table and
-    * the (query, cell) probe list both broadcast, so serving is one
+    * table — the inline join on vec_id models that); the (query, cell)
+    * probe list and the ADC table both broadcast, so serving is one
     * filtered scan of the codes table + a partial-agg sum, zero
     * corpus-side shuffles before the bounded top-k. */
   def ivfPqTopK(spark: SparkSession, dir: String,
                 probeBound: Long = 8L, k: Int = 5): DataFrame = {
-    val centsLit = fittedCentsLit(fitIvfCentroids(spark, dir))
-    val assigned = assignCells(Tables.embeddings(spark, dir), centsLit)
+    val assigned = assignCells(Tables.embeddings(spark, dir), ivfCentsLit(spark, dir))
       .select(col("vec_id"), col("cell"))
-    val codes = pqCodesOf(spark, dir).join(assigned, "vec_id")
     val qcells = assigned.filter(col("vec_id") < probeBound)
-      .select(col("vec_id").as("qq"), col("cell").as("qcell"))
-    val adc = pqAdcTable(spark, dir, probeBound)
-    val byScore = Window.partitionBy("q_id")
-      .orderBy(col("score_adc").desc, col("vec_id").asc)
-    codes.join(broadcast(adc), Seq("m", "cent_id"))
-      .join(broadcast(qcells),
-        col("q_id") === col("qq") && col("cell") === col("qcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id")
-      .agg(expr("CAST(sum(pdot) AS BIGINT)").as("score_adc"))
-      .withColumn("rnk", row_number().over(byScore).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "score_adc")
-      .orderBy("q_id", "rnk")
+      .select(col("vec_id").as("q_id"), col("cell"))
+    pqAdcServe(spark, dir,
+      pqCodesOf(spark, dir).join(assigned, "vec_id").join(broadcast(qcells), "cell"),
+      probeBound, k)
   }
 
   /** PQ RECALL CONTRACT — recall@k of the 32×-compressed ADC search
     * against the exact brute-force answer over the same probes: the
     * number that decides whether the compression is usable, gated like
-    * [[ivfMultiQueryRecall]] (same exact-integer division, both engines
-    * compute the identical double). */
+    * [[ivfMultiQueryRecall]]. */
   def pqRecall(spark: SparkSession, dir: String,
-               probeBound: Long = 8L, k: Int = 5): DataFrame = {
-    val pq = pqTopK(spark, dir, probeBound, k).select("q_id", "vec_id")
-    val brute = annMultiQueryTopK(spark, dir, probeBound, k)
-      .select(col("q_id").as("bq"), col("vec_id").as("bv"))
-    val nQueries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < probeBound)
-      .agg(count(lit(1)).as("n_queries"))
-    pq.join(brute, col("q_id") === col("bq") && col("vec_id") === col("bv"))
-      .agg(count(lit(1)).as("n_hits_total"))
-      .crossJoin(broadcast(nQueries))
-      .select(col("n_queries"), col("n_hits_total"),
-        (col("n_hits_total").cast("double") / (col("n_queries") * k)).as("mean_recall"))
-  }
+               probeBound: Long = 8L, k: Int = 5): DataFrame =
+    meanRecall(recallAt(
+      pqTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+      annMultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+      probeRows(spark, dir, probeBound)), k)
 
   /** TRIPLET HARD-EXAMPLE MINING — the contrastive-training curation
     * step: for each anchor vector, the HARDEST NEGATIVE (highest-cosine
@@ -1004,9 +973,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("embedding").as("qe"), col("na").as("qna"))
     val scored = e.join(broadcast(anchors), col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        quantDot(col("embedding"), col("qe")).cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
+      .withColumn("cos", quantCos(col("embedding"), col("qe"), col("na"), col("qna")))
     val negs = TopKByScore.serveTopK(
         scored.filter(col("label") =!= col("q_label")),
         "q_id", col("cos"), col("vec_id"), 1)
@@ -1048,23 +1015,14 @@ object Similarity {
     val spark2 = spark
     import spark2.implicits._
     val e = emb.withColumn("na", quantNormSq(col("embedding")))
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qe"), col("na").as("qna"))
-    val pool = rankedTopK(
-      e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-        .withColumn("cos",
-          quantDot(col("embedding"), col("qe")).cast("double")
-            / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double")))),
-      poolK, col("cos").desc, col("vec_id").asc)
+    val pool = probe0TopK(e, e, col("na"), poolK)
       .select(col("vec_id"), col("cos").as("rel"), col("embedding"), col("na"))
     val a = pool.select(col("vec_id").as("a_id"), col("embedding").as("ea"),
       col("na").as("naa"))
     val b = pool.select(col("vec_id").as("b_id"), col("embedding").as("eb"),
       col("na").as("nab"))
     val sims = a.join(broadcast(b), col("a_id") < col("b_id"))
-      .withColumn("sim",
-        quantDot(col("ea"), col("eb")).cast("double")
-          / (sqrt(col("naa").cast("double")) * sqrt(col("nab").cast("double"))))
+      .withColumn("sim", quantCos(col("ea"), col("eb"), col("naa"), col("nab")))
       .select("a_id", "b_id", "sim")
     // bounded collect: ≤ poolK rels + C(poolK,2) sims — the greedy fold
     // is inherently sequential and its state is the tiny pool itself
@@ -1227,25 +1185,22 @@ object Similarity {
     * exactly. Generalizes the single-point [[ivfMultiQueryRecall]].
     *
     * Scale: both sides are the existing bounded-probe serving paths run
-    * once at k=20; the per-k expansion is a 4-element map-side explode
-    * of the ≤ probeBound·20 joined rank pairs — the corpus is scanned
-    * exactly as often as the two underlying top-k queries. */
+    * once at k=20; the per-k expansion crosses the ≤ probeBound·20 IVF
+    * rows with a broadcast 4-row k table (a join, so the serving sort
+    * below it is dropped like the one under the recall join), and the
+    * [[recallAt]] tail counts the matched pairs both sides rank ≤ k —
+    * the corpus is scanned exactly as often as the two underlying top-k
+    * queries. */
   def recallCurve(spark: SparkSession, dir: String,
                   probeBound: Long = 20L): DataFrame = {
-    val ks = Seq(1, 5, 10, 20)
+    import spark.implicits._
     val ivf = ivfMultiQueryTopK(spark, dir, probeBound, 20)
       .select(col("q_id"), col("vec_id"), col("rnk").as("ri"))
+      .crossJoin(broadcast(Seq(1, 5, 10, 20).toDF("k")))
     val brute = annMultiQueryTopK(spark, dir, probeBound, 20)
       .select(col("q_id"), col("vec_id"), col("rnk").as("rb"))
-    val nQueries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < probeBound)
-      .agg(count(lit(1)).as("n_queries"))
-    ivf.join(brute, Seq("q_id", "vec_id"))
-      .select(explode(array(ks.map(lit): _*)).as("k"), col("ri"), col("rb"))
-      .groupBy("k")
-      .agg(expr("CAST(sum(CASE WHEN ri <= k AND rb <= k THEN 1 ELSE 0 END) AS BIGINT)")
-        .as("n_hits"))
-      .crossJoin(broadcast(nQueries))
+    recallAt(ivf, brute, probeRows(spark, dir, probeBound), Seq("k"),
+        when(col("ri") <= col("k") && col("rb") <= col("k"), 1))
       .select(col("k").cast("long").as("k"), col("n_queries"), col("n_hits"),
         expr("n_hits * 1000000 div (n_queries * k)").as("recall_ppm"))
       .orderBy("k")
@@ -1262,40 +1217,28 @@ object Similarity {
     * integer dots/norms, cosine ranking with a vec_id tie-break, ppm
     * recall.
     *
-    * Scale: each prefix pass is the same broadcast-queries ×
-    * corpus-scan shape as [[annMultiQueryTopK]] with per-partition
-    * bounded top-k serving ([[graft.functions.TopKByScore]]) — never a
-    * global sort; the three passes scan once each (a fused single-scan
-    * variant would trade clarity for one scan, the win the PQ/SQ8
-    * serving paths already demonstrate). */
+    * Scale: each prefix pass is [[probeTopK]] over the sliced vectors —
+    * the same broadcast-queries × corpus-scan shape as
+    * [[annMultiQueryTopK]], never a global sort; the three passes scan
+    * once each (a fused single-scan variant would trade clarity for one
+    * scan, the win the PQ/SQ8 serving paths already demonstrate). */
   def matryoshkaRecall(spark: SparkSession, dir: String,
                        probeBound: Long = 20L, k: Int = 10): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     def prefixTopK(d: Int): DataFrame = {
       val ep = e.withColumn("pe", slice(col("embedding"), 1, d))
         .withColumn("na", quantNormSq(col("pe")))
-      val queries = ep.filter(col("vec_id") < probeBound)
-        .select(col("vec_id").as("q_id"), col("pe").as("qe"), col("na").as("qna"))
-      val scored = ep.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          quantDot(col("pe"), col("qe")).cast("double")
-            / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
-      graft.functions.TopKByScore.serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
-        .select(col("q_id"), col("key").as("vec_id"))
+      probeTopK(ep,
+        ep.filter(col("vec_id") < probeBound)
+          .select(col("vec_id").as("q_id"), col("pe").as("qe"), col("na").as("qna")),
+        col("vec_id") =!= col("q_id"), "pe" -> "qe", "na" -> "qna", k)
+        .select(col("q_id"), col("vec_id"), lit(d).as("dims"))
     }
-    val full = annMultiQueryTopK(spark, dir, probeBound, k)
-      .select(col("q_id"), col("vec_id"))
-    val nQueries = e.filter(col("vec_id") < probeBound)
-      .agg(count(lit(1)).as("n_queries"))
-    Seq(8, 16, 32)
-      .map(d => prefixTopK(d).withColumn("dims", lit(d)))
-      .reduce(_ unionAll _)
-      .join(full, Seq("q_id", "vec_id"))
-      .groupBy("dims")
-      .agg(count(lit(1)).as("n_hits"))
-      .crossJoin(broadcast(nQueries))
-      .select(col("dims").cast("long").as("dims"), col("n_queries"), col("n_hits"),
-        expr(s"n_hits * 1000000 div (n_queries * $k)").as("recall_ppm"))
+    ppmRecall(recallAt(
+        Seq(8, 16, 32).map(prefixTopK).reduce(_ unionAll _),
+        annMultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+        probeRows(spark, dir, probeBound), Seq("dims")),
+      k, col("dims").cast("long").as("dims"))
       .orderBy("dims")
   }
 
@@ -1313,7 +1256,7 @@ object Similarity {
     * shape — zero exchange) followed by one |labels|-bounded agg; the
     * monitoring pass costs exactly one corpus scan. */
   def oodRate(spark: SparkSession, dir: String, tauTenths: Int = 2): DataFrame = {
-    val centsLit = fittedCentsLit(fitIvfCentroids(spark, dir))
+    val centsLit = ivfCentsLit(spark, dir)
     val t2 = tauTenths.toLong * tauTenths
     Tables.embeddings(spark, dir)
       .withColumn("na", quantNormSq(col("embedding")))
@@ -1344,9 +1287,7 @@ object Similarity {
     * dictionary is |vocab|-bounded and joins back on the token key, and
     * the per-cell window ranks ≤|vocab| rows per cell. */
   def clusterTopics(spark: SparkSession, dir: String, topK: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = fittedCentsLit(fitIvfCentroids(spark, dir))
-    val cells = assignCells(Tables.embeddings(spark, dir), centsLit)
+    val cells = assignCells(Tables.embeddings(spark, dir), ivfCentsLit(spark, dir))
       .select(col("vec_id"), col("cell"))
     val tf = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -1374,27 +1315,21 @@ object Similarity {
     * ranking, so the result is the exact top-k of the filtered corpus.
     * Same pinned quantized cosine, (cos desc, vec_id) ties.
     *
-    * Scale: the predicate joins the broadcast probe slab (label
-    * equality folded into the join condition — candidates never
-    * materialize for non-matching labels), then the bounded typed
+    * Scale: the predicate is the candidate filter of [[probeTopK]]
+    * (label equality folded into the broadcast probe join — candidates
+    * never materialize for non-matching labels), then the bounded typed
     * top-k. With a cell index the same predicate composes with cell
     * pruning; the brute-force form here is the correctness contract. */
   def annFiltered(spark: SparkSession, dir: String,
                   probeBound: Long = 10L, k: Int = 5): DataFrame = {
-    import graft.functions.TopKByScore
     val e = Tables.embeddings(spark, dir)
       .withColumn("na", quantNormSq(col("embedding")))
-    val probes = e.filter(col("vec_id") < probeBound)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("qe"), col("na").as("qna"))
-    val scored = e.join(broadcast(probes),
-        col("vec_id") =!= col("q_id") && col("label") === col("q_label"))
-      .withColumn("cos",
-        quantDot(col("embedding"), col("qe")).cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
-    TopKByScore.serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
-      .select(col("q_id"), col("rnk"), col("key").as("vec_id"),
-        col("score").as("cos"))
+    probeTopK(e,
+      e.filter(col("vec_id") < probeBound)
+        .select(col("vec_id").as("q_id"), col("label").as("q_label"),
+          col("embedding").as("qe"), col("na").as("qna")),
+      col("vec_id") =!= col("q_id") && col("label") === col("q_label"),
+      "embedding" -> "qe", "na" -> "qna", k)
   }
 
   /** NN-DESCENT k-NN GRAPH construction (Dong/Moses/Li, WWW'11) — the
@@ -1412,11 +1347,11 @@ object Similarity {
     * shared midpoint — degree is EXACTLY k by construction, so the
     * candidate set is ≤ |V|·(2k)² rows, linear in nodes forever (the
     * same bound the sparsified triangle/link-predict family rides);
-    * scoring joins the embedding table by key twice (co-partitioned
-    * hash joins, corpus never crosses the wire more than once per
-    * round); per-node top-k is the typed bounded partial aggregation;
-    * localCheckpoint per round keeps lineage flat like every iterative
-    * operator here. */
+    * scoring joins the embedding table by key twice ([[scoreKeyed]];
+    * co-partitioned hash joins, corpus never crosses the wire more than
+    * once per round); per-node top-k is the typed bounded partial
+    * aggregation; localCheckpoint per round keeps lineage flat like
+    * every iterative operator here. */
   private[operators] def nndescentKnnOf(e0: DataFrame, k: Int, rounds: Int): DataFrame = {
     // the quantized table is PERSISTED, not checkpointed (r14): every
     // round's scoring references it twice, and an unmaterialized plan
@@ -1436,11 +1371,7 @@ object Similarity {
     // range Exchange + the range partitioner's sampling job per round.
     // Callers ordering their emit (nndescentTopK & co.) are unchanged.
     def scoreTopK(pairs: DataFrame): DataFrame =
-      graft.functions.TopKByScore.topKUnordered(
-        pairs.join(ea, "u").join(eb, "v")
-          .withColumn("cos",
-            quantDot(col("eu"), col("ev")).cast("double")
-              / (sqrt(col("nu").cast("double")) * sqrt(col("nv").cast("double")))),
+      graft.functions.TopKByScore.topKUnordered(scoreKeyed(pairs, ea, eb),
         "u", col("cos"), col("v"), k)
         .select(col("u"), col("rnk"), col("key").as("v"), col("score").as("cos"))
     val n = e.agg(count(lit(1)).as("n"))
@@ -1480,21 +1411,13 @@ object Similarity {
     * probe rows against brute-force exact top-k (the [[recallCurve]]
     * discipline applied to the graph index): one integer-ppm row. */
   def nndescentRecall(spark: SparkSession, dir: String, k: Int = 10,
-                      rounds: Int = 3, probeBound: Long = 20L): DataFrame = {
-    val knn = nndescentKnnOf(Tables.embeddings(spark, dir), k, rounds)
-      .filter(col("u") < probeBound)
-      .select(col("u").as("q_id"), col("v").as("vec_id"))
-    val brute = annMultiQueryTopK(spark, dir, probeBound, k)
-      .select(col("q_id").as("bq"), col("vec_id").as("bv"))
-    val nQueries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < probeBound)
-      .agg(count(lit(1)).as("n_queries"))
-    knn.join(brute, col("q_id") === col("bq") && col("vec_id") === col("bv"))
-      .agg(count(lit(1)).as("n_hits"))
-      .crossJoin(broadcast(nQueries))
-      .select(col("n_queries"), col("n_hits"),
-        expr(s"n_hits * 1000000 div (n_queries * $k)").as("recall_ppm"))
-  }
+                      rounds: Int = 3, probeBound: Long = 20L): DataFrame =
+    ppmRecall(recallAt(
+      nndescentKnnOf(Tables.embeddings(spark, dir), k, rounds)
+        .filter(col("u") < probeBound)
+        .select(col("u").as("q_id"), col("v").as("vec_id")),
+      annMultiQueryTopK(spark, dir, probeBound, k).select("q_id", "vec_id"),
+      probeRows(spark, dir, probeBound)), k)
 
   /** The NN-descent graph PERSISTED (IndexStore lifecycle — the same
     * build-once/serve-forever shape as the IVF cells, PQ codes and BM25
@@ -1508,6 +1431,48 @@ object Similarity {
       nndescentKnnOf(Tables.embeddings(spark, dir), k, rounds)
         .select(col("u"), col("v"), col("cos"))
     }
+
+  /** Shared serve-side adjacency: the k-NN graph's undirected edges
+    * degree-capped at `adjCap` per node (edge-cos desc, v asc ties) —
+    * DiskANN's R parameter; see [[graphSearch]] for why the cap is
+    * load-bearing (unbounded IN-degree hubs). */
+  private def cappedAdjOf(g: DataFrame, adjCap: Int): DataFrame = {
+    val und = g.select(col("u"), col("v"), col("cos"))
+      .unionAll(g.select(col("v").as("u"), col("u").as("v"), col("cos")))
+      .groupBy("u", "v").agg(max(col("cos")).as("ecos"))
+    val byEdge = Window.partitionBy("u").orderBy(desc("ecos"), asc("v"))
+    und
+      .withColumn("rn", row_number().over(byEdge))
+      .filter(col("rn") <= adjCap)
+      .select(col("u").as("src"), col("v").as("dst"))
+  }
+
+  /** One graph hop's candidates: every `(q_id, v)` row plus each capped
+    * neighbor of `v`, deduplicated. */
+  private def expand(frontier: DataFrame, adj: DataFrame): DataFrame =
+    frontier.join(adj, col("v") === col("src"))
+      .select(col("q_id"), col("dst").as("v"))
+      .unionAll(frontier.select(col("q_id"), col("v")))
+      .distinct()
+
+  /** The graph-hop candidate generator of [[graphSearch]] and
+    * [[nndInsertKnn]]: `hops` rounds of [[expand]] → `scoreOf` (a
+    * `(q_id, v, cos)` scorer) → keep the best `beam` per query. Returns
+    * the last hop's scored candidates; localCheckpoint per hop keeps
+    * lineage flat. */
+  private def beamSearch(start: DataFrame, adj: DataFrame, hops: Int, beam: Int)(
+      scoreOf: DataFrame => DataFrame): DataFrame = {
+    var frontier = start
+    var scored = scoreOf(frontier)
+    (1 to hops).foreach { _ =>
+      scored = scoreOf(expand(frontier, adj)).localCheckpoint()
+      // hop frontiers feed joins only — unordered top-k (see TopKByScore)
+      frontier = graft.functions.TopKByScore
+        .topKUnordered(scored, "q_id", col("cos"), col("v"), beam)
+        .select(col("q_id"), col("key").as("v"))
+    }
+    scored
+  }
 
   /** GREEDY BEAM SEARCH over the persisted NN-descent graph — the
     * SERVE half of graph ANN (the HNSW/NSG query loop at a fixed hop
@@ -1530,21 +1495,6 @@ object Similarity {
     * key (the corpus never crosses the wire); the graph itself is the
     * only corpus-sized input and is read bucketed from the persisted
     * index. localCheckpoint per hop keeps lineage flat. */
-  /** Shared serve-side adjacency: the k-NN graph's undirected edges
-    * degree-capped at `adjCap` per node (edge-cos desc, v asc ties) —
-    * DiskANN's R parameter; see [[graphSearch]] for why the cap is
-    * load-bearing (unbounded IN-degree hubs). */
-  private def cappedAdjOf(g: DataFrame, adjCap: Int): DataFrame = {
-    val und = g.select(col("u"), col("v"), col("cos"))
-      .unionAll(g.select(col("v").as("u"), col("u").as("v"), col("cos")))
-      .groupBy("u", "v").agg(max(col("cos")).as("ecos"))
-    val byEdge = Window.partitionBy("u").orderBy(desc("ecos"), asc("v"))
-    und
-      .withColumn("rn", row_number().over(byEdge))
-      .filter(col("rn") <= adjCap)
-      .select(col("u").as("src"), col("v").as("dst"))
-  }
-
   def graphSearch(spark: SparkSession, dir: String, beam: Int = 8,
                   hops: Int = 3, kOut: Int = 5, probeBound: Long = 20L,
                   adjCap: Int = 16, kG: Int = 10, rounds: Int = 3): DataFrame = {
@@ -1560,27 +1510,10 @@ object Similarity {
     val queries = e.filter(col("vec_id") < probeBound)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
         col("na").as("qna"))
-    def scoreOf(cand: DataFrame): DataFrame =
-      cand
-        .join(e.select(col("vec_id").as("v"), col("embedding").as("ve"),
-          col("na").as("vna")), "v")
-        .join(broadcast(queries), "q_id")
-        .withColumn("cos",
-          quantDot(col("ve"), col("qe")).cast("double")
-            / (sqrt(col("vna").cast("double")) * sqrt(col("qna").cast("double"))))
-        .select(col("q_id"), col("v"), col("cos"))
-    var frontier = queries.select(col("q_id"), col("q_id").as("v"))
-    var scored: DataFrame = scoreOf(frontier)
-    (1 to hops).foreach { _ =>
-      val cand = frontier.join(adj, col("v") === col("src"))
-        .select(col("q_id"), col("dst").as("v"))
-        .unionAll(frontier.select(col("q_id"), col("v")))
-        .distinct()
-      scored = scoreOf(cand).localCheckpoint()
-      // hop frontiers feed joins only — unordered top-k (see TopKByScore)
-      frontier = graft.functions.TopKByScore
-        .topKUnordered(scored, "q_id", col("cos"), col("v"), beam)
-        .select(col("q_id"), col("key").as("v"))
+    val nodes = e.select(col("vec_id").as("v"), col("embedding").as("ve"), col("na").as("vna"))
+    val scored = beamSearch(queries.select(col("q_id"), col("q_id").as("v")), adj,
+        hops, beam) { cand =>
+      scoreKeyed(cand, nodes, broadcast(queries)).select(col("q_id"), col("v"), col("cos"))
     }
     // the hops ran eagerly; the emit below reads the last checkpoint, so
     // the embedding cache can be dropped before returning
@@ -1597,20 +1530,12 @@ object Similarity {
     * the raw build-graph recall (it explores 3 hops of neighborhood
     * instead of reading one adjacency list). */
   def graphSearchRecall(spark: SparkSession, dir: String, kOut: Int = 5,
-                        probeBound: Long = 20L): DataFrame = {
-    val served = graphSearch(spark, dir, kOut = kOut, probeBound = probeBound)
-      .select(col("q_id"), col("vec_id"))
-    val brute = annMultiQueryTopK(spark, dir, probeBound, kOut)
-      .select(col("q_id").as("bq"), col("vec_id").as("bv"))
-    val nQueries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < probeBound)
-      .agg(count(lit(1)).as("n_queries"))
-    served.join(brute, col("q_id") === col("bq") && col("vec_id") === col("bv"))
-      .agg(count(lit(1)).as("n_hits"))
-      .crossJoin(broadcast(nQueries))
-      .select(col("n_queries"), col("n_hits"),
-        expr(s"n_hits * 1000000 div (n_queries * $kOut)").as("recall_ppm"))
-  }
+                        probeBound: Long = 20L): DataFrame =
+    ppmRecall(recallAt(
+      graphSearch(spark, dir, kOut = kOut, probeBound = probeBound)
+        .select(col("q_id"), col("vec_id")),
+      annMultiQueryTopK(spark, dir, probeBound, kOut).select("q_id", "vec_id"),
+      probeRows(spark, dir, probeBound)), kOut)
 
   /** INCREMENTAL GRAPH-ANN MAINTENANCE (VERDICT r9 ask #6) — insert a
     * new embedding batch into a persisted NN-descent graph WITHOUT a
@@ -1707,32 +1632,13 @@ object Similarity {
     // fixed entry set: smallest graph-node ids (TakeOrdered — bounded)
     val entries = nodesEmb.select(col("vec_id").as("v")).orderBy("v").limit(nEntries)
     def scoreOf(cand: DataFrame): DataFrame =
-      cand.join(e, "v")
-        .join(bq, "q_id")
-        .withColumn("cos",
-          quantDot(col("ve"), col("qe")).cast("double")
-            / (sqrt(col("vna").cast("double")) * sqrt(col("qna").cast("double"))))
-        .select(col("q_id"), col("v"), col("cos"))
-    var frontier = bq.select(col("q_id")).crossJoin(broadcast(entries))
-    var scored: DataFrame = scoreOf(frontier)
-    (1 to hops).foreach { _ =>
-      val cand = frontier.join(adj, col("v") === col("src"))
-        .select(col("q_id"), col("dst").as("v"))
-        .unionAll(frontier.select(col("q_id"), col("v")))
-        .distinct()
-      scored = scoreOf(cand).localCheckpoint()
-      // hop frontiers feed joins only — unordered top-k (see TopKByScore)
-      frontier = graft.functions.TopKByScore
-        .topKUnordered(scored, "q_id", col("cos"), col("v"), beam)
-        .select(col("q_id"), col("key").as("v"))
-    }
+      scoreKeyed(cand, e, bq).select(col("q_id"), col("v"), col("cos"))
+    val scored = beamSearch(bq.select(col("q_id")).crossJoin(broadcast(entries)), adj,
+      hops, beam)(scoreOf)
     val seed = graft.functions.TopKByScore
       .topKUnordered(scored, "q_id", col("cos"), col("v"), k)
       .select(col("q_id"), col("key").as("v"))
-    val refCand = seed.join(adj, col("v") === col("src"))
-      .select(col("q_id"), col("dst").as("v"))
-      .unionAll(seed)
-      .distinct()
+    val refCand = expand(seed, adj)
     // materialize the refined lists HERE (batch-node-sized) so both
     // caches can be dropped before returning; the emit keeps serveTopK's
     // ordered contract for the stream fold and the specs
@@ -1748,7 +1654,9 @@ object Similarity {
     * probes' neighbor lists against brute-force exact top-k over the
     * CORPUS (the candidate universe the insert searches) — one
     * integer-ppm row, the same discipline as [[nndescentRecall]]. The
-    * companion spec additionally gates it against the from-scratch
+    * exact side is [[probeTopK]] with the batch probes against the
+    * corpus slice (their ids never meet, so the id filter drops nothing).
+    * The companion spec additionally gates it against the from-scratch
     * build's recall. */
   def nndIncrementalRecall(spark: SparkSession, dir: String, k: Int = 10,
                            probeBound: Long = 140L): DataFrame = {
@@ -1757,23 +1665,13 @@ object Similarity {
     val all = Tables.embeddings(spark, dir)
     val e = all.filter(col("vec_id") % 7 =!= 0)
       .withColumn("na", quantNormSq(col("embedding")))
-    val probes = all
-      .filter(col("vec_id") % 7 === 0 && col("vec_id") < probeBound)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      .withColumn("qna", quantNormSq(col("qe")))
-    val scored = e.crossJoin(broadcast(probes))
-      .withColumn("cos",
-        quantDot(col("embedding"), col("qe")).cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
-    val brute = graft.functions.TopKByScore
-      .serveTopK(scored, "q_id", col("cos"), col("vec_id"), k)
-      .select(col("q_id").as("bq"), col("key").as("bv"))
-    val nQueries = probes.agg(count(lit(1)).as("n_queries"))
-    served.join(brute, col("q_id") === col("bq") && col("vec_id") === col("bv"))
-      .agg(count(lit(1)).as("n_hits"))
-      .crossJoin(broadcast(nQueries))
-      .select(col("n_queries"), col("n_hits"),
-        expr(s"n_hits * 1000000 div (n_queries * $k)").as("recall_ppm"))
+    val probes = all.filter(col("vec_id") % 7 === 0 && col("vec_id") < probeBound)
+    val exact = probeTopK(e,
+        probes.select(col("vec_id").as("q_id"), col("embedding").as("qe"))
+          .withColumn("qna", quantNormSq(col("qe"))),
+        col("vec_id") =!= col("q_id"), "embedding" -> "qe", "na" -> "qna", k)
+      .select("q_id", "vec_id")
+    ppmRecall(recallAt(served, exact, probes), k)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

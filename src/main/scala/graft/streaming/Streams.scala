@@ -275,7 +275,7 @@ object Streams {
     * plain bounded batch aggregation. Emits (q_id, vec_id, cos) scored
     * candidates. */
   def annProbeStream(spark: SparkSession, queryVecs: DataFrame, dir: String): DataFrame = {
-    import graft.functions.VectorOps.quantDot
+    import graft.functions.VectorOps.quantCos
     val (assignName, centName) = graft.operators.Similarity.buildIvfIndex(spark, dir)
     val q = graft.operators.Similarity
       .assignWithStoredCentroids(spark, centName, queryVecs)
@@ -283,9 +283,7 @@ object Streams {
         col("embedding").as("qe"), col("na").as("qna"))
     val index = spark.table(assignName)
     q.join(index, col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        quantDot(col("embedding"), col("qe")).cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
+      .withColumn("cos", quantCos(col("embedding"), col("qe"), col("na"), col("qna")))
       .select(col("q_id"), col("vec_id"), col("cos"))
   }
 
@@ -306,7 +304,7 @@ object Streams {
                      k: Int = 5, tsCol: String = "ingest_ts",
                      watermark: String = "1 minute",
                      windowLen: String = "1 minute"): DataFrame = {
-    import graft.functions.VectorOps.quantDot
+    import graft.functions.VectorOps.quantCos
     val (assignName, centName) = graft.operators.Similarity.buildIvfIndex(spark, dir)
     val centsLit = graft.operators.Similarity.storedCentsLit(spark, centName)
     val q = graft.operators.Similarity.withAssignedCell(queries, centsLit)
@@ -315,9 +313,7 @@ object Streams {
     val index = spark.table(assignName)
     val scored = q
       .join(index, col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        quantDot(col("embedding"), col("qe")).cast("double")
-          / (sqrt(col("na").cast("double")) * sqrt(col("qna").cast("double"))))
+      .withColumn("cos", quantCos(col("embedding"), col("qe"), col("na"), col("qna")))
     val topk = udaf(new graft.functions.TopKByScore(k))
     scored
       .withWatermark(tsCol, watermark)

@@ -482,23 +482,43 @@ class PlanSpec extends AnyFunSuite {
     s.output.map(_.name).take(2) == Seq("src", "dst") &&
       s.outputOrdering.headOption.exists(_.child.references.map(_.name).toSet == Set("src"))
 
+  /** Runs `body` and asserts that no materialization reading the edge
+    * table moves its rows: no Exchange or Sort over the edge scan. */
+  private def assertEdgesInPlace(name: String, body: => Unit): Unit = {
+    val plans = materializedPlans(body)
+    val loop = plans.filter(p => scansOf(p).exists(isEdgeScan))
+    assert(loop.nonEmpty,
+      s"$name: none of ${plans.size} materializations reads the edge table")
+    loop.foreach { p =>
+      val movers = exchangesOf(p) ++ p.collect { case s: SortExec => s }
+      val moved = movers.map(m => rowsOf(m.children.head)).collect {
+        case s: RDDScanExec if isEdgeScan(s) => s
+      }
+      assert(moved.isEmpty, s"$name: edge rows are exchanged or sorted:\n$p")
+    }
+  }
+
   test("pagerank and connected components: no loop plan has an Exchange " +
        "or a Sort over the edge table's scan") {
-    def check(name: String, body: => Unit): Unit = {
-      val plans = materializedPlans(body)
-      val loop = plans.filter(p => scansOf(p).exists(isEdgeScan))
-      assert(loop.nonEmpty,
-        s"$name: none of ${plans.size} materializations reads the edge table")
-      loop.foreach { p =>
-        val movers = exchangesOf(p) ++ p.collect { case s: SortExec => s }
-        val moved = movers.map(m => rowsOf(m.children.head)).collect {
-          case s: RDDScanExec if isEdgeScan(s) => s
-        }
-        assert(moved.isEmpty, s"$name: edge rows are exchanged or sorted:\n$p")
-      }
-    }
-    check("pageRankOf", Graph.pageRankSuppliers(spark, dir).collect())
-    check("connectedComponents", Graph.copurchaseComponents(spark, dir).collect())
+    assertEdgesInPlace("pageRankOf", Graph.pageRankSuppliers(spark, dir).collect())
+    assertEdgesInPlace("connectedComponents", Graph.copurchaseComponents(spark, dir).collect())
+  }
+
+  test("pagerank and connected components keep the edge rows in place with " +
+       "every join side under the broadcast threshold") {
+    // a threshold above every size estimate, the edge leaf's included: a
+    // truthful edge size under the session's 64 MB default is the same
+    // situation, and only the loops' merge hints keep the edge table
+    // from being broadcast every step
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, Long.MaxValue.toString)
+    try {
+      assertEdgesInPlace("pageRankOf", Graph.pageRankSuppliers(spark, dir).collect())
+      assertEdgesInPlace("pageRankConvergedOf",
+        Graph.pageRankConvergedSuppliers(spark, dir).collect())
+      assertEdgesInPlace("connectedComponents", Graph.copurchaseComponents(spark, dir).collect())
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("ig_report_synth: no Exchange sits directly above the materialized posts scan") {

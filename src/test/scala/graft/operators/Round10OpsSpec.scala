@@ -99,20 +99,6 @@ class Round10OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("matryoshkaRecall: wider prefixes never hurt recall; bounds hold") {
-    val rows = Similarity.matryoshkaRecall(spark, "/root/testdata/sf0.001").collect()
-    assert(rows.map(_.getAs[Long]("dims")).toSeq === Seq(8L, 16L, 32L))
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_hits") <= r.getAs[Long]("n_queries") * 10)
-      assert(r.getAs[Long]("recall_ppm") <= 1000000L)
-    }
-    // monotonicity is a property of THIS corpus, not a theorem (prefix
-    // rankings can reshuffle) — assert the weaker sane-curve bound: the
-    // widest prefix is at least as good as the narrowest
-    val byDims = rows.map(r => r.getAs[Long]("dims") -> r.getAs[Long]("n_hits")).toMap
-    assert(byDims(32L) >= byDims(8L))
-  }
-
   test("intervalCoverageOf: overlaps merge, gaps split, zero-length islands count") {
     import spark.implicits._
     // user 1: [0,10] + [5,20] merge (covered 20), [30,35] separate

@@ -1,13 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.CorpusOps
 
 /** Hand-built cases for the batch-9 operator additions: max drawdown,
-  * seasonal baseline residuals, exact rank-sum AUC, PMI co-occurrence
-  * lift, triplet hard-example mining, and MMR diversified re-ranking.
+  * seasonal baseline residuals, exact rank-sum AUC and PMI co-occurrence
+  * lift (the batch's similarity operators are pinned in
+  * [[SimilarityRecallSpec]]).
   * The DuckDB oracle gate proves each on the synthetic corpus; these pin
   * the core rules on inputs small enough to check by hand. */
 class Round9OpsSpec extends AnyFunSuite {
@@ -148,52 +147,6 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(r.head.getString(0) === "a" && r.head.getString(1) === "b")
   }
 
-  private val embSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
-  private def embDf(rows: Seq[(Long, Seq[Float], Int)]) =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (id, e, l) => Row(id, e, l) }),
-      embSchema)
-
-  test("tripletMiningOf: picks the closest impostor and farthest same-label") {
-    // anchor 0 (label 1) at (1,0); same-label 1 at (1, 0.1), 2 at (0.5, 0.8);
-    // other-label 3 at (0.9, 0.1), 4 at (0, 1)
-    val e = embDf(Seq(
-      (0L, Seq(1f, 0f), 1), (1L, Seq(1f, 0.1f), 1), (2L, Seq(0.5f, 0.8f), 1),
-      (3L, Seq(0.9f, 0.1f), 2), (4L, Seq(0f, 1f), 2)))
-    val r = Similarity.tripletMiningOf(e, probeBound = 1L).collect()
-    assert(r.length === 1)
-    assert(r(0).getAs[Long]("hard_pos_id") === 2L)  // farthest same-label
-    assert(r(0).getAs[Long]("hard_neg_id") === 3L)  // closest impostor
-    // neg (3) is closer to the anchor than pos (2): a violated triplet
-    assert(r(0).getAs[Boolean]("violation"))
-  }
-
-  test("tripletMiningOf: margin-satisfied anchors report violation=false") {
-    val e = embDf(Seq(
-      (0L, Seq(1f, 0f), 1), (1L, Seq(0.9f, 0.1f), 1), // tight positive
-      (2L, Seq(0f, 1f), 2)))                          // orthogonal negative
-    val r = Similarity.tripletMiningOf(e, probeBound = 1L).collect()
-    assert(r(0).getAs[Long]("hard_pos_id") === 1L)
-    assert(r(0).getAs[Long]("hard_neg_id") === 2L)
-    assert(!r(0).getAs[Boolean]("violation"))
-  }
-
-  test("mmrRerankOf: diversity term demotes a near-duplicate of the first pick") {
-    // query 0 at (1,0). Candidates: 1 at (0.8,0.6) rel=0.8; 2 a near-copy
-    // of 1 (rel~0.79, sim to 1 ~ 1); 3 at (0.6,-0.8), rel=0.6 but
-    // ORTHOGONAL to pick 1 (sim=0). Pure relevance ranks 1,2,3; MMR step 2
-    // scores 2 at 0.7*0.79-0.3*1 ~ 0.25 vs 3 at 0.7*0.6-0 = 0.42 -> 1,3,2.
-    val e = embDf(Seq(
-      (0L, Seq(1f, 0f), 1),
-      (1L, Seq(0.8f, 0.6f), 1), (2L, Seq(0.79f, 0.61f), 1),
-      (3L, Seq(0.6f, -0.8f), 1)))
-    val r = Similarity.mmrRerankOf(spark, e, poolK = 3, k = 3).collect()
-    assert(r.map(_.getAs[Long]("vec_id")).toSeq === Seq(1L, 3L, 2L))
-  }
-
   test("ksTestOf: disjoint supports give D=1e6 at the lower sample's max") {
     // purchases at 1.00/2.00, clicks at 5.00/6.00 -> full separation;
     // sup attained first at cents=200 (all purchases seen, no clicks)
@@ -261,16 +214,6 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(Windows.autocorrDailyOf(df).collect().isEmpty)
   }
 
-  test("kmeansInertia on testdata: cohesion is non-decreasing over Lloyd iterations") {
-    val rows = Similarity.kmeansInertia(spark, "/root/testdata/sf0.001")
-      .collect().sortBy(_.getAs[Long]("iters"))
-    assert(rows.length === 3)
-    val sums = rows.map(_.getAs[Long]("sum_cos_ppm"))
-    assert(sums(1) >= sums(0) && sums(2) >= sums(1),
-      s"cohesion regressed: ${sums.toSeq}")
-    assert(rows.forall(_.getAs[Long]("n_vecs") === rows(0).getAs[Long]("n_vecs")))
-  }
-
   test("epochShuffle: epochs conserve totals but recompose batches") {
     val r = graft.functions.TextAnalysis.epochShuffle(spark, "/root/testdata/sf0.001")
       .collect()
@@ -308,32 +251,6 @@ class Round9OpsSpec extends AnyFunSuite {
     val r = Windows.timeToConvertOf(df).collect()
     assert(r(0).getAs[Long]("n_converted") === 1L)
     assert(r(0).getAs[Long]("max_s") === 30L)
-  }
-
-  test("recallCurve on testdata: hits nest and never exceed the budget") {
-    val rows = Similarity.recallCurve(spark, "/root/testdata/sf0.001")
-      .collect().sortBy(_.getAs[Long]("k"))
-    assert(rows.map(_.getAs[Long]("k")).toSeq === Seq(1L, 5L, 10L, 20L))
-    val hits = rows.map(_.getAs[Long]("n_hits"))
-    assert(hits.zip(hits.tail).forall { case (a, b) => a <= b },
-      s"hit sets must nest: ${hits.toSeq}")
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_hits") <= r.getAs[Long]("n_queries") * r.getAs[Long]("k"))
-      assert(r.getAs[Long]("recall_ppm") <= 1000000L)
-    }
-  }
-
-  test("oodRate on testdata: label partition covers the corpus, rates in range") {
-    val dirSf = "/root/testdata/sf0.001"
-    val rows = Similarity.oodRate(spark, dirSf).collect()
-    val total = graft.sources.Tables.embeddings(spark, dirSf).count()
-    assert(rows.map(_.getAs[Long]("n_vecs")).sum === total)
-    rows.foreach { r =>
-      val (n, ood, ppm) = (r.getAs[Long]("n_vecs"), r.getAs[Long]("n_ood"),
-        r.getAs[Long]("ood_ppm"))
-      assert(ood >= 0L && ood <= n)
-      assert(ppm === ood * 1000000L / n)
-    }
   }
 
   test("memorizationRate on testdata: rates are valid ppm and grams counted") {
@@ -427,19 +344,6 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(r(0).getAs[Long]("winsorized_mean_cents") === 50L) // (4950+99)/100
   }
 
-  test("clusterTopics on testdata: ranked 1..3 per cell, score matches ratio") {
-    val rows = Similarity.clusterTopics(spark, "/root/testdata/sf0.001").collect()
-    assert(rows.nonEmpty)
-    rows.groupBy(_.getAs[Long]("cell")).foreach { case (_, rs) =>
-      assert(rs.map(_.getAs[Long]("rank")).sorted.toSeq ===
-        (1L to rs.length).toSeq)
-    }
-    rows.foreach { r =>
-      assert(r.getAs[Long]("score_ppm") ===
-        r.getAs[Long]("tf") * 1000000L / r.getAs[Long]("n_cells_with"))
-    }
-  }
-
   test("pathTopKOf: prefix order and full-history conversion") {
     val df = eventsDf(Seq(
       (1L, "2024-01-01 00:00:00", 1L, "view", 1.0),
@@ -504,24 +408,6 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(r("dropped") === ((1L, 40L)))
   }
 
-  test("annFiltered: every neighbor carries the query's label (pre-filter)") {
-    val dirSf = "/root/testdata/sf0.001"
-    val labels = graft.sources.Tables.embeddings(spark, dirSf)
-      .select("vec_id", "label").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val rows = Similarity.annFiltered(spark, dirSf).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val (q, v) = (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))
-      assert(labels(v) === labels(q), s"neighbor $v label differs from query $q")
-      assert(v !== q)
-    }
-    // ranks are 1..k per query (rnk is the Int posexplode ordinal)
-    rows.groupBy(_.getAs[Long]("q_id")).values.foreach { rs =>
-      assert(rs.map(_.getAs[Int]("rnk")).sorted.toSeq === (1 to rs.length).toSeq)
-    }
-  }
-
   test("heldoutPpl on testdata: train scores above heldout under its own model") {
     val r = graft.functions.CorpusOps.heldoutPpl(spark, "/root/testdata/sf0.01")
       .collect().map(x => x.getAs[String]("split") -> x.getAs[Long]("mean_ppm")).toMap
@@ -531,12 +417,4 @@ class Round9OpsSpec extends AnyFunSuite {
       s"train ${r("train")} should dominate heldout ${r("val")}/${r("test")}")
   }
 
-  test("mmrRerankOf: rank 1 is the pure-relevance argmax with score 0.7*rel") {
-    val e = embDf(Seq(
-      (0L, Seq(1f, 0f), 1), (1L, Seq(1f, 0.2f), 1), (2L, Seq(0f, 1f), 1)))
-    val r = Similarity.mmrRerankOf(spark, e, poolK = 2, k = 2).collect()
-    assert(r(0).getAs[Long]("vec_id") === 1L)
-    assert(math.abs(r(0).getAs[Double]("mmr_score")
-      - 0.7 * r(0).getAs[Double]("rel")) < 1e-12)
-  }
 }

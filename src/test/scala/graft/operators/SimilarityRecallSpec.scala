@@ -1,10 +1,15 @@
 package graft.operators
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Recall QA for the IVF family: the nprobe knob must be monotone
-  * (probing 2 cells can only find a superset-quality answer vs 1), and
-  * every IVF hit must be consistent with the brute-force ranking. */
+/** Recall QA for the similarity family: the nprobe knob must be monotone
+  * (probing 2 cells can only find a superset-quality answer vs 1), every
+  * IVF hit must be consistent with the brute-force ranking, and the
+  * shared recall tail counts exactly. Also the hand-built and testdata
+  * cases of the mining, re-ranking, clustering and filtered-search
+  * operators. */
 class SimilarityRecallSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-recall-test")
   val dir = "/root/testdata/sf0.01"
@@ -149,6 +154,174 @@ class SimilarityRecallSpec extends AnyFunSuite {
     // monotone
     val vals = Seq(1L, 100L, 512L, 513L, 5000L, 100000L).map(Similarity.autoPlanes(_))
     assert(vals == vals.sorted)
+  }
+
+  private val embSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
+  private def embDf(rows: Seq[(Long, Seq[Float], Int)]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, e, l) => Row(id, e, l) }),
+      embSchema)
+
+  test("tripletMiningOf: picks the closest impostor and farthest same-label") {
+    // anchor 0 (label 1) at (1,0); same-label 1 at (1, 0.1), 2 at (0.5, 0.8);
+    // other-label 3 at (0.9, 0.1), 4 at (0, 1)
+    val e = embDf(Seq(
+      (0L, Seq(1f, 0f), 1), (1L, Seq(1f, 0.1f), 1), (2L, Seq(0.5f, 0.8f), 1),
+      (3L, Seq(0.9f, 0.1f), 2), (4L, Seq(0f, 1f), 2)))
+    val r = Similarity.tripletMiningOf(e, probeBound = 1L).collect()
+    assert(r.length === 1)
+    assert(r(0).getAs[Long]("hard_pos_id") === 2L)  // farthest same-label
+    assert(r(0).getAs[Long]("hard_neg_id") === 3L)  // closest impostor
+    // neg (3) is closer to the anchor than pos (2): a violated triplet
+    assert(r(0).getAs[Boolean]("violation"))
+  }
+
+  test("tripletMiningOf: margin-satisfied anchors report violation=false") {
+    val e = embDf(Seq(
+      (0L, Seq(1f, 0f), 1), (1L, Seq(0.9f, 0.1f), 1), // tight positive
+      (2L, Seq(0f, 1f), 2)))                          // orthogonal negative
+    val r = Similarity.tripletMiningOf(e, probeBound = 1L).collect()
+    assert(r(0).getAs[Long]("hard_pos_id") === 1L)
+    assert(r(0).getAs[Long]("hard_neg_id") === 2L)
+    assert(!r(0).getAs[Boolean]("violation"))
+  }
+
+  test("mmrRerankOf: diversity term demotes a near-duplicate of the first pick") {
+    // query 0 at (1,0). Candidates: 1 at (0.8,0.6) rel=0.8; 2 a near-copy
+    // of 1 (rel~0.79, sim to 1 ~ 1); 3 at (0.6,-0.8), rel=0.6 but
+    // ORTHOGONAL to pick 1 (sim=0). Pure relevance ranks 1,2,3; MMR step 2
+    // scores 2 at 0.7*0.79-0.3*1 ~ 0.25 vs 3 at 0.7*0.6-0 = 0.42 -> 1,3,2.
+    val e = embDf(Seq(
+      (0L, Seq(1f, 0f), 1),
+      (1L, Seq(0.8f, 0.6f), 1), (2L, Seq(0.79f, 0.61f), 1),
+      (3L, Seq(0.6f, -0.8f), 1)))
+    val r = Similarity.mmrRerankOf(spark, e, poolK = 3, k = 3).collect()
+    assert(r.map(_.getAs[Long]("vec_id")).toSeq === Seq(1L, 3L, 2L))
+  }
+
+  test("kmeansInertia on testdata: cohesion is non-decreasing over Lloyd iterations") {
+    val rows = Similarity.kmeansInertia(spark, "/root/testdata/sf0.001")
+      .collect().sortBy(_.getAs[Long]("iters"))
+    assert(rows.length === 3)
+    val sums = rows.map(_.getAs[Long]("sum_cos_ppm"))
+    assert(sums(1) >= sums(0) && sums(2) >= sums(1),
+      s"cohesion regressed: ${sums.toSeq}")
+    assert(rows.forall(_.getAs[Long]("n_vecs") === rows(0).getAs[Long]("n_vecs")))
+  }
+
+  test("recallCurve on testdata: hits nest and never exceed the budget") {
+    val rows = Similarity.recallCurve(spark, "/root/testdata/sf0.001")
+      .collect().sortBy(_.getAs[Long]("k"))
+    assert(rows.map(_.getAs[Long]("k")).toSeq === Seq(1L, 5L, 10L, 20L))
+    val hits = rows.map(_.getAs[Long]("n_hits"))
+    assert(hits.zip(hits.tail).forall { case (a, b) => a <= b },
+      s"hit sets must nest: ${hits.toSeq}")
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_hits") <= r.getAs[Long]("n_queries") * r.getAs[Long]("k"))
+      assert(r.getAs[Long]("recall_ppm") <= 1000000L)
+    }
+  }
+
+  test("oodRate on testdata: label partition covers the corpus, rates in range") {
+    val dirSf = "/root/testdata/sf0.001"
+    val rows = Similarity.oodRate(spark, dirSf).collect()
+    val total = graft.sources.Tables.embeddings(spark, dirSf).count()
+    assert(rows.map(_.getAs[Long]("n_vecs")).sum === total)
+    rows.foreach { r =>
+      val (n, ood, ppm) = (r.getAs[Long]("n_vecs"), r.getAs[Long]("n_ood"),
+        r.getAs[Long]("ood_ppm"))
+      assert(ood >= 0L && ood <= n)
+      assert(ppm === ood * 1000000L / n)
+    }
+  }
+
+  test("clusterTopics on testdata: ranked 1..3 per cell, score matches ratio") {
+    val rows = Similarity.clusterTopics(spark, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    rows.groupBy(_.getAs[Long]("cell")).foreach { case (_, rs) =>
+      assert(rs.map(_.getAs[Long]("rank")).sorted.toSeq ===
+        (1L to rs.length).toSeq)
+    }
+    rows.foreach { r =>
+      assert(r.getAs[Long]("score_ppm") ===
+        r.getAs[Long]("tf") * 1000000L / r.getAs[Long]("n_cells_with"))
+    }
+  }
+
+  test("annFiltered: every neighbor carries the query's label (pre-filter)") {
+    val dirSf = "/root/testdata/sf0.001"
+    val labels = graft.sources.Tables.embeddings(spark, dirSf)
+      .select("vec_id", "label").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val rows = Similarity.annFiltered(spark, dirSf).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val (q, v) = (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))
+      assert(labels(v) === labels(q), s"neighbor $v label differs from query $q")
+      assert(v !== q)
+    }
+    // ranks are 1..k per query (rnk is the Int posexplode ordinal)
+    rows.groupBy(_.getAs[Long]("q_id")).values.foreach { rs =>
+      assert(rs.map(_.getAs[Int]("rnk")).sorted.toSeq === (1 to rs.length).toSeq)
+    }
+  }
+
+  test("mmrRerankOf: rank 1 is the pure-relevance argmax with score 0.7*rel") {
+    val e = embDf(Seq(
+      (0L, Seq(1f, 0f), 1), (1L, Seq(1f, 0.2f), 1), (2L, Seq(0f, 1f), 1)))
+    val r = Similarity.mmrRerankOf(spark, e, poolK = 2, k = 2).collect()
+    assert(r(0).getAs[Long]("vec_id") === 1L)
+    assert(math.abs(r(0).getAs[Double]("mmr_score")
+      - 0.7 * r(0).getAs[Double]("rel")) < 1e-12)
+  }
+
+  test("matryoshkaRecall: wider prefixes never hurt recall; bounds hold") {
+    val rows = Similarity.matryoshkaRecall(spark, "/root/testdata/sf0.001").collect()
+    assert(rows.map(_.getAs[Long]("dims")).toSeq === Seq(8L, 16L, 32L))
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_hits") <= r.getAs[Long]("n_queries") * 10)
+      assert(r.getAs[Long]("recall_ppm") <= 1000000L)
+    }
+    // monotonicity is a property of THIS corpus, not a theorem (prefix
+    // rankings can reshuffle) — assert the weaker sane-curve bound: the
+    // widest prefix is at least as good as the narrowest
+    val byDims = rows.map(r => r.getAs[Long]("dims") -> r.getAs[Long]("n_hits")).toMap
+    assert(byDims(32L) >= byDims(8L))
+  }
+
+  test("recall tail: exact counts with a short served list and fewer probes than probeBound") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.when
+    // probeBound 5 over a 3-row probe table: the denominator is the 3
+    // probes that exist, not the bound
+    val probes = Seq(0L, 1L, 2L).toDF("vec_id").filter($"vec_id" < 5L)
+    val exact = Seq((0L, 10L), (0L, 15L), (1L, 12L), (1L, 16L), (2L, 17L), (2L, 18L))
+      .toDF("q_id", "vec_id")
+    // k = 2; probe 1's served list is short (one neighbor), probe 2 misses
+    val served = Seq((0L, 10L), (0L, 11L), (1L, 12L), (2L, 13L), (2L, 14L))
+      .toDF("q_id", "vec_id")
+    val tail = Similarity.recallAt(served, exact, probes)
+    val r = tail.collect()
+    assert(r.length === 1)
+    assert(r(0).getAs[Long]("n_queries") === 3L)
+    assert(r(0).getAs[Long]("n_hits") === 2L)
+    val mean = Similarity.meanRecall(tail, 2).collect()(0)
+    assert(mean.getAs[Long]("n_hits_total") === 2L)
+    assert(mean.getAs[Double]("mean_recall") === 2.0 / 6.0)
+    val ppm = Similarity.ppmRecall(tail, 2).collect()(0)
+    assert(ppm.getAs[Long]("recall_ppm") === 333333L) // 2·10⁶ div 6
+    // a hit rule counts only the matched rows it accepts, per group
+    val ruled = Similarity.recallAt(served.withColumn("g", $"q_id" % 2), exact, probes,
+        Seq("g"), when($"vec_id" =!= 10L, 1)).collect()
+      .map(x => (x.getAs[Long]("g"), x.getAs[Long]("n_hits"))).toMap
+    assert(ruled === Map(0L -> 0L, 1L -> 1L)) // q0's hit 10 rejected; q1's 12 kept
+    // nothing served: still one row, zero hits
+    val none = Similarity.recallAt(served.filter($"q_id" < 0L), exact, probes).collect()
+    assert(none.map(x => (x.getAs[Long]("n_queries"), x.getAs[Long]("n_hits"))).toSeq ===
+      Seq((3L, 0L)))
   }
 
   private def annBrute() = Similarity.annBruteForceTopK(spark, dir)
