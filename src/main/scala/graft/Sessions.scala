@@ -32,6 +32,8 @@ import org.apache.spark.sql.SparkSession
   *      the first compiles 148 instead of 169 (stages whose code is
   *      identical share one class). The plan's `*(id)` still names the
   *      stage.
+  *  - Tungsten pages are sized for many live buffers per task
+  *    ([[pageSize]]).
   */
 object Sessions {
   /** Local parallelism for the mains: `SPARK_GRAFT_CPUS`, else every
@@ -39,7 +41,23 @@ object Sessions {
   def cpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
+  /** Tungsten page size for `cpus` task slots in a JVM of `heapBytes`.
+    * Spark sizes a page as if one task held at most 16 pages, which at a
+    * 7 GB heap and 4 slots is its 64 MB ceiling. One task of the full
+    * creator report's fused stages holds many more live aggregation and
+    * sort buffers than that: the second of two forced full reports at
+    * sf0.01 failed with UNABLE_TO_ACQUIRE_MEMORY (a 64 MB page for
+    * `BytesToBytesMap.allocate` under a sort). Budgeting 256 pages per
+    * slot of unified memory ((heap − 300 MB) × 0.6) gives 4 MB there;
+    * the result is a power of two within Spark's 1–64 MB range. */
+  def pageSize(cpus: Int, heapBytes: Long = Runtime.getRuntime.maxMemory): Long = {
+    val mb = 1024L * 1024
+    val perPage = ((heapBytes - 300 * mb) * 0.6 / math.max(1, cpus) / 256).toLong
+    math.min(64 * mb, math.max(1 * mb, java.lang.Long.highestOneBit(perPage)))
+  }
+
   def local(cpus: String, appName: String = "graft"): SparkSession = {
+    val slots = cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -52,6 +70,7 @@ object Sessions {
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config("spark.buffer.pageSize", s"${pageSize(slots)}b")
       // blocks kept by graft.Materialize (and the remaining plain
       // localCheckpoints) are freed by the ContextCleaner only after
       // their DataFrame is GC'd, and a large pre-touched heap rarely GCs

@@ -170,19 +170,19 @@ object Extraction {
       containsAny(lc(col("username")), ugcKeywords) ||
       containsAny(lc(col("biography")), ugcKeywords)
     val f = coalesce(col("follower_count"), lit(0L))
+    val ugc = profileUgc || coalesce(col("ugc_in_captions"), lit(false))
+    // one projection per dependency level: the tier reads creator_type and
+    // the matrix reads both, each many times
     val withType = df
-      .withColumn("ugc0", profileUgc || coalesce(col("ugc_in_captions"), lit(false)))
-      .withColumn("creator_type",
-        when(col("ugc0") || f < 1000, lit("UGC Creator"))
-          .otherwise(lit("Social Media Influencer")))
-      .withColumn("tier",
-        when(col("creator_type") === "UGC Creator",
+      .select(col("*"), when(ugc || f < 1000, lit("UGC Creator"))
+        .otherwise(lit("Social Media Influencer")).as("creator_type"))
+      .select(col("*"), when(col("creator_type") === "UGC Creator",
           when(f < 1000, lit("Beginner")).otherwise(lit("Experienced")))
-          .otherwise(
-            when(f < 10000, lit("1K-10K"))
-              .when(f < 50000, lit("10K-50K"))
-              .when(f < 500000, lit("50K-500K"))
-              .otherwise(lit("500K-1M+"))))
+        .otherwise(
+          when(f < 10000, lit("1K-10K"))
+            .when(f < 50000, lit("10K-50K"))
+            .when(f < 500000, lit("50K-500K"))
+            .otherwise(lit("500K-1M+"))).as("tier"))
     // (roi, impressions, t15, t30, t60, t1to5, t5plus) per (type, tier)
     val matrix: Seq[(String, String, (String, String, Int, Int, Int, Int, Int))] = Seq(
       ("UGC Creator", "Beginner",    ("3×–6×", "30K", 40, 60, 100, 133, 200)),
@@ -200,37 +200,31 @@ object Extraction {
       matrix.foldLeft(lit(null).cast("long")) { case (acc, (t, tr, v)) =>
         when(col("creator_type") === t && col("tier") === tr, lit(get(v).toLong)).otherwise(acc)
       }
-    withType
-      .withColumn("creator_pricing_metrics", struct(
-        pickS(_._1).as("estimated_roi"),
-        pickS(_._2).as("impressions_visibility"),
-        pickN(_._3).as("time_15_seconds"),
-        pickN(_._4).as("time_30_seconds"),
-        pickN(_._5).as("time_60_seconds"),
-        pickN(_._6).as("time_1_to_5_minutes"),
-        pickN(_._7).as("time_greater_than_5_minutes")))
-      .drop("ugc0")
+    withType.select(col("*"), struct(
+      pickS(_._1).as("estimated_roi"),
+      pickS(_._2).as("impressions_visibility"),
+      pickN(_._3).as("time_15_seconds"),
+      pickN(_._4).as("time_30_seconds"),
+      pickN(_._5).as("time_60_seconds"),
+      pickN(_._6).as("time_1_to_5_minutes"),
+      pickN(_._7).as("time_greater_than_5_minutes")).as("creator_pricing_metrics"))
   }
 
   /** extract_basic_info (:686-712) + all scalar extractions in one
     * projection over profiles (joined with the posts UGC flag). */
   def enrich(profiles: DataFrame, posts: DataFrame): DataFrame = {
-    val withFlag = profiles.join(ugcCaptionFlag(posts), Seq("creator_key"), "left")
-    val base = withFlag
-      .withColumn("email", email(col("biography")))
-      .withColumn("phone_number", phone(col("biography")))
-      .withColumn("first_name", firstName(col("full_name")))
-      .withColumn("last_name", lastName(col("full_name")))
-      .withColumn("creator_size", creatorSize(col("follower_count")))
-      .withColumn("social_links", socialLinks(col("bio_links")))
-      .withColumn("gender", gender(col("pronouns"), col("biography"),
-        col("full_name"), col("username")))
-      .withColumn("ig_account_type", accountType(col("category"), col("biography"),
-        col("external_url"), col("is_business"), col("is_verified"), col("follower_count")))
-      .withColumn("profile_picture",
-        when(coalesce(col("username"), lit("")) =!= "",
-          concat(lit("https://assets.veelapp.com/"), col("username"), lit(".jpg")))
-          .otherwise(lit("")))
-    pricing(base)
+    pricing(ByCreator(profiles, ugcCaptionFlag(posts))(col("*"),
+      email(col("biography")).as("email"),
+      phone(col("biography")).as("phone_number"),
+      firstName(col("full_name")).as("first_name"),
+      lastName(col("full_name")).as("last_name"),
+      creatorSize(col("follower_count")).as("creator_size"),
+      socialLinks(col("bio_links")).as("social_links"),
+      gender(col("pronouns"), col("biography"), col("full_name"), col("username")).as("gender"),
+      accountType(col("category"), col("biography"), col("external_url"),
+        col("is_business"), col("is_verified"), col("follower_count")).as("ig_account_type"),
+      when(coalesce(col("username"), lit("")) =!= "",
+        concat(lit("https://assets.veelapp.com/"), col("username"), lit(".jpg")))
+        .otherwise(lit("")).as("profile_picture")))
   }
 }

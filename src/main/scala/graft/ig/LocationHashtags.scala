@@ -55,21 +55,21 @@ object LocationHashtags {
     // dedup'd — every count is 1, so most_common(10) ≡ first 10 in
     // insertion order
     val locAgg = locCounts
-      .withColumn("ins_rank", row_number().over(wFirst))
-      .withColumn("top_rank", col("ins_rank"))
+      .select(col("*"), row_number().over(wFirst).as("ins_rank"))
       .groupBy("creator_key").agg(
         expr("transform(array_sort(collect_list(struct(ins_rank, loc))), r -> r.loc)")
           .as("location_tags"),
-        expr("transform(array_sort(collect_list(CASE WHEN top_rank <= 10 " +
-          "THEN struct(top_rank, loc) END)), r -> r.loc)")
+        expr("transform(array_sort(collect_list(CASE WHEN ins_rank <= 10 " +
+          "THEN struct(ins_rank, loc) END)), r -> r.loc)")
           .as("most_visited_locations"),
         count(lit(1)).as("travel_frequency"))
-      .withColumn("location_diversity_score",
-        least(lit(100L), col("travel_frequency") * 5))
+      .select(col("*"), least(lit(100L), col("travel_frequency") * 5).as("location_diversity_score"))
 
     // matched_us_cities: first city (dim order) whose name equals / prefixes
     // / is contained in the location, per distinct location in insertion
     // order (:197-218). With no dim (the shipped reality) → empty.
+    val emptyCities = expr("cast(array() as array<struct<input_location:string," +
+      "matched_city:string,state:string>>)")
     val matched = usCities match {
       case Some(cities) =>
         val cityDim = cities.select(
@@ -82,18 +82,17 @@ object LocationHashtags {
           lower_loc === col("entry_name") ||
             lower_loc.startsWith(col("entry_name")) ||
             col("entry_name").contains(lower_loc))
-          .withColumn("rn", row_number().over(Window
-            .partitionBy("creator_key", "loc").orderBy("city_ord")))
+          .select(col("*"), row_number().over(Window
+            .partitionBy("creator_key", "loc").orderBy("city_ord")).as("rn"))
           .filter(col("rn") === 1)
-        hits.withColumn("ins_rank", row_number().over(wFirst))
+        hits.select(col("*"), row_number().over(wFirst).as("ins_rank"))
           .groupBy("creator_key").agg(
             expr("transform(array_sort(collect_list(struct(ins_rank, " +
               "struct(loc as input_location, entry_name as matched_city, " +
               "entry_state as state)))), r -> r.col2)").as("matched_us_cities"))
       case None =>
-        posts.select("creator_key").distinct().withColumn("matched_us_cities",
-          expr("cast(array() as array<struct<input_location:string," +
-            "matched_city:string,state:string>>)"))
+        posts.select("creator_key").distinct()
+          .select(col("creator_key"), emptyCities.as("matched_us_cities"))
     }
 
     // location_hashtags: lowercased #\w+ tags matching the 18 location
@@ -108,13 +107,13 @@ object LocationHashtags {
     // posting-hour histogram + timezone estimate (:162-241)
     val hours = posts
       .filter(coalesce(col("taken_at"), lit(0L)) =!= 0)
-      .withColumn("h", clock.localHour(col("taken_at")))
+      .select(col("creator_key"), col("ordinal"), clock.localHour(col("taken_at")).as("h"))
       .groupBy("creator_key", "h")
       .agg(count(lit(1)).as("n_h"), min(col("ordinal")).as("first_ord"))
     val wHour = Window.partitionBy("creator_key")
       .orderBy(col("n_h").desc, col("first_ord"))
     val hourAgg = hours
-      .withColumn("rk", row_number().over(wHour))
+      .select(col("*"), row_number().over(wHour).as("rk"))
       .groupBy("creator_key").agg(
         // Counter(posting_times) keeps first-occurrence order (:222-223)
         map_from_entries(expr(
@@ -122,39 +121,29 @@ object LocationHashtags {
             "struct(cast(h as string) as k, n_h as v) as e))), x -> x.e)"))
           .as("posting_timezone_pattern"),
         avg(when(col("rk") <= 5, col("h"))).as("avg_top5_hour"))
-      .withColumn("timezone_estimate",
+      .select(col("*"),
         when(col("avg_top5_hour").between(6, 10),
           lit("Morning poster (likely local timezone)"))
           .when(col("avg_top5_hour").between(11, 15),
             lit("Afternoon poster (likely local timezone)"))
           .when(col("avg_top5_hour").between(16, 22),
             lit("Evening poster (likely local timezone)"))
-          .otherwise(lit("Night poster (possible different timezone)")))
+          .otherwise(lit("Night poster (possible different timezone)")).as("timezone_estimate"))
 
-    posts.select("creator_key").distinct()
-      .join(locAgg, Seq("creator_key"), "left")
-      .join(matched, Seq("creator_key"), "left")
-      .join(hashtagAgg, Seq("creator_key"), "left")
-      .join(hourAgg, Seq("creator_key"), "left")
-      .withColumn("location_tags",
-        coalesce(col("location_tags"), expr("array()").cast("array<string>")))
-      .withColumn("most_visited_locations",
-        coalesce(col("most_visited_locations"), expr("array()").cast("array<string>")))
-      .withColumn("travel_frequency", coalesce(col("travel_frequency"), lit(0L)))
-      .withColumn("location_diversity_score",
-        coalesce(col("location_diversity_score"), lit(0L)))
-      .withColumn("location_hashtags",
-        coalesce(col("location_hashtags"), expr("array()").cast("array<string>")))
-      .withColumn("matched_us_cities", coalesce(col("matched_us_cities"),
-        expr("cast(array() as array<struct<input_location:string," +
-          "matched_city:string,state:string>>)")))
-      .withColumn("posting_timezone_pattern", coalesce(col("posting_timezone_pattern"),
-        expr("map()").cast("map<string,bigint>")))
-      .withColumn("timezone_estimate",
-        coalesce(col("timezone_estimate"), lit("Unknown")))
-      .select("creator_key", "location_tags", "location_hashtags",
-        "most_visited_locations", "timezone_estimate", "posting_timezone_pattern",
-        "travel_frequency", "location_diversity_score", "matched_us_cities")
+    ByCreator(posts.select("creator_key").distinct(), locAgg, matched, hashtagAgg, hourAgg)(
+        col("creator_key"),
+        coalesce(col("location_tags"), expr("array()").cast("array<string>"))
+          .as("location_tags"),
+        coalesce(col("location_hashtags"), expr("array()").cast("array<string>"))
+          .as("location_hashtags"),
+        coalesce(col("most_visited_locations"), expr("array()").cast("array<string>"))
+          .as("most_visited_locations"),
+        coalesce(col("timezone_estimate"), lit("Unknown")).as("timezone_estimate"),
+        coalesce(col("posting_timezone_pattern"), expr("map()").cast("map<string,bigint>"))
+          .as("posting_timezone_pattern"),
+        coalesce(col("travel_frequency"), lit(0L)).as("travel_frequency"),
+        coalesce(col("location_diversity_score"), lit(0L)).as("location_diversity_score"),
+        coalesce(col("matched_us_cities"), emptyCities).as("matched_us_cities"))
   }
 
   // ----------------------------------------------------------- hashtags
@@ -172,12 +161,10 @@ object LocationHashtags {
     // the post (:1573-1576); a missing one defaults to 0 → also skipped
     val recent = posts.filter(col("taken_at").isNotNull && col("taken_at") >= cutoff)
 
-    val counts = posts.select("creator_key").distinct()
-      .join(recent.groupBy("creator_key")
-        .agg(count(lit(1)).as("posts_analyzed_for_hashtags")),
-        Seq("creator_key"), "left")
-      .withColumn("posts_analyzed_for_hashtags",
-        coalesce(col("posts_analyzed_for_hashtags"), lit(0L)))
+    val counts = ByCreator(posts.select("creator_key").distinct(),
+      recent.groupBy("creator_key").agg(count(lit(1)).as("posts_analyzed_for_hashtags")))(
+        col("creator_key"),
+        coalesce(col("posts_analyzed_for_hashtags"), lit(0L)).as("posts_analyzed_for_hashtags"))
 
     val sw = mentionStopwords.map(s => s"'$s'").mkString(",")
     val tagArr = "regexp_extract_all(lower(coalesce(caption_text, '')), '#([A-Za-z0-9_]+)', 1)"
@@ -186,29 +173,27 @@ object LocationHashtags {
 
     def top(df: DataFrame, arrExpr: String, lowered: Boolean, out: String): DataFrame = {
       val items = df.select(col("creator_key"), col("ordinal"), posexplode(expr(arrExpr)))
-        .withColumn("key", if (lowered) col("col") else lower(col("col")))
+        .select(col("*"), (if (lowered) col("col") else lower(col("col"))).as("key"))
       val grouped = items.groupBy("creator_key", "key").agg(
         count(lit(1)).as("n"),
         min(struct(col("ordinal"), col("pos"))).as("first_seen"))
       val w = Window.partitionBy("creator_key")
         .orderBy(col("n").desc, col("first_seen.ordinal"), col("first_seen.pos"))
-      grouped.withColumn("rk", row_number().over(w)).filter(col("rk") <= limit)
+      grouped.select(col("*"), row_number().over(w).as("rk")).filter(col("rk") <= limit)
         .groupBy("creator_key")
         .agg(map_from_entries(expr(
           "transform(array_sort(collect_list(struct(rk, struct(key, n)))), r -> r.col2)"))
           .as(out))
     }
 
-    counts
-      .join(top(recent, tagArr, lowered = true, "hashtags_last_90_days"),
-        Seq("creator_key"), "left")
-      .join(top(recent, menArr, lowered = false, "mentions_last_90_days"),
-        Seq("creator_key"), "left")
-      .withColumn("hashtags_last_90_days", coalesce(col("hashtags_last_90_days"),
-        expr("map()").cast("map<string,bigint>")))
-      .withColumn("mentions_last_90_days", coalesce(col("mentions_last_90_days"),
-        expr("map()").cast("map<string,bigint>")))
-      .withColumn("hashtag_analysis_date_range",
-        lit(s"${clock.cutoffStr(90)} to ${clock.todayStr}"))
+    ByCreator(counts,
+      top(recent, tagArr, lowered = true, "hashtags_last_90_days"),
+      top(recent, menArr, lowered = false, "mentions_last_90_days"))(
+        col("creator_key"), col("posts_analyzed_for_hashtags"),
+        coalesce(col("hashtags_last_90_days"), expr("map()").cast("map<string,bigint>"))
+          .as("hashtags_last_90_days"),
+        coalesce(col("mentions_last_90_days"), expr("map()").cast("map<string,bigint>"))
+          .as("mentions_last_90_days"),
+        lit(s"${clock.cutoffStr(90)} to ${clock.todayStr}").as("hashtag_analysis_date_range"))
   }
 }

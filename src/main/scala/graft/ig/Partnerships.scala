@@ -46,17 +46,13 @@ object Partnerships {
   /** detect_paid_partnerships (:540-684). One row per creator. */
   def partnershipData(posts: DataFrame, profiles: DataFrame, clock: IgClock): DataFrame = {
     val cap = lower(coalesce(col("caption_text"), lit("")))
-    val p = posts
-      .withColumn("is_cap_sponsored", containsAny(cap, captionIndicators))
-      .withColumn("is_tag_sponsored",
-        col("sponsor_tags").isNotNull && size(col("sponsor_tags")) > 0)
-      .withColumn("is_sponsored", col("is_cap_sponsored") || col("is_tag_sponsored"))
-      .withColumn("total_engagement", col("like_count") + col("comment_count"))
+    val p = posts.select(col("*"),
+      (containsAny(cap, captionIndicators) ||
+        (col("sponsor_tags").isNotNull && size(col("sponsor_tags")) > 0)).as("is_sponsored"),
+      (col("like_count") + col("comment_count")).as("total_engagement"),
       // (?U): Python's str \w is unicode-aware, Java's default is ASCII
-      .withColumn("hashtags",
-        expr("regexp_extract_all(caption_text, '(?U)#(\\\\w+)', 1)"))
-      .withColumn("mentions",
-        expr("regexp_extract_all(caption_text, '(?U)@(\\\\w+)', 1)"))
+      expr("regexp_extract_all(caption_text, '(?U)#(\\\\w+)', 1)").as("hashtags"),
+      expr("regexp_extract_all(caption_text, '(?U)@(\\\\w+)', 1)").as("mentions"))
 
     val agg = p.groupBy("creator_key").agg(
       count(when(col("is_sponsored"), 1)).as("total_sponsored_posts"),
@@ -108,54 +104,50 @@ object Partnerships {
 
     val bioDf = profiles.select(col("creator_key"),
       containsAny(lower(coalesce(col("biography"), lit(""))), bioIndicators)
-        .as("bio_partnerships"))
+        .as("bio_raw"))
 
-    agg.join(bioDf, Seq("creator_key"), "left")
-      .withColumn("bio_partnerships", coalesce(col("bio_partnerships"), lit(false)))
-      .withColumn("sponsored_posts", expr("transform(sp_ranked, r -> r.sp)"))
-      .withColumn("avg_sponsored_engagement", coalesce(col("avg_s_raw"), lit(0.0)))
-      .withColumn("avg_organic_engagement", coalesce(col("avg_o_raw"), lit(0.0)))
-      .withColumn("engagement_comparison",
-        when(col("avg_sponsored_engagement") > 0 && col("avg_organic_engagement") > 0,
-          struct(
-            pyround(col("avg_sponsored_engagement") / col("avg_organic_engagement"), 2)
-              .as("sponsored_vs_organic_ratio"),
-            (col("avg_sponsored_engagement") / col("avg_organic_engagement") > 1.0)
-              .as("sponsored_performs_better"))))
-      // sorted(key=date, reverse=True) is stable → edges order within a day
-      .withColumn("collaboration_timeline",
+    ByCreator(agg, bioDf)(col("*"),
+        coalesce(col("bio_raw"), lit(false)).as("bio_partnerships"),
+        expr("transform(sp_ranked, r -> r.sp)").as("sponsored_posts"),
+        coalesce(col("avg_s_raw"), lit(0.0)).as("avg_sponsored_engagement"),
+        coalesce(col("avg_o_raw"), lit(0.0)).as("avg_organic_engagement"),
+        // sorted(key=date, reverse=True) is stable → edges order within a day
         when(col("timeline_exception"), expr("array()").cast(
           "array<struct<date:string,post_id:string,sponsors:array<string>,engagement:bigint>>"))
           .otherwise(expr(
             "transform(array_sort(tl_ranked, (a, b) -> CASE" +
               " WHEN a.neg_date > b.neg_date THEN -1 WHEN a.neg_date < b.neg_date THEN 1" +
               " WHEN a.ordinal < b.ordinal THEN -1 WHEN a.ordinal > b.ordinal THEN 1" +
-              " ELSE 0 END), r -> r.e)")))
-      .withColumn("has_paid_partnerships",
-        col("total_sponsored_posts") > 0 || col("bio_partnerships"))
-      .withColumn("sponsor_frequency", expr(
-        "map_from_entries(transform(array_distinct(all_sponsor_usernames), " +
-          "u -> struct(u, cast(size(filter(all_sponsor_usernames, x -> x = u)) as bigint))))"))
-      .withColumn("collaboration_score",
+              " ELSE 0 END), r -> r.e)")).as("collaboration_timeline"),
+        expr("map_from_entries(transform(array_distinct(all_sponsor_usernames), " +
+          "u -> struct(u, cast(size(filter(all_sponsor_usernames, x -> x = u)) as bigint))))")
+          .as("sponsor_frequency"))
+      .select(col("*"),
+        when(col("avg_sponsored_engagement") > 0 && col("avg_organic_engagement") > 0,
+          struct(
+            pyround(col("avg_sponsored_engagement") / col("avg_organic_engagement"), 2)
+              .as("sponsored_vs_organic_ratio"),
+            (col("avg_sponsored_engagement") / col("avg_organic_engagement") > 1.0)
+              .as("sponsored_performs_better"))).as("engagement_comparison"),
+        (col("total_sponsored_posts") > 0 || col("bio_partnerships")).as("has_paid_partnerships"))
+      .select(col("creator_key"), col("has_paid_partnerships"), col("total_sponsored_posts"),
+        col("sponsor_frequency"), col("sponsored_posts"), col("collaboration_timeline"),
+        col("avg_sponsored_engagement"), col("avg_organic_engagement"),
+        col("engagement_comparison"), expr("array()").cast("array<string>").as("affiliate_links"),
+        col("brand_mentions"),
         when(col("timeline_exception"), lit(0L)).otherwise(
           least(col("total_sponsored_posts") * 10, lit(40L)) +
             least(size(col("sponsor_frequency")).cast("long") * 15, lit(30L)) +
             when(col("bio_partnerships"), 20L).otherwise(0L) +
             when(coalesce(col("engagement_comparison.sponsored_performs_better"),
-              lit(false)), 10L).otherwise(0L)))
-      .withColumn("affiliate_links", expr("array()").cast("array<string>"))
-      .select("creator_key", "has_paid_partnerships", "total_sponsored_posts",
-        "sponsor_frequency", "sponsored_posts", "collaboration_timeline",
-        "avg_sponsored_engagement", "avg_organic_engagement",
-        "engagement_comparison", "affiliate_links", "brand_mentions",
-        "collaboration_score")
+              lit(false)), 10L).otherwise(0L)).as("collaboration_score"))
   }
 
   private[ig] val mentionStopwords = Seq("the", "and", "for", "from", "with", "this",
     "that", "have", "has", "her", "his", "our", "my", "your", "their", "its",
     "as", "at", "by", "to", "in", "on", "of", "or", "if")
 
-  /** Filtered @-mentions of one caption, in match order, with index. */
+  /** Filtered @-mentions of one caption, in match order. */
   private def filteredMentions(caption: Column): Column = {
     val sw = mentionStopwords.map(s => s"'$s'").mkString(",")
     expr(s"filter(regexp_extract_all(coalesce(${caption.toString}, ''), " +
@@ -175,73 +167,58 @@ object Partnerships {
     val cutoff = clock.cutoff(300)
     val cap = lower(coalesce(col("caption_text"), lit("")))
 
-    val base = posts
-      .withColumn("is_recent",
-        coalesce(col("taken_at"), lit(0L)) =!= 0 && col("taken_at") > cutoff)
-      .withColumn("uname", first(col("user_username"))
-        .over(Window.partitionBy("creator_key").orderBy("ordinal")))
-
     val wC = Window.partitionBy("creator_key")
-    val flags = base
-      .withColumn("is_paid", col("is_paid_partnership"))
-      .withColumn("has_adcollab", cap.contains("#ad") || cap.contains("#collab"))
-      .withColumn("any_paid", max(col("is_paid")).over(wC))
-      .withColumn("first_paid_ord",
-        min(when(col("is_paid"), col("ordinal"))).over(wC))
-      .withColumn("first_adcollab_ord",
-        min(when(col("has_adcollab"), col("ordinal"))).over(wC))
+    val flags = posts
+      .select(col("*"),
+        (coalesce(col("taken_at"), lit(0L)) =!= 0 && col("taken_at") > cutoff).as("is_recent"),
+        first(col("user_username"))
+          .over(Window.partitionBy("creator_key").orderBy("ordinal")).as("uname"),
+        col("is_paid_partnership").as("is_paid"),
+        (cap.contains("#ad") || cap.contains("#collab")).as("has_adcollab"))
+      .select(col("*"),
+        max(col("is_paid")).over(wC).as("any_paid"),
+        min(when(col("is_paid"), col("ordinal"))).over(wC).as("first_paid_ord"),
+        min(when(col("has_adcollab"), col("ordinal"))).over(wC).as("first_adcollab_ord"))
 
-    // Pass 1: mentions of the FIRST paid-partnership post (:1287-1327)
-    val pass1 = flags.filter(col("ordinal") === col("first_paid_ord"))
-      .select(col("creator_key"), col("uname"), col("is_recent"),
-        posexplode_outer(filteredMentions(col("caption_text"))))
-      .filter(col("col").isNotNull)
-      .select(col("creator_key"), col("col").as("name"), col("is_recent"),
-        lit("paid_partnership").as("source"), lit("mention").as("recent_source"),
-        lit(1).as("pass"), lit(0L).as("ord"), col("pos").cast("long").as("sub"))
+    // Every candidate a post contributes, in (pass, ord, sub) sequence
+    // order. A candidate name is never null or empty (the filters below
+    // and the mention regex guarantee it); the coalesce only tells the
+    // schema so.
+    def candidates(names: Column, source: String, pass: Int, ord: Column, subBase: Int,
+                   keep: Column => Column): Column =
+      filter(transform(names, (n, i) => struct(coalesce(n, lit("")).as("name"),
+        lit(source).as("source"), lit(pass).as("pass"), ord.as("ord"),
+        (i + subBase).cast("long").as("sub"))), c => keep(c.getField("name")))
+    def foreign(n: Column): Column = n.isNotNull && n =!= "" && !(n <=> col("uname"))
+    val mentions = filteredMentions(col("caption_text"))
+    val cands = concat(
+      // pass 1: mentions of the FIRST paid-partnership post (:1287-1327)
+      candidates(mentions, "paid_partnership", 1, lit(0L), 0,
+        _ => col("ordinal") === col("first_paid_ord")),
+      // pass 2: owners then coauthors, all posts in edges order (:1333-1381)
+      candidates(array(col("owner_username")), "owner", 2, col("ordinal").cast("long"), 0,
+        foreign),
+      candidates(coalesce(col("coauthor_usernames"), expr("array()").cast("array<string>")),
+        "coauthor", 2, col("ordinal").cast("long"), 1, foreign),
+      // pass 3: only when no paid post exists — mentions of the first
+      // #ad/#collab post (:1384-1427)
+      candidates(mentions, "tag", 3, lit(0L), 0,
+        _ => !col("any_paid") && col("ordinal") === col("first_adcollab_ord")))
 
-    // Pass 2: owners then coauthors, all posts in edges order (:1333-1381)
-    val owners = flags
-      .filter(col("owner_username").isNotNull && col("owner_username") =!= "" &&
-        !(col("owner_username") <=> col("uname")))
-      .select(col("creator_key"), col("owner_username").as("name"), col("is_recent"),
-        lit("owner").as("source"), lit("owner").as("recent_source"),
-        lit(2).as("pass"), col("ordinal").cast("long").as("ord"), lit(0L).as("sub"))
-    val coauthors = flags
-      .select(col("creator_key"), col("is_recent"), col("ordinal"), col("uname"),
-        posexplode_outer(coalesce(col("coauthor_usernames"),
-          expr("array()").cast("array<string>"))))
-      .filter(col("col").isNotNull && col("col") =!= "" && !(col("col") <=> col("uname")))
-      .select(col("creator_key"), col("col").as("name"), col("is_recent"),
-        lit("coauthor").as("source"), lit("coauthor").as("recent_source"),
-        lit(2).as("pass"), col("ordinal").cast("long").as("ord"),
-        (col("pos") + 1).cast("long").as("sub"))
-
-    // Pass 3: only when no paid post exists — mentions of the first
-    // #ad/#collab post (:1384-1427)
-    val pass3 = flags
-      .filter(!col("any_paid") && col("ordinal") === col("first_adcollab_ord"))
-      .select(col("creator_key"), col("is_recent"),
-        posexplode_outer(filteredMentions(col("caption_text"))))
-      .filter(col("col").isNotNull)
-      .select(col("creator_key"), col("col").as("name"), col("is_recent"),
-        lit("tag").as("source"), lit("mention").as("recent_source"),
-        lit(3).as("pass"), lit(0L).as("ord"), col("pos").cast("long").as("sub"))
-
-    val candidates = pass1.unionByName(owners).unionByName(coauthors).unionByName(pass3)
-    val wName = Window.partitionBy("creator_key", "name")
-      .orderBy(col("pass"), col("ord"), col("sub"))
-    val kept = candidates.withColumn("rn", row_number().over(wName))
+    val wName = Window.partitionBy(col("creator_key"), col("c.name"))
+      .orderBy(col("c.pass"), col("c.ord"), col("c.sub"))
+    val collabAgg = flags
+      .select(col("creator_key"), col("is_recent"), explode(cands).as("c"))
+      .select(col("*"), row_number().over(wName).as("rn"))
       .filter(col("rn") === 1)
-
-    val collabAgg = kept.groupBy("creator_key").agg(
-      array_sort(collect_list(struct(col("pass"), col("ord"), col("sub"),
-        struct(col("name"), lit(1L).as("count"), col("is_recent"),
-          col("source")).as("c")))).as("ranked"),
-      count(when(col("is_recent"), 1)).as("recent_collaborations"))
-      .withColumn("all_collaborations", expr("transform(ranked, r -> r.c)"))
-      .withColumn("total_collaborations", size(col("all_collaborations")).cast("long"))
-      .drop("ranked")
+      .groupBy("creator_key").agg(
+        array_sort(collect_list(struct(col("c.pass"), col("c.ord"), col("c.sub"),
+          struct(col("c.name"), lit(1L).as("count"), col("is_recent"),
+            col("c.source")).as("c")))).as("ranked"),
+        count(when(col("is_recent"), 1)).as("recent_collaborations"))
+      .select(col("creator_key"), col("recent_collaborations"),
+        expr("transform(ranked, r -> r.c)").as("all_collaborations"))
+      .select(col("*"), size(col("all_collaborations")).cast("long").as("total_collaborations"))
 
     // final_status (:1277,1300,1407,1430-1465): Active iff any paid post,
     // or any #ad/#collab post, or (uname set and any foreign owner), or
@@ -255,19 +232,18 @@ object Partnerships {
       max(expr("exists(coalesce(coauthor_usernames, array()), " +
         "c -> c IS NOT NULL AND c != '' AND NOT c <=> uname)") && col("uname").isNotNull)
         .as("s_coauthor"))
-      .withColumn("collaboration_status",
+      .select(col("creator_key"),
         when(col("s_paid") || col("s_tag") || col("s_owner") || col("s_coauthor"),
-          lit("Active")))
-      .select("creator_key", "collaboration_status")
+          lit("Active")).as("collaboration_status"))
 
-    status
-      .join(collabAgg, Seq("creator_key"), "left")
-      .join(ugcExamples(posts), Seq("creator_key"), "left")
-      .withColumn("all_collaborations", coalesce(col("all_collaborations"), expr(
-        "array()").cast("array<struct<name:string,count:bigint,is_recent:boolean,source:string>>")))
-      .withColumn("total_collaborations", coalesce(col("total_collaborations"), lit(0L)))
-      .withColumn("recent_collaborations", coalesce(col("recent_collaborations"), lit(0L)))
-      .withColumn("ugc_examples", coalesce(col("ugc_examples"), lit("")))
+    ByCreator(status, collabAgg, ugcExamples(posts))(
+        col("creator_key"), col("collaboration_status"),
+        coalesce(col("recent_collaborations"), lit(0L)).as("recent_collaborations"),
+        coalesce(col("all_collaborations"), expr("array()").cast(
+          "array<struct<name:string,count:bigint,is_recent:boolean,source:string>>"))
+          .as("all_collaborations"),
+        coalesce(col("total_collaborations"), lit(0L)).as("total_collaborations"),
+        coalesce(col("ugc_examples"), lit("")).as("ugc_examples"))
   }
 
   /** extract_ugc_examples (:1114-1251): 4-pass cascade over clips only;
@@ -275,28 +251,26 @@ object Partnerships {
     * instagram.com/p/ URLs. Passes 3-4 need a non-null first-post user. */
   def ugcExamples(posts: DataFrame): DataFrame = {
     val cap = lower(coalesce(col("caption_text"), lit("")))
-    val clips = posts
-      .withColumn("uname", first(col("user_username"))
-        .over(Window.partitionBy("creator_key").orderBy("ordinal")))
+    // every pass a clip qualifies for, one row each
+    val passes = array(
+      when(col("is_paid_partnership"), lit(1)),
+      when(cap.contains("#ad") || cap.contains("#collab"), lit(2)),
+      when(col("uname").isNotNull && col("owner_username").isNotNull &&
+        col("owner_username") =!= "" && col("owner_username") =!= col("uname"), lit(3)),
+      when(col("uname").isNotNull && expr(
+        "exists(coalesce(coauthor_usernames, array()), c -> c IS NOT NULL AND c != '' AND c != uname)"),
+        lit(4)))
+    val wCode = Window.partitionBy("creator_key", "code").orderBy(col("pass"), col("ordinal"))
+    posts
+      .select(col("*"), first(col("user_username"))
+        .over(Window.partitionBy("creator_key").orderBy("ordinal")).as("uname"))
       .filter(col("product_type") === "clips" &&
         col("code").isNotNull && col("code") =!= "")
-
-    def cand(passNo: Int, cond: Column) =
-      clips.filter(cond).select(col("creator_key"), col("code"),
-        lit(passNo).as("pass"), col("ordinal"))
-
-    val candidates =
-      cand(1, col("is_paid_partnership")).unionByName(
-        cand(2, cap.contains("#ad") || cap.contains("#collab"))).unionByName(
-        cand(3, col("uname").isNotNull && col("owner_username").isNotNull &&
-          col("owner_username") =!= "" && col("owner_username") =!= col("uname"))).unionByName(
-        cand(4, col("uname").isNotNull && expr(
-          "exists(coalesce(coauthor_usernames, array()), c -> c IS NOT NULL AND c != '' AND c != uname)")))
-
-    val wCode = Window.partitionBy("creator_key", "code").orderBy(col("pass"), col("ordinal"))
-    candidates.withColumn("rn", row_number().over(wCode)).filter(col("rn") === 1)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("creator_key").orderBy(col("pass"), col("ordinal"))))
+      .select(col("creator_key"), col("code"), col("ordinal"),
+        explode(filter(passes, _.isNotNull)).as("pass"))
+      .select(col("*"), row_number().over(wCode).as("rn")).filter(col("rn") === 1)
+      .select(col("*"), row_number().over(
+        Window.partitionBy("creator_key").orderBy(col("pass"), col("ordinal"))).as("rk"))
       .filter(col("rk") <= 3)
       .groupBy("creator_key")
       .agg(array_join(expr("transform(array_sort(collect_list(struct(rk, code)))," +

@@ -29,41 +29,37 @@ object ProfileAnalysis {
       count(lit(1)).as("post_count"),
       sum(when(col("ordinal") < 20, col("like_count"))).as("tl"),
       sum(when(col("ordinal") < 20, col("comment_count"))).as("tc"))
-    val joined = profiles
-      .select(col("creator_key"), coalesce(col("follower_count"), lit(0L)).as("f"),
-        coalesce(col("following_count"), lit(0L)).as("fg"))
-      .join(agg, Seq("creator_key"), "left")
-      .withColumn("computed", coalesce(col("post_count"), lit(0L)) > 0 && col("f") > 0)
-    joined
-      // guarded by `computed`: the default path (no posts / 0 followers,
-      // :262-263) must not evaluate the divisions (ANSI divide-by-zero)
-      .withColumn("avg_l",
-        when(col("computed"), col("tl").cast("double") / col("post_count")))
-      .withColumn("avg_c",
-        when(col("computed"), col("tc").cast("double") / col("post_count")))
-      .withColumn("er", when(col("computed"),
-        (col("tl") + col("tc")).cast("double") / col("post_count") / col("f") * 100.0))
-      .withColumn("i1", col("computed") && col("er") < 0.5)
-      .withColumn("i2", col("computed") && col("f") > 10000 && col("fg") < 100 && col("er") < 1)
-      .withColumn("i3", col("computed") && col("avg_l") > 100 && col("avg_c") < col("avg_l") * 0.01)
-      .withColumn("fake_follower_score",
-        when(col("i1"), 30L).otherwise(0L) + when(col("i2"), 25L).otherwise(0L) +
-          when(col("i3"), 20L).otherwise(0L))
-      .withColumn("suspicious_indicators", expr(
-        "filter(array(" +
+    // the divisions are guarded by `computed`: the default path (no
+    // posts / 0 followers, :262-263) must not evaluate them (ANSI
+    // divide-by-zero)
+    ByCreator(profiles.select(col("creator_key"),
+      coalesce(col("follower_count"), lit(0L)).as("f"),
+      coalesce(col("following_count"), lit(0L)).as("fg")), agg)(
+        col("*"), (coalesce(col("post_count"), lit(0L)) > 0 && col("f") > 0).as("computed"))
+      .select(col("*"),
+        when(col("computed"), col("tl").cast("double") / col("post_count")).as("avg_l"),
+        when(col("computed"), col("tc").cast("double") / col("post_count")).as("avg_c"),
+        when(col("computed"),
+          (col("tl") + col("tc")).cast("double") / col("post_count") / col("f") * 100.0).as("er"))
+      .select(col("*"),
+        (col("computed") && col("er") < 0.5).as("i1"),
+        (col("computed") && col("f") > 10000 && col("fg") < 100 && col("er") < 1).as("i2"),
+        (col("computed") && col("avg_l") > 100 && col("avg_c") < col("avg_l") * 0.01).as("i3"))
+      .select(col("creator_key"),
+        (when(col("i1"), 30L).otherwise(0L) + when(col("i2"), 25L).otherwise(0L) +
+          when(col("i3"), 20L).otherwise(0L)).as("fake_follower_score"),
+        expr("filter(array(" +
           "IF(i1, 'Very low engagement rate', NULL)," +
           "IF(i2, 'High follower count with very low following and engagement', NULL)," +
-          "IF(i3, 'Disproportionately low comment rate', NULL)), x -> x IS NOT NULL)"))
-      .withColumn("authenticity_score", greatest(lit(0L), lit(100L) - col("fake_follower_score")))
-      .withColumn("engagement_quality",
+          "IF(i3, 'Disproportionately low comment rate', NULL)), x -> x IS NOT NULL)")
+          .as("suspicious_indicators"))
+      .select(col("creator_key"), col("fake_follower_score"), col("suspicious_indicators"),
+        greatest(lit(0L), lit(100L) - col("fake_follower_score")).as("authenticity_score"),
         when(col("fake_follower_score") > 50, lit("Poor"))
           .when(col("fake_follower_score") > 25, lit("Moderate"))
-          .otherwise(lit("Good")))
-      .withColumn("comment_quality_score", lit(0L))
-      .withColumn("follower_growth_pattern", lit("Natural"))
-      .select("creator_key", "fake_follower_score", "suspicious_indicators",
-        "authenticity_score", "engagement_quality", "comment_quality_score",
-        "follower_growth_pattern")
+          .otherwise(lit("Good")).as("engagement_quality"),
+        lit(0L).as("comment_quality_score"),
+        lit("Natural").as("follower_growth_pattern"))
   }
 
   // --------------------------------------------------------- personality
@@ -83,47 +79,46 @@ object ProfileAnalysis {
       "sharing", "connect")
 
     val bio = lower(coalesce(col("biography"), lit("")))
-    profiles.select(col("creator_key"), col("biography"))
-      .join(metrics.select(col("creator_key"), col("post_frequency"),
-        col("consistency_score"), col("engagement_rate")), Seq("creator_key"), "left")
-      .withColumn("pf", coalesce(col("post_frequency"), lit("Unknown")))
-      .withColumn("cs", coalesce(col("consistency_score"), lit(0.0)))
-      .withColumn("er", coalesce(col("engagement_rate"), lit(0.0)))
-      .withColumn("t_professional", presenceCount(bio, professionalW) +
-        when(col("cs") > 70, 1L).otherwise(0L))
-      .withColumn("t_creative", presenceCount(bio, creativeW))
-      .withColumn("t_social", presenceCount(bio, socialW))
-      .withColumn("t_authentic",
-        when(lower(col("pf")).contains("daily"), 2L).otherwise(0L))
-      .withColumn("personality_traits", struct(
-        col("t_professional").as("professional"), col("t_creative").as("creative"),
-        col("t_social").as("social"), col("t_authentic").as("authentic"),
-        lit(0L).as("aspirational"), lit(0L).as("educational"),
-        lit(0L).as("entertaining")))
-      // max() takes the FIRST maximum in dict insertion order
-      .withColumn("mx", greatest(col("t_professional"), col("t_creative"),
-        col("t_social"), col("t_authentic")))
-      .withColumn("personality_type",
+    ByCreator(profiles.select(col("creator_key"), col("biography")),
+      metrics.select(col("creator_key"), col("post_frequency"),
+        col("consistency_score"), col("engagement_rate")))(col("*"),
+        coalesce(col("post_frequency"), lit("Unknown")).as("pf"),
+        coalesce(col("consistency_score"), lit(0.0)).as("cs"),
+        coalesce(col("engagement_rate"), lit(0.0)).as("er"))
+      .select(col("*"),
+        (presenceCount(bio, professionalW) + when(col("cs") > 70, 1L).otherwise(0L))
+          .as("t_professional"),
+        presenceCount(bio, creativeW).as("t_creative"),
+        presenceCount(bio, socialW).as("t_social"),
+        when(lower(col("pf")).contains("daily"), 2L).otherwise(0L).as("t_authentic"))
+      .select(col("*"),
+        struct(
+          col("t_professional").as("professional"), col("t_creative").as("creative"),
+          col("t_social").as("social"), col("t_authentic").as("authentic"),
+          lit(0L).as("aspirational"), lit(0L).as("educational"),
+          lit(0L).as("entertaining")).as("personality_traits"),
+        // max() takes the FIRST maximum in dict insertion order
+        greatest(col("t_professional"), col("t_creative"),
+          col("t_social"), col("t_authentic")).as("mx"),
+        pyroundLong(
+          col("cs") / 100.0 * 30.0 +
+            least(col("t_social").cast("double") * 10.0, lit(30.0)) +
+            least(col("er") * 2.0, lit(40.0))).as("authenticity_score"),
+        (col("t_professional").cast("double") * 20.0 + col("er") * 5.0 + col("cs"))
+          .as("brand_score"))
+      .select(col("creator_key"), col("personality_traits"), col("authenticity_score"),
         when(col("mx") === 0, lit("Balanced"))
           .when(col("t_professional") === col("mx"), lit("Professional"))
           .when(col("t_creative") === col("mx"), lit("Creative"))
           .when(col("t_social") === col("mx"), lit("Social"))
-          .otherwise(lit("Authentic")))
-      .withColumn("authenticity_score", pyroundLong(
-        col("cs") / 100.0 * 30.0 +
-          least(col("t_social").cast("double") * 10.0, lit(30.0)) +
-          least(col("er") * 2.0, lit(40.0))))
-      .withColumn("brand_score",
-        col("t_professional").cast("double") * 20.0 + col("er") * 5.0 + col("cs"))
-      .withColumn("brand_potential",
+          .otherwise(lit("Authentic")).as("personality_type"),
         when(col("brand_score") > 150, lit("High"))
           .when(col("brand_score") > 75, lit("Medium"))
-          .otherwise(lit("Low")))
-      .withColumn("profile_insights", struct(
+          .otherwise(lit("Low")).as("brand_potential"))
+      .select(col("creator_key"), col("personality_traits"), struct(
         col("personality_type"), lit("Mixed").as("content_style"),
         lit("General").as("audience_appeal"), col("brand_potential"),
-        col("authenticity_score")))
-      .select("creator_key", "personality_traits", "profile_insights")
+        col("authenticity_score")).as("profile_insights"))
   }
 
   // --------------------------------------------------------------- niche
@@ -170,18 +165,17 @@ object ProfileAnalysis {
     def matched(tokens: Column): Column =
       expr(s"filter(${tokens.toString}, t -> t IN ($inKw))")
     profiles
-      .withColumn("bio_clean",
-        translate(coalesce(col("biography"), lit("")), ",\n", "  "))
-      .withColumn("fn_clean",
-        translate(coalesce(col("full_name"), lit("")), ",\n", "  "))
-      .withColumn("un_clean",
+      .select(col("*"),
+        translate(coalesce(col("biography"), lit("")), ",\n", "  ").as("bio_clean"),
+        translate(coalesce(col("full_name"), lit("")), ",\n", "  ").as("fn_clean"),
         translate(regexp_replace(coalesce(col("username"), lit("")), "^_+|_+$", ""),
-          "_.", "  "))
-      .withColumn("m_bio", matched(wsTokens(col("bio_clean"))))
-      // username tokens additionally drop 1-char tokens (:1022-1023)
-      .withColumn("m_un", matched(expr(
-        "filter(" + wsTokens(col("un_clean")).toString + ", t -> length(t) > 1)")))
-      .withColumn("m_fn", matched(wsTokens(col("fn_clean"))))
+          "_.", "  ").as("un_clean"))
+      .select(col("*"),
+        matched(wsTokens(col("bio_clean"))).as("m_bio"),
+        // username tokens additionally drop 1-char tokens (:1022-1023)
+        matched(expr(
+          "filter(" + wsTokens(col("un_clean")).toString + ", t -> length(t) > 1)")).as("m_un"),
+        matched(wsTokens(col("fn_clean"))).as("m_fn"))
   }
 
   /** identify_niche (:962-1112). One row per creator. */
@@ -241,58 +235,55 @@ object ProfileAnalysis {
     val emptyDetailed = "cast(array() as " +
       "array<struct<keyword:string,count:bigint,sources:array<string>,weighted_score:double>>)"
 
-    base.select(col("creator_key"), col("biography"), col("username"),
-      col("full_name"), col("m_bio"), col("m_un"), col("m_fn"))
-      .join(perCreator, Seq("creator_key"), "left")
-      .join(orderedKw, Seq("creator_key"), "left")
-      .join(kwSources, Seq("creator_key"), "left")
-      .withColumn("matched_keywords",
-        coalesce(col("matched_keywords"), expr("array()").cast("array<string>")))
-      .withColumn("keyword_sources",
-        coalesce(col("keyword_sources"), expr("map()").cast("map<string,array<string>>")))
-      .withColumn("scores_all", expr(
-        s"transform($catArray, c -> struct(c as cat, coalesce(score_map[c], 0D) as score))"))
-      .withColumn("total_score", expr(
-        "greatest(aggregate(scores_all, 0D, (a, s) -> a + s.score), 1D)"))
-      .withColumn("max_score", expr(
-        "greatest(aggregate(scores_all, 0D, (a, s) -> greatest(a, s.score)), 1D)"))
-      .withColumn("overall_niche", col("best.cat"))
-      .withColumn("distribution", map_filter(
-        map_from_entries(transform(
-          filter(col("scores_all"), s => s.getField("score") > 0),
-          s => struct(s.getField("cat").as("k"),
-            pyround(s.getField("score") / col("total_score") * 100, 1).as("v")))),
-        (_, v) => v >= 2))
-      .withColumn("confidence_scores", expr(
-        "map_from_entries(transform(scores_all, " +
-          "s -> struct(s.cat, least(100, cast(s.score / max_score * 100 as int)))))"))
-      // dict(sorted_niches) — score desc, ties stable in category order
-      // (:1072,1108)
-      .withColumn("niche_scores", expr(
-        "map_from_entries(transform(array_sort(transform(scores_all, " +
+    ByCreator(base.select(col("creator_key"), col("biography"), col("username"),
+      col("full_name"), col("m_bio"), col("m_un"), col("m_fn")),
+      perCreator, orderedKw, kwSources)(
+        col("creator_key"), col("biography"), col("username"), col("full_name"),
+        col("best"),
+        coalesce(col("matched_keywords"), expr("array()").cast("array<string>"))
+          .as("matched_keywords"),
+        coalesce(col("keyword_sources"), expr("map()").cast("map<string,array<string>>"))
+          .as("keyword_sources"),
+        expr(s"transform($catArray, c -> struct(c as cat, coalesce(score_map[c], 0D) as score))")
+          .as("scores_all"),
+        expr(s"map_from_entries(transform($catArray, " +
+          s"c -> struct(c, coalesce(detailed_map[c], $emptyDetailed))))").as("detailed_matches"),
+        struct(
+          when(coalesce(col("biography"), lit("")) =!= "", struct(
+            col("biography").as("text"), col("m_bio").as("matched_keywords"),
+            size(col("m_bio")).cast("long").as("match_count"))).as("biography"),
+          when(coalesce(col("username"), lit("")) =!= "", struct(
+            col("username").as("text"), col("m_un").as("matched_keywords"),
+            size(col("m_un")).cast("long").as("match_count"))).as("username"),
+          when(coalesce(col("full_name"), lit("")) =!= "", struct(
+            col("full_name").as("text"), col("m_fn").as("matched_keywords"),
+            size(col("m_fn")).cast("long").as("match_count"))).as("full_name"))
+          .as("source_analysis"))
+      .select(col("*"),
+        expr("greatest(aggregate(scores_all, 0D, (a, s) -> a + s.score), 1D)").as("total_score"),
+        expr("greatest(aggregate(scores_all, 0D, (a, s) -> greatest(a, s.score)), 1D)")
+          .as("max_score"),
+        // dict(sorted_niches) — score desc, ties stable in category order
+        // (:1072,1108)
+        expr("map_from_entries(transform(array_sort(transform(scores_all, " +
           "(s, i) -> struct(-s.score as k1, i as k2, s.cat as cat, s.score as score)))," +
-          " x -> struct(x.cat, x.score)))"))
-      .withColumn("detailed_matches", expr(
-        s"map_from_entries(transform($catArray, " +
-          s"c -> struct(c, coalesce(detailed_map[c], $emptyDetailed))))"))
-      .withColumn("source_analysis", struct(
-        when(coalesce(col("biography"), lit("")) =!= "", struct(
-          col("biography").as("text"), col("m_bio").as("matched_keywords"),
-          size(col("m_bio")).cast("long").as("match_count"))).as("biography"),
-        when(coalesce(col("username"), lit("")) =!= "", struct(
-          col("username").as("text"), col("m_un").as("matched_keywords"),
-          size(col("m_un")).cast("long").as("match_count"))).as("username"),
-        when(coalesce(col("full_name"), lit("")) =!= "", struct(
-          col("full_name").as("text"), col("m_fn").as("matched_keywords"),
-          size(col("m_fn")).cast("long").as("match_count"))).as("full_name")))
-      .withColumn("niche_data", struct(
-        col("overall_niche"), col("distribution"), col("confidence_scores"),
-        col("matched_keywords"), col("keyword_sources"), col("source_analysis"),
-        col("detailed_matches"), col("niche_scores"),
+          " x -> struct(x.cat, x.score)))").as("niche_scores"))
+      .select(col("creator_key"), struct(
+        col("best.cat").as("overall_niche"),
+        map_filter(
+          map_from_entries(transform(
+            filter(col("scores_all"), s => s.getField("score") > 0),
+            s => struct(s.getField("cat").as("k"),
+              pyround(s.getField("score") / col("total_score") * 100, 1).as("v")))),
+          (_, v) => v >= 2).as("distribution"),
+        expr("map_from_entries(transform(scores_all, " +
+          "s -> struct(s.cat, least(100, cast(s.score / max_score * 100 as int)))))")
+          .as("confidence_scores"),
+        col("matched_keywords"), col("keyword_sources"),
+        col("source_analysis"), col("detailed_matches"), col("niche_scores"),
         coalesce(col("biography"), lit("")).as("biography_analyzed"),
         coalesce(col("username"), lit("")).as("username_analyzed"),
-        coalesce(col("full_name"), lit("")).as("full_name_analyzed")))
-      .select("creator_key", "niche_data")
+        coalesce(col("full_name"), lit("")).as("full_name_analyzed")).as("niche_data"))
   }
 
 }

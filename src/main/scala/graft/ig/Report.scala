@@ -38,79 +38,66 @@ object Report {
     val location = LocationHashtags.locationAnalysis(posts, clock)
     val hashtags = LocationHashtags.hashtagsMentions(posts, clock)
 
-    val k = Seq("creator_key")
-    enriched
-      .join(top, k, "left")
-      .join(metrics.withColumnRenamed("avg_likes", "m_avg_likes")
-        .withColumnRenamed("avg_comments", "m_avg_comments")
-        .withColumnRenamed("avg_shares", "m_avg_shares"), k, "left")
-      .join(partnership.select(col("creator_key"), struct(
+    // nine joins and ONE projection, analyzed together: every default, the
+    // engagement struct and the dates are expressions of the projection
+    ByCreator(enriched, top, metrics, partnership.select(col("creator_key"), struct(
         col("has_paid_partnerships"), col("total_sponsored_posts"),
         col("sponsor_frequency"), col("sponsored_posts"),
         col("collaboration_timeline"), col("avg_sponsored_engagement"),
         col("avg_organic_engagement"), col("engagement_comparison"),
         col("affiliate_links"), col("brand_mentions"),
-        col("collaboration_score")).as("partnership_data")), k, "left")
-      .join(collabs, k, "left")
-      .join(fake.select(col("creator_key"), struct(
+        col("collaboration_score")).as("partnership_data")),
+      collabs, fake.select(col("creator_key"), struct(
         col("fake_follower_score"), col("suspicious_indicators"),
         col("authenticity_score"), col("engagement_quality"),
         col("comment_quality_score"), col("follower_growth_pattern"))
-        .as("fake_follower_analysis")), k, "left")
-      .join(personality, k, "left")
-      .join(nicheDf, k, "left")
-      .join(location.select(col("creator_key"), struct(
+        .as("fake_follower_analysis")),
+      personality, nicheDf, location.select(col("creator_key"), struct(
         col("location_tags"), col("location_hashtags"),
         col("most_visited_locations"), col("timezone_estimate"),
         col("posting_timezone_pattern"), col("travel_frequency"),
         col("location_diversity_score"), col("matched_us_cities"))
-        .as("location_analysis")), k, "left")
-      .join(hashtags, k, "left")
-      // calculate_top_post_er returns (0, [], 0) when followers==0 or no
-      // 90-day posts (:1496-1498)
-      .withColumn("total_posts_last_3_months",
-        coalesce(col("total_posts_last_3_months"), lit(0L)))
-      .withColumn("top_6_posts", coalesce(col("top_6_posts"), expr(
-        "cast(array() as array<struct<interaction_score:bigint,likes:bigint," +
-          "comments:bigint,engagement_rate:double,post_code:string,taken_at:string>>)")))
-      .withColumn("average_engagement_rate",
-        coalesce(col("average_engagement_rate"), lit(0.0)))
-      // calculate_engagement_metrics defaults (:392-411)
-      .withColumn("engagement_metrics", struct(
-        coalesce(col("m_avg_likes"), lit(0L)).as("avg_likes"),
-        coalesce(col("m_avg_comments"), lit(0L)).as("avg_comments"),
-        coalesce(col("m_avg_shares"), lit(0L)).as("avg_shares"),
-        coalesce(col("engagement_rate"), lit(0.0)).as("engagement_rate"),
-        coalesce(col("post_frequency"), lit("Unknown")).as("post_frequency"),
-        coalesce(col("engagement_trend"), lit("Stable")).as("engagement_trend"),
-        coalesce(col("best_posting_time"), lit("Unknown")).as("best_posting_time"),
-        coalesce(col("total_posts_analyzed"), lit(0L)).as("total_posts_analyzed"),
-        coalesce(col("consistency_score"), lit(0.0)).as("consistency_score"),
-        coalesce(col("viral_posts_count"), lit(0L)).as("viral_posts_count"),
-        coalesce(col("avg_engagement_per_post"), lit(0L)).as("avg_engagement_per_post"),
-        coalesce(col("latest_posts_er"), expr("map()").cast("map<string,double>"))
-          .as("latest_posts_er"),
-        col("avg_latest_posts_er")))
-      .withColumn("analyzed_date", lit(clock.todayStr))
-      .withColumn("scraped_date", lit(clock.todayStr))
-      .select(
+        .as("location_analysis")),
+      hashtags)(
         col("creator_key"), col("username"), col("full_name"),
         col("ig_account_type"), col("first_name"), col("last_name"),
         col("biography"), col("phone_number"), col("follower_count"),
         col("creator_size"), col("gender"), col("email"),
         col("category").as("business_category"), col("profile_picture"),
-        col("social_links"), col("total_posts_last_3_months"),
-        col("top_6_posts"), col("average_engagement_rate"),
+        col("social_links"),
+        // calculate_top_post_er returns (0, [], 0) when followers==0 or
+        // no 90-day posts (:1496-1498)
+        coalesce(col("total_posts_last_3_months"), lit(0L)).as("total_posts_last_3_months"),
+        coalesce(col("top_6_posts"), expr(
+          "cast(array() as array<struct<interaction_score:bigint,likes:bigint," +
+            "comments:bigint,engagement_rate:double,post_code:string,taken_at:string>>)"))
+          .as("top_6_posts"),
+        coalesce(col("average_engagement_rate"), lit(0.0)).as("average_engagement_rate"),
         col("collaboration_status"), col("total_collaborations"),
         col("recent_collaborations"), col("ugc_examples"),
         col("all_collaborations").as("top_collaboration"), col("niche_data"),
         col("creator_type"), col("tier"), col("creator_pricing_metrics"),
         col("hashtags_last_90_days"), col("mentions_last_90_days"),
         col("posts_analyzed_for_hashtags"), col("hashtag_analysis_date_range"),
-        col("engagement_metrics"), col("partnership_data"),
-        col("location_analysis"), col("fake_follower_analysis"),
+        // calculate_engagement_metrics defaults (:392-411)
+        struct(
+          coalesce(col("avg_likes"), lit(0L)).as("avg_likes"),
+          coalesce(col("avg_comments"), lit(0L)).as("avg_comments"),
+          coalesce(col("avg_shares"), lit(0L)).as("avg_shares"),
+          coalesce(col("engagement_rate"), lit(0.0)).as("engagement_rate"),
+          coalesce(col("post_frequency"), lit("Unknown")).as("post_frequency"),
+          coalesce(col("engagement_trend"), lit("Stable")).as("engagement_trend"),
+          coalesce(col("best_posting_time"), lit("Unknown")).as("best_posting_time"),
+          coalesce(col("total_posts_analyzed"), lit(0L)).as("total_posts_analyzed"),
+          coalesce(col("consistency_score"), lit(0.0)).as("consistency_score"),
+          coalesce(col("viral_posts_count"), lit(0L)).as("viral_posts_count"),
+          coalesce(col("avg_engagement_per_post"), lit(0L)).as("avg_engagement_per_post"),
+          coalesce(col("latest_posts_er"), expr("map()").cast("map<string,double>"))
+            .as("latest_posts_er"),
+          col("avg_latest_posts_er")).as("engagement_metrics"),
+        col("partnership_data"), col("location_analysis"), col("fake_follower_analysis"),
         col("personality_traits"), col("profile_insights"),
-        col("analyzed_date"), col("scraped_date"))
+        lit(clock.todayStr).as("analyzed_date"), lit(clock.todayStr).as("scraped_date"))
       .orderBy(desc("average_engagement_rate"))
   }
 

@@ -49,9 +49,10 @@ object SynthIg {
     // so groups, order and row_number values are identical — but the
     // window's exchange now establishes hash(creator_key), the exact
     // partitioning every downstream analysis block aggregates and
-    // windows on. [[shapedPosts]] checkpoints under the AQE-off loop
-    // session so that partitioning SURVIVES into the blocks' planning
-    // (an AQE-created checkpoint captures UnknownPartitioning).
+    // windows on. [[shapedPosts]] materializes it through
+    // [[graft.Materialize]], which plans without AQE, so that partitioning
+    // SURVIVES into the blocks' planning (a checkpoint made under AQE
+    // comes back as UnknownPartitioning).
     val w = Window.partitionBy("creator_key").orderBy(col("o_orderdate").desc, col("o_orderkey"))
     Tables.orders(spark, dir)
       .withColumn("creator_key", concat(lit("c"), col("o_custkey")))
@@ -87,14 +88,6 @@ object SynthIg {
         expr("cast(array() as array<string>)").as("coauthor_usernames"))
   }
 
-  /** The full flagship DAG over synthesized data, hash-gated against a
-    * full DuckDB oracle (see [[fullReportOracle]]): every projected
-    * column — including the PyRound-ed average engagement rate and the
-    * collaboration-cascade counts — is re-derived in ANSI SQL from
-    * customer/orders. The deterministic username sort replaces the
-    * report's ER-descending order (ER ties are pervasive in synthesis —
-    * every orderless creator has ER 0.0 — so the report order is not a
-    * hashable contract). */
   /** The posts table materialized ONCE through [[graft.Materialize]],
     * carrying hash(creator_key) partitioning into downstream planning.
     *  - the posts subtree (a full row_number window over orders) feeds
@@ -115,6 +108,14 @@ object SynthIg {
     graft.Materialize(syntheticPosts(spark, dir), graft.Materialize.partitionsFor(spark,
       Tables.footerRowCount(spark, dir, "orders").getOrElse(Tables.orders(spark, dir).count())))
 
+  /** The full flagship DAG over synthesized data, hash-gated against a
+    * full DuckDB oracle (see [[fullReportOracle]]): every projected
+    * column — including the PyRound-ed average engagement rate and the
+    * collaboration-cascade counts — is re-derived in ANSI SQL from
+    * customer/orders. The deterministic username sort replaces the
+    * report's ER-descending order (ER ties are pervasive in synthesis —
+    * every orderless creator has ER 0.0 — so the report order is not a
+    * hashable contract). */
   def igReportSynth(spark: SparkSession, dir: String): DataFrame =
     Report.assemble(syntheticProfiles(spark, dir),
       shapedPosts(spark, dir), synthClock)
@@ -143,17 +144,13 @@ object SynthIg {
     val posts = shapedPosts(spark, dir)
       .select("creator_key", "ordinal", "taken_at", "like_count",
         "comment_count", "code", "caption_text")
-    val enriched = Extraction.pricing(
-      profiles.join(Extraction.ugcCaptionFlag(posts), Seq("creator_key"), "left"))
-      .withColumn("creator_size", Extraction.creatorSize(col("follower_count")))
+    val enriched = Extraction.pricing(ByCreator(profiles, Extraction.ugcCaptionFlag(posts))(
+      col("*"), Extraction.creatorSize(col("follower_count")).as("creator_size")))
     val top = Engagement.topPosts(posts, profiles, synthClock)
       .select("creator_key", "total_posts_last_3_months")
     val ht = LocationHashtags.hashtagsMentions(posts, synthClock)
       .select("creator_key", "posts_analyzed_for_hashtags")
-    enriched
-      .join(top, Seq("creator_key"), "left")
-      .join(ht, Seq("creator_key"), "left")
-      .select(col("username"), col("follower_count"), col("creator_size"),
+    ByCreator(enriched, top, ht)(col("username"), col("follower_count"), col("creator_size"),
         col("creator_type"), col("tier"),
         coalesce(col("total_posts_last_3_months"), lit(0L))
           .as("total_posts_last_3_months"),

@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -16,6 +16,8 @@ import org.apache.spark.sql.internal.SQLConf
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** A Column as the named expression `Dataset.select` projects. */
+  def named(c: Column): NamedExpression = classic.ColumnConversions.toRichColumn(c).named
 
   /** Build a DataFrame from a custom LogicalPlan (private[sql] in Spark;
     * needed to surface injected whole-operator nodes like AsOfJoinPlan). */
