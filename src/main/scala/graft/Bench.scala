@@ -154,7 +154,7 @@ object Bench {
             // recomputed without re-caching and regressed the
             // persist-reliant queries ~2×, and a per-query System.gc()
             // (tried second) perturbed the queries that followed it.
-            // Leaked localCheckpoint blocks are left to the heap
+            // Leaked graft.Materialize blocks are left to the heap
             // (sized from the host by build.sbt) + the ContextCleaner's
             // own GC cadence. Within a query's n
             // runs the cache stays warm (CacheManager dedupes by plan

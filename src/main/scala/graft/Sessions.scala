@@ -71,12 +71,11 @@ object Sessions {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.buffer.pageSize", s"${pageSize(slots)}b")
-      // blocks kept by graft.Materialize (and the remaining plain
-      // localCheckpoints) are freed by the ContextCleaner only after
-      // their DataFrame is GC'd, and a large pre-touched heap rarely GCs
-      // on its own — over a long registry sweep leaked blocks accumulate
-      // (LEAKPROBE.json r14: ~1.5 GB after one pass of the dd_/mm_/rel_
-      // families). The cleaner's own periodic GC defaults to 30 min;
+      // blocks kept by graft.Materialize are freed by the ContextCleaner
+      // only after their DataFrame is GC'd, and a large pre-touched heap
+      // rarely GCs on its own — over a long registry sweep leaked blocks
+      // accumulate (LEAKPROBE.json r14: ~1.5 GB after one pass of the
+      // dd_/mm_/rel_ families). The cleaner's own periodic GC defaults to 30 min;
       // 5 min bounds the accumulation at a negligible cost (one
       // System.gc() per 5 min). The leak-inflation hypothesis itself was
       // NOT confirmed (fresh 3.13 s vs polluted 2.91 s) — this is

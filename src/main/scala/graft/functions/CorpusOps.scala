@@ -227,7 +227,7 @@ object CorpusOps {
           max(col("doc_id")).as("last_doc"))
         .orderBy("shard")
       // materialize before unpersisting the two-pass frame beneath it
-      out.localCheckpoint(eager = true)
+      graft.Materialize(out)
     } finally sorted.unpersist()
   }
 
@@ -515,15 +515,14 @@ object CorpusOps {
     val novel = grams.groupBy("g").agg(min(col("doc_id")).as("first_doc"))
       .select(expr(s"first_doc div $bucketSize").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_novel"))
-    val out = grams
+    val out = graft.Materialize(grams
       .select(expr(s"doc_id div $bucketSize").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_grams"))
       .join(novel, Seq("bucket"), "left")
       .select(col("bucket"), col("n_grams"),
         coalesce(col("n_novel"), lit(0L)).as("n_novel"))
       .withColumn("novelty_ppm", expr("n_novel * 1000000 div n_grams"))
-      .orderBy("bucket")
-      .localCheckpoint()
+      .orderBy("bucket"))
     grams.unpersist(false)
     out
   }
@@ -543,9 +542,9 @@ object CorpusOps {
     * Scale: ONE corpus shuffle builds the word dictionary; all
     * `nMerges` rounds iterate over vocab-sized rows (pair counts are a
     * groupBy over the dictionary, the chosen pair is a 1-row broadcast,
-    * the fuse is a projection), with per-round localCheckpoint keeping
-    * lineage flat — the same bounded-iteration shape as the graph
-    * loops. The oracle unrolls the identical rounds as MATERIALIZED
+    * the fuse is a projection), each round's pick and vocabulary one
+    * [[graft.Materialize]] — the same bounded-iteration shape as the
+    * graph loops. The oracle unrolls the identical rounds as MATERIALIZED
     * CTEs. */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
     bpeMergesOf(Tables.documents(spark, dir))
@@ -561,12 +560,11 @@ object CorpusOps {
       .select(explode(
         expr("filter(split(lower(text), ' '), x -> length(x) > 0)")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wc"))
-    var vocab = w
+    var vocab = graft.Materialize(w
       .select(concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("sym"),
-        col("wc"))
-      .localCheckpoint()
+        col("wc")))
     val merges = (1 to nMerges).map { i =>
-      val best = vocab
+      val best = graft.Materialize(vocab
         .select(expr("split(trim(sym), ' ')").as("t"), col("wc"))
         .filter(size(col("t")) >= 2)
         .select(explode(expr(
@@ -575,19 +573,17 @@ object CorpusOps {
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("wc")).as("cnt"))
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .localCheckpoint()
-      // per-round vocab checkpoint RETAINED: an A/B without it (recompute
+        .limit(1))
+      // per-round vocab materialization RETAINED: an A/B without it (recompute
       // the replace chain per round) measured ~50% SLOWER — each chain
       // layer rebuilds its 1-row merge broadcast, and 8 rounds of
       // re-broadcasting beat the checkpoint writes they were meant to
       // save (r14 probe: bpe_encode 2.0 → 3.0 s warm).
-      vocab = vocab
+      vocab = graft.Materialize(vocab
         .crossJoin(broadcast(best.select(col("a").as("ba"), col("b").as("bb"))))
         .select(expr(
           "replace(sym, concat(' ', ba, ' ', bb, ' '), concat(' ', ba, bb, ' '))").as("sym"),
-          col("wc"))
-        .localCheckpoint()
+          col("wc")))
       best.select(lit(i).as("merge_rank"), col("a").as("sym_a"), col("b").as("sym_b"),
         concat(col("a"), col("b")).as("merged"), col("cnt").as("pair_count"))
     }
@@ -651,15 +647,14 @@ object CorpusOps {
       vocabK: Int = 64, k: Int = 30): DataFrame = {
     // NOT persisted (r14 A/B): caching the exploded token stream costs
     // more than the map-side re-tokenize it saves — the cheap lever is
-    // checkpointing `top` below, which cuts the corpus passes from 4
+    // materializing `top` below, which cuts the corpus passes from 4
     // (one per broadcast reference of `top`) to the honest 2.
     val tok = docs.select(col("doc_id"), explode(array_distinct(
       expr("filter(split(lower(text), ' '), x -> length(x) > 0)"))).as("t"))
-    // vocabK rows, referenced by three broadcasts — checkpointed so the
+    // vocabK rows, referenced by three broadcasts — materialized so the
     // df dictionary aggregation runs once, not once per broadcast build
-    val top = tok.groupBy("t").agg(count(lit(1)).as("df"))
-      .orderBy(col("df").desc, col("t").asc).limit(vocabK)
-      .localCheckpoint()
+    val top = graft.Materialize(tok.groupBy("t").agg(count(lit(1)).as("df"))
+      .orderBy(col("df").desc, col("t").asc).limit(vocabK))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val pairs = tok.join(broadcast(top.select("t")), Seq("t"))
       .groupBy("doc_id").agg(sort_array(collect_set(col("t"))).as("ts"))

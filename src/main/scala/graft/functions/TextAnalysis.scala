@@ -181,15 +181,15 @@ object TextAnalysis {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val trainGrams = grams.filter(col("split") === "train")
       .select(col("gh")).distinct().withColumn("hit", lit(1L))
-    val out = grams.filter(col("split") === "test")
+    // language-count-sized; materialized so the cache can drop now
+    val out = graft.Materialize(grams.filter(col("split") === "test")
       .join(trainGrams, Seq("gh"), "left")
       .groupBy("lang")
       .agg(countDistinct(col("doc_id")).as("n_test_docs"),
         count(lit(1)).as("n_grams"),
         expr("CAST(sum(coalesce(hit, 0)) AS BIGINT)").as("n_memorized"))
       .withColumn("memorized_ppm", expr("n_memorized * 1000000 div n_grams"))
-      .orderBy("lang")
-      .localCheckpoint() // language-count-sized; lets the cache drop now
+      .orderBy("lang"))
     grams.unpersist(false)
     out
   }

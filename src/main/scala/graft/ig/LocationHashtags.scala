@@ -25,12 +25,8 @@ object LocationHashtags {
   private val locationHashtagRe =
     "^(.*city|.*town|.*beach|.*park|.*street|.*travel|.*trip|.*vacation|.*holiday|nyc|la|sf|london|paris|tokyo|miami|vegas|chicago|boston)$"
 
-  /** analyze_location_data (:92-242). One row per creator.
-    * `usCities` is the broadcast city dimension; the shipped DB is broken
-    * JSON so the reference always runs with an empty one (SURVEY §1.1) —
-    * pass None to replicate. */
-  def locationAnalysis(posts: DataFrame, clock: IgClock,
-                       usCities: Option[DataFrame] = None): DataFrame = {
+  /** analyze_location_data (:92-242). One row per creator. */
+  def locationAnalysis(posts: DataFrame, clock: IgClock): DataFrame = {
     // per-post location candidates in insertion order:
     // location.name first, then capitalized caption words (:110-160)
     val cands = posts.select(col("creator_key"), col("ordinal"),
@@ -65,35 +61,11 @@ object LocationHashtags {
         count(lit(1)).as("travel_frequency"))
       .select(col("*"), least(lit(100L), col("travel_frequency") * 5).as("location_diversity_score"))
 
-    // matched_us_cities: first city (dim order) whose name equals / prefixes
-    // / is contained in the location, per distinct location in insertion
-    // order (:197-218). With no dim (the shipped reality) → empty.
+    // matched_us_cities: the reference matches distinct locations against
+    // its US-city DB (:197-218), which ships as broken JSON, so the list
+    // is always empty
     val emptyCities = expr("cast(array() as array<struct<input_location:string," +
       "matched_city:string,state:string>>)")
-    val matched = usCities match {
-      case Some(cities) =>
-        val cityDim = cities.select(
-          lower(coalesce(col("city"), lit(""))).as("entry_name"),
-          coalesce(col("state_id"), lit("")).as("entry_state"),
-          monotonically_increasing_id().as("city_ord"))
-          .filter(col("entry_name") =!= "")
-        val lower_loc = lower(col("loc"))
-        val hits = locCounts.join(broadcast(cityDim),
-          lower_loc === col("entry_name") ||
-            lower_loc.startsWith(col("entry_name")) ||
-            col("entry_name").contains(lower_loc))
-          .select(col("*"), row_number().over(Window
-            .partitionBy("creator_key", "loc").orderBy("city_ord")).as("rn"))
-          .filter(col("rn") === 1)
-        hits.select(col("*"), row_number().over(wFirst).as("ins_rank"))
-          .groupBy("creator_key").agg(
-            expr("transform(array_sort(collect_list(struct(ins_rank, " +
-              "struct(loc as input_location, entry_name as matched_city, " +
-              "entry_state as state)))), r -> r.col2)").as("matched_us_cities"))
-      case None =>
-        posts.select("creator_key").distinct()
-          .select(col("creator_key"), emptyCities.as("matched_us_cities"))
-    }
 
     // location_hashtags: lowercased #\w+ tags matching the 18 location
     // patterns; Python-set output → sorted for determinism (:139-160)
@@ -130,7 +102,7 @@ object LocationHashtags {
             lit("Evening poster (likely local timezone)"))
           .otherwise(lit("Night poster (possible different timezone)")).as("timezone_estimate"))
 
-    ByCreator(posts.select("creator_key").distinct(), locAgg, matched, hashtagAgg, hourAgg)(
+    ByCreator(posts.select("creator_key").distinct(), locAgg, hashtagAgg, hourAgg)(
         col("creator_key"),
         coalesce(col("location_tags"), expr("array()").cast("array<string>"))
           .as("location_tags"),
@@ -143,7 +115,7 @@ object LocationHashtags {
           .as("posting_timezone_pattern"),
         coalesce(col("travel_frequency"), lit(0L)).as("travel_frequency"),
         coalesce(col("location_diversity_score"), lit(0L)).as("location_diversity_score"),
-        coalesce(col("matched_us_cities"), emptyCities).as("matched_us_cities"))
+        emptyCities.as("matched_us_cities"))
   }
 
   // ----------------------------------------------------------- hashtags

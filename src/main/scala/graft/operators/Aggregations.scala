@@ -666,7 +666,7 @@ object Aggregations {
         .agg(sum(col("cnt")).as("n_rows"),
           min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"))
         .orderBy("bucket")
-      out.localCheckpoint(eager = true)
+      graft.Materialize(out)
     } finally dict.unpersist()
   }
 
@@ -788,9 +788,11 @@ object Aggregations {
     // the dictionary is derived five times (totals, median, deviation
     // dictionary, MAD, outlier count) — materialize it ONCE so the fact
     // join+aggregate runs once, not once per derivation; it is bounded
-    // by segments × value domain, post-aggregate sized by construction
-    val dict = v.groupBy("segment", "usd").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = true)
+    // by segments × value domain, post-aggregate sized by construction.
+    // Every derivation groups or windows by segment, so the dictionary is
+    // stored partitioned on it and they read it with no shuffle
+    val dict = graft.Materialize(v.groupBy("segment", "usd").agg(count(lit(1)).as("cnt"))
+      .repartition(col("segment")))
     val tot = dict.groupBy("segment").agg(sum(col("cnt")).as("n"))
     val wVal = Window.partitionBy("segment").orderBy("usd")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

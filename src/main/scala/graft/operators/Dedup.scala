@@ -1023,10 +1023,9 @@ object Dedup {
     // is a no-op, so no gratuitous corpus shuffle at scale.
     val nParts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val base = if (docs.rdd.getNumPartitions < nParts) docs.repartition(nParts) else docs
-    // shingle dictionary: checkpointed once — consumed by the frequency
+    // shingle dictionary: materialized once — consumed by the frequency
     // count AND the per-doc ordering
-    val sh = withShingles(base).select(col("doc_id"), col("shingles"))
-      .localCheckpoint()
+    val sh = graft.Materialize(withShingles(base).select(col("doc_id"), col("shingles")))
     val tokFreq = sh.select(explode(col("shingles")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("tf"))
     // rarest-first total order (tf asc, tok asc) COMPILED TO INTEGER
@@ -1043,10 +1042,10 @@ object Dedup {
         .orderBy("tf", "tok")).cast("long"))
     // per-doc sorted id set + integer-exact prefix length
     // p = n − ceil(τ·n) + 1; ids ascending IS rarest-first.
-    // CHECKPOINTED: four consumers read it (both candidate sides, both
+    // MATERIALIZED: four consumers read it (both candidate sides, both
     // verify sides) — without the cut, Spark re-runs the corpus scan +
     // frequency shuffle + sort-collect once per consumer
-    val ordered = sh
+    val ordered = graft.Materialize(sh
       .select(col("doc_id"), explode(col("shingles")).as("tok"))
       .repartition(nParts, col("tok"))
       .join(dict.select("tok", "tid"), Seq("tok"))
@@ -1056,8 +1055,7 @@ object Dedup {
       .select(col("doc_id"), col("toks"),
         size(col("toks")).cast("long").as("n"))
       .withColumn("p",
-        col("n") - expr(s"(n * ${tauPpm}L + 999999L) div 1000000L") + lit(1L))
-      .localCheckpoint()
+        col("n") - expr(s"(n * ${tauPpm}L + 999999L) div 1000000L") + lit(1L)))
     val prefixToks = ordered
       .select(col("doc_id"), col("n"), explode(expr("slice(toks, 1, int(p))")).as("tid"))
     // length filter rides the candidate join: J ≥ τ ⇒ τ·|a| ≤ |b| ∧
@@ -1105,8 +1103,8 @@ object Dedup {
     * τ ≥ 50%, so the inverted-index join loses no true pair. */
   def lshRecallEval(spark: SparkSession, dir: String): DataFrame = {
     val subset = Tables.documents(spark, dir).filter(col("doc_id") < 500)
-    val sh = withShingles(subset).select(col("doc_id"), col("shingles"))
-      .localCheckpoint() // feeds the exact side twice + the band side
+    // feeds the exact side twice + the band side
+    val sh = graft.Materialize(withShingles(subset).select(col("doc_id"), col("shingles")))
     val sizes = sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n"))
     val inter = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
       .as("l").join(sh.select(col("doc_id"), explode(col("shingles")).as("s")).as("r"),

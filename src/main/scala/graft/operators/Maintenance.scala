@@ -332,10 +332,10 @@ object Maintenance {
     // digest subtree (two snapshot scans) re-executes inside EACH side's
     // semi-join broadcast — 8 snapshot scans instead of the optimal 4
     // (one digest pass + one dirty-row pass per side)
-    val dirty = digest(oldS, "o").join(digest(newS, "n"), Seq("bucket"), "full_outer")
-      .filter(!(col("cnt_o") <=> col("cnt_n")) || !(col("dig_o") <=> col("dig_n")))
-      .select("bucket")
-      .localCheckpoint(eager = true)
+    val dirty = graft.Materialize(
+      digest(oldS, "o").join(digest(newS, "n"), Seq("bucket"), "full_outer")
+        .filter(!(col("cnt_o") <=> col("cnt_n")) || !(col("dig_o") <=> col("dig_n")))
+        .select("bucket"))
     def dirtyRows(df: DataFrame): DataFrame =
       withBucket(df).join(broadcast(dirty), Seq("bucket"), "left_semi").drop("bucket")
     val o = dirtyRows(oldS).select(col("key"), col("bal").as("old_acctbal"),

@@ -406,12 +406,10 @@ object Relational {
     * bounded top-k, one count-table join; every downstream scalar rides
     * single-row aggregates. Integer arithmetic throughout, err in ppm. */
   def joinCardEst(spark: SparkSession, dir: String, topN: Int = 50): DataFrame = {
-    val a = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey").as("k")).agg(count(lit(1)).as("ca"))
-      .localCheckpoint()
-    val b = Tables.events(spark, dir)
-      .groupBy(col("user_id").as("k")).agg(count(lit(1)).as("cb"))
-      .localCheckpoint()
+    val a = graft.Materialize(Tables.orders(spark, dir)
+      .groupBy(col("o_custkey").as("k")).agg(count(lit(1)).as("ca")))
+    val b = graft.Materialize(Tables.events(spark, dir)
+      .groupBy(col("user_id").as("k")).agg(count(lit(1)).as("cb")))
     val statsA = a.agg(sum(col("ca")).as("na"), count(lit(1)).as("da"))
     val statsB = b.agg(sum(col("cb")).as("nb"), count(lit(1)).as("db"))
     val exact = a.join(b, "k")
@@ -460,14 +458,13 @@ object Relational {
     * kicks in when |distinct x| itself explodes. */
   def skylineCustomers(spark: SparkSession, dir: String): DataFrame = {
     // the entity aggregate feeds BOTH the frontier derivation and the
-    // final rejoin; localCheckpoint computes the corpus scan + agg once
+    // final rejoin; materializing it runs the corpus scan + agg once
     // (same pattern as pageRankOf's edge list)
-    val per = Tables.orders(spark, dir)
+    val per = graft.Materialize(Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"),
         expr("CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)")
-          .as("spend_cents"))
-      .localCheckpoint()
+          .as("spend_cents")))
     val bestPerX = per.groupBy("n_orders")
       .agg(max(col("spend_cents")).as("spend_cents"))
     val byXDesc = Window.orderBy(col("n_orders").desc)
@@ -514,12 +511,11 @@ object Relational {
       .rowsBetween(Window.unboundedPreceding, -1)
     val wDescPrev = Window.orderBy(desc("s"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val e = cc.crossJoin(broadcast(tot))
+    val e = graft.Materialize(cc.crossJoin(broadcast(tot))
       .withColumn("cum_asc", sum(col("k")).over(wAsc))
       .withColumn("f_asc", coalesce(sum(col("k")).over(wAscPrev), lit(0L)))
       .withColumn("kb_desc", coalesce(sum(col("k")).over(wDescPrev), lit(0L)))
-      .withColumn("sb_desc", coalesce(sum(expr("s * k")).over(wDescPrev), lit(0L)))
-      .localCheckpoint()
+      .withColumn("sb_desc", coalesce(sum(expr("s * k")).over(wDescPrev), lit(0L))))
     val p50 = e.filter(col("cum_asc") * 2 >= col("n_keys"))
       .agg(min(col("s")).as("p50_rows"))
     val p99 = e.filter(col("cum_asc") * 100 >= col("n_keys") * 99)

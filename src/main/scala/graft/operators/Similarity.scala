@@ -1350,20 +1350,12 @@ object Similarity {
     * scoring joins the embedding table by key twice ([[scoreKeyed]];
     * co-partitioned hash joins, corpus never crosses the wire more than
     * once per round); per-node top-k is the typed bounded partial
-    * aggregation; localCheckpoint per round keeps lineage flat like
-    * every iterative operator here. */
+    * aggregation; each round is one [[graft.Materialize]], like every
+    * iterative operator here. */
   private[operators] def nndescentKnnOf(e0: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // the quantized table is PERSISTED, not checkpointed (r14): every
-    // round's scoring references it twice, and an unmaterialized plan
-    // re-scanned the parquet and re-ran quantNormSq 2·(rounds+1) times.
-    // persist keeps the LOGICAL plan — and with it the parquet size
-    // stats — so the planner still broadcasts it at base scale and
-    // falls back to a hash/merge join when the corpus outgrows the
-    // threshold (a localCheckpoint here is stat-less and flipped these
-    // joins to SMJ, the r13 session's proven 2-3× regression).
-    val e = e0.select(col("vec_id"), col("embedding"))
-      .withColumn("nsq", quantNormSq(col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // every round's scoring reads the quantized table twice
+    val e = graft.Materialize(e0.select(col("vec_id"), col("embedding"))
+      .withColumn("nsq", quantNormSq(col("embedding"))))
     val ea = e.select(col("vec_id").as("u"), col("embedding").as("eu"), col("nsq").as("nu"))
     val eb = e.select(col("vec_id").as("v"), col("embedding").as("ev"), col("nsq").as("nv"))
     // loop-internal top-k is UNORDERED (r14): the rounds' consumers are
@@ -1374,13 +1366,14 @@ object Similarity {
       graft.functions.TopKByScore.topKUnordered(scoreKeyed(pairs, ea, eb),
         "u", col("cos"), col("v"), k)
         .select(col("u"), col("rnk"), col("key").as("v"), col("score").as("cos"))
-    val n = e.agg(count(lit(1)).as("n"))
-    val seed = e.select(col("vec_id").as("u")).crossJoin(broadcast(n))
+    val n = graft.Materialize.rows(e)
+    val parts = graft.Materialize.partitionsFor(e.sparkSession, n * k)
+    val seed = e.select(col("vec_id").as("u"))
       .select(col("u"),
-        explode(expr(s"transform(sequence(1, $k), j -> (u + j * 17L) % n)")).as("v"))
+        explode(expr(s"transform(sequence(1, $k), j -> (u + j * 17L) % ${n}L)")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    var knn = scoreTopK(seed).localCheckpoint()
+    var knn = graft.Materialize(scoreTopK(seed), parts)
     (1 to rounds).foreach { _ =>
       val und = knn.select(col("u"), col("v"))
         .unionAll(knn.select(col("v").as("u"), col("u").as("v")))
@@ -1389,12 +1382,8 @@ object Similarity {
         .select(col("a.u").as("u"), col("b.v").as("v"))
         .unionAll(knn.select(col("u"), col("v")))
         .distinct()
-      knn = scoreTopK(cand).localCheckpoint()
+      knn = graft.Materialize(scoreTopK(cand), parts)
     }
-    // the loop ran eagerly (checkpoint per round); the final knn is
-    // RDD-backed, so the cache can be dropped before returning instead
-    // of leaking for the session lifetime (the linkPredict discipline)
-    e.unpersist(false)
     knn
   }
 
@@ -1458,14 +1447,14 @@ object Similarity {
   /** The graph-hop candidate generator of [[graphSearch]] and
     * [[nndInsertKnn]]: `hops` rounds of [[expand]] → `scoreOf` (a
     * `(q_id, v, cos)` scorer) → keep the best `beam` per query. Returns
-    * the last hop's scored candidates; localCheckpoint per hop keeps
-    * lineage flat. */
+    * the last hop's scored candidates; each hop is one
+    * [[graft.Materialize]]. */
   private def beamSearch(start: DataFrame, adj: DataFrame, hops: Int, beam: Int)(
       scoreOf: DataFrame => DataFrame): DataFrame = {
     var frontier = start
     var scored = scoreOf(frontier)
     (1 to hops).foreach { _ =>
-      scored = scoreOf(expand(frontier, adj)).localCheckpoint()
+      scored = graft.Materialize(scoreOf(expand(frontier, adj)))
       // hop frontiers feed joins only — unordered top-k (see TopKByScore)
       frontier = graft.functions.TopKByScore
         .topKUnordered(scored, "q_id", col("cos"), col("v"), beam)
@@ -1494,19 +1483,16 @@ object Similarity {
     * bounded, corpus-independent; scoring joins the embedding table by
     * key (the corpus never crosses the wire); the graph itself is the
     * only corpus-sized input and is read bucketed from the persisted
-    * index. localCheckpoint per hop keeps lineage flat. */
+    * index. Each hop is one [[graft.Materialize]] ([[beamSearch]]). */
   def graphSearch(spark: SparkSession, dir: String, beam: Int = 8,
                   hops: Int = 3, kOut: Int = 5, probeBound: Long = 20L,
                   adjCap: Int = 16, kG: Int = 10, rounds: Int = 3): DataFrame = {
     val g = buildNndGraph(spark, dir, kG, rounds)
-    val adj = cappedAdjOf(g, adjCap)
-      .localCheckpoint() // feeds every hop's expansion join
-    // persisted, not checkpointed: every hop's scoring reads it; the
-    // logical plan (and its parquet stats → broadcast choice) survives,
-    // unlike a stat-less checkpoint (see nndescentKnnOf)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("na", quantNormSq(col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // adjacency feeds every hop's expansion join, embeddings every
+    // hop's scoring
+    val adj = graft.Materialize(cappedAdjOf(g, adjCap))
+    val e = graft.Materialize(Tables.embeddings(spark, dir)
+      .withColumn("na", quantNormSq(col("embedding"))))
     val queries = e.filter(col("vec_id") < probeBound)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
         col("na").as("qna"))
@@ -1515,9 +1501,6 @@ object Similarity {
         hops, beam) { cand =>
       scoreKeyed(cand, nodes, broadcast(queries)).select(col("q_id"), col("v"), col("cos"))
     }
-    // the hops ran eagerly; the emit below reads the last checkpoint, so
-    // the embedding cache can be dropped before returning
-    e.unpersist(false)
     graft.functions.TopKByScore
       .serveTopK(scored.filter(col("v") =!= col("q_id")),
         "q_id", col("cos"), col("v"), kOut)
@@ -1618,17 +1601,14 @@ object Similarity {
   private[graft] def nndInsertKnn(g: DataFrame, nodesEmb: DataFrame,
                                   batchEmb: DataFrame, k: Int, adjCap: Int,
                                   beam: Int, hops: Int, nEntries: Int): DataFrame = {
-    val adj = cappedAdjOf(g, adjCap).localCheckpoint() // feeds every hop + refine
-    // persisted, not checkpointed: hop + refine scoring reads both sides
-    // repeatedly; logical plans (and join-strategy stats) survive —
-    // see nndescentKnnOf
-    val e = nodesEmb.select(col("vec_id").as("v"), col("embedding").as("ve"))
-      .withColumn("vna", quantNormSq(col("ve")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bq = batchEmb
+    // adjacency feeds every hop + the refine; hop + refine scoring
+    // reads both embedding sides repeatedly
+    val adj = graft.Materialize(cappedAdjOf(g, adjCap))
+    val e = graft.Materialize(nodesEmb.select(col("vec_id").as("v"), col("embedding").as("ve"))
+      .withColumn("vna", quantNormSq(col("ve"))))
+    val bq = graft.Materialize(batchEmb
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      .withColumn("qna", quantNormSq(col("qe")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("qna", quantNormSq(col("qe"))))
     // fixed entry set: smallest graph-node ids (TakeOrdered — bounded)
     val entries = nodesEmb.select(col("vec_id").as("v")).orderBy("v").limit(nEntries)
     def scoreOf(cand: DataFrame): DataFrame =
@@ -1639,15 +1619,10 @@ object Similarity {
       .topKUnordered(scored, "q_id", col("cos"), col("v"), k)
       .select(col("q_id"), col("key").as("v"))
     val refCand = expand(seed, adj)
-    // materialize the refined lists HERE (batch-node-sized) so both
-    // caches can be dropped before returning; the emit keeps serveTopK's
-    // ordered contract for the stream fold and the specs
-    val out = graft.functions.TopKByScore
-      .serveTopK(scoreOf(refCand), "q_id", col("cos"), col("v"), k)
-      .localCheckpoint()
-    e.unpersist(false)
-    bq.unpersist(false)
-    out
+    // the emit keeps serveTopK's ordered contract for the stream fold
+    // and the specs
+    graft.Materialize(graft.functions.TopKByScore
+      .serveTopK(scoreOf(refCand), "q_id", col("cos"), col("v"), k))
   }
 
   /** Incremental-insert RECALL GATE: recall@k of the inserted batch

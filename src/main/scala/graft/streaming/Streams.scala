@@ -851,7 +851,7 @@ object Streams {
     val g = stateBefore("edges").map(base.unionByName(_)).getOrElse(base)
     val nodesEmb = stateBefore("emb").map(corpusEmb.unionByName(_)).getOrElse(corpusEmb)
     // pin the micro-batch: the insert's scoring joins consume it twice
-    val batch = batchDf.select("vec_id", "embedding").localCheckpoint()
+    val batch = graft.Materialize(batchDf.select("vec_id", "embedding"))
     val newEdges = graft.operators.Similarity
       .nndInsertKnn(g, nodesEmb, batch, k, adjCap, beam, hops, nEntries)
       .select(col("q_id").as("u"), col("key").as("v"), col("score").as("cos"))
@@ -897,7 +897,7 @@ object Streams {
   private[graft] def foldBm25Batch(batchDf: DataFrame, stateDir: String,
                                    batchId: Long): Unit = {
     // pin the micro-batch: tokenization feeds both tf and dl
-    val docs = batchDf.select("doc_id", "text").localCheckpoint()
+    val docs = graft.Materialize(batchDf.select("doc_id", "text"))
     val toks = docs
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
       .filter(length(col("token")) > 0)

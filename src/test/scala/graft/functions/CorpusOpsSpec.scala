@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * repetition filters, capped domain-mixture sampling, and distributed
   * prefix-sum sequence packing. Planted fixtures exercise both branches
   * of every gate; packing is differentially checked against a local
-  * single-threaded prefix sum over randomized uneven inputs. */
+  * single-threaded prefix sum over randomized uneven inputs. The novelty
+  * curve gives verbatim repeats zero novelty. */
 class CorpusOpsSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-corpus-ops-test")
   import spark.implicits._
@@ -146,5 +147,19 @@ class CorpusOpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4))).toSet
     assert(got === expect)
+  }
+
+  test("noveltyCurveOf: verbatim repeats contribute zero novelty to later buckets") {
+    val text8 = "a b c d e f g h"          // exactly one 8-gram
+    val other8 = "p q r s t u v w"
+    val docs = Seq(
+      (0L, text8, "en", "s", 0L),          // bucket 0 (size 2): both novel
+      (1L, other8, "en", "s", 0L),
+      (2L, text8, "en", "s", 0L),          // bucket 1: a repeat and a novel
+      (3L, "x y z w v u t s", "en", "s", 0L)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+    val got = CorpusOps.noveltyCurveOf(docs, bucketSize = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toList
+    assert(got === List((0L, 2L, 2L, 1000000L), (1L, 2L, 1L, 500000L)))
   }
 }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the sf tables have none): verbatim groups must collapse to one
   * representative BEFORE the LSH join — no intra-group pairs — while
   * near-duplicate (but not identical) texts still pair, with the
-  * verbatim-copy counts carried through. */
+  * verbatim-copy counts carried through. The LSH recall evaluation
+  * keeps caught ≤ true pairs at every threshold. */
 class DedupPipelineSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-dedup-pipeline-test")
   import spark.implicits._
@@ -57,5 +58,18 @@ class DedupPipelineSpec extends AnyFunSuite {
     val pairs = Dedup.dedupPipelinePairsOf(docs).collect()
     assert(pairs.length <= 10, s"pipeline emitted ${pairs.length} pairs (clique blowup)")
     pairs.foreach(r => assert(r.getLong(2) == 40L && r.getLong(3) == 40L))
+  }
+
+  test("lshRecallEval: caught <= true, true non-increasing in tau, recall sane") {
+    val rows = Dedup.lshRecallEval(spark, "/root/testdata/sf0.001").collect()
+    assert(rows.map(_.getAs[Long]("tau_pct")).toSeq === Seq(50L, 60L, 70L, 80L))
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_caught") <= r.getAs[Long]("n_true"))
+      assert(r.getAs[Long]("recall_ppm") <= 1000000L)
+      assert(r.getAs[Long]("recall_ppm") ===
+        r.getAs[Long]("n_caught") * 1000000L / r.getAs[Long]("n_true"))
+    }
+    val trues = rows.map(_.getAs[Long]("n_true")).toSeq
+    assert(trues === trues.sorted.reverse) // tighter tau admits fewer pairs
   }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * contingency cells, and dictionary-granular Gini. Each operator's
   * output is checked against a straightforward single-threaded
   * re-derivation from the same parquet — independent of both the Spark
-  * plan and the DuckDB oracle. */
+  * plan and the DuckDB oracle. MAD outliers are pinned on hand-checked
+  * columns. */
 class ProfilingAggSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-profiling-test")
   private val dir = "/root/testdata/sf0.001"
@@ -134,5 +135,27 @@ class ProfilingAggSpec extends AnyFunSuite {
     val wantLeak = pairs.filter { case (a, b) => assign(a) != assign(b) }
     assert(leak.map(_._1).toSet == wantLeak,
       s"leak set mismatch: ${leak.map(_._1).toSet} vs $wantLeak")
+  }
+
+  test("madOutliersOf: lower medians and the 5-MAD gate on a hand-checked column") {
+    import spark.implicits._
+    // segment A: values 1..7 plus one wild 1000 -> n=8, lower median = 4
+    // (cum at 4 is 4 >= ceil(8/2)), devs |x-4| = {3,2,1,0,1,2,3,996},
+    // sorted 0,1,1,2,2,3,3,996 -> lower MAD = 2; outliers: |x-4| > 10
+    // -> only 1000. ppm = 1e6/8 = 125000.
+    val v = (Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 1000L).map(("A", _)))
+      .toDF("segment", "usd")
+    val got = Aggregations.madOutliersOf(v).collect().map(r =>
+      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+    assert(got.toList === List(("A", 8L, 4L, 2L, 1L, 125000L)))
+  }
+
+  test("madOutliersOf: even-count ties keep the median value-granular") {
+    import spark.implicits._
+    // {5,5,9,9}: cum at 5 is 2 >= ceil(4/2)=2 -> median 5 (lower), devs
+    // {0,0,4,4} -> MAD 0; gate 5*0 -> every dev>0 row is an outlier
+    val v = Seq(("B", 5L), ("B", 5L), ("B", 9L), ("B", 9L)).toDF("segment", "usd")
+    val r = Aggregations.madOutliersOf(v).collect().head
+    assert((r.getLong(2), r.getLong(3), r.getLong(4)) === ((5L, 0L, 2L)))
   }
 }

@@ -75,19 +75,6 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(got(16L) === ((130L, 70L, 650000L)))
   }
 
-  test("lshRecallEval: caught <= true, true non-increasing in tau, recall sane") {
-    val rows = Dedup.lshRecallEval(spark, "/root/testdata/sf0.001").collect()
-    assert(rows.map(_.getAs[Long]("tau_pct")).toSeq === Seq(50L, 60L, 70L, 80L))
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_caught") <= r.getAs[Long]("n_true"))
-      assert(r.getAs[Long]("recall_ppm") <= 1000000L)
-      assert(r.getAs[Long]("recall_ppm") ===
-        r.getAs[Long]("n_caught") * 1000000L / r.getAs[Long]("n_true"))
-    }
-    val trues = rows.map(_.getAs[Long]("n_true")).toSeq
-    assert(trues === trues.sorted.reverse) // tighter tau admits fewer pairs
-  }
-
   test("frameDedup buckets: 9-bit range, n_frames >= n_videos >= 2") {
     val rows = Multimodal.frameDedup(spark, "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)

@@ -90,21 +90,6 @@ class Round8OpsSpec extends AnyFunSuite {
     assert(got === List((1L, 5L, 1000L, 10L), (2L, 1L, 0L, 4L)))
   }
 
-  test("noveltyCurveOf: verbatim repeats contribute zero novelty to later buckets") {
-    import spark.implicits._
-    val text8 = "a b c d e f g h"          // exactly one 8-gram
-    val other8 = "p q r s t u v w"
-    val docs = Seq(
-      (0L, text8, "en", "s", 0L),          // bucket 0 (size 2): both novel
-      (1L, other8, "en", "s", 0L),
-      (2L, text8, "en", "s", 0L),          // bucket 1: a repeat and a novel
-      (3L, "x y z w v u t s", "en", "s", 0L)
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = graft.functions.CorpusOps.noveltyCurveOf(docs, bucketSize = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toList
-    assert(got === List((0L, 2L, 2L, 1000000L), (1L, 2L, 1L, 500000L)))
-  }
-
   test("pplBucketsOf: per-lang thirds with the typical docs in the head bucket") {
     import spark.implicits._
     // one language, six docs. Docs 4-6: every bigram is its first
@@ -127,52 +112,6 @@ class Round8OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(1), r.getLong(5))).toMap // bucket -> max_ppm
     // head bucket's scores dominate the tail bucket's
     assert(buckets(1) > buckets(3))
-  }
-
-  test("madOutliersOf: lower medians and the 5-MAD gate on a hand-checked column") {
-    import spark.implicits._
-    // segment A: values 1..7 plus one wild 1000 -> n=8, lower median = 4
-    // (cum at 4 is 4 >= ceil(8/2)), devs |x-4| = {3,2,1,0,1,2,3,996},
-    // sorted 0,1,1,2,2,3,3,996 -> lower MAD = 2; outliers: |x-4| > 10
-    // -> only 1000. ppm = 1e6/8 = 125000.
-    val v = (Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 1000L).map(("A", _)))
-      .toDF("segment", "usd")
-    val got = Aggregations.madOutliersOf(v).collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-    assert(got.toList === List(("A", 8L, 4L, 2L, 1L, 125000L)))
-  }
-
-  test("madOutliersOf: even-count ties keep the median value-granular") {
-    import spark.implicits._
-    // {5,5,9,9}: cum at 5 is 2 >= ceil(4/2)=2 -> median 5 (lower), devs
-    // {0,0,4,4} -> MAD 0; gate 5*0 -> every dev>0 row is an outlier
-    val v = Seq(("B", 5L), ("B", 5L), ("B", 9L), ("B", 9L)).toDF("segment", "usd")
-    val r = Aggregations.madOutliersOf(v).collect().head
-    assert((r.getLong(2), r.getLong(3), r.getLong(4)) === ((5L, 0L, 2L)))
-  }
-
-  test("merkleDiffOf equals the end-to-end CDC full diff row-for-row") {
-    val cust = graft.sources.Tables.customer(spark, "/root/testdata/sf0.001")
-    val merkle = Maintenance.merkleDiffOf(cust, 64).collect().map(_.toSeq).toList
-    val full = Maintenance.cdcDiffOf(cust).collect().map(_.toSeq).toList
-    assert(merkle.nonEmpty && merkle === full)
-  }
-
-  test("merkleDiff digest stage flags no bucket on an identical snapshot pair") {
-    import spark.implicits._
-    // the dirty-set derivation is what makes the clean 99.99% never
-    // cross the wire: identical sides must yield an EMPTY dirty set
-    val side = Seq((1L, 10.0, "A"), (2L, 20.0, "B"))
-      .toDF("key", "bal", "seg")
-    def digest(tag: String) = side
-      .withColumn("bucket", pmod(xxhash64(col("key")), lit(16L)))
-      .withColumn("rh", xxhash64(col("key"),
-        expr("CAST(round(bal * 100) AS BIGINT)"), col("seg")))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as(s"cnt_$tag"), expr("bit_xor(rh)").as(s"dig_$tag"))
-    val dirty = digest("o").join(digest("n"), Seq("bucket"), "full_outer")
-      .filter(!(col("cnt_o") <=> col("cnt_n")) || !(col("dig_o") <=> col("dig_n")))
-    assert(dirty.count() === 0L)
   }
 
   test("maxConcurrencyOf: overlap peaks and midnight-crossing carry-in") {
