@@ -1,9 +1,9 @@
 package graft
 
-/** Driver-run benchmark on SPARK_GRAFT_SF_DIR. Each query is forced
-  * through the `noop` sink — full computation of every column with zero
-  * write cost — so Catalyst cannot prune work the way a bare count()
-  * would.
+/** Driver-run benchmark on SPARK_GRAFT_SF_DIR. Each query is timed
+  * through [[Measure]]: construct, then a force through the `noop` sink —
+  * full computation of every column with zero write cost — so Catalyst
+  * cannot prune work the way a bare count() would.
   *
   * Methodology (round-2 ask #7): every query runs n=5 times (override
   * with SPARK_GRAFT_BENCH_N); per-query MIN is the point estimate (the
@@ -12,8 +12,9 @@ package graft
   * (r7 verdict #2); a query with zero healthy runs times as null.
   *
   * Output layout is driven by the driver's tail capture (last ~2000
-  * stdout chars): the full {min, med, errors} detail goes to
-  * BENCH_DETAIL.json and an early stdout line; per-query minima print
+  * stdout chars): the full {min, med, errors} detail, plus the
+  * [[Measure.Record]] fields of each query's fastest healthy run, goes
+  * to BENCH_DETAIL.json and an early stdout line; per-query minima print
   * on CHUNKED `{"metric":"queries","part":i,...}` lines of ~25 queries
   * each; the FINAL line is a short totals-only record
   * `{"metric":"total","value":…,"med":…,"n":…,"errors":…}` (~90 chars)
@@ -61,8 +62,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "5").toInt
     val spark = Sessions.local(Sessions.cpus, appName = "graft-bench")
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    val harness = Measure.attach(spark)
+    import Measure.force
     // JVM/codegen warm-up on a tiny query so per-query numbers measure
     // the plan, not first-call JIT + codegen compile.
     // Every warm-up step is fault-isolated: a broken table must cost one
@@ -94,11 +95,7 @@ object Bench {
     def canaryPass(): Double =
       try canaryQueries.map { q =>
         val fn = SparkEntry.queries(q)
-        (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          force(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        }.min
+        (1 to 3).map(_ => harness.run(q)(fn(spark, sfDir)).orThrow.wallS).min
       }.sum
       catch { case e: Throwable =>
         System.err.println(s"[bench] canary failed: ${e.getMessage}"); -1.0
@@ -108,7 +105,7 @@ object Bench {
     val benchSet = SparkEntry.queries.filter { case (k, _) =>
       SparkEntry.oracleSql.contains(k)
     }
-    val results: Seq[(String, Seq[Double], Int)] = benchSet.toSeq.sortBy(_._1).flatMap {
+    val results: Seq[(String, Seq[Measure.Record], Int)] = benchSet.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         // pinned-geometry baselines are skipped past their design size
         // (never at the driver's sf0.1) — printed EARLY so the compact
@@ -133,18 +130,10 @@ object Bench {
             // plausible sub-second success). Errored runs are excluded
             // from min/med; a query with zero healthy runs contributes
             // no time and shows up only through its error count.
-            var errs = 0
-            val times = (1 to n).flatMap { _ =>
-              val t0 = System.nanoTime()
-              val ok =
-                try { force(fn(spark, sfDir)); true }
-                catch { case e: Throwable =>
-                  errs += 1
-                  System.err.println(s"[bench] $name run failed: ${e.getMessage}")
-                  false
-                }
-              if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-            }
+            val runs = (1 to n).map(_ => harness.run(name)(fn(spark, sfDir)))
+            runs.flatMap(_.error).foreach(e =>
+              System.err.println(s"[bench] $name run failed: ${e.getMessage}"))
+            val healthy = runs.filter(_.ok)
             // between-query hygiene (untimed): over 261×5 runs, leaked
             // storage squeezes the unified memory pool and slowed the
             // r10 tail families 9-34%. CacheManager entries from
@@ -161,7 +150,7 @@ object Bench {
             // equality), matching prior rounds' measurement semantics.
             try spark.catalog.clearCache()
             catch { case _: Throwable => () }
-            Some((name, times.sorted, errs))
+            Some((name, healthy.sortBy(_.wallS), runs.length - healthy.length))
         }
     }
     // trailing-zero-stripped fixed decimals ("0.50"→"0.5", "1.00"→"1"):
@@ -175,10 +164,12 @@ object Bench {
     }
     def f2(d: Double): String = fx(d, 2)
     def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def mn(ts: Seq[Double]): Double = ts.head
-    def md(ts: Seq[Double]): Double = // true median (even n: mean of middles)
+    def mn(rs: Seq[Measure.Record]): Double = rs.head.wallS
+    def md(rs: Seq[Measure.Record]): Double = { // true median (even n: mean of middles)
+      val ts = rs.map(_.wallS)
       if (ts.length % 2 == 1) ts(ts.length / 2)
       else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0
+    }
     val canaryEnd = canaryPass()
     val healthy = results.filter(_._2.nonEmpty)
     val totalErrs = results.map(_._3).sum
@@ -200,7 +191,7 @@ object Bench {
     val detail = results.map { case (k, ts, e) =>
       val errPart = if (e > 0) s""","errors":$e""" else ""
       if (ts.isEmpty) s""""$k":{"errors":$e}"""
-      else s""""$k":{"min":${f3(mn(ts))},"med":${f3(md(ts))}$errPart}"""
+      else s""""$k":{"min":${f3(mn(ts))},"med":${f3(md(ts))}$errPart,${ts.head.jsonFields}}"""
     }.mkString("{", ",", "}")
     val detailJson =
       s"""{"metric":"detail","n":$n,"min_total":${f3(minTotal)},"med_total":${f3(medTotal)},"errors":$totalErrs,"canary_start_s":${f3(canaryStart)},"canary_end_s":${f3(canaryEnd)},"canary_ref_s":${f3(canaryRefS)},"norm_total":${f3(normTotal)},"queries":$detail,"sf":"$sfDir"}"""

@@ -15,9 +15,10 @@ package graft
   * noisy outlier doesn't flap the gate, but a genuinely superlinear
   * query still fails the run instead of just printing CHECK-OVER).
   *
-  * Method (same as graft.Scale, which feeds SCALE.md): per query, run
-  * once warm (codegen compile + page cache) then once measured, at each
-  * scale, interleaved base→big so JVM state is comparable. Pinned-
+  * Method: per query, run once warm (codegen compile + page cache) then
+  * once measured through [[Measure]], at each scale, interleaved
+  * base→big so JVM state is comparable. Each row also carries the big
+  * side's max task peak execution memory, spill and parallelism. Pinned-
   * geometry oracle baselines are skipped past their design size via
   * [[PinnedBaselines]] (their scale-safe replacements are measured
   * instead). Measured base times are floored at 50 ms in the ratio
@@ -76,19 +77,16 @@ object ScaleCheck {
     // 10x sweep keeps base=big=32 so its ratios stay conservative).
     val baseShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val bigShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BIG", baseShuffle)
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-              dir: String, shuffle: String): Double = {
+    val harness = Measure.attach(spark)
+    def timed(name: String, dir: String, shuffle: String): Measure.Record = {
+      val fn = SparkEntry.queries(name)
       spark.conf.set("spark.sql.shuffle.partitions", shuffle)
       try {
-        force(fn(spark, dir)) // warm
-        val t0 = System.nanoTime()
-        force(fn(spark, dir))
-        (System.nanoTime() - t0) / 1e9
+        Measure.force(fn(spark, dir)) // warm
+        harness.run(name)(fn(spark, dir)).orThrow
       } finally spark.conf.set("spark.sql.shuffle.partitions", baseShuffle)
     }
-    force(SparkEntry.entry(spark))
+    Measure.force(SparkEntry.entry(spark))
 
     // a misspelled/renamed name in the headline list must FAIL the gate,
     // not silently shrink it to fewer queries with a green exit
@@ -100,7 +98,6 @@ object ScaleCheck {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val rows = names.flatMap { name =>
-      val fn = SparkEntry.queries(name)
       val skip = PinnedBaselines.skipReason(spark, baseDir, name)
         .orElse(PinnedBaselines.skipReason(spark, bigDir, name))
       skip match {
@@ -119,9 +116,9 @@ object ScaleCheck {
           val denseDir = sys.env.get("SPARK_GRAFT_DENSE_DIR")
             .filter(_ => ScaleCheck.constantDensityQueries(name))
           val bigDirQ = denseDir.getOrElse(bigDir)
-          def measure(): (Double, Double, Double) = {
-            val base = timed(fn, baseDir, baseShuffle)
-            val big = timed(fn, bigDirQ, bigShuffle)
+          def measure(): (Double, Measure.Record, Double) = {
+            val base = timed(name, baseDir, baseShuffle).wallS
+            val big = timed(name, bigDirQ, bigShuffle)
             // per-sample hygiene (untimed; the Bench.runs lesson applied
             // per sample because a sample here is 4 executions of a
             // 10×-data query): CacheManager entries leaked by persist()
@@ -131,7 +128,7 @@ object ScaleCheck {
             // count, while its plan was unchanged from the 2.8× r10 row.
             try spark.catalog.clearCache()
             catch { case _: Throwable => () }
-            (base, big, big / math.max(base, 0.05))
+            (base, big, big.wallS / math.max(base, 0.05))
           }
           var (base, big, ratio) = measure()
           // SYMMETRIC near-bound re-measurement (VERDICT r10 #6, closing
@@ -158,7 +155,7 @@ object ScaleCheck {
           val retries = samples.length - 1
           val allRatios = samples.map(_._3)
           val denseTag = if (denseDir.isDefined) " [dense]" else ""
-          println(f"CHECK> $name%-32s base $base%7.2f s  big $big%7.2f s  ratio $ratio%6.1fx$denseTag")
+          println(f"CHECK> $name%-32s base $base%7.2f s  big ${big.wallS}%7.2f s  ratio $ratio%6.1fx$denseTag")
           Some((name, base, big, ratio, retries, allRatios, denseDir.isDefined))
       }
     }
@@ -183,7 +180,8 @@ object ScaleCheck {
       val denseExtra = if (dense) s""","big_dir":"dense"""" else ""
       val noteExtra = expectedLinearQueries.get(k)
         .map(n => s""","note":"$n"""").getOrElse("")
-      f""""$k":{"base":$b%.3f,"big":$g%.3f,"ratio":$r%.2f$extra$denseExtra$noteExtra}"""
+      val bigExtra = f""","task_peak_mb":${g.peakExecMemBytes / 1e6}%.1f,"spill_mb":${g.spillBytes / 1e6}%.1f,"parallelism":${g.parallelism}%.2f"""
+      f""""$k":{"base":$b%.3f,"big":${g.wallS}%.3f,"ratio":$r%.2f$bigExtra$extra$denseExtra$noteExtra}"""
     }.mkString("{", ",", "}")
     val totalRetries = rows.map(_._5).sum
     val policy = f"median-of-3 for any query whose single-shot ratio exceeds ${perQueryBound / 2.0}%.1fx (= per_query_bound/2, symmetric: re-measurement applies on both sides of the bound)"

@@ -55,7 +55,11 @@ object StreamCheck {
                          keys: Long, peakStateRows: Long) {
     def rowsPerS: Long = if (batchS > 0) (inputRows / batchS).toLong else 0L
     def statePerKeyPpm: Long = if (keys > 0) stateRows * 1000000L / keys else 0L
+    /** The run's JSON object, `extra` members appended. */
+    def json(extra: String): String =
+      s"""{"input_rows":$inputRows,"wall_s":${fx(wallS)},"batch_s":${fx(batchS)},"rows_per_s":$rowsPerS,"state_rows":$stateRows$extra}"""
   }
+  private def fx(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
 
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -102,16 +106,12 @@ object StreamCheck {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
 
-    /** Runs `mk(dir)` to completion through the noop sink and collects
-      * the progress metrics. `dir` may be a raw testdata dir (mirrors:
-      * one events.parquet, one micro-batch) or a time-split dir (joins:
-      * one file per trigger). */
-    /** Drains a started query and extracts the run metrics (shared by
-      * the writeStream mirrors and the self-starting maintenance fold). */
-    def drainAndMeasure(q: org.apache.spark.sql.streaming.StreamingQuery,
-                        name: String, tag: String, keys: Long, t0: Long): Run = {
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
+    /** Starts a query, drains it and extracts the run metrics (shared by
+      * the writeStream mirrors and the self-starting maintenance folds);
+      * the wall time covers start and drain. */
+    def drainAndMeasure(start: => org.apache.spark.sql.streaming.StreamingQuery,
+                        name: String, tag: String, keys: Long): Run = {
+      val (q, wall) = Measure.clock { val q = start; q.processAllAvailable(); q }
       val progs = q.recentProgress
       val inputRows = progs.map(_.numInputRows).sum
       // ADVICE r9: throughput from the engine's own addBatch timings —
@@ -128,16 +128,18 @@ object StreamCheck {
       Run(name, tag, inputRows, wall, batchS, stateRows, keys, peak)
     }
 
+    /** Runs `mk(dir)` to completion through the noop sink and collects
+      * the progress metrics. `dir` may be a raw testdata dir (mirrors:
+      * one events.parquet, one micro-batch) or a time-split dir (joins:
+      * one file per trigger). */
     def runStream(name: String, mode: String, mk: String => DataFrame,
                   dir: String, tag: String, keys: Long): Run = {
       val ckpt = new java.io.File(s"target/streamcheck/ckpt_${name}_$tag")
       if (ckpt.exists()) rm(ckpt)
-      val t0 = System.nanoTime()
-      val q = mk(dir).writeStream.format("noop")
+      drainAndMeasure(mk(dir).writeStream.format("noop")
         .option("checkpointLocation", ckpt.getAbsolutePath)
         .outputMode(mode)
-        .start()
-      drainAndMeasure(q, name, tag, keys, t0)
+        .start(), name, tag, keys)
     }
 
     def runOne(name: String, mode: String, kind: String,
@@ -320,11 +322,10 @@ object StreamCheck {
       val stateDir = new java.io.File(s"target/streamcheck/nnd_state_$tag")
       val ckpt = new java.io.File(s"target/streamcheck/ckpt_nnd_maint_$tag")
       Seq(stateDir, ckpt).foreach(f => if (f.exists()) rm(f))
-      val t0 = System.nanoTime()
-      val q = Streams.nndMaintainStream(spark,
+      val run = drainAndMeasure(Streams.nndMaintainStream(spark,
         streamOf(s).select("vec_id", "embedding"), dir,
-        stateDir.getAbsolutePath, ckpt.getAbsolutePath)
-      val run = drainAndMeasure(q, "nnd_maintain", tag, keys = 0L, t0)
+        stateDir.getAbsolutePath, ckpt.getAbsolutePath),
+        "nnd_maintain", tag, keys = 0L)
       val arrivals = spark.read.parquet(s).count()
       val edges = spark.read.parquet(s"${stateDir.getAbsolutePath}/edges").count()
       (run, arrivals, edges)
@@ -358,11 +359,10 @@ object StreamCheck {
       val stateDir = new java.io.File(s"target/streamcheck/ivf_state_$tag")
       val ckpt = new java.io.File(s"target/streamcheck/ckpt_ivf_maint_$tag")
       Seq(stateDir, ckpt).foreach(f => if (f.exists()) rm(f))
-      val t0 = System.nanoTime()
-      val q = Streams.ivfMaintainStream(spark,
+      val run = drainAndMeasure(Streams.ivfMaintainStream(spark,
         streamOf(s).select("vec_id", "embedding"), dir,
-        stateDir.getAbsolutePath, ckpt.getAbsolutePath)
-      val run = drainAndMeasure(q, "ivf_maintain", tag, keys = 0L, t0)
+        stateDir.getAbsolutePath, ckpt.getAbsolutePath),
+        "ivf_maintain", tag, keys = 0L)
       val arrivals = spark.read.parquet(s).count()
       val folded = spark.read.parquet(s"${stateDir.getAbsolutePath}/assign").count()
       (run, arrivals, folded)
@@ -373,11 +373,10 @@ object StreamCheck {
       val stateDir = new java.io.File(s"target/streamcheck/bm25_state_$tag")
       val ckpt = new java.io.File(s"target/streamcheck/ckpt_bm25_maint_$tag")
       Seq(stateDir, ckpt).foreach(f => if (f.exists()) rm(f))
-      val t0 = System.nanoTime()
-      val q = Streams.bm25MaintainStream(
+      val run = drainAndMeasure(Streams.bm25MaintainStream(
         streamOf(s).select("doc_id", "text"),
-        stateDir.getAbsolutePath, ckpt.getAbsolutePath)
-      val run = drainAndMeasure(q, "bm25_maintain", tag, keys = 0L, t0)
+        stateDir.getAbsolutePath, ckpt.getAbsolutePath),
+        "bm25_maintain", tag, keys = 0L)
       val arr = spark.read.parquet(s)
       val wantPairs = arr
         .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
@@ -403,18 +402,15 @@ object StreamCheck {
       def serveRows(): Seq[Seq[Any]] =
         Streams.bm25ServeFromState(spark, dir, stateDir)
           .collect().map(_.toSeq).toSeq
-      def timed[A](body: => A): (A, Double) = {
-        val t0 = System.nanoTime(); val a = body; (a, (System.nanoTime() - t0) / 1e9)
-      }
       val dirsBefore = graft.streaming.FoldState.livePartitionCount(spark, post)
-      val (beforeRows, _) = timed(serveRows()) // warm
-      val (_, serveBefore) = timed(serveRows())
+      val beforeRows = serveRows() // warm
+      val (_, serveBefore) = Measure.clock(serveRows())
       val wm = graft.streaming.FoldState.maxLiveBatchId(spark, post).getOrElse(-1L)
       val (_, compactS) =
-        timed(Streams.compactMaintenanceState(spark, stateDir, wm))
+        Measure.clock(Streams.compactMaintenanceState(spark, stateDir, wm))
       val dirsAfter = graft.streaming.FoldState.livePartitionCount(spark, post)
-      val (afterRows, _) = timed(serveRows()) // warm
-      val (_, serveAfter) = timed(serveRows())
+      val afterRows = serveRows() // warm
+      val (_, serveAfter) = Measure.clock(serveRows())
       (tag, dirsBefore, dirsAfter, serveBefore, serveAfter, compactS,
         beforeRows == afterRows)
     }
@@ -434,12 +430,11 @@ object StreamCheck {
       val stateDir = new java.io.File(s"target/streamcheck/bm25_auto_$tag")
       val ckpt = new java.io.File(s"target/streamcheck/ckpt_bm25_auto_$tag")
       Seq(stateDir, ckpt).foreach(f => if (f.exists()) rm(f))
-      val t0 = System.nanoTime()
-      val q = Streams.bm25MaintainStream(
+      val run = drainAndMeasure(Streams.bm25MaintainStream(
         streamOf(s).select("doc_id", "text"),
         stateDir.getAbsolutePath, ckpt.getAbsolutePath,
-        compactEvery = 2, maxGens = 3)
-      val run = drainAndMeasure(q, "bm25_autocompact", tag, keys = 0L, t0)
+        compactEvery = 2, maxGens = 3),
+        "bm25_autocompact", tag, keys = 0L)
       val post = s"${stateDir.getAbsolutePath}/post"
       val liveDirs = graft.streaming.FoldState.livePartitionCount(spark, post)
       val gens = graft.streaming.FoldState.generationCount(spark, post)
@@ -476,10 +471,8 @@ object StreamCheck {
         if (i % 2 == 1) {
           val gensBefore = graft.streaming.FoldState.manifest(spark, post)
             .map(_._1.toSet).getOrElse(Set.empty)
-          val t0 = System.nanoTime()
-          Streams.compactMaintenanceState(spark, sd, watermark = i.toLong,
-            maxGens = 100)
-          val wall = (System.nanoTime() - t0) / 1e9
+          val (_, wall) = Measure.clock(Streams.compactMaintenanceState(
+            spark, sd, watermark = i.toLong, maxGens = 100))
           val newGens = graft.streaming.FoldState.manifest(spark, post)
             .map(_._1.toSet).getOrElse(Set.empty) -- gensBefore
           val bytes = newGens.iterator
@@ -491,19 +484,15 @@ object StreamCheck {
       steps.toSeq
     }
 
-    def fx(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     // explicit tag lookup (ADVICE r9: sortBy(_.tag.length) silently
     // breaks if a third scale tag ever appears)
     def pairOf(rs: Seq[Run], name: String): (Run, Run) = {
       val mine = rs.filter(_.name == name)
       (mine.find(_.tag == "x1").get, mine.find(_.tag == "x10").get)
     }
-    def runJson(r: Run, withKeys: Boolean): String = {
-      val keyPart =
-        if (withKeys) s""","keys":${r.keys},"state_per_key_ppm":${r.statePerKeyPpm}"""
-        else s""","peak_state_rows":${r.peakStateRows}"""
-      s"""{"input_rows":${r.inputRows},"wall_s":${fx(r.wallS)},"batch_s":${fx(r.batchS)},"rows_per_s":${r.rowsPerS},"state_rows":${r.stateRows}$keyPart}"""
-    }
+    def runJson(r: Run, withKeys: Boolean): String = r.json(
+      if (withKeys) s""","keys":${r.keys},"state_per_key_ppm":${r.statePerKeyPpm}"""
+      else s""","peak_state_rows":${r.peakStateRows}""")
     var breaches = 0
     val rows = mirrors.map { case (name, _, kind, _) =>
       val (r1, r10) = pairOf(runs, name)
@@ -529,24 +518,20 @@ object StreamCheck {
       def one(t: (Run, Long, Long)): String = {
         val (r, arrivals, edges) = t
         val perArrival = if (arrivals > 0) edges.toDouble / arrivals else -1.0
-        s"""{"input_rows":${r.inputRows},"wall_s":${fx(r.wallS)},"batch_s":${fx(r.batchS)},"rows_per_s":${r.rowsPerS},"state_rows":${r.stateRows},"arrivals":$arrivals,"folded_edges":$edges,"edges_per_arrival":${fx(perArrival)}}"""
+        r.json(s""","arrivals":$arrivals,"folded_edges":$edges,"edges_per_arrival":${fx(perArrival)}""")
       }
       val Seq(m1, m10) = maintRuns
       val ok = Seq(m1, m10).forall { case (r, a, e) =>
         r.stateRows == 0 && a > 0 && e == a * 10 }
       if (!ok) breaches += 1
-      def oneBm(t: (Run, Long, Long)): String = {
-        val (r, wantPairs, post) = t
-        s"""{"input_rows":${r.inputRows},"wall_s":${fx(r.wallS)},"batch_s":${fx(r.batchS)},"rows_per_s":${r.rowsPerS},"state_rows":${r.stateRows},"arrival_token_pairs":$wantPairs,"folded_postings":$post}"""
-      }
+      def oneBm(t: (Run, Long, Long)): String =
+        t._1.json(s""","arrival_token_pairs":${t._2},"folded_postings":${t._3}""")
       val Seq(b1, b10) = bm25MaintRuns
       val okBm = Seq(b1, b10).forall { case (r, want, post) =>
         r.stateRows == 0 && want > 0 && post == want }
       if (!okBm) breaches += 1
-      def oneIvf(t: (Run, Long, Long)): String = {
-        val (r, arrivals, folded) = t
-        s"""{"input_rows":${r.inputRows},"wall_s":${fx(r.wallS)},"batch_s":${fx(r.batchS)},"rows_per_s":${r.rowsPerS},"state_rows":${r.stateRows},"arrivals":$arrivals,"folded_assignments":$folded}"""
-      }
+      def oneIvf(t: (Run, Long, Long)): String =
+        t._1.json(s""","arrivals":${t._2},"folded_assignments":${t._3}""")
       val Seq(v1, v10) = ivfMaintRuns
       val okIvf = Seq(v1, v10).forall { case (r, a, f) =>
         r.stateRows == 0 && a > 0 && f == a }

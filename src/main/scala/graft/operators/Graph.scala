@@ -47,49 +47,57 @@ object Graph {
       .unionAll(be.select(col("s").as("src"), col("c").as("dst")))
   }
 
+  /** The degree-fused edge table both PageRanks iterate over, and the
+    * reducer count of their step plans (sized to the edge rows: at base
+    * scale a full-width step stage is task-scheduling overhead).
+    *
+    * Every step references the edge list and the degree table; an
+    * un-materialized plan re-derives BOTH from the fact join per
+    * reference (measured: 14 lineitem scans, 0 reused exchanges for 3
+    * iterations). Degree is FUSED into the edge list once, so a step is a
+    * single equi-join plus a partial agg, and the fused table is the only
+    * full materialization. Through [[graft.Materialize]] the fuse is an
+    * SMJ on src whose hash(src, nPart) partitioning and src ordering the
+    * leaf keeps, so each step's join moves and sorts ZERO edge rows. The
+    * merge hint keeps the fuse a sort-merge join whatever the size
+    * estimates say: a broadcast of `deg` would leave the leaf
+    * unpartitioned, and every step would re-exchange the edges. */
+  private def fusedEdges(edgesIn: DataFrame): (DataFrame, Int) = {
+    val nPart = graft.Materialize.partitionsFor(edgesIn.sparkSession,
+      graft.Materialize.rows(edgesIn))
+    val deg = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
+    (graft.Materialize(edgesIn.hint("merge").join(deg, "src")
+      .select(col("src"), col("dst"), col("deg"))
+      .sortWithinPartitions("src"), nPart), nPart)
+  }
+
+  /** Every node at 10^6 micro-units, seeded off the fused table: distinct
+    * over hash(src)-partitioned rows is exchange-free (every node appears
+    * as a src), where seeding from `deg` re-ran the full-edge aggregation. */
+  private def seedRanks(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1000000L).as("r"))
+
+  /** One step r' = base + (damping · Σ_in (r div deg)) div 100 over the
+    * fused table. The merge hint keeps the edge rows in place whatever the
+    * size estimates say: under a truthful edge size below the broadcast
+    * threshold the planner would broadcast the whole edge table per step
+    * (the hazard Dedup.connectedComponents guards the same way); the rank
+    * side arrives hash-partitioned on `node` from its own groupBy. */
+  private def rankStep(edges: DataFrame, base: Long, damping: Int)(r: DataFrame): DataFrame =
+    edges.hint("merge").join(r, edges("src") === r("node"))
+      .select(col("dst"), expr("r div deg").as("contrib"))
+      .groupBy("dst")
+      .agg(expr(s"CAST($base + ($damping * sum(contrib)) div 100 AS BIGINT)").as("r"))
+      .select(col("dst").as("node"), col("r"))
+
   /** Integer power iteration over an (src, dst) edge list: `iters` steps
     * of r' = 150000 + (85 · Σ_in (r div deg)) div 100, ranks in
     * micro-units. Every node must appear as a src (no dangling nodes —
     * true by construction for undirected edge lists). */
   def pageRankOf(edgesIn: DataFrame, iters: Int): DataFrame = {
-    // every iteration references the edge list and the degree table; an
-    // un-materialized plan re-derives BOTH from the fact join per
-    // reference (measured: 14 lineitem scans, 0 reused exchanges for 3
-    // iterations). Degree is FUSED into the edge list before the loop
-    // (one join at build time), so the per-step plan is a single
-    // equi-join plus a partial agg, and the fused table is the only full
-    // materialization. Materialized through [[graft.Materialize]], the
-    // deg fuse is an SMJ on src whose hash(src, nPart) partitioning and
-    // src ordering the leaf keeps, so each iteration's join moves and
-    // sorts ZERO edge rows; the rank side arrives hash-partitioned on
-    // `node` from its own groupBy.
-    val nPart = graft.Materialize.partitionsFor(edgesIn.sparkSession,
-      graft.Materialize.rows(edgesIn))
-    // the merge hint keeps the fuse a sort-merge join whatever the size
-    // estimates say: a broadcast of `deg` would leave the leaf
-    // unpartitioned, and every step would re-exchange the edges
-    val deg = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edges = graft.Materialize(edgesIn.hint("merge").join(deg, "src")
-      .select(col("src"), col("dst"), col("deg"))
-      .sortWithinPartitions("src"), nPart)
-    // rank seed off the materialized table (same key set as deg — every
-    // node appears as a src): distinct over hash(src)-partitioned rows is
-    // exchange-free, where seeding from `deg` re-ran the full-edge
-    // aggregation a second time.
-    var ranks = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1000000L).as("r"))
-    (1 to iters).foreach { _ =>
-      // the merge hint keeps the edge rows in place whatever the size
-      // estimates say: under a truthful edge size below the broadcast
-      // threshold the planner would broadcast the whole edge table per
-      // step (the hazard Dedup.connectedComponents guards the same way)
-      ranks = edges.hint("merge")
-        .join(ranks, edges("src") === ranks("node"))
-        .select(col("dst"), expr("r div deg").as("contrib"))
-        .groupBy("dst")
-        .agg(expr("CAST(150000 + (85 * sum(contrib)) div 100 AS BIGINT)").as("r"))
-        .select(col("dst").as("node"), col("r"))
-    }
+    val (edges, nPart) = fusedEdges(edgesIn)
+    val ranks = (1 to iters).foldLeft(seedRanks(edges))((r, _) => rankStep(edges, 150000L, 85)(r))
     // the final ranks materialize HERE so the whole chain plans at nPart
     // against the nPart-partitioned edge leaf (planned at the caller's
     // partition count it would re-exchange the edges per iteration);
@@ -139,22 +147,8 @@ object Graph {
     // the PER-STEP data: the loop runs ~27 tiny step stages, and at base
     // scale a 500k-row step drowns in full-width task scheduling
     // (measured 2x on the whole query).
-    val nPart = graft.Materialize.partitionsFor(edgesIn.sparkSession,
-      graft.Materialize.rows(edgesIn))
-    // same degree-fused edge list as [[pageRankOf]]: one join per step,
-    // and the leaf keeps the fuse's hash(src, nPart) partitioning and src
-    // ordering, so each merge-hinted step join moves and sorts ZERO edge
-    // rows; only the node-sized contribution agg shuffles.
-    val deg = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edges = graft.Materialize(edgesIn.hint("merge").join(deg, "src") // see pageRankOf
-      .select(col("src"), col("dst"), col("deg"))
-      .sortWithinPartitions("src"), nPart)
-    def step(r: DataFrame): DataFrame = // merge hint: see pageRankOf
-      edges.hint("merge").join(r, edges("src") === r("node"))
-        .select(col("dst"), expr("r div deg").as("contrib"))
-        .groupBy("dst")
-        .agg(expr("CAST(500000 + (50 * sum(contrib)) div 100 AS BIGINT)").as("r"))
-        .select(col("dst").as("node"), col("r"))
+    val (edges, nPart) = fusedEdges(edgesIn)
+    val step = rankStep(edges, 500000L, 50) _
     // probe CADENCE: the fixpoint test runs once per ROUND of
     // `checkEvery` FUSED steps, not per step. Each round builds one plan
     // chaining `checkEvery` join-aggs off the last materialized state and
@@ -169,10 +163,7 @@ object Graph {
     // is invisible in the output: the emitted least() of an ADJACENT
     // state pair is the same two cycle states whatever the detection
     // offset, so the result is bit-identical to per-step probing.
-    // The rank seed comes off the fused table (distinct over
-    // hash(src)-partitioned rows: exchange-free).
-    var last = graft.Materialize(edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1000000L).as("r")), nPart)
+    var last = graft.Materialize(seedRanks(edges), nPart)
     var iters = 0
     var converged = false
     val checkEvery = 4

@@ -7,10 +7,9 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.CorpusOps
@@ -73,22 +72,11 @@ class MaterializeSpec extends AnyFunSuite {
     assert(org.apache.spark.sql.internal.SQLConf.get.adaptiveExecutionEnabled)
   }
 
-  /** `graft.Materialize` executions `body` runs, counted by a
-    * QueryExecutionListener on the session. */
-  private def materializations(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "materialize") n.incrementAndGet()
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    n.get
-  }
+  private lazy val harness = Measure.attach(spark)
+
+  /** `graft.Materialize` executions of one call, as [[Measure]] counts them. */
+  private def materializations(body: => DataFrame): Long =
+    harness.run("materializations")(body).orThrow.materializeN
 
   test("nndescentTopK with 3 rounds materializes the embeddings, the seed " +
     "graph and each round") {
@@ -110,7 +98,7 @@ class MaterializeSpec extends AnyFunSuite {
     val g = nodes.as("a").join(nodes.as("b"),
         col("b.vec_id") > col("a.vec_id") && col("b.vec_id") <= col("a.vec_id") + 12)
       .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"), lit(1.0).as("cos"))
-    def insert(hops: Int): Int = materializations(
+    def insert(hops: Int): Long = materializations(
       Similarity.nndInsertKnn(g, nodes, batch, k = 5, adjCap = 8, beam = 4,
         hops = hops, nEntries = 4))
     // adjacency, both embedding sides and the output, plus one per hop

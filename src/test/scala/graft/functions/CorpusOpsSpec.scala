@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * prefix-sum sequence packing. Planted fixtures exercise both branches
   * of every gate; packing is differentially checked against a local
   * single-threaded prefix sum over randomized uneven inputs. The novelty
-  * curve gives verbatim repeats zero novelty. */
+  * curve gives verbatim repeats zero novelty. The mixture rebalance
+  * conserves the corpus total, and tokenizer fertility matches the
+  * per-doc token counts it aggregates. */
 class CorpusOpsSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-corpus-ops-test")
   import spark.implicits._
@@ -161,5 +163,42 @@ class CorpusOpsSpec extends AnyFunSuite {
     val got = CorpusOps.noveltyCurveOf(docs, bucketSize = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toList
     assert(got === List((0L, 2L, 2L, 1000000L), (1L, 2L, 1L, 500000L)))
+  }
+
+  test("mixRebalance: targets conserve the corpus total; head shrinks, tail grows") {
+    val rows = graft.functions.TextAnalysis.mixRebalance(spark, "/root/testdata/sf0.001")
+      .collect()
+    val total = rows.map(_.getAs[Long]("n_tokens")).sum
+    assert(rows.map(_.getAs[Long]("target_tokens")).sum === total) // exact Hamilton
+    rows.foreach { r =>
+      assert(r.getAs[Long]("keep_ppm") <= 1000000L)
+      assert(r.getAs[Long]("kept_tokens") <= r.getAs[Long]("n_tokens"))
+    }
+    // sqrt flattening: the LARGEST language is cut below its natural
+    // share, the SMALLEST keeps everything (target >= current)
+    val byTokens = rows.sortBy(_.getAs[Long]("n_tokens"))
+    assert(byTokens.last.getAs[Long]("target_tokens") < byTokens.last.getAs[Long]("n_tokens"))
+    assert(byTokens.head.getAs[Long]("target_tokens") >= byTokens.head.getAs[Long]("n_tokens"))
+  }
+
+  test("fertility cohort sums equal the per-doc tokenCount rollup") {
+    val dir = "/root/testdata/sf0.001"
+    val viaDoc = graft.functions.TextAnalysis.tokenCount(spark, dir)
+      .join(graft.sources.Tables.documents(spark, dir).select("doc_id", "lang", "source"),
+        "doc_id")
+      .groupBy("lang", "source")
+      .agg(org.apache.spark.sql.functions.sum("n_re_tokens").as("re"),
+        org.apache.spark.sql.functions.sum("n_chars").as("ch"))
+      .collect()
+      .map(r => (r.getAs[String]("lang"), r.getAs[String]("source")) ->
+        (r.getAs[Long]("re"), r.getAs[Long]("ch"))).toMap
+    val got = graft.functions.TextAnalysis.fertility(spark, dir).collect()
+    assert(got.nonEmpty)
+    got.foreach { r =>
+      val k = (r.getAs[String]("lang"), r.getAs[String]("source"))
+      assert((r.getAs[Long]("n_re_tokens"), r.getAs[Long]("n_chars")) === viaDoc(k))
+      assert(r.getAs[Long]("re_per_100c_ppm") ===
+        r.getAs[Long]("n_re_tokens") * 100000000L / r.getAs[Long]("n_chars"))
+    }
   }
 }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * representative BEFORE the LSH join — no intra-group pairs — while
   * near-duplicate (but not identical) texts still pair, with the
   * verbatim-copy counts carried through. The LSH recall evaluation
-  * keeps caught ≤ true pairs at every threshold. */
+  * keeps caught ≤ true pairs at every threshold. The cross-source
+  * duplication matrix is pinned on hand-built reshuffles. */
 class DedupPipelineSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-dedup-pipeline-test")
   import spark.implicits._
@@ -71,5 +72,31 @@ class DedupPipelineSpec extends AnyFunSuite {
     }
     val trues = rows.map(_.getAs[Long]("n_true")).toSeq
     assert(trues === trues.sorted.reverse) // tighter tau admits fewer pairs
+  }
+
+  test("crossSourceMatrixOf: keeper by (source, doc_id), reshuffles collide") {
+    import spark.implicits._
+    // same bag of words in docs 1/2/3 ("a b" reshuffled — order must not
+    // matter), kept by srcA (lowest source, lowest id); doc 4 unique.
+    val docs = Seq(
+      (1L, "a b", "srcB"), (2L, "b a", "srcA"), (3L, "a b a", "srcB"),
+      (4L, "c d", "srcA"))
+      .toDF("doc_id", "text", "source")
+    val got = Dedup.crossSourceMatrixOf(docs).collect()
+      .map(r => (r.getAs[String]("source_kept"), r.getAs[String]("source_dup"),
+        r.getAs[Long]("n_dropped"))).toSet
+    // keeper = (srcA, 2); dropped: doc 1 (srcB), doc 3 (srcB)
+    assert(got === Set(("srcA", "srcB", 2L)))
+  }
+
+  test("crossSourceMatrixOf: diagonal counts within-source dups") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "x y", "s1"), (2L, "y x", "s1"), (3L, "x y", "s2"))
+      .toDF("doc_id", "text", "source")
+    val got = Dedup.crossSourceMatrixOf(docs).collect()
+      .map(r => (r.getAs[String]("source_kept"), r.getAs[String]("source_dup"),
+        r.getAs[Long]("n_dropped"))).toSet
+    assert(got === Set(("s1", "s1", 1L), ("s1", "s2", 1L)))
   }
 }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * distance join: on randomized dictionaries the operator must emit
   * exactly the pairs a brute-force Levenshtein finds — including
   * insertions at either end and substitutions in the LAST token (the
-  * pair class last-token blocking misses by construction). */
+  * pair class last-token blocking misses by construction). The
+  * reciprocal best-match join is pinned on hand-built pairs. */
 class EditDistJoinSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-editdist-test")
   import spark.implicits._
@@ -42,5 +43,29 @@ class EditDistJoinSpec extends AnyFunSuite {
     assert(want.size >= 4, s"fixture too weak: ${want.size} true pairs")
     assert(got == want,
       s"blocking divergence:\n missing ${want -- got}\n extra ${got -- want}")
+  }
+
+  test("mutualBestMatchOfPairs keeps only reciprocal top-1 pairs") {
+    import spark.implicits._
+    // s1's best is c1 (100) and c1's best is s1 -> kept.
+    // s2's best is c1 (90) but c1's best is s1 -> dropped.
+    // s3's best is c2 (50); c2's best is s3 -> kept.
+    val pair = Seq(
+      (1L, 1L, 100L), (2L, 1L, 90L), (2L, 2L, 40L), (3L, 2L, 50L))
+      .toDF("s_suppkey", "c_custkey", "rev_units")
+    val got = Relational.mutualBestMatchOfPairs(pair).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got === Set((1L, 1L, 100L), (3L, 2L, 50L)))
+  }
+
+  test("mutualBestMatchOfPairs breaks revenue ties deterministically (asc key)") {
+    import spark.implicits._
+    // c1 ties between s1 and s2 at 70: best supplier = s1 (asc). s1's
+    // best customer ties between c1 and c2 at 70: best = c1 (asc).
+    val pair = Seq((1L, 1L, 70L), (2L, 1L, 70L), (1L, 2L, 70L))
+      .toDF("s_suppkey", "c_custkey", "rev_units")
+    val got = Relational.mutualBestMatchOfPairs(pair).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === Set((1L, 1L)))
   }
 }

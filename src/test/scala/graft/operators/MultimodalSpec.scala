@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The multimodal plumbing contract: binary payloads, deterministic stub
   * decode, frame sampling, feature vectors (builder brief — the codec
-  * call itself is stubbed, everything around it is real and tested). */
+  * call itself is stubbed, everything around it is real and tested),
+  * and frame-dedup buckets. */
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-mm-test")
   val dir = "/root/testdata/sf0.001"
@@ -230,5 +231,16 @@ class MultimodalSpec extends AnyFunSuite {
     val plan = Multimodal.pixelFeaturesPersisted(spark, dir)
       .queryExecution.optimizedPlan.toString
     assert(!plan.contains("jpeg"), s"codec leaked into the serve plan:\n$plan")
+  }
+
+  test("frameDedup buckets: 9-bit range, n_frames >= n_videos >= 2") {
+    val rows = Multimodal.frameDedup(spark, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val b = r.getAs[Long]("bucket")
+      assert(b >= 0L && b < 512L)
+      assert(r.getAs[Long]("n_frames") >= r.getAs[Long]("n_videos"))
+      assert(r.getAs[Long]("n_videos") >= 2L)
+    }
   }
 }

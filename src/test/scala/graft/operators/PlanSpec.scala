@@ -448,7 +448,7 @@ class PlanSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       body
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      org.apache.spark.sql.GraftListenerBridge.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     plans.asScala.toSeq
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * output is checked against a straightforward single-threaded
   * re-derivation from the same parquet — independent of both the Spark
   * plan and the DuckDB oracle. MAD outliers are pinned on hand-checked
-  * columns. */
+  * columns; the bootstrap CI brackets its observed total. */
 class ProfilingAggSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-profiling-test")
   private val dir = "/root/testdata/sf0.001"
@@ -157,5 +157,18 @@ class ProfilingAggSpec extends AnyFunSuite {
     val v = Seq(("B", 5L), ("B", 5L), ("B", 9L), ("B", 9L)).toDF("segment", "usd")
     val r = Aggregations.madOutliersOf(v).collect().head
     assert((r.getLong(2), r.getLong(3), r.getLong(4)) === ((5L, 0L, 2L)))
+  }
+
+  test("bootstrapCi: interval brackets the observed total and is reproducible") {
+    val a = Aggregations.bootstrapCi(spark, "/root/testdata/sf0.001").collect()(0)
+    val b = Aggregations.bootstrapCi(spark, "/root/testdata/sf0.001").collect()(0)
+    assert(a.toSeq === b.toSeq) // md5-indexed draws: bit-identical re-runs
+    val (lo, hi, obs) = (a.getAs[Long]("lo_sum_cents"), a.getAs[Long]("hi_sum_cents"),
+      a.getAs[Long]("observed_sum_cents"))
+    assert(lo <= hi)
+    // percentile-bootstrap CIs bracket the point estimate on any
+    // non-degenerate sample (the resample distribution is centered on it)
+    assert(lo <= obs && obs <= hi)
+    assert(a.getAs[Long]("n_resamples") === 200L)
   }
 }

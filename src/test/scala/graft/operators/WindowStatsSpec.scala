@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Rolling median (exact, holistic frame) and Bollinger breakouts (pure
   * BIGINT band predicate): hand-computed frames plus a differential
-  * check of the integer band test against the float definition. */
+  * check of the integer band test against the float definition. RSI
+  * frames and interval coverage are pinned on hand-built series. */
 class WindowStatsSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-winstats-test")
 
@@ -80,5 +81,46 @@ class WindowStatsSpec extends AnyFunSuite {
       assert(r2 === byP2(u) + 1L, s"rank_p2 of user $u")
       assert(mv === r1 - r2)
     }
+  }
+
+  test("rsiOf: all-gain frame pegs at 1e6 ppm; a loss rebalances exactly") {
+    import spark.implicits._
+    // 15 rising values (14 gains of 10c) then one 70c drop: the 16th
+    // frame holds 13 gains (130c) + 1 loss (70c) -> 650000 ppm
+    val vals = (0 to 14).map(i => 1.00 + i * 0.10) :+ (1.00 + 14 * 0.10 - 0.70)
+    val df = vals.zipWithIndex.map { case (v, i) =>
+      (i.toLong + 1, new java.sql.Timestamp(1000L * (i + 1)), 1L, "view", v)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value")
+    val got = Windows.rsiOf(df).collect()
+      .map(r => r.getAs[Long]("event_id") ->
+        (r.getAs[Long]("gains"), r.getAs[Long]("losses"), r.getAs[Long]("rsi_ppm")))
+      .toMap
+    assert(got.keySet === Set(15L, 16L)) // only full 14-diff frames
+    assert(got(15L) === ((140L, 0L, 1000000L)))
+    assert(got(16L) === ((130L, 70L, 650000L)))
+  }
+
+  test("intervalCoverageOf: overlaps merge, gaps split, zero-length islands count") {
+    import spark.implicits._
+    // user 1: [0,10] + [5,20] merge (covered 20), [30,35] separate
+    // user 2: [0,0] zero-length island + [10,15]
+    val iv = Seq(
+      (1L, 0L, 10L), (1L, 5L, 20L), (1L, 30L, 35L),
+      (2L, 0L, 0L), (2L, 10L, 15L))
+      .toDF("user_id", "s", "e")
+    val got = Windows.intervalCoverageOf(iv).collect()
+      .map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[Long]("n_islands"), r.getAs[Long]("covered_us"))).toMap
+    assert(got(1L) === ((2L, 25L)))
+    assert(got(2L) === ((2L, 5L)))
+  }
+
+  test("intervalCoverageOf: touching endpoints merge (start == prior max end)") {
+    import spark.implicits._
+    val iv = Seq((1L, 0L, 10L), (1L, 10L, 20L)).toDF("user_id", "s", "e")
+    val got = Windows.intervalCoverageOf(iv).collect()
+    assert(got.length === 1)
+    assert(got(0).getAs[Long]("n_islands") === 1L)
+    assert(got(0).getAs[Long]("covered_us") === 20L)
   }
 }
