@@ -134,22 +134,6 @@ object Bench {
             runs.flatMap(_.error).foreach(e =>
               System.err.println(s"[bench] $name run failed: ${e.getMessage}"))
             val healthy = runs.filter(_.ok)
-            // between-query hygiene (untimed): over 261×5 runs, leaked
-            // storage squeezes the unified memory pool and slowed the
-            // r10 tail families 9-34%. CacheManager entries from
-            // .persist() calls a query never unpersisted are dropped
-            // through the PROPER API — a blanket RDD-level unpersist
-            // (tried first) left broken InMemoryRelations that
-            // recomputed without re-caching and regressed the
-            // persist-reliant queries ~2×, and a per-query System.gc()
-            // (tried second) perturbed the queries that followed it.
-            // Leaked graft.Materialize blocks are left to the heap
-            // (sized from the host by build.sbt) + the ContextCleaner's
-            // own GC cadence. Within a query's n
-            // runs the cache stays warm (CacheManager dedupes by plan
-            // equality), matching prior rounds' measurement semantics.
-            try spark.catalog.clearCache()
-            catch { case _: Throwable => () }
             Some((name, healthy.sortBy(_.wallS), runs.length - healthy.length))
         }
     }

@@ -5,13 +5,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Subque
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** The one way graft materializes an intermediate, and the only place
-  * that checkpoints: iterative loops (graph ranks and reachability,
+/** The one way graft keeps an intermediate, and the only place that
+  * checkpoints or caches: iterative loops (graph ranks and reachability,
   * label propagation, dedup components, NN-descent rounds, graph-search
   * hops, BPE merge rounds) and shared intermediates that several
   * consumers read (the creator report's posts table, dictionaries and
-  * adjacency lists, embedding tables, small outputs materialized so the
-  * cache beneath them can be dropped, stream micro-batches).
+  * adjacency lists, embedding tables, gram streams, the range-partitioned
+  * frame of a [[PrefixSum]], stream micro-batches).
   *
   * `Materialize(df, partitions)` runs `df` once, planned without adaptive
   * execution at `partitions` reducers, and returns a frame over the

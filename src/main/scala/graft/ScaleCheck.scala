@@ -119,15 +119,6 @@ object ScaleCheck {
           def measure(): (Double, Measure.Record, Double) = {
             val base = timed(name, baseDir, baseShuffle).wallS
             val big = timed(name, bigDirQ, bigShuffle)
-            // per-sample hygiene (untimed; the Bench.runs lesson applied
-            // per sample because a sample here is 4 executions of a
-            // 10×-data query): CacheManager entries leaked by persist()
-            // calls squeeze the unified pool and snowball across samples
-            // — rel_assoc_rules read [6.7×, 13.5×, 39.6×] across its 3
-            // samples in the same JVM before this, monotone in run
-            // count, while its plan was unchanged from the 2.8× r10 row.
-            try spark.catalog.clearCache()
-            catch { case _: Throwable => () }
             (base, big, big.wallS / math.max(base, 0.05))
           }
           var (base, big, ratio) = measure()

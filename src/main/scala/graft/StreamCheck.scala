@@ -48,6 +48,14 @@ import graft.streaming.Streams.Event
   * triggers), so the claim "state ∝ watermark window" becomes the
   * measurable gate: PEAK state rows (max over micro-batches) must stay
   * ~flat at 10× input — ratio ≤ 2.0.
+  *
+  * Valid only at the sf0.1 → sf1 pair (100 k → 1 M events). Below about
+  * 100 k events two gates measure the input size, not state growth:
+  * `countmin`'s state-per-key ratio divides by the 2,048-cell grid
+  * while the grid is still filling (532 cells hold state at 10 k
+  * events, 1,930 at 100 k), and `bm25_serve_topk`'s peak state grows
+  * 5.01× from sf0.01 to sf0.1 before its impact cap binds. Both fail
+  * the sf0.01 → sf0.1 pair on correct code.
   */
 object StreamCheck {
   private case class Run(name: String, tag: String, inputRows: Long,

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -170,15 +169,10 @@ object CorpusOps {
     * shard at `budget`-token boundaries — how a training run turns a
     * document corpus into fixed-length sequences.
     *
-    * The global running sum is a DISTRIBUTED two-phase prefix sum, not a
-    * single-partition window: range-partition by doc_id (global order
-    * across partition index), per-partition token totals (one small row
-    * per partition — the bounded collect), prefix the totals on the
-    * driver, then stream each partition once adding its offset. Scales
-    * to any corpus size at full parallelism; the equivalent
-    * `sum() over (order by doc_id)` window would move the entire corpus
-    * into ONE partition. The partitioned frame is persisted across the
-    * two passes so both see identical range bounds. */
+    * The start offset is the exclusive running token sum in doc_id
+    * order, a distributed prefix sum ([[graft.PrefixSum]]); the
+    * equivalent `sum() over (order by doc_id)` window would move the
+    * entire corpus into ONE partition. */
   def packSequences(spark: SparkSession, dir: String, budget: Long = 512L): DataFrame =
     packSequencesOf(spark,
       Tables.documents(spark, dir)
@@ -188,48 +182,17 @@ object CorpusOps {
 
   /** [[packSequences]] over any (doc_id, n_tokens) frame (spec entry
     * point). */
-  def packSequencesOf(spark: SparkSession, docTokens: DataFrame, budget: Long): DataFrame = {
-    import spark.implicits._
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val sorted = docTokens
-      .select(col("doc_id").cast("long"), col("n_tokens").cast("long"))
-      .repartitionByRange(nParts, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .as[(Long, Long)]
-      .persist()
-    try {
-      val partSums = sorted.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        var s = 0L
-        it.foreach { case (_, t) => s += t }
-        Iterator((pid, s))
-      }.collect() // one row per partition — bounded by parallelism, not data
-      val offsets: Map[Int, Long] = {
-        var acc = 0L
-        partSums.sortBy(_._1).map { case (pid, s) =>
-          val off = acc; acc += s; pid -> off
-        }.toMap
-      }
-      val bOffsets = spark.sparkContext.broadcast(offsets)
-      val withOff = sorted.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        var run = bOffsets.value.getOrElse(pid, 0L)
-        it.map { case (id, t) =>
-          val start = run; run += t; (id, t, start)
-        }
-      }.toDF("doc_id", "n_tokens", "start_off")
-      val out = withOff
-        .withColumn("shard", expr(s"start_off div $budget"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens"),
-          min(col("doc_id")).as("first_doc"),
-          max(col("doc_id")).as("last_doc"))
-        .orderBy("shard")
-      // materialize before unpersisting the two-pass frame beneath it
-      graft.Materialize(out)
-    } finally sorted.unpersist()
-  }
+  def packSequencesOf(spark: SparkSession, docTokens: DataFrame, budget: Long): DataFrame =
+    graft.PrefixSum(
+      docTokens.select(col("doc_id").cast("long"), col("n_tokens").cast("long")),
+      Seq(col("doc_id")), col("n_tokens"), "start_off", inclusive = false)
+      .withColumn("shard", expr(s"start_off div $budget"))
+      .groupBy("shard")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("n_tokens"),
+        min(col("doc_id")).as("first_doc"),
+        max(col("doc_id")).as("last_doc"))
+      .orderBy("shard")
 
   // ---------------------------------------------------------------- registry
 
@@ -483,27 +446,25 @@ object CorpusOps {
     * overdue). Emits per 50-doc bucket: distinct-gram count, first-ever
     * grams, novelty in integer ppm.
     *
-    * Scale: the gram stream crosses the wire twice (first-occurrence
-    * groupBy on the gram key; join back on the same key — AQE reuses
-    * the partitioning), linear in corpus tokens like the span-dedup
-    * family's gram pass. */
+    * Scale: the gram stream crosses the wire twice (the (doc, gram)
+    * distinct, then the first-occurrence groupBy on the gram key),
+    * linear in corpus tokens like the span-dedup family's gram pass. */
   def noveltyCurve(spark: SparkSession, dir: String): DataFrame =
     noveltyCurveOf(Tables.documents(spark, dir))
 
   /** [[noveltyCurve]] over any documents-shaped corpus (spec entry). */
   def noveltyCurveOf(docs: DataFrame, bucketSize: Int = 50): DataFrame = {
-    // (doc, gram) distinct rows feed BOTH counts below — persisted so
+    // (doc, gram) distinct rows feed BOTH counts below — materialized so
     // the tokenize + 8-gram explode + distinct run once, not once per
-    // consumer (r14; the repsOf/linkPredict within-query discipline)
-    val grams = docs
+    // consumer
+    val grams = graft.Materialize(docs
       .select(col("doc_id"),
         expr("filter(split(lower(text), ' '), x -> length(x) > 0)").as("t"))
       .filter(size(col("t")) >= 8)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(t) - 8), i -> array_join(slice(t, i + 1, 8), ' '))"))
         .as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // a gram is NOVEL exactly on its min-doc_id row — so per-bucket
     // novel counts are a regrouping of the first-seen DICTIONARY, and
     // the old corpus-sized grams ⋈ first join (the query's one big
@@ -515,16 +476,14 @@ object CorpusOps {
     val novel = grams.groupBy("g").agg(min(col("doc_id")).as("first_doc"))
       .select(expr(s"first_doc div $bucketSize").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_novel"))
-    val out = graft.Materialize(grams
+    grams
       .select(expr(s"doc_id div $bucketSize").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_grams"))
       .join(novel, Seq("bucket"), "left")
       .select(col("bucket"), col("n_grams"),
         coalesce(col("n_novel"), lit(0L)).as("n_novel"))
       .withColumn("novelty_ppm", expr("n_novel * 1000000 div n_grams"))
-      .orderBy("bucket"))
-    grams.unpersist(false)
-    out
+      .orderBy("bucket")
   }
 
   /** BPE MERGE FITTING — the tokenizer-training step itself, run

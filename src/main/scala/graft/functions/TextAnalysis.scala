@@ -160,10 +160,10 @@ object TextAnalysis {
     * join is gram-dictionary-sized, never positions×positions. */
   def memorizationRate(spark: SparkSession, dir: String, w: Int = 8): DataFrame = {
     val gramCols = (0 until w).map(j => s"toks[i-1+$j]").mkString(", ")
-    // persisted: the train-dictionary distinct AND the test-side join
-    // probe both read this stream — unpersisted, the corpus tokenize +
-    // 8-gram md5 explode ran twice per query (r14)
-    val grams = Tables.documents(spark, dir)
+    // materialized: the train-dictionary distinct AND the test-side
+    // join probe both read this stream, so the corpus tokenize + 8-gram
+    // md5 explode runs once
+    val grams = graft.Materialize(Tables.documents(spark, dir)
       .withColumn("bucket", expr(
         "pmod(cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint), 100)"))
       .withColumn("split",
@@ -172,26 +172,22 @@ object TextAnalysis {
           .otherwise(lit("test")))
       .withColumn("toks", expr("filter(split(lower(text), ' '), x -> length(x) > 0)"))
       .filter(size(col("toks")) >= w)
-      // the val split feeds neither side — dropped before the cache so
-      // the persisted stream carries only the rows some consumer reads
+      // the val split feeds neither side — dropped before the stream is
+      // kept, so it carries only the rows some consumer reads
       .filter(col("split") =!= "val")
       .select(col("doc_id"), col("lang"), col("split"), explode(expr(
         s"""array_distinct(transform(sequence(1, size(toks) - ${w - 1}),
-              i -> md5(concat_ws(' ', $gramCols))))""")).as("gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              i -> md5(concat_ws(' ', $gramCols))))""")).as("gh")))
     val trainGrams = grams.filter(col("split") === "train")
       .select(col("gh")).distinct().withColumn("hit", lit(1L))
-    // language-count-sized; materialized so the cache can drop now
-    val out = graft.Materialize(grams.filter(col("split") === "test")
+    grams.filter(col("split") === "test")
       .join(trainGrams, Seq("gh"), "left")
       .groupBy("lang")
       .agg(countDistinct(col("doc_id")).as("n_test_docs"),
         count(lit(1)).as("n_grams"),
         expr("CAST(sum(coalesce(hit, 0)) AS BIGINT)").as("n_memorized"))
       .withColumn("memorized_ppm", expr("n_memorized * 1000000 div n_grams"))
-      .orderBy("lang"))
-    grams.unpersist(false)
-    out
+      .orderBy("lang")
   }
 
   /** Document quality scoring: token/stopword/length statistics + a

@@ -618,56 +618,25 @@ object Aggregations {
     * naive formulation (ntile over an unpartitioned window) collapses
     * all data to one reducer; the shape here never does:
     *   1. one shuffle builds the value dictionary (cents → count);
-    *   2. the dictionary is RANGE-partitioned by value and a two-pass
-    *      distributed prefix sum (per-partition subtotals collected —
-    *      one row per partition — then offsets broadcast back) gives
-    *      every value its exact cumulative-before rank, the same
-    *      pattern as [[graft.functions.CorpusOps.packSequencesOf]];
+    *   2. the exclusive running count over the dictionary in value
+    *      order ([[graft.PrefixSum]]) gives every value its exact
+    *      cumulative-before rank;
     *   3. bucket = cum_before·B div N, then a bucket-keyed aggregate.
     * Semantics are value-granular (ties share a bucket — deterministic
     * without any tiebreak), bucket depth is within one value-run of
     * N/B. Integer arithmetic end-to-end. */
   def equidepthHist(spark: SparkSession, dir: String, buckets: Int = 16): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.TaskContext
-    val nParts = spark.sessionState.conf.numShufflePartitions
     val dict = Tables.orders(spark, dir)
       .select(expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
       .groupBy("cents").agg(count(lit(1)).as("cnt"))
-      .repartitionByRange(nParts, col("cents"))
-      .sortWithinPartitions("cents")
-      .as[(Long, Long)]
-      .persist()
-    try {
-      val partSums = dict.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        var s = 0L
-        it.foreach { case (_, c) => s += c }
-        Iterator((pid, s))
-      }.collect() // one row per partition — bounded by parallelism
-      val total = partSums.map(_._2).sum
-      val offsets: Map[Int, Long] = {
-        var acc = 0L
-        partSums.sortBy(_._1).map { case (pid, s) =>
-          val off = acc; acc += s; pid -> off
-        }.toMap
-      }
-      val bOff = spark.sparkContext.broadcast(offsets)
-      val ranked = dict.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        var run = bOff.value.getOrElse(pid, 0L)
-        it.map { case (cents, c) =>
-          val before = run; run += c; (cents, c, before)
-        }
-      }.toDF("cents", "cnt", "cum_before")
-      val out = ranked
-        .withColumn("bucket", expr(s"cum_before * $buckets div ${total}L"))
-        .groupBy("bucket")
-        .agg(sum(col("cnt")).as("n_rows"),
-          min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"))
-        .orderBy("bucket")
-      graft.Materialize(out)
-    } finally dict.unpersist()
+    val ranked = graft.PrefixSum(dict, Seq(col("cents")), col("cnt"), "cum_before",
+      inclusive = false)
+    ranked.crossJoin(broadcast(ranked.agg(sum(col("cnt")).as("n_total"))))
+      .withColumn("bucket", expr(s"cum_before * $buckets div n_total"))
+      .groupBy("bucket")
+      .agg(sum(col("cnt")).as("n_rows"),
+        min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"))
+      .orderBy("bucket")
   }
 
   /** CHI-SQUARED INDEPENDENCE CELLS for two categorical columns

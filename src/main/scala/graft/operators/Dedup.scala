@@ -608,18 +608,12 @@ object Dedup {
     * dedup (analyze_insta_enhanced.py:1283,1316-1376) at corpus scale. */
   def dedupGroupsOf(docs: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
     // reps feeds the LSH pair graph twice (the band self-join evaluates
-    // its subplan once per side) — persist so the exact-group aggregation
-    // runs once. The component loop inside dedupGroupsWithPairs runs its
-    // jobs eagerly, so by the time it returns NOTHING lazy references
-    // reps and it can be unpersisted here rather than leaking cached
-    // blocks for the session lifetime.
-    val reps = repsOf(docs).persist()
+    // its subplan once per side) — materialized so the exact-group
+    // aggregation runs once
+    val reps = graft.Materialize(repsOf(docs))
     // star pairs: identical components, linear (not quadratic) in LSH
     // bucket width — see lshStarPairsFromBands
-    val out = dedupGroupsWithPairs(docs, lshStarPairsOf(reps.select("doc_id", "text")),
-      checkpointDir)
-    reps.unpersist()
-    out
+    dedupGroupsWithPairs(docs, lshStarPairsOf(reps.select("doc_id", "text")), checkpointDir)
   }
 
   /** [[dedupGroupsOf]] with the candidate-pair graph supplied by the
@@ -1035,8 +1029,8 @@ object Dedup {
     // 8-byte longs instead of ~20-char shingle strings (collision-free
     // by construction, unlike hashing). The window runs over the
     // token DICTIONARY (distinct shingles), not the corpus; at extreme
-    // dictionary sizes swap for the distributed prefix-sum ranking
-    // (equidepthHist pattern) — any total order is valid here.
+    // dictionary sizes swap for the distributed running count
+    // ([[graft.PrefixSum]]) — any total order is valid here.
     val dict = tokFreq.withColumn("tid",
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy("tf", "tok")).cast("long"))

@@ -345,7 +345,7 @@ object Graph {
     * quadratic self-join the oracle uses to prove it); the
     * support-filtered survivors fan out into BOTH rule directions
     * map-side, then join the part-dimension-sized item-support table
-    * (broadcast) and the 1-row basket total:
+    * (broadcast); the basket total N is the basket table's row count:
     * confidence(a→b) = supp(ab)/supp(a),
     * lift(a→b) = supp(ab)·N / (supp(a)·supp(b)).
     * All arithmetic is integer (ppm floor-division) so the row hash is
@@ -355,28 +355,20 @@ object Graph {
 
   /** [[assocRules]] over any lineitem-shaped fact table (spec entry). */
   private[operators] def assocRulesOf(lineitem: DataFrame, minSupport: Long = 3L): DataFrame = {
-    // ONE fact shuffle (r14, guide §2.3): the basket table (order →
-    // sorted distinct part set) is checkpointed and feeds pair supports,
-    // item supports AND the basket total. The old shape re-shuffled the
-    // raw fact table three times — the pair collect_set, a distinct for
-    // item supports, and a countDistinct for the total — for three
-    // numbers that are all plain aggregates of the one basket table:
-    // parts is per-order DISTINCT, so exploding it IS the (order, part)
-    // distinct, and the basket count IS the distinct order count.
-    // persisted rather than checkpointed: the first consumer (a
-    // broadcast build) fills the cache as a side effect, so no separate
-    // materialization job runs; the four consumers then share one
-    // basket compute
-    val baskets = lineitem
+    // ONE fact shuffle: the basket table (order → sorted distinct part
+    // set) is materialized and feeds pair supports and item supports,
+    // and its measured row count is the basket total. parts is per-order
+    // DISTINCT, so exploding it IS the (order, part) distinct, and the
+    // basket count IS the distinct order count.
+    val baskets = graft.Materialize(lineitem
       .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(sort_array(collect_set(col("l_partkey"))).as("parts")))
+    val nBaskets = graft.Materialize.rows(baskets)
     val pairSupp = copurchasePairsOfBaskets(baskets)
       .filter(col("n_orders") >= minSupport)
     val itemSupp = baskets
       .select(explode(col("parts")).as("part"))
       .groupBy("part").agg(count(lit(1)).as("n_item"))
-    val nBaskets = baskets.agg(count(lit(1)).as("n_baskets"))
     val directed = pairSupp.select(explode(expr(
       """array(named_struct('antecedent', part_a, 'consequent', part_b),
         |      named_struct('antecedent', part_b, 'consequent', part_a))""".stripMargin))
@@ -388,11 +380,10 @@ object Graph {
         col("n_item").as("n_ante"))), Seq("antecedent"))
       .join(broadcast(itemSupp.select(col("part").as("consequent"),
         col("n_item").as("n_cons"))), Seq("consequent"))
-      .crossJoin(broadcast(nBaskets))
       .select(col("antecedent"), col("consequent"), col("n_pair"),
         col("n_ante"), col("n_cons"),
         expr("n_pair * 1000000L div n_ante").as("confidence_ppm"),
-        expr("n_pair * n_baskets * 1000000L div (n_ante * n_cons)").as("lift_ppm"))
+        expr(s"n_pair * ${nBaskets}L * 1000000L div (n_ante * n_cons)").as("lift_ppm"))
       .orderBy(desc("lift_ppm"), col("antecedent"), col("consequent"))
   }
 
@@ -465,7 +456,7 @@ object Graph {
     *  2. THRESHOLD PRUNE downstream: the primary sort key is n_common,
     *     so any final top-N row has n_common ≥ the N-th largest
     *     candidate n_common — computed with a cheap TakeOrdered over
-    *     the cached candidates, filtering BEFORE the degree joins and
+    *     the materialized candidates, filtering BEFORE the degree joins and
     *     ranked sort (they then run over ~N ties, not the full set).
     *
     * Measured sf0.1 effect of the cap: 10.7 s → ~4 s warm. */
@@ -480,27 +471,16 @@ object Graph {
       .withColumn("rn", row_number().over(byWeight))
       .filter(col("rn") <= k)
       .select(col("w"), col("x"))
-    val cand = adjCap.as("l").join(adjCap.as("r"), col("l.w") === col("r.w"))
+    // materialized: the threshold probe and the kept join both read it
+    val cand = graft.Materialize(adjCap.as("l").join(adjCap.as("r"), col("l.w") === col("r.w"))
       .filter(col("l.x") < col("r.x"))
       .select(col("l.x").as("part_a"), col("r.x").as("part_b"))
       .groupBy("part_a", "part_b")
       .agg(count(lit(1)).as("n_common"))
-      .join(edges, col("part_a") === col("a") && col("part_b") === col("b"), "left_anti")
-      // persist, not Materialize: the threshold probe is the action
-      // that fills the cache, so the candidate aggregate runs ONCE with
-      // no separate materialization job (measured ~1 s cheaper here)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(edges, col("part_a") === col("a") && col("part_b") === col("b"), "left_anti"))
     val thr = cand.orderBy(desc("n_common")).limit(topN)
       .agg(min(col("n_common")).as("thr"))
-    // the surviving candidates are ~topN ties — materialize them
-    // eagerly (tiny Materialize, reads the now-warm cache) so the
-    // big candidate aggregate can be UNPERSISTED here instead of
-    // leaking cached blocks for the session lifetime (ADVICE r8: the
-    // bench invokes this n=5 times per round)
-    val kept = graft.Materialize(cand
-      .join(broadcast(thr), col("n_common") >= col("thr")))
-    cand.unpersist(false)
-    kept
+    cand.join(broadcast(thr), col("n_common") >= col("thr"))
       .join(deg.select(col("w").as("part_a"), col("deg").as("deg_a")), Seq("part_a"))
       .join(deg.select(col("w").as("part_b"), col("deg").as("deg_b")), Seq("part_b"))
       .select(col("part_a"), col("part_b"), col("n_common"), col("deg_a"), col("deg_b"),

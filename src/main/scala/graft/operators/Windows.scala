@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -866,9 +866,9 @@ object Windows {
     *
     * Scale: the period split key comes from a BROADCAST one-row min-date
     * stat; events collapse to one row per user in a single conditional-
-    * sum aggregation (no per-period scans); the two ranking windows then
-    * run over the |users| aggregate — a single-partition sort, bounded
-    * by the leaderboard's own size, never by events. */
+    * sum aggregation (no per-period scans); the two ranks are then
+    * distributed running counts ([[graft.PrefixSum]]) over the |users|
+    * aggregate. */
   def rankChanges(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(to_date(col("ts")).as("d"), col("user_id"),
@@ -882,43 +882,15 @@ object Windows {
         expr("CAST(sum(CASE WHEN p1 THEN 1 ELSE 0 END) AS BIGINT)").as("n_p1"),
         expr("CAST(sum(CASE WHEN p1 THEN 0 ELSE 1 END) AS BIGINT)").as("n_p2"))
       .filter(col("n_p1") > 0 && col("n_p2") > 0)
-    // DISTRIBUTED global ranks (r14, VERDICT r13 #7): the two
-    // unpartitioned row_number windows funneled the whole user dimension
-    // through one partition. [[globalRowNumber]] range-partitions on the
-    // rank order, ranks locally, and adds per-partition offsets — no
-    // single-partition WindowExec over user-dimension data remains (the
-    // offset ladder is partition-count-sized). Rank VALUES are identical:
-    // the order (total desc, user asc) is total, and range partitioning
-    // preserves it across partitions whatever boundaries the sampler
-    // picks.
-    val ranked = globalRowNumber(
-      globalRowNumber(perUser, "rank_p1", col("cents_p1").desc, col("user_id").asc),
-      "rank_p2", col("cents_p2").desc, col("user_id").asc)
-    ranked
+    // each rank is the inclusive running count over its period's order
+    // (total desc, user asc); the order is total, so rank values do not
+    // depend on where the range bounds fall
+    def rank(df: DataFrame, out: String, total: String) =
+      graft.PrefixSum(df, Seq(col(total).desc, col("user_id").asc), lit(1L), out, inclusive = true)
+    rank(rank(perUser, "rank_p1", "cents_p1"), "rank_p2", "cents_p2")
       .withColumn("movement", col("rank_p1") - col("rank_p2"))
       .select("user_id", "cents_p1", "cents_p2", "rank_p1", "rank_p2", "movement")
       .orderBy("user_id")
-  }
-
-  /** Global `row_number` over a TOTAL deterministic order without a
-    * single-partition WindowExec: range-partition on the order, rank
-    * within each partition, add the cumulative row count of preceding
-    * partitions (broadcast; the only remaining unpartitioned window runs
-    * over ≤ |shuffle partitions| offset rows — bounded by cluster
-    * config, never by data). Requires `order` to be a total order (tie
-    * rows may otherwise straddle a range boundary nondeterministically). */
-  private def globalRowNumber(df: DataFrame, out: String, order: Column*): DataFrame = {
-    val withPid = df.repartitionByRange(order: _*)
-      .withColumn("_pid", spark_partition_id())
-    val byPid = Window.partitionBy("_pid").orderBy(order: _*)
-    val local = withPid.withColumn("_lrn", row_number().over(byPid))
-    val offsets = local.groupBy("_pid").agg(count(lit(1)).as("_n"))
-      .withColumn("_off", coalesce(sum(col("_n")).over(
-        Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pid", "_off")
-    local.join(broadcast(offsets), "_pid")
-      .withColumn(out, (col("_lrn") + col("_off")).cast("long"))
-      .drop("_pid", "_lrn", "_off")
   }
 
   /** MAX DRAWDOWN per user — the classic equity-curve risk metric over a

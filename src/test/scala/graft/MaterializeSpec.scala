@@ -19,8 +19,9 @@ import graft.sources.Tables
 /** [[Materialize]]: the leaf it returns keeps the executed plan's
   * partitioning, ordering and measured row count; loops built on it run
   * concurrently without sharing state; the caller's conf is untouched;
-  * it is the only code under `src/main` that checkpoints, so every
-  * round of every loop reaches listeners as one `materialize` execution. */
+  * it is the only code under `src/main` that checkpoints or caches, so
+  * every round of every loop reaches listeners as one `materialize`
+  * execution and no query leaves cached data behind. */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = Sessions.local("4", "graft-materialize-test")
   val dir = "/root/testdata/sf0.001"
@@ -115,8 +116,22 @@ class MaterializeSpec extends AnyFunSuite {
       .filter(_.getName != "Materialize.scala")
       .filter { f =>
         val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        src.contains("localCheckpoint") || src.contains(".checkpoint(")
+        Seq("localCheckpoint", ".checkpoint(", ".persist(", ".cache()", "unpersist")
+          .exists(src.contains)
       }
-    assert(offenders.isEmpty, s"checkpoint outside graft.Materialize: ${offenders.mkString(", ")}")
+    assert(offenders.isEmpty,
+      s"checkpoint or cache outside graft.Materialize: ${offenders.mkString(", ")}")
+  }
+
+  test("the queries that kept an intermediate leave the cache manager empty") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache() // entries other specs of this JVM cached
+    Seq("agg_equidepth_hist", "ta_pack_sequences", "win_rank_changes",
+      "rel_assoc_rules", "rel_link_predict", "ta_memorization_rate", "ta_novelty_curve")
+      .foreach { name =>
+        Measure.force(SparkEntry.queries(name)(spark, dir))
+        assert(cache.isEmpty, s"$name left cached data behind")
+      }
   }
 }

@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Hand-built cases for the Gopher-style repetition filters: the
   * run-length fold over sorted grams must equal the per-gram counts a
   * group-by would produce (the DuckDB oracle derives them that way),
-  * and the ppm ladders must fire on degenerate repetition. */
+  * and the ppm ladders must fire on degenerate repetition. The
+  * cross-split memorization rate (verbatim 8-gram overlap) is pinned
+  * on testdata. */
 class RepetitionSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-repetition-test")
 
@@ -68,5 +70,17 @@ class RepetitionSpec extends AnyFunSuite {
       "the quick brown fox jumps over the lazy dog while a bird sings " +
         "softly in the warm morning light near the old stone bridge")))).collect()(0)
     assert(r.getAs[Boolean]("keep"))
+  }
+
+  test("memorizationRate on testdata: rates are valid ppm and grams counted") {
+    val rows = graft.functions.TextAnalysis.memorizationRate(spark, "/root/testdata/sf0.001")
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_grams") > 0L)
+      assert(r.getAs[Long]("n_memorized") <= r.getAs[Long]("n_grams"))
+      val ppm = r.getAs[Long]("memorized_ppm")
+      assert(ppm >= 0L && ppm <= 1000000L)
+    }
   }
 }

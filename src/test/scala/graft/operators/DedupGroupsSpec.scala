@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pairs → connected components → keep-set: the transitive closure that
   * turns candidate PAIRS into dedup GROUPS. (a,b),(b,c) must collapse to
-  * ONE group of 3 — keeping per-pair winners would over-keep b or c. */
+  * ONE group of 3 — keeping per-pair winners would over-keep b or c.
+  * The bias audit splits cohorts on the keep-set's canonical flag. */
 class DedupGroupsSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-dedup-groups-test")
   import spark.implicits._
@@ -162,5 +163,19 @@ class DedupGroupsSpec extends AnyFunSuite {
     assert(byLang("en")._4 == base.length.toLong)
     assert(byLang("de")._2 == 2L && byLang("de")._3 == 2L,
       s"de should keep both: ${byLang("de")}")
+  }
+
+  test("dedupBiasAuditOf: cohorts split on the canonical flag") {
+    import spark.implicits._
+    val docs = Seq((1L, "a", "en", "w", 100L), (2L, "a", "en", "w", 40L),
+      (3L, "b", "en", "w", 10L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val groups = Seq((1L, 1L, 2L, true), (2L, 1L, 2L, false), (3L, 3L, 1L, true))
+      .toDF("doc_id", "group_id", "group_size", "is_canonical")
+    val r = Dedup.dedupBiasAuditOf(docs, groups).collect()
+      .map(x => x.getAs[String]("cohort") ->
+        (x.getAs[Long]("n_docs"), x.getAs[Long]("mean_chars"))).toMap
+    assert(r("kept") === ((2L, 55L)))    // (100+10)/2
+    assert(r("dropped") === ((1L, 40L)))
   }
 }

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Market-basket co-purchase and k-NN-sparsified triangle counting:
-  * brute-force differentials on testdata plus hand-built known-answer
-  * graphs for the triangle enumerator. */
+/** Market-basket co-purchase, k-NN-sparsified triangle counting, k-hop
+  * reach and co-purchase components: brute-force differentials on
+  * testdata plus hand-built known-answer graphs. */
 class GraphMiningSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-graphmining-test")
   private val dir = "/root/testdata/sf0.001"
@@ -88,5 +88,47 @@ class GraphMiningSpec extends AnyFunSuite {
       (1L, 2L, 3L, 4L, 4L, 750000L, 937500L),
       (2L, 1L, 3L, 4L, 4L, 750000L, 937500L))
     assert(got.toSeq == want, s"rule math mismatch:\n got  ${got.toSeq}\n want $want")
+  }
+
+  test("khopReachOf: BFS levels on a path graph count each node at its first hop") {
+    import spark.implicits._
+    // path 1-2-3-4-5 (undirected); seed at node 1
+    val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val seeds = Seq(1L).toDF("seed")
+    val got = Graph.khopReachOf(edges, seeds, 4)
+      .collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(1))).toSet
+    // hop 1 reaches {2}, hop 2 {3}, hop 3 {4}, hop 4 {5} — one new node each
+    assert(got === Set((1L, 1, 1L), (1L, 2, 1L), (1L, 3, 1L), (1L, 4, 1L)))
+  }
+
+  test("khopReachOf: a hop that reaches nothing new emits no row") {
+    import spark.implicits._
+    val und = Seq((1L, 2L), (2L, 3L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val got = Graph.khopReachOf(edges, Seq(1L).toDF("seed"), 3)
+      .collect().map(r => r.getInt(2)).toSet
+    assert(got === Set(1, 2)) // graph exhausted after hop 2; no hop-3 row
+  }
+
+  test("khopReachOf: overlapping frontiers from two seeds stay per-seed") {
+    import spark.implicits._
+    // star: center 10, leaves 1..4; seeds at leaves 1 and 2
+    val und = (1L to 4L).map(i => (i, 10L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val got = Graph.khopReachOf(edges, Seq(1L, 2L).toDF("seed"), 2)
+      .collect().map(r => ((r.getLong(0), r.getInt(2)), r.getLong(1))).toMap
+    // hop 1: just the center; hop 2: the other three leaves (not the seed itself)
+    assert(got === Map((1L, 1) -> 1L, (1L, 2) -> 3L, (2L, 1) -> 1L, (2L, 2) -> 3L))
+  }
+
+  test("copurchaseComponents on testdata: sizes partition the pair-graph node set") {
+    val comps = Graph.copurchaseComponents(spark, "/root/testdata/sf0.001").collect()
+    assert(comps.nonEmpty)
+    // component ids are distinct minima; every component has >= 2 nodes
+    // (singletons can't arise from a pair graph)
+    val ids = comps.map(_.getLong(0))
+    assert(ids.distinct.length === ids.length)
+    comps.foreach(r => assert(r.getLong(1) >= 2L, s"undersized component: $r"))
   }
 }

@@ -3,55 +3,13 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Hand-built cases for the round-8 operator additions: k-hop BFS
-  * levels, co-purchase connected components, the compaction planner's
-  * offset-range packing, and CCNet perplexity bucketing. The DuckDB
-  * oracle gate proves each on the synthetic corpus; these pin the core
-  * rules on graphs/inventories small enough to check by hand. */
+/** Hand-built cases for the round-8 operator additions: the compaction
+  * planner's offset-range packing, CCNet perplexity bucketing and the
+  * event-stream operators (the graph cases live in [[GraphMiningSpec]]).
+  * The DuckDB oracle gate proves each on the synthetic corpus; these pin
+  * the core rules on inventories small enough to check by hand. */
 class Round8OpsSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-round8-test")
-
-  test("khopReachOf: BFS levels on a path graph count each node at its first hop") {
-    import spark.implicits._
-    // path 1-2-3-4-5 (undirected); seed at node 1
-    val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val seeds = Seq(1L).toDF("seed")
-    val got = Graph.khopReachOf(edges, seeds, 4)
-      .collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(1))).toSet
-    // hop 1 reaches {2}, hop 2 {3}, hop 3 {4}, hop 4 {5} — one new node each
-    assert(got === Set((1L, 1, 1L), (1L, 2, 1L), (1L, 3, 1L), (1L, 4, 1L)))
-  }
-
-  test("khopReachOf: a hop that reaches nothing new emits no row") {
-    import spark.implicits._
-    val und = Seq((1L, 2L), (2L, 3L))
-    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val got = Graph.khopReachOf(edges, Seq(1L).toDF("seed"), 3)
-      .collect().map(r => r.getInt(2)).toSet
-    assert(got === Set(1, 2)) // graph exhausted after hop 2; no hop-3 row
-  }
-
-  test("khopReachOf: overlapping frontiers from two seeds stay per-seed") {
-    import spark.implicits._
-    // star: center 10, leaves 1..4; seeds at leaves 1 and 2
-    val und = (1L to 4L).map(i => (i, 10L))
-    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val got = Graph.khopReachOf(edges, Seq(1L, 2L).toDF("seed"), 2)
-      .collect().map(r => ((r.getLong(0), r.getInt(2)), r.getLong(1))).toMap
-    // hop 1: just the center; hop 2: the other three leaves (not the seed itself)
-    assert(got === Map((1L, 1) -> 1L, (1L, 2) -> 3L, (2L, 1) -> 1L, (2L, 2) -> 3L))
-  }
-
-  test("copurchaseComponents on testdata: sizes partition the pair-graph node set") {
-    val comps = Graph.copurchaseComponents(spark, "/root/testdata/sf0.001").collect()
-    assert(comps.nonEmpty)
-    // component ids are distinct minima; every component has >= 2 nodes
-    // (singletons can't arise from a pair graph)
-    val ids = comps.map(_.getLong(0))
-    assert(ids.distinct.length === ids.length)
-    comps.foreach(r => assert(r.getLong(1) >= 2L, s"undersized component: $r"))
-  }
 
   test("planFiles: offset-range packing is contiguous and bins sum to the inventory") {
     import spark.implicits._

@@ -253,18 +253,6 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(r(0).getAs[Long]("max_s") === 30L)
   }
 
-  test("memorizationRate on testdata: rates are valid ppm and grams counted") {
-    val rows = graft.functions.TextAnalysis.memorizationRate(spark, "/root/testdata/sf0.001")
-      .collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_grams") > 0L)
-      assert(r.getAs[Long]("n_memorized") <= r.getAs[Long]("n_grams"))
-      val ppm = r.getAs[Long]("memorized_ppm")
-      assert(ppm >= 0L && ppm <= 1000000L)
-    }
-  }
-
   test("audienceOverlapOf: exact Jaccard on a hand overlap") {
     // u1 {click,view}, u2 {view}, u3 {click,view}: both=2, union=3
     val df = eventsDf(Seq(
@@ -392,20 +380,6 @@ class Round9OpsSpec extends AnyFunSuite {
       val d = r.getAs[Long]("alloc_units") - r.getAs[Long]("fl")
       assert(d === 0L || d === 1L)
     }
-  }
-
-  test("dedupBiasAuditOf: cohorts split on the canonical flag") {
-    import spark.implicits._
-    val docs = Seq((1L, "a", "en", "w", 100L), (2L, "a", "en", "w", 40L),
-      (3L, "b", "en", "w", 10L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val groups = Seq((1L, 1L, 2L, true), (2L, 1L, 2L, false), (3L, 3L, 1L, true))
-      .toDF("doc_id", "group_id", "group_size", "is_canonical")
-    val r = Dedup.dedupBiasAuditOf(docs, groups).collect()
-      .map(x => x.getAs[String]("cohort") ->
-        (x.getAs[Long]("n_docs"), x.getAs[Long]("mean_chars"))).toMap
-    assert(r("kept") === ((2L, 55L)))    // (100+10)/2
-    assert(r("dropped") === ((1L, 40L)))
   }
 
   test("heldoutPpl on testdata: train scores above heldout under its own model") {
