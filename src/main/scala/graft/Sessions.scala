@@ -7,11 +7,6 @@ import org.apache.spark.sql.SparkSession
   * Settings that matter for correctness & scale:
   *  - `session.timeZone=UTC`: reference uses local-time epoch conversion
   *    (SURVEY §1.2); we pin UTC so hour/date derivations are reproducible.
-  *  - `legacy.parquet.nanosAsLong=true`: tolerance for TIMESTAMP(NANOS)
-  *    parquet (one historical testdata generation used it; the current
-  *    data is TIMESTAMP_NTZ micros, which this flag doesn't affect).
-  *    [[graft.sources.Tables.events]] branches on the scanned schema and
-  *    handles both encodings.
   *  - shuffle partitions = cores for local runs (not the 200 default);
   *    on a real cluster this would be sized to data volume / AQE target.
   *  - AQE on: runtime coalescing + skew-join splitting at scale.
@@ -64,7 +59,6 @@ object Sessions {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.codegen.useIdInClassName", "false")

@@ -248,7 +248,6 @@ object CorpusOps {
     * (TakeOrderedAndProject — per-partition top-N then merge, never a
     * full sort at 100 TB). */
   def dsirWeights(spark: SparkSession, dir: String, topN: Int = 32): DataFrame = {
-    import graft.sources.IndexStore
     val docs = Tables.documents(spark, dir)
     // The raw-corpus bucket histogram is the FITTED half of the
     // importance sampler — corpus-derived, deterministic, 4096 rows. It
@@ -257,8 +256,7 @@ object CorpusOps {
     // every later session) pays exactly ONE explode+md5 pass over the
     // corpus instead of two. At 100 TB the raw LM fit is an ingest-time
     // job, not a per-query one (Xie et al. fit it once, too).
-    val raw = IndexStore.orBuild(spark,
-      s"ta_dsirraw_${IndexStore.keyOf(dir)}", 8, Seq("b"))(
+    val raw = graft.sources.IndexStore.orBuild(spark, dir, "ta_dsirraw", 8, Seq("b"))(
       rawBucketHistogram(docs))
     dsirServe(featsOf(docs), raw, topN)
   }

@@ -362,9 +362,8 @@ object TextAnalysis {
     // dedup stage's reps/band tables persisted per corpus — the
     // quality-gate survivor slice is deterministic, so its index gets
     // the same build-once lifecycle as the doc-level dedup family
-    val prefix = s"ta_pipe_${graft.sources.IndexStore.keyOf(dir)}"
     corpusPipelineImpl(Tables.documents(spark, dir),
-      q => graft.operators.Dedup.dedupGroupsPersisted(spark, prefix, q))
+      q => graft.operators.Dedup.dedupGroupsPersisted(spark, dir, "ta_pipe", q))
   }
 
   /** [[corpusPipeline]] over any (doc_id, text, lang) frame (spec entry
@@ -539,10 +538,8 @@ object TextAnalysis {
                      k: Int = 5, nExp: Int = 3): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val (postName, statName) = buildBm25Index(spark, dir)
-    val post = spark.table(postName) // (doc_id, token, tf, dl)
-    val stats = spark.table(statName) // (n_docs, total_len)
-    val dfTab = spark.table(buildBm25DfTable(spark, dir)) // (token, df)
+    val (post, stats) = buildBm25Index(spark, dir) // (doc_id, token, tf, dl), (n_docs, total_len)
+    val dfTab = buildBm25DfTable(spark, dir) // (token, df)
     val qpairs = graft.functions.CorpusOps.benchmarkSentences.zipWithIndex
       .flatMap { case (s, i) => s.toLowerCase.split(" ").distinct.map(t => (i.toLong, t)) }
     val qtok = qpairs.toDF("q_id", "token")
@@ -613,21 +610,19 @@ object TextAnalysis {
     * full-corpus tf/dl groupBys were the 24×/2.8 GB-spill row; the
     * persisted probe reads only the query tokens' postings, and the
     * df-per-token aggregation runs exchange-free off the bucketed scan).
-    * Returns (postingsTable, statsTable). */
-  def buildBm25Index(spark: SparkSession, dir: String): (String, String) =
+    * Returns the (postings, stats) frames. */
+  def buildBm25Index(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     buildBm25IndexOf(spark, dir, tag = "", pred = lit(true))
 
   /** The BASE slice's index for the incremental variant: only documents
     * with `doc_id % 7 != 0` — the corpus as of "yesterday's" build. */
-  def buildBm25BaseIndex(spark: SparkSession, dir: String): (String, String) =
+  def buildBm25BaseIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     buildBm25IndexOf(spark, dir, tag = "base_", pred = col("doc_id") % 7 =!= 0)
 
   private def buildBm25IndexOf(spark: SparkSession, dir: String,
-                               tag: String, pred: Column): (String, String) = {
-    val key = graft.sources.IndexStore.keyOf(dir)
-    val postName = s"bm25_${tag}postings_$key"
-    val statName = s"bm25_${tag}stats_$key"
-    val post = graft.sources.IndexStore.orBuild(spark, postName, buckets = 8, keys = Seq("token")) {
+                               tag: String, pred: Column): (DataFrame, DataFrame) = {
+    val post = graft.sources.IndexStore.orBuild(
+      spark, dir, s"bm25_${tag}postings", buckets = 8, keys = Seq("token")) {
       val toks = Tables.documents(spark, dir).filter(pred)
         .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
         .filter(length(col("token")) > 0)
@@ -635,11 +630,12 @@ object TextAnalysis {
       val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
       tf.join(dl, "doc_id")
     }
-    graft.sources.IndexStore.orBuild(spark, statName, buckets = 1, keys = Seq("n_docs")) {
+    val stats = graft.sources.IndexStore.orBuild(
+      spark, dir, s"bm25_${tag}stats", buckets = 1, keys = Seq("n_docs")) {
       post.select("doc_id", "dl").distinct()
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
     }
-    (postName, statName)
+    (post, stats)
   }
 
   /** Per-token document-frequency table over the persisted postings —
@@ -649,13 +645,11 @@ object TextAnalysis {
     * the postings. Values are exactly `postings.groupBy(token).count`,
     * i.e. identical to computing df at query time — the oracle is
     * unaffected. */
-  def buildBm25DfTable(spark: SparkSession, dir: String): String = {
-    val (postName, _) = buildBm25Index(spark, dir)
-    val dfName = s"bm25_df_${graft.sources.IndexStore.keyOf(dir)}"
-    graft.sources.IndexStore.orBuild(spark, dfName, buckets = 8, keys = Seq("token")) {
-      spark.table(postName).groupBy("token").agg(count(lit(1)).as("df"))
+  def buildBm25DfTable(spark: SparkSession, dir: String): DataFrame = {
+    val (post, _) = buildBm25Index(spark, dir)
+    graft.sources.IndexStore.orBuild(spark, dir, "bm25_df", buckets = 8, keys = Seq("token")) {
+      post.groupBy("token").agg(count(lit(1)).as("df"))
     }
-    dfName
   }
 
   /** [[bm25TopK]] served from the persisted postings index —
@@ -663,8 +657,8 @@ object TextAnalysis {
     * scoring, just computed at BUILD time), so it shares the
     * ta_bm25_topk oracle verbatim. */
   def bm25Persisted(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val (postName, statName) = buildBm25Index(spark, dir)
-    bm25Serve(spark, spark.table(postName), spark.table(statName), k)
+    val (post, stats) = buildBm25Index(spark, dir)
+    bm25Serve(spark, post, stats, k)
   }
 
   /** The shared BM25 serving tail over any postings `(doc_id, token,
@@ -709,11 +703,10 @@ object TextAnalysis {
     * exchange-free off the token-bucketed postings scan. This is the
     * static side of [[graft.streaming.Streams.bm25ProbeStream]]. */
   def bm25Impacts(spark: SparkSession, dir: String): DataFrame = {
-    val (postName, statName) = buildBm25Index(spark, dir)
-    val post = spark.table(postName)
+    val (post, stats) = buildBm25Index(spark, dir)
     val dfAll = post.groupBy("token").agg(count(lit(1)).as("df"))
     post.join(dfAll, "token")
-      .crossJoin(broadcast(spark.table(statName)))
+      .crossJoin(broadcast(stats))
       .withColumn("score_micro", expr(bm25ScoreMicroSql))
       .select("token", "doc_id", "score_micro")
   }
@@ -730,7 +723,7 @@ object TextAnalysis {
     * oracle verbatim. At 100 TB this is the difference between an
     * index REBUILD and an index APPEND per ingest batch. */
   def bm25Incremental(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val (postName, statName) = buildBm25BaseIndex(spark, dir)
+    val (basePost, baseStats) = buildBm25BaseIndex(spark, dir)
     val dtoks = Tables.documents(spark, dir).filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
       .filter(length(col("token")) > 0)
@@ -738,8 +731,8 @@ object TextAnalysis {
     val ddl = dtoks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val dstat = ddl.agg(count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).as("total_len"))
-    val post = spark.table(postName).unionByName(dtf.join(ddl, "doc_id"))
-    val stats = spark.table(statName).unionByName(dstat)
+    val post = basePost.unionByName(dtf.join(ddl, "doc_id"))
+    val stats = baseStats.unionByName(dstat)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_len")).as("total_len"))
     bm25Serve(spark, post, stats, k)
   }

@@ -93,20 +93,6 @@ object Dedup {
       .orderBy("doc_a")
   }
 
-  /** MinHash signatures: 8 md5-family min-hashes per doc, folded into 4
-    * LSH bands of 2 rows each. Returns (doc_id, band, bucket).
-    *
-    * The signature is ONE codegen'd pass over the shingle array
-    * ([[graft.functions.MinHashSignature]]: md5 → first-4-bytes base
-    * hash → 8 affine minima, mh_i = min((a_i·h + b_i) mod p)) — a pure
-    * per-row projection, so signature computation is entirely map-side
-    * (no explode, no shuffle); the only shuffle in the whole pipeline is
-    * the downstream (band, bucket) join. The SQL-function formulation
-    * walked the array through interpreted md5/conv lambdas plus a fold
-    * allocating an 8-element array per shingle. */
-  private def minhashBands(spark: SparkSession, dir: String): DataFrame =
-    minhashBandsOf(Tables.documents(spark, dir))
-
   // ------------------------------------- persisted dedup index tables
   // The signature derivation (md5 → shingles → 8 affine minima) is the
   // expensive map-side pass every LSH query pays; at 100 TB it is
@@ -119,21 +105,21 @@ object Dedup {
   /** Exact-group representatives of the documents table, persisted:
     * (h, doc_id, n_dups, text) bucketed by doc_id. */
   private def repsTable(spark: SparkSession, dir: String): DataFrame =
-    IndexStore.orBuild(spark, s"dd_reps_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))(
+    IndexStore.orBuild(spark, dir, "dd_reps", 32, Seq("doc_id"))(
       repsOf(Tables.documents(spark, dir)))
 
   /** MinHash band table of the exact-group REPRESENTATIVES, persisted
     * bucketed by (band, bucket) — the join key of every pair query, so
     * the candidate self-join below runs exchange-free. */
   private def repBandsTable(spark: SparkSession, dir: String): DataFrame =
-    IndexStore.orBuild(spark, s"dd_repbands_${IndexStore.keyOf(dir)}", 32, Seq("band", "bucket"))(
+    IndexStore.orBuild(spark, dir, "dd_repbands", 32, Seq("band", "bucket"))(
       minhashBandsOf(repsTable(spark, dir).select("doc_id", "text")))
 
   /** MinHash band table of ALL documents (dup rows included — the
     * contract of `dd_minhash_lsh_pairs`), persisted like
     * [[repBandsTable]]. */
   private def docBandsTable(spark: SparkSession, dir: String): DataFrame =
-    IndexStore.orBuild(spark, s"dd_docbands_${IndexStore.keyOf(dir)}", 32, Seq("band", "bucket"))(
+    IndexStore.orBuild(spark, dir, "dd_docbands", 32, Seq("band", "bucket"))(
       minhashBandsOf(Tables.documents(spark, dir)))
 
   /** Distinct LSH candidate pairs from a (doc_id, band, bucket) band
@@ -263,7 +249,6 @@ object Dedup {
     * the gate pins membership, not just counts. The batch here is the
     * deterministic doc_id % 10 = 0 slice standing in for today's crawl. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.IndexStore
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     // the corpus hash set and band table are the INDEX side of every
@@ -272,10 +257,9 @@ object Dedup {
     // MinHash signatures on every run (at 100 TB these are the
     // ingest-maintained tables the operator's doc promises; appends per
     // admitted batch keep them current)
-    val key = IndexStore.keyOf(dir)
-    val corpusHashes = IndexStore.orBuild(spark, s"dd_chash_$key", 32, Seq("h"))(
+    val corpusHashes = IndexStore.orBuild(spark, dir, "dd_chash", 32, Seq("h"))(
       corpus.select(md5(col("text")).as("h")).distinct())
-    val corpusBands = IndexStore.orBuild(spark, s"dd_cbands_$key", 32, Seq("band", "bucket"))(
+    val corpusBands = IndexStore.orBuild(spark, dir, "dd_cbands", 32, Seq("band", "bucket"))(
       minhashBandsOf(corpus.select("doc_id", "text"))
         .select(col("band"), col("bucket")).distinct())
     incrementalDedupWith(docs.filter(col("doc_id") % 10 === 0),
@@ -647,7 +631,7 @@ object Dedup {
     * at 100 TB the label table is written once at ingest and every
     * consumer bucket-joins it on doc_id. */
   private[graft] def groupsTable(spark: SparkSession, dir: String): DataFrame =
-    IndexStore.orBuild(spark, s"dd_groups_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))(
+    IndexStore.orBuild(spark, dir, "dd_groups", 32, Seq("doc_id"))(
       dedupGroupsWithPairs(Tables.documents(spark, dir),
         lshStarPairsFromBands(repBandsTable(spark, dir))))
 
@@ -660,19 +644,18 @@ object Dedup {
 
   /** [[dedupGroupsOf]] over an arbitrary DETERMINISTIC corpus slice
     * (quality-gate survivors, paragraph spans, …) with its reps, band,
-    * AND group-label tables persisted under `prefix` — the generic
-    * entry point other pipelines use to give their dedup stage the
-    * build-once index lifecycle. The group labels are the top-level
-    * artifact: on an index hit neither the signature pass nor the
-    * components fixpoint runs at all. The caller owns prefix uniqueness
-    * per (slice, corpus); [[graft.sources.IndexStore.keyOf]] supplies
-    * the corpus part. */
-  def dedupGroupsPersisted(spark: SparkSession, prefix: String, docs: DataFrame,
+    * AND group-label tables persisted as `family` over the corpus at
+    * `dir` — the generic entry point other pipelines use to give their
+    * dedup stage the build-once index lifecycle. The group labels are
+    * the top-level artifact: on an index hit neither the signature pass
+    * nor the components fixpoint runs at all. The caller owns family
+    * uniqueness per slice of a corpus. */
+  def dedupGroupsPersisted(spark: SparkSession, dir: String, family: String, docs: DataFrame,
                            checkpointDir: Option[String] = None): DataFrame =
-    IndexStore.orBuild(spark, s"${prefix}_groups", 32, Seq("doc_id"))({
-      val reps = IndexStore.orBuild(spark, s"${prefix}_reps", 32, Seq("doc_id"))(
+    IndexStore.orBuild(spark, dir, s"${family}_groups", 32, Seq("doc_id"))({
+      val reps = IndexStore.orBuild(spark, dir, s"${family}_reps", 32, Seq("doc_id"))(
         repsOf(docs))
-      val bands = IndexStore.orBuild(spark, s"${prefix}_bands", 32, Seq("band", "bucket"))(
+      val bands = IndexStore.orBuild(spark, dir, s"${family}_bands", 32, Seq("band", "bucket"))(
         minhashBandsOf(reps.select("doc_id", "text")))
       dedupGroupsWithPairs(docs, lshStarPairsFromBands(bands), checkpointDir)
     }).select("doc_id", "group_id", "group_size", "is_canonical")
@@ -771,11 +754,10 @@ object Dedup {
     * superlinear query (r7 verdict #5). Served, this is a bucketed read. */
   def paragraphDedup(spark: SparkSession, dir: String): DataFrame = {
     val mult = 100000L
-    val key = IndexStore.keyOf(dir)
-    IndexStore.orBuild(spark, s"dd_paraacct_$key", 32, Seq("doc_id"))({
+    IndexStore.orBuild(spark, dir, "dd_paraacct", 32, Seq("doc_id"))({
       val pid = pidFrameOf(paragraphs(Tables.documents(spark, dir)), mult)
       paragraphAccounting(pid,
-        dedupGroupsPersisted(spark, s"dd_para_$key", pid), mult)
+        dedupGroupsPersisted(spark, dir, "dd_para", pid), mult)
     }).orderBy("doc_id")
   }
 
@@ -888,8 +870,7 @@ object Dedup {
     * `dd_span_dedup`'s oracle — identical results by construction. */
   def spanDedupPersisted(spark: SparkSession, dir: String): DataFrame = {
     val planted = plantedDocs(spark, dir)
-    val spans = IndexStore.orBuild(spark,
-      s"dd_spans_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))(
+    val spans = IndexStore.orBuild(spark, dir, "dd_spans", 32, Seq("doc_id"))(
       matchedSpansOf(planted, 8))
     spanAccounting(planted, spans, 8)
   }

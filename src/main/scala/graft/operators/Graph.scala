@@ -206,9 +206,7 @@ object Graph {
     * 100 TB this is the difference between re-running a ~30-step
     * distributed fixpoint per query and one bucketed-table read. */
   def pageRankServed(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.IndexStore
-    val ranks = IndexStore.orBuild(spark,
-      s"pr_ranks_${IndexStore.keyOf(dir)}", 8, Seq("s_suppkey"))(
+    val ranks = graft.sources.IndexStore.orBuild(spark, dir, "pr_ranks", 8, Seq("s_suppkey"))(
       pageRankConvergedSuppliers(spark, dir))
     ranks
       .join(Tables.supplier(spark, dir).select("s_suppkey", "s_name"), "s_suppkey")

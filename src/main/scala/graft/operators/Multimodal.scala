@@ -295,9 +295,7 @@ object Multimodal {
     * ingest pipeline materializes once and appends to, not something to
     * re-derive per run. */
   def byteNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.IndexStore
-    val sigs = IndexStore.orBuild(spark,
-      s"mm_sig_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))(
+    val sigs = graft.sources.IndexStore.orBuild(spark, dir, "mm_sig", 32, Seq("doc_id"))(
       byteSimhash(binaryized(spark, dir).select("doc_id", "payload")))
     Dedup.hammingPairsOfSigs(sigs, k = 3, bits = 60, bucketLocal = true)
   }
@@ -314,10 +312,8 @@ object Multimodal {
   def byteDedupGroups(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.IndexStore
     import org.apache.spark.sql.expressions.Window
-    val groups = IndexStore.orBuild(spark,
-      s"mm_groups_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))({
-      val sigs = IndexStore.orBuild(spark,
-        s"mm_sig_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))(
+    val groups = IndexStore.orBuild(spark, dir, "mm_groups", 32, Seq("doc_id"))({
+      val sigs = IndexStore.orBuild(spark, dir, "mm_sig", 32, Seq("doc_id"))(
         byteSimhash(binaryized(spark, dir).select("doc_id", "payload")))
       val pairs = Dedup.hammingPairsOfSigs(sigs, k = 3, bits = 60, bucketLocal = true)
         .select("doc_a", "doc_b")
@@ -600,12 +596,9 @@ object Multimodal {
     * doc_id) — the base index [[pixelFeaturesPersisted]] serves and
     * [[graft.streaming.Streams.pixelFeatServeFromState]] unions the
     * stream-folded arrivals onto. */
-  private[graft] def pixelFeatureBaseTable(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.IndexStore
-    IndexStore.orBuild(spark,
-      s"mm_pixfeat_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))(
+  private[graft] def pixelFeatureBaseTable(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.IndexStore.orBuild(spark, dir, "mm_pixfeat", 32, Seq("doc_id"))(
       pixelFeatureVectors(spark, dir))
-  }
 
   /** [[pixelFeatures]] with the per-document grid VECTORS persisted per
     * corpus ([[graft.sources.IndexStore]]) — the serving path for the
@@ -683,12 +676,9 @@ object Multimodal {
     * Same contract as `mm_neardup_pairs`' byte-sig persistence and
     * `dd_span_dedup_persisted`'s span index; row-identical to the
     * scan-time query by construction, so it shares its oracle. */
-  def pixelNearDupPersisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.IndexStore
-    pixelPairsFrom(IndexStore.orBuild(spark,
-      s"mm_pixsig_${IndexStore.keyOf(dir)}", 32, Seq("doc_id"))(
+  def pixelNearDupPersisted(spark: SparkSession, dir: String): DataFrame =
+    pixelPairsFrom(graft.sources.IndexStore.orBuild(spark, dir, "mm_pixsig", 32, Seq("doc_id"))(
       pixelVariantSigs(spark, dir)))
-  }
 
   /** [[pixelNearDupPairs]]'s hamming banding over any (doc_id, simhash)
     * frame — the spec entry point for real-photo signatures. */

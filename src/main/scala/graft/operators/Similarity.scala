@@ -439,35 +439,32 @@ object Similarity {
     * [[graft.sources.IndexStore.orBuild]] (catalog hit, else re-register
     * from storage, else build — so fit and assign run once per corpus,
     * across sessions):
-    *  - `ivf_cents_<key>`: the fitted centroid table (cell, nb, ce) —
-    *    the metadata a query router loads to assign NEW queries;
-    *  - `ivf_assign_<key>`: every vector's (vec_id, cell, embedding, na),
+    *  - `ivf_cents`: the fitted centroid table (cell, nb, ce) — the
+    *    metadata a query router loads to assign NEW queries;
+    *  - `ivf_assign`: every vector's (vec_id, cell, embedding, na),
     *    written CELL-BUCKETED so the scan's bucketing co-locates each
     *    cell's candidates — the physical layout that lets a probe read
     *    only its cell's buckets.
-    * Returns (assignTable, centroidTable) catalog names. */
-  def buildIvfIndex(spark: SparkSession, dir: String): (String, String) = {
-    val assignName = s"ivf_assign_${graft.sources.IndexStore.keyOf(dir)}"
-    val centName = buildIvfCentroidTable(spark, dir)
-    graft.sources.IndexStore.orBuild(spark, assignName, buckets = 8, keys = Seq("cell")) {
-      assignWithStoredCentroids(spark, centName, Tables.embeddings(spark, dir))
+    * Returns the (assignments, centroids) frames. */
+  def buildIvfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val cents = buildIvfCentroidTable(spark, dir)
+    val assign = graft.sources.IndexStore.orBuild(
+      spark, dir, "ivf_assign", buckets = 8, keys = Seq("cell")) {
+      assignWithStoredCentroids(cents, Tables.embeddings(spark, dir))
     }
-    (assignName, centName)
+    (assign, cents)
   }
 
   /** The fitted centroid table alone — the rarely-refit metadata half of
     * the index, factored out so incremental assignment can reuse it
     * without triggering a full corpus reassignment. At most k rows, so
     * one bucket. */
-  def buildIvfCentroidTable(spark: SparkSession, dir: String): String = {
-    val centName = s"ivf_cents_${graft.sources.IndexStore.keyOf(dir)}"
-    graft.sources.IndexStore.orBuild(spark, centName, buckets = 1, keys = Seq("cell")) {
+  def buildIvfCentroidTable(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.IndexStore.orBuild(spark, dir, "ivf_cents", buckets = 1, keys = Seq("cell")) {
       import spark.implicits._
       fitIvfCentroids(spark, dir).toSeq.map { case (id, cv) => (id, cv.map(x => x * x).sum, cv) }
         .toDF("cell", "nb", "ce")
     }
-    centName
-  }
 
   /** Index MAINTENANCE for the vector side — the ingest-batch shape of
     * a deployed ANN index: centroids are fitted rarely (the stored
@@ -482,7 +479,7 @@ object Similarity {
     * a full rebuild. */
   def ivfMultiQueryIncremental(spark: SparkSession, dir: String,
                                probeBound: Long = 20L, k: Int = 5): DataFrame = {
-    val delta = assignWithStoredCentroids(spark, buildIvfCentroidTable(spark, dir),
+    val delta = assignWithStoredCentroids(buildIvfCentroidTable(spark, dir),
       Tables.embeddings(spark, dir).filter(col("vec_id") % 7 === 0))
     ivfProbeJoinTopK(ivfBaseAssignTable(spark, dir).unionByName(delta), probeBound, k)
   }
@@ -492,11 +489,10 @@ object Similarity {
     * fold ([[graft.streaming.Streams.ivfMaintainStream]]) serves off the
     * same artifact the batch incremental path does. */
   def ivfBaseAssignTable(spark: SparkSession, dir: String): DataFrame = {
-    val centName = buildIvfCentroidTable(spark, dir)
+    val cents = buildIvfCentroidTable(spark, dir)
     graft.sources.IndexStore.orBuild(
-      spark, s"ivf_base_assign_${graft.sources.IndexStore.keyOf(dir)}",
-      buckets = 8, keys = Seq("cell")) {
-      assignWithStoredCentroids(spark, centName,
+      spark, dir, "ivf_base_assign", buckets = 8, keys = Seq("cell")) {
+      assignWithStoredCentroids(cents,
         Tables.embeddings(spark, dir).filter(col("vec_id") % 7 =!= 0))
     }
   }
@@ -507,15 +503,14 @@ object Similarity {
     * literals, so per-row assignment stays the same codegen'd argmax
     * fold with zero joins, zero shuffles, zero streaming state — exactly
     * what an online query router does with a stored index. */
-  def assignWithStoredCentroids(spark: SparkSession, centTable: String,
-                                vecs: DataFrame): DataFrame =
-    assignCells(vecs, storedCentsLit(spark, centTable))
+  def assignWithStoredCentroids(cents: DataFrame, vecs: DataFrame): DataFrame =
+    assignCells(vecs, storedCentsLit(cents))
 
   /** The stored centroid table compiled to the plan-time literal the
     * argmax fold consumes — the ≤k-row metadata load of a query router
     * (bounded collect, documented like the centroid fit's). */
-  def storedCentsLit(spark: SparkSession, centTable: String): String =
-    fittedCentsLit(spark.table(centTable).select("cell", "ce").collect()
+  def storedCentsLit(cents: DataFrame): String =
+    fittedCentsLit(cents.select("cell", "ce").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1))
 
   /** [[ivfMultiQueryTopK]] served from the PERSISTED index: the probe
@@ -528,8 +523,7 @@ object Similarity {
     * BUILD time. */
   def ivfMultiQueryPersisted(spark: SparkSession, dir: String,
                              probeBound: Long = 20L, k: Int = 5): DataFrame = {
-    val (assignName, _) = buildIvfIndex(spark, dir)
-    ivfProbeJoinTopK(spark.table(assignName), probeBound, k)
+    ivfProbeJoinTopK(buildIvfIndex(spark, dir)._1, probeBound, k)
   }
 
   /** PERSISTED QUANTIZED index — the two storage levers composed, i.e.
@@ -539,14 +533,12 @@ object Similarity {
     * through [[graft.sources.IndexStore.orBuild]]: the [[buildIvfIndex]]
     * cell assignment joined to the [[sq8Coded]] code vectors, written
     * cell-bucketed so a probe's cell equi-join needs no Exchange on the
-    * index side. Returns the catalog table name. */
-  def buildIvfSq8Index(spark: SparkSession, dir: String): String = {
-    val (assignName, _) = buildIvfIndex(spark, dir)
-    val name = s"ivf_sq8_${graft.sources.IndexStore.keyOf(dir)}"
-    graft.sources.IndexStore.orBuild(spark, name, buckets = 8, keys = Seq("cell")) {
-      spark.table(assignName).select("vec_id", "cell").join(sq8Coded(spark, dir), "vec_id")
+    * index side. */
+  def buildIvfSq8Index(spark: SparkSession, dir: String): DataFrame = {
+    val (assign, _) = buildIvfIndex(spark, dir)
+    graft.sources.IndexStore.orBuild(spark, dir, "ivf_sq8", buckets = 8, keys = Seq("cell")) {
+      assign.select("vec_id", "cell").join(sq8Coded(spark, dir), "vec_id")
     }
-    name
   }
 
   /** Batch multi-query ANN over the persisted IVF+SQ8 index: candidate
@@ -557,7 +549,7 @@ object Similarity {
     * gated query. */
   def ivfSq8MultiQuery(spark: SparkSession, dir: String,
                        probeBound: Long = 20L, k: Int = 5): DataFrame = {
-    val idx = spark.table(buildIvfSq8Index(spark, dir))
+    val idx = buildIvfSq8Index(spark, dir)
     probeTopK(idx,
       idx.filter(col("vec_id") < probeBound)
         .select(col("vec_id").as("q_id"), col("cell").as("qcell"),
@@ -582,10 +574,8 @@ object Similarity {
     * table read. */
   def embeddingDedupGroups(spark: SparkSession, dir: String,
                            threshold: Double = 0.4): DataFrame = {
-    import graft.sources.IndexStore
-    val idxName =
-      s"sim_groups_t${math.round(threshold * 100)}_${IndexStore.keyOf(dir)}"
-    IndexStore.orBuild(spark, idxName, 32, Seq("vec_id"))(
+    graft.sources.IndexStore.orBuild(
+      spark, dir, s"sim_groups_t${math.round(threshold * 100)}", 32, Seq("vec_id"))(
       embeddingDedupGroupsInline(spark, dir, threshold))
       .select("vec_id", "group_id", "group_size", "is_canonical")
       .orderBy("vec_id")
@@ -626,10 +616,8 @@ object Similarity {
     * auto-geometry path for big corpora is [[embeddingDedupGroups]]. */
   def semanticDedup(spark: SparkSession, dir: String,
                     threshold: Double = 0.4): DataFrame = {
-    import graft.sources.IndexStore
-    val idxName =
-      s"sim_semdedup_t${math.round(threshold * 100)}_${IndexStore.keyOf(dir)}"
-    IndexStore.orBuild(spark, idxName, 32, Seq("vec_id"))(
+    graft.sources.IndexStore.orBuild(
+      spark, dir, s"sim_semdedup_t${math.round(threshold * 100)}", 32, Seq("vec_id"))(
       semanticDedupInline(spark, dir, threshold))
       .select("vec_id", "cell", "group_id", "group_size", "is_kept")
       .orderBy("vec_id")
@@ -902,9 +890,8 @@ object Similarity {
     * indexes. Row-identical to [[pqTopK]], shared oracle. */
   def pqPersisted(spark: SparkSession, dir: String,
                   probeBound: Long = 8L, k: Int = 5): DataFrame = {
-    val key = graft.sources.IndexStore.keyOf(dir)
     val codes = graft.sources.IndexStore.orBuild(
-      spark, s"pq_codes_$key", 8, Seq("vec_id"))(pqCodesOf(spark, dir))
+      spark, dir, "pq_codes", 8, Seq("vec_id"))(pqCodesOf(spark, dir))
     pqAdcServe(spark, dir, codes, probeBound, k)
   }
 
@@ -1414,9 +1401,7 @@ object Similarity {
     * expansion joins ride the bucketed layout. */
   def buildNndGraph(spark: SparkSession, dir: String,
                     k: Int = 10, rounds: Int = 3): DataFrame =
-    graft.sources.IndexStore.orBuild(spark,
-      s"nnd_graph_${graft.sources.IndexStore.keyOf(dir)}",
-      buckets = 8, keys = Seq("u")) {
+    graft.sources.IndexStore.orBuild(spark, dir, "nnd_graph", buckets = 8, keys = Seq("u")) {
       nndescentKnnOf(Tables.embeddings(spark, dir), k, rounds)
         .select(col("u"), col("v"), col("cos"))
     }
@@ -1570,9 +1555,8 @@ object Similarity {
   private[graft] def corpusNndGraph(spark: SparkSession, dir: String,
                                     k: Int = 10, rounds: Int = 3): DataFrame = {
     val corpus = Tables.embeddings(spark, dir).filter(col("vec_id") % 7 =!= 0)
-    graft.sources.IndexStore.orBuild(spark,
-      s"nnd_corpus_k${k}_r${rounds}_${graft.sources.IndexStore.keyOf(dir)}",
-      buckets = 8, keys = Seq("u")) {
+    graft.sources.IndexStore.orBuild(
+      spark, dir, s"nnd_corpus_k${k}_r$rounds", buckets = 8, keys = Seq("u")) {
       nndescentKnnOf(corpus, k, rounds).select(col("u"), col("v"), col("cos"))
     }
   }

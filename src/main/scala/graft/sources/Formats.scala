@@ -15,18 +15,14 @@ import org.apache.spark.sql.functions._
   * the round-trip IS the assertion. */
 object Formats {
 
-  /** Write-once ORC mirror of (doc_id, lang, n_chars); keyed like the
-    * index tables so a regenerated corpus re-materializes. */
-  private def orcMirror(spark: SparkSession, dir: String): String = {
-    val path = new java.io.File(
-      s"target/orc/docs_${IndexStore.keyOf(dir)}").getAbsolutePath
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  /** Write-once ORC mirror of (doc_id, lang, n_chars), placed and keyed
+    * like the index tables so a regenerated corpus re-materializes. */
+  private def orcMirror(spark: SparkSession, dir: String): String =
+    IndexStore.writeOnce(spark, dir, "orc_docs") { path =>
       Tables.documents(spark, dir)
         .select("doc_id", "lang", "n_chars")
         .write.mode("overwrite").orc(path)
     }
-    path
-  }
 
   /** Per-language accounting read from the ORC mirror — hash-gated
     * against DuckDB over the original parquet (`rel_orc_roundtrip`). */
@@ -44,16 +40,12 @@ object Formats {
     * splittable, appendable). Schema is pinned on the READ side
     * (required for production JSONL: schema inference scans the data
     * twice and silently widens types). */
-  private def jsonlMirror(spark: SparkSession, dir: String): String = {
-    val path = new java.io.File(
-      s"target/jsonl/docs_${IndexStore.keyOf(dir)}").getAbsolutePath
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private def jsonlMirror(spark: SparkSession, dir: String): String =
+    IndexStore.writeOnce(spark, dir, "jsonl_docs") { path =>
       Tables.documents(spark, dir)
         .select("doc_id", "lang", "source", "n_chars")
         .write.mode("overwrite").json(path)
     }
-    path
-  }
 
   /** Per-(lang, source) accounting read from the JSONL mirror with an
     * explicit schema — hash-gated against DuckDB over the original
@@ -79,10 +71,8 @@ object Formats {
     * writer to quote and double-quote); escape is pinned to '"' because
     * Spark's default backslash-escape is NOT RFC-4180 and round-trips
     * incorrectly through standards-compliant readers. */
-  private def csvMirror(spark: SparkSession, dir: String): String = {
-    val path = new java.io.File(
-      s"target/csvrt/docs_${IndexStore.keyOf(dir)}").getAbsolutePath
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private def csvMirror(spark: SparkSession, dir: String): String =
+    IndexStore.writeOnce(spark, dir, "csvrt_docs") { path =>
       Tables.documents(spark, dir)
         .select("doc_id", "lang", "text")
         .write.mode("overwrite")
@@ -93,8 +83,6 @@ object Formats {
         .option("ignoreTrailingWhiteSpace", "false")
         .csv(path)
     }
-    path
-  }
 
   /** Per-document text digest read back from the CSV mirror — the DuckDB
     * oracle md5s the ORIGINAL parquet text, so a hash match proves the

@@ -12,10 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the full derivation; a real deployment materializes them at ingest
   * and appends per batch.
   *
-  * Every persisted index resolves here: this is the only module that
-  * knows where index tables live (`SPARK_GRAFT_INDEX_ROOT`, else
-  * `target/index`), how they are laid out on storage and when they are
-  * rebuilt. Builders name a table and hand over the frame.
+  * This is the only module that names, keys, places and reads back
+  * persisted index state. A builder passes the corpus `dir` and a
+  * family name carrying the build's parameters (`bm25_postings`,
+  * `nnd_corpus_k10_r3`, `sim_groups_t40`, …) and gets the stored frame
+  * back; it never composes a key or a table name, never re-reads a
+  * table by name, and never knows where the files live
+  * (`SPARK_GRAFT_INDEX_ROOT`, else `target/index`). The table of family
+  * `f` over corpus `dir` is `f_<keyOf(dir)>` ([[nameOf]]), stored at
+  * [[pathOf]]. Plain file mirrors of a corpus (the ORC, JSON-Lines and
+  * CSV round-trips of `Formats`) are placed and probed the same way
+  * through [[writeOnce]].
   *
   * `orBuild` resolves in three steps, cheapest first:
   *  1. session-catalog hit → zero work, read the stored bucketed table;
@@ -40,8 +47,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Because an index outlives the JVM that built it, the corpus key is
   * its ONLY version: a change to a builder's logic (a new column, a
   * different tokenization, another fit) is not seen by the key and the
-  * old table is served. Such a change must rename the table (or the
-  * index directory must be deleted) until builds are versioned here.
+  * old table is served. Such a change must rename the family (or the
+  * index directory must be deleted) until builds are versioned; a build
+  * version belongs in [[nameOf]], the one place every name is made.
   * Index directories without a sidecar (written before their builder
   * resolved through here) fail the match and are rebuilt once.
   *
@@ -49,8 +57,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * same pattern as [[Tables.footerRowCount]]), never `java.io.File`: a
   * 100 TB corpus lives on HDFS/S3, where a local-FS probe would (a)
   * silently degenerate `keyOf` to path-only keying — the exact staleness
-  * bug the inventory exists to prevent — and (b) never match a sidecar,
-  * forcing a full rebuild every session (r7 verdict #3).
+  * bug the inventory exists to prevent — and (b) never match a sidecar
+  * or a mirror's `_SUCCESS`, forcing a full rebuild every session
+  * (r7 verdict #3).
   */
 object IndexStore {
 
@@ -90,10 +99,10 @@ object IndexStore {
   private def metaJson(buckets: Int, keys: Seq[String]): String =
     s"""{"buckets":$buckets,"keys":"${keys.mkString(",")}"}"""
 
-  /** Where index tables live: `SPARK_GRAFT_INDEX_ROOT` (any
+  /** Where index tables and mirrors live: `SPARK_GRAFT_INDEX_ROOT` (any
     * Hadoop-recognized URI — hdfs://, s3a://, file:) or the local
     * `target/index` default. */
-  private def indexRoot: String =
+  def indexRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_INDEX_ROOT",
       new java.io.File("target/index").getAbsolutePath)
 
@@ -128,12 +137,21 @@ object IndexStore {
       }
     } catch { case scala.util.control.NonFatal(_) => false }
 
-  /** The catalog-or-disk-or-build read: returns `name` as a DataFrame,
-    * building and persisting it (bucketed by `keys` into `buckets`) only
-    * when no session has built it before. */
-  def orBuild(spark: SparkSession, name: String, buckets: Int, keys: Seq[String],
-              root: String = indexRoot)
+  /** The table name of `family`'s index over the corpus at `dir`. */
+  def nameOf(dir: String, family: String): String = s"${family}_${keyOf(dir)}"
+
+  /** Where `family`'s index or mirror over the corpus at `dir` lives. */
+  def pathOf(dir: String, family: String): String =
+    new Path(indexRoot, nameOf(dir, family)).toString
+
+  /** The catalog-or-disk-or-build read of `family`'s index over the
+    * corpus at `dir`: returns the stored table as a DataFrame, building
+    * and persisting it (bucketed by `keys` into `buckets`) only when no
+    * session has built it before. */
+  def orBuild(spark: SparkSession, dir: String, family: String, buckets: Int,
+              keys: Seq[String], root: String = indexRoot)
              (build: => DataFrame): DataFrame = {
+    val name = nameOf(dir, family)
     if (!spark.catalog.tableExists(name)) {
       val path = new Path(root, name)
       val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
@@ -147,5 +165,16 @@ object IndexStore {
       }
     }
     spark.table(name)
+  }
+
+  /** Write-once file mirror of the corpus at `dir`: unless a complete
+    * one (`_SUCCESS`, probed through the Hadoop [[FileSystem]]) is
+    * already at [[pathOf]], `write` writes it there. Returns the path. */
+  def writeOnce(spark: SparkSession, dir: String, family: String)
+               (write: String => Unit): String = {
+    val path = pathOf(dir, family)
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(new Path(path, "_SUCCESS"))) write(path)
+    path
   }
 }

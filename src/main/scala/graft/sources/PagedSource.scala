@@ -61,8 +61,6 @@ object PagedDataSource {
       .sortBy(_.getName)
   }
 
-  def countRows(f: File): Int = pageIds(f).length
-
   /** The ids on one page (first tab-separated field per line). */
   def pageIds(f: File): Array[Long] = {
     val src = scala.io.Source.fromFile(f, "UTF-8")

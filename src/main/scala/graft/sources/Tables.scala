@@ -20,12 +20,8 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame       = table(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "lineitem")
-  /** `events.parquet` has shipped `ts` in two physical encodings across
-    * testdata generations: parquet TIMESTAMP(NANOS) (read as a nano-epoch
-    * long under `spark.sql.legacy.parquet.nanosAsLong`, kept on in
-    * [[graft.Sessions]] for tolerance) and TIMESTAMP_NTZ micros (current).
-    * We branch on the SCANNED schema — footer-only, no data read — and
-    * normalize to one contract either way:
+  /** `events.parquet` stores `ts` as parquet TIMESTAMP(MICROS) without
+    * UTC adjustment (TIMESTAMP_NTZ). Normalized to one contract:
     *  - `ts`: session-TZ TimestampType (micro precision)
     *  - `ts_ns`: nano-epoch long, for operators that band/bucket on a
     *    numeric time axis (range joins, sessionize) without per-row
@@ -35,28 +31,23 @@ object Tables {
     * that pin and fails fast under any other session zone rather than
     * silently shifting wall-clock values.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventsOf(spark, table(spark, dir, "events"))
+
+  /** [[events]]' normalization over any frame read with the events
+    * schema, batch or streaming. */
+  private[graft] def eventsOf(spark: SparkSession, raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    val raw = table(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType => // legacy nanos-as-long encoding
-        raw
-          .withColumn("ts_ns", col("ts"))
-          .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => // TIMESTAMP_NTZ / TIMESTAMP (micros)
-        // The NTZ→timestamp cast below is value-preserving ONLY under a
-        // UTC session zone; fail fast rather than silently shift every
-        // wall-clock value if the pin ever moves (r7 verdict #4).
-        val tz = spark.conf.get("spark.sql.session.timeZone")
-        require(tz == "UTC",
-          s"Tables.events requires spark.sql.session.timeZone=UTC (got '$tz'): " +
-            "the TIMESTAMP_NTZ ts column is cast to session-TZ timestamp and any " +
-            "other zone silently shifts wall-clock values")
-        raw
-          .withColumn("ts_ns", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
-          .withColumn("ts", col("ts").cast("timestamp"))
-    }
+    // fail fast rather than silently shift every wall-clock value if the
+    // UTC pin ever moves (r7 verdict #4)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    require(tz == "UTC",
+      s"Tables.events requires spark.sql.session.timeZone=UTC (got '$tz'): " +
+        "the TIMESTAMP_NTZ ts column is cast to session-TZ timestamp and any " +
+        "other zone silently shifts wall-clock values")
+    raw
+      .withColumn("ts_ns", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
+      .withColumn("ts", col("ts").cast("timestamp"))
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")

@@ -276,12 +276,11 @@ object Streams {
     * candidates. */
   def annProbeStream(spark: SparkSession, queryVecs: DataFrame, dir: String): DataFrame = {
     import graft.functions.VectorOps.quantCos
-    val (assignName, centName) = graft.operators.Similarity.buildIvfIndex(spark, dir)
+    val (index, cents) = graft.operators.Similarity.buildIvfIndex(spark, dir)
     val q = graft.operators.Similarity
-      .assignWithStoredCentroids(spark, centName, queryVecs)
+      .assignWithStoredCentroids(cents, queryVecs)
       .select(col("vec_id").as("q_id"), col("cell").as("qcell"),
         col("embedding").as("qe"), col("na").as("qna"))
-    val index = spark.table(assignName)
     q.join(index, col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
       .withColumn("cos", quantCos(col("embedding"), col("qe"), col("na"), col("qna")))
       .select(col("q_id"), col("vec_id"), col("cos"))
@@ -305,12 +304,11 @@ object Streams {
                      watermark: String = "1 minute",
                      windowLen: String = "1 minute"): DataFrame = {
     import graft.functions.VectorOps.quantCos
-    val (assignName, centName) = graft.operators.Similarity.buildIvfIndex(spark, dir)
-    val centsLit = graft.operators.Similarity.storedCentsLit(spark, centName)
+    val (index, cents) = graft.operators.Similarity.buildIvfIndex(spark, dir)
+    val centsLit = graft.operators.Similarity.storedCentsLit(cents)
     val q = graft.operators.Similarity.withAssignedCell(queries, centsLit)
       .select(col("q_id"), col("cell").as("qcell"), col("embedding").as("qe"),
         col("na").as("qna"), col(tsCol))
-    val index = spark.table(assignName)
     val scored = q
       .join(index, col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
       .withColumn("cos", quantCos(col("embedding"), col("qe"), col("na"), col("qna")))
@@ -371,9 +369,8 @@ object Streams {
     // Persisted token-bucketed via IndexStore: built once per corpus,
     // and the stream-static join re-plans against the stored table per
     // micro-batch instead of re-running the ranking window.
-    val key = graft.sources.IndexStore.keyOf(dir)
     val impacts = graft.sources.IndexStore.orBuild(
-      spark, s"bm25_impact_cap${impactCap}_$key", buckets = 8, keys = Seq("token")) {
+      spark, dir, s"bm25_impact_cap$impactCap", buckets = 8, keys = Seq("token")) {
       graft.functions.TextAnalysis.bm25Impacts(spark, dir)
         .withColumn("rnk", org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("token")
@@ -759,27 +756,14 @@ object Streams {
 
   /** File-source stream over the driver's `events.parquet` (TESTDATA).
     * File streams must declare a schema up front; we take it from the
-    * BATCH reader's parquet footer scan and then apply the same
-    * dual-encoding normalization as [[graft.sources.Tables.events]]
-    * (legacy nanos-long vs TIMESTAMP_NTZ micros) — the batch fix of the
-    * r6 testdata regeneration, mirrored so the streaming source cannot
-    * drift from the batch contract. */
+    * BATCH reader's parquet footer scan and then apply the batch
+    * normalization of [[graft.sources.Tables.events]], so the streaming
+    * source cannot drift from the batch contract. */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema)
+    graft.sources.Tables.eventsOf(spark, spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    raw.schema("ts").dataType match {
-      case LongType => // legacy nanos-as-long encoding
-        raw
-          .withColumn("ts_ns", col("ts"))
-          .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => // TIMESTAMP_NTZ / TIMESTAMP (micros); UTC pin per Sessions
-        raw
-          .withColumn("ts_ns", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
-          .withColumn("ts", col("ts").cast("timestamp"))
-    }
+      .parquet(dir))
   }
 
   /** IN-STREAM INDEX MAINTENANCE (r10 verdict #5) — the last cell of the
@@ -916,13 +900,11 @@ object Streams {
   def bm25ServeFromState(spark: SparkSession, dir: String, stateDir: String,
                          k: Int = 5): DataFrame = {
     import graft.functions.TextAnalysis
-    val (postName, statName) = TextAnalysis.buildBm25BaseIndex(spark, dir)
+    val (basePost, baseStats) = TextAnalysis.buildBm25BaseIndex(spark, dir)
     def state(sub: String): Option[DataFrame] =
       FoldState.read(spark, s"$stateDir/$sub").map(_.drop("batch_id"))
-    val post = state("post")
-      .map(spark.table(postName).unionByName(_)).getOrElse(spark.table(postName))
-    val stats = state("stats")
-      .map(spark.table(statName).unionByName(_)).getOrElse(spark.table(statName))
+    val post = state("post").map(basePost.unionByName(_)).getOrElse(basePost)
+    val stats = state("stats").map(baseStats.unionByName(_)).getOrElse(baseStats)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_len")).as("total_len"))
     TextAnalysis.bm25Serve(spark, post, stats, k)
   }
@@ -950,11 +932,11 @@ object Streams {
                         dir: String, stateDir: String,
                         checkpointDir: String, compactEvery: Int = 0,
                         maxGens: Int = 4): StreamingQuery = {
-    val centName = graft.operators.Similarity.buildIvfCentroidTable(spark, dir)
+    val cents = graft.operators.Similarity.buildIvfCentroidTable(spark, dir)
     arrivals.select("vec_id", "embedding").writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldIvfBatch(spark, batch.toDF(), centName, stateDir, batchId)
+        foldIvfBatch(batch.toDF(), cents, stateDir, batchId)
         maybeCompact(spark, stateDir, batchId, compactEvery, maxGens)
       }
       .start()
@@ -963,12 +945,10 @@ object Streams {
   /** One idempotent IVF maintenance fold (exposed for the spec's batch
     * replay): assign `batchDf` against the stored centroids, overwrite
     * this batch's own assignment partition. */
-  private[graft] def foldIvfBatch(spark: SparkSession, batchDf: DataFrame,
-                                  centTable: String, stateDir: String,
-                                  batchId: Long): Unit =
+  private[graft] def foldIvfBatch(batchDf: DataFrame, cents: DataFrame,
+                                  stateDir: String, batchId: Long): Unit =
     graft.operators.Similarity
-      .assignWithStoredCentroids(spark, centTable,
-        batchDf.select("vec_id", "embedding"))
+      .assignWithStoredCentroids(cents, batchDf.select("vec_id", "embedding"))
       .write.mode("overwrite").parquet(s"$stateDir/assign/batch_id=$batchId")
 
   /** Multi-query ANN served over base assignments ∪ every folded stream
@@ -1033,12 +1013,5 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
       }
-      .start()
-
-  /** Convenience: drive any of the above to an in-memory sink (tests,
-    * interactive inspection). */
-  def toMemorySink(df: DataFrame, name: String): StreamingQuery =
-    df.writeStream.format("memory").queryName(name)
-      .outputMode(if (df.isStreaming) OutputMode.Update() else OutputMode.Append())
       .start()
 }

@@ -201,4 +201,28 @@ class CorpusOpsSpec extends AnyFunSuite {
         r.getAs[Long]("n_re_tokens") * 100000000L / r.getAs[Long]("n_chars"))
     }
   }
+
+  test("pplBucketsOf: per-lang thirds with the typical docs in the head bucket") {
+    import spark.implicits._
+    // one language, six docs. Docs 4-6: every bigram is its first
+    // word's ONLY continuation -> MLE ppm 10^6, maximally typical =
+    // head. Docs 1-3 share structure but their (beta, alpha) back-
+    // transition is the rarer of beta's two continuations -> lower
+    // mean ppm = tail.
+    val docs = Seq(
+      (1L, "alpha beta alpha beta", "en", "s", 0L),
+      (2L, "alpha beta alpha beta", "en", "s", 0L),
+      (3L, "alpha beta alpha beta", "en", "s", 0L),
+      (4L, "gamma delta epsilon zeta", "en", "s", 0L),
+      (5L, "eta theta iota kappa", "en", "s", 0L),
+      (6L, "lam mu nu xi", "en", "s", 0L)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+    val got = graft.functions.CorpusOps.pplBucketsOf(docs)
+      .collect().map(r => (r.getInt(1), r.getLong(2))).toMap
+    assert(got === Map(1 -> 2L, 2 -> 2L, 3 -> 2L)) // ntile(3) of 6 docs: 2/2/2
+    val buckets = graft.functions.CorpusOps.pplBucketsOf(docs)
+      .collect().map(r => (r.getInt(1), r.getLong(5))).toMap // bucket -> max_ppm
+    // head bucket's scores dominate the tail bucket's
+    assert(buckets(1) > buckets(3))
+  }
 }

@@ -58,4 +58,20 @@ class QualityClassifierSpec extends AnyFunSuite {
     val b = TextAnalysis.qualityClassifierOf(docs.repartition(13)).collect().toSeq
     assert(a == b)
   }
+
+  test("blocklistFilter: ppm gate and distinct-term accounting on crafted docs") {
+    // via the public entry over a temp parquet dir with a crafted table
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("blk").toString
+    Seq(
+      (1L, "slow slow big join scan merge filter row batch line", "en", "s1", 10L),
+      (2L, "join scan merge filter row batch line key agg value", "en", "s1", 10L)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = graft.functions.TextAnalysis.blocklistFilter(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4), r.getString(6))).toList
+    // doc 1: 3 hits of 10 tokens = 300000 ppm (> 60000) over 2 distinct
+    // terms -> drop; doc 2: clean -> keep
+    assert(got === List((1L, 3L, 2L, "drop"), (2L, 0L, 0L, "keep")))
+  }
 }

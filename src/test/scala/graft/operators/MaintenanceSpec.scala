@@ -288,4 +288,26 @@ class MaintenanceSpec extends AnyFunSuite {
       .filter(!(col("cnt_o") <=> col("cnt_n")) || !(col("dig_o") <=> col("dig_n")))
     assert(dirty.count() === 0L)
   }
+
+  test("planFiles: offset-range packing is contiguous and bins sum to the inventory") {
+    import spark.implicits._
+    // 6 files of 300 bytes, target 500: offsets 0,300,...,1500 -> bins 0,0,1,1,2,3
+    val files = (1 to 6).map(i => (java.sql.Date.valueOf(f"2024-01-$i%02d"), 300L))
+      .toDF("day", "bytes")
+    val got = Maintenance.planFiles(files, 500L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.toSeq === Seq((0L, 2L, 600L), (1L, 2L, 600L), (2L, 1L, 300L), (3L, 1L, 300L)))
+  }
+
+  test("planFiles: an oversized file gets its own bin and shifts the next boundary") {
+    import spark.implicits._
+    val files = Seq(
+      (java.sql.Date.valueOf("2024-01-01"), 1200L), // bin 0 alone (overshoots target)
+      (java.sql.Date.valueOf("2024-01-02"), 100L),  // cum_prev 1200 -> bin 2
+      (java.sql.Date.valueOf("2024-01-03"), 100L)   // cum_prev 1300 -> bin 2
+    ).toDF("day", "bytes")
+    val got = Maintenance.planFiles(files, 500L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got === Seq((0L, 1L, 1200L), (2L, 2L, 200L)))
+  }
 }

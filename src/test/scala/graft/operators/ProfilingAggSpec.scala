@@ -171,4 +171,31 @@ class ProfilingAggSpec extends AnyFunSuite {
     assert(lo <= obs && obs <= hi)
     assert(a.getAs[Long]("n_resamples") === 200L)
   }
+
+  test("abSignificanceOf: chi-squared x100 matches the closed form on a hand table") {
+    import spark.implicits._
+    // 4 users: even ids 2,4 (variant A) first-purchase yes/no; odd ids
+    // 1,3 (B) both purchase-first. Table a=1 b=1 c=2 d=0 ->
+    // chi2 = 4*(1*0-1*2)^2/(2*2*3*1) = 16/12 = 1.3333 -> x100 floor 133
+    val ev = Seq(
+      // (event_id, ts_ns, user_id, event_type): first event decides
+      (1L, 1000L, 2L, "purchase"), (2L, 2000L, 2L, "view"),
+      (3L, 1000L, 4L, "view"), (4L, 2000L, 4L, "purchase"),
+      (5L, 1000L, 1L, "purchase"), (6L, 1000L, 3L, "purchase")
+    ).toDF("event_id", "ts_ns", "user_id", "event_type")
+    val r = Aggregations.abSignificanceOf(ev).collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) === ((2L, 1L, 2L, 2L)))
+    assert(r.getLong(6) === 133L && !r.getBoolean(7))
+  }
+
+  test("abSignificanceOf: equal-timestamp first events tie-break on event_id") {
+    import spark.implicits._
+    // user 2: two events at the same micro instant; event_id 1 wins ->
+    // converted. A one-sided table (users_b = 0) must not divide by zero.
+    val ev = Seq(
+      (1L, 5000L, 2L, "purchase"), (2L, 5000L, 2L, "view")
+    ).toDF("event_id", "ts_ns", "user_id", "event_type")
+    val r = Aggregations.abSignificanceOf(ev).collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(6)) === ((1L, 1L, 0L)))
+  }
 }

@@ -123,4 +123,75 @@ class WindowStatsSpec extends AnyFunSuite {
     assert(got(0).getAs[Long]("n_islands") === 1L)
     assert(got(0).getAs[Long]("covered_us") === 20L)
   }
+
+  test("cusumChangepointOf: finds the level-shift boundary on a step signal") {
+    import spark.implicits._
+    // user 1: five 1.00s then five 5.00s — CUSUM |peak| at the last
+    // low-level event (t=5); user 2: constant signal — magnitude 0
+    val ev = ((1 to 5).map(i => (1L, i.toLong, i.toLong, 100L)) ++
+      (6 to 10).map(i => (1L, i.toLong, i.toLong, 500L)) ++
+      (1 to 4).map(i => (2L, (10 + i).toLong, i.toLong, 250L)))
+      .toDF("user_id", "event_id", "t", "c")
+    val got = Windows.cusumChangepointOf(ev)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toList
+    // user 1: n=10, S=3000; cusum_k = sum(10*c - 3000): at k=5 it is
+    // 5*(1000-3000) = -10000 (the extreme); mag = 10000/10 = 1000
+    assert(got === List((1L, 5L, 1000L, 10L), (2L, 1L, 0L, 4L)))
+  }
+
+  test("maxConcurrencyOf: overlap peaks and midnight-crossing carry-in") {
+    import spark.implicits._
+    val us = 1000000L
+    val day = 86400L * us
+    // day 0: starts at t=0, 10m, 20m (1h intervals) -> peak 3;
+    // one more start 30m BEFORE midnight -> its -1 lands in day 1
+    // day 1: no starts; carry-in 1 from the straddler, which ends 30m in
+    val pts = Seq(0L, 600L * us, 1200L * us, day - 1800L * us).toDF("t")
+    val got = Windows.maxConcurrencyOf(pts, 3600L * us)
+      .collect().map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2))).toList
+    assert(got === List(("1970-01-01", 3L, 4L), ("1970-01-02", 0L, 0L)))
+  }
+
+  test("interpolateLinearOf: interior gaps fill on the straight line between neighbors") {
+    import spark.implicits._
+    // user 1: observed day1=100c, day4=400c -> day2=200, day3=300
+    val daily = Seq(
+      (1L, java.sql.Date.valueOf("2024-01-01"), 100L),
+      (1L, java.sql.Date.valueOf("2024-01-04"), 400L)
+    ).toDF("user_id", "d", "v")
+    val got = Windows.interpolateLinearOf(daily)
+      .collect().map(r => (r.getDate(1).toString, r.getBoolean(2), r.getLong(3))).toList
+    assert(got === List(
+      ("2024-01-01", true, 100L), ("2024-01-02", false, 200L),
+      ("2024-01-03", false, 300L), ("2024-01-04", true, 400L)))
+  }
+
+  test("interpolateLinearOf: declining series floors like the oracle's // (non-negative numerator)") {
+    import spark.implicits._
+    // 10c down to 3c over 3 days: exact line points 10, 7.667, 5.333, 3
+    // -> floor to 7 and 5 (the naive pv + slope*(d-pd) form would
+    // truncate toward zero and could disagree; the weighted-sum form
+    // keeps the numerator >= 0 so div == //)
+    val daily = Seq(
+      (7L, java.sql.Date.valueOf("2024-02-01"), 10L),
+      (7L, java.sql.Date.valueOf("2024-02-04"), 3L)
+    ).toDF("user_id", "d", "v")
+    val got = Windows.interpolateLinearOf(daily)
+      .collect().map(r => r.getLong(3)).toList
+    assert(got === List(10L, 7L, 5L, 3L))
+  }
+
+  test("interpolateLinearOf: spine spans [min,max] per user so edges are always observed") {
+    import spark.implicits._
+    val daily = Seq(
+      (1L, java.sql.Date.valueOf("2024-01-01"), 5L),
+      (1L, java.sql.Date.valueOf("2024-01-03"), 9L),
+      (2L, java.sql.Date.valueOf("2024-03-10"), 2L) // single-day user: one observed row
+    ).toDF("user_id", "d", "v")
+    val got = Windows.interpolateLinearOf(daily).collect()
+      .map(r => (r.getLong(0), r.getDate(1).toString, r.getBoolean(2), r.getLong(3))).toList
+    assert(got === List(
+      (1L, "2024-01-01", true, 5L), (1L, "2024-01-02", false, 7L),
+      (1L, "2024-01-03", true, 9L), (2L, "2024-03-10", true, 2L)))
+  }
 }

@@ -14,7 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class IndexStoreSpec extends AnyFunSuite {
   lazy val spark = graft.Sessions.local("4", "graft-indexstore-test")
 
-  private def freshName(): String =
+  /** The corpus directory the spec's families are keyed by; `keyOf`
+    * keys a missing directory by its path alone. */
+  private val corpus = "target/idx_spec_corpus"
+
+  private def freshFamily(): String =
     s"idx_spec_${System.nanoTime()}"
 
   private def buildDf = {
@@ -23,8 +27,9 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("second resolution after catalog loss registers from disk; build closure never runs") {
-    val name = freshName()
-    val first = IndexStore.orBuild(spark, name, 4, Seq("k"))(buildDf)
+    val family = freshFamily()
+    val name = IndexStore.nameOf(corpus, family)
+    val first = IndexStore.orBuild(spark, corpus, family, 4, Seq("k"))(buildDf)
     val firstRows = first.orderBy("id").collect().toSeq
     assert(firstRows.size == 100)
 
@@ -32,7 +37,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(!spark.catalog.tableExists(name))
 
     var rebuilt = false
-    val second = IndexStore.orBuild(spark, name, 4, Seq("k")) {
+    val second = IndexStore.orBuild(spark, corpus, family, 4, Seq("k")) {
       rebuilt = true; buildDf
     }
     assert(!rebuilt, "disk-registration path must not evaluate the build closure")
@@ -41,10 +46,10 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("re-registered table keeps its bucketing: groupBy on the key needs no shuffle") {
-    val name = freshName()
-    IndexStore.orBuild(spark, name, 4, Seq("k"))(buildDf)
-    spark.sql(s"DROP TABLE `$name`")
-    val again = IndexStore.orBuild(spark, name, 4, Seq("k"))(sys.error("no rebuild"))
+    val family = freshFamily()
+    IndexStore.orBuild(spark, corpus, family, 4, Seq("k"))(buildDf)
+    spark.sql(s"DROP TABLE `${IndexStore.nameOf(corpus, family)}`")
+    val again = IndexStore.orBuild(spark, corpus, family, 4, Seq("k"))(sys.error("no rebuild"))
     val agg = again.groupBy("k").count()
     agg.collect()
     val shuffles = agg.queryExecution.executedPlan.collect {
@@ -59,13 +64,13 @@ class IndexStoreSpec extends AnyFunSuite {
     // Hadoop URI, not a local path. file:// exercises the same Hadoop
     // FileSystem resolution, sidecar probe, and sidecar write code path
     // that hdfs:// / s3a:// would take (r7 verdict #3).
-    val name = freshName()
+    val family = freshFamily()
     val root = s"file://${new java.io.File("target/index_fsspec").getAbsolutePath}"
-    val first = IndexStore.orBuild(spark, name, 4, Seq("k"), root)(buildDf)
+    val first = IndexStore.orBuild(spark, corpus, family, 4, Seq("k"), root)(buildDf)
     val firstRows = first.orderBy("id").collect().toSeq
-    spark.sql(s"DROP TABLE `$name`")
+    spark.sql(s"DROP TABLE `${IndexStore.nameOf(corpus, family)}`")
     var rebuilt = false
-    val second = IndexStore.orBuild(spark, name, 4, Seq("k"), root) {
+    val second = IndexStore.orBuild(spark, corpus, family, 4, Seq("k"), root) {
       rebuilt = true; buildDf
     }
     assert(!rebuilt, "file:-scheme sidecar probe must re-register, not rebuild")
@@ -88,11 +93,17 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("bm25 and IVF indexes resolve through orBuild: a catalog loss re-registers their files") {
     val dir = "/root/testdata/sf0.001"
+    /** the catalog table a frame returned by a builder reads */
+    def tableOf(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if r.catalogTable.isDefined => r.catalogTable.get.identifier.table
+      }.get
     def build(): Seq[String] = {
       val (post, stats) = graft.functions.TextAnalysis.buildBm25Index(spark, dir)
       val df = graft.functions.TextAnalysis.buildBm25DfTable(spark, dir)
       val (assign, cents) = graft.operators.Similarity.buildIvfIndex(spark, dir)
-      Seq(post, stats, df, assign, cents)
+      Seq(post, stats, df, assign, cents).map(tableOf)
     }
     def location(table: String): Path =
       new Path(spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).location)
@@ -108,6 +119,8 @@ class IndexStoreSpec extends AnyFunSuite {
       }.toMap
 
     val tables = build()
+    assert(tables == Seq("bm25_postings", "bm25_stats", "bm25_df", "ivf_assign", "ivf_cents")
+      .map(IndexStore.nameOf(dir, _)))
     val before = inventory(tables)
     assert(tables.forall(t => before(t).nonEmpty), "every index table holds files")
     tables.foreach(t => spark.sql(s"DROP TABLE `$t`"))
@@ -124,12 +137,35 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("geometry drift (bucket count or keys) falls back to rebuild, not wrong metadata") {
-    val name = freshName()
-    IndexStore.orBuild(spark, name, 4, Seq("k"))(buildDf)
+    val family = freshFamily()
+    val name = IndexStore.nameOf(corpus, family)
+    IndexStore.orBuild(spark, corpus, family, 4, Seq("k"))(buildDf)
     spark.sql(s"DROP TABLE `$name`")
     var rebuilt = false
-    IndexStore.orBuild(spark, name, 8, Seq("k")) { rebuilt = true; buildDf }
+    IndexStore.orBuild(spark, corpus, family, 8, Seq("k")) { rebuilt = true; buildDf }
     assert(rebuilt, "mismatched sidecar must trigger a rebuild")
     assert(spark.catalog.tableExists(name))
+  }
+
+  test("no file under src/main except IndexStore keys, re-reads or places index state") {
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val sources = files(root).filter(_.getName.endsWith(".scala"))
+      .map(f => f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    // StreamCheck keys its own scratch splits under target/streamcheck
+    // (local file moves with ordered mtimes); Bucketing's demo reads back
+    // the tables it writes
+    val allowed = Map(
+      "keyOf(" -> Set("IndexStore.scala", "StreamCheck.scala"),
+      "spark.table(" -> Set("IndexStore.scala", "Bucketing.scala"),
+      "\"target/" -> Set("IndexStore.scala", "StreamCheck.scala"))
+    val offenders = for {
+      (pattern, owners) <- allowed.toSeq
+      (file, src) <- sources if !owners(file) && src.contains(pattern)
+    } yield s"$file: $pattern"
+    assert(offenders.isEmpty,
+      s"index state named, keyed or re-read outside IndexStore: ${offenders.mkString(", ")}")
   }
 }

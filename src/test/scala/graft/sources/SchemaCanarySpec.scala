@@ -45,9 +45,7 @@ class SchemaCanarySpec extends AnyFunSuite {
         "l_discount" -> t(DoubleType), "l_tax" -> t(DoubleType),
         "l_returnflag" -> t(StringType), "l_linestatus" -> t(StringType),
         "l_shipdate" -> ts),
-      // events.ts additionally accepts LongType: the legacy nanos-as-long
-      // encoding Tables.events still supports.
-      "events" -> Map("event_id" -> t(LongType), "ts" -> (ts + LongType),
+      "events" -> Map("event_id" -> t(LongType), "ts" -> ts,
         "user_id" -> t(LongType), "event_type" -> t(StringType),
         "value" -> t(DoubleType), "props" -> t(StringType)),
       "documents" -> Map("doc_id" -> t(LongType), "text" -> t(StringType),
@@ -78,24 +76,19 @@ class SchemaCanarySpec extends AnyFunSuite {
     }
   }
 
-  test("Tables.events yields identical values from both physical ts encodings") {
+  test("Tables.events yields the written instants and nano-epochs from TIMESTAMP_NTZ micros") {
     val base = java.nio.file.Files.createTempDirectory("ev-enc").toString
     val micros = Seq(1704067200000000L, 1704070800123456L, 1704074400999999L)
     val rows = micros.zipWithIndex.map { case (us, i) => (i.toLong, us, i.toLong % 2, "click", 1.0, "{}") }
     import spark.implicits._
     val df = rows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
-    // legacy encoding: ts is a raw nano-epoch long column
-    df.withColumn("ts", col("us") * lit(1000L)).drop("us")
-      .write.mode("overwrite").parquet(s"$base/long/events.parquet")
-    // current encoding: ts is TIMESTAMP_NTZ micros
     df.withColumn("ts", timestamp_micros(col("us")).cast("timestamp_ntz")).drop("us")
       .write.mode("overwrite").parquet(s"$base/ntz/events.parquet")
-    val a = Tables.events(spark, s"$base/long")
-      .select("event_id", "ts", "ts_ns").orderBy("event_id").collect()
     val b = Tables.events(spark, s"$base/ntz")
       .select("event_id", "ts", "ts_ns").orderBy("event_id").collect()
-    assert(a.toSeq == b.toSeq, s"legacy=${a.mkString(";")} ntz=${b.mkString(";")}")
-    assert(a.map(_.getLong(2)).toSeq == micros.map(_ * 1000L))
+    assert(b.map(_.getTimestamp(1)).toSeq == micros.map(us => java.sql.Timestamp.from(
+      java.time.Instant.ofEpochSecond(us / 1000000L, us % 1000000L * 1000L))))
+    assert(b.map(_.getLong(2)).toSeq == micros.map(_ * 1000L))
   }
 
   test("Tables.events fails fast when the session time zone is not UTC") {

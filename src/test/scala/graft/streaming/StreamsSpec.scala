@@ -695,9 +695,9 @@ class StreamsSpec extends AnyFunSuite {
     assert(state.select("vec_id").distinct().count() === arrivals.length.toLong)
     // at-least-once replay: re-folding the LAST batch under its own id
     // overwrites its own partition — served ranking unchanged
-    val centName = Similarity.buildIvfCentroidTable(spark, dir)
-    Streams.foldIvfBatch(spark, chunks.last.toSeq.toDF("vec_id", "embedding"),
-      centName, stateDir, batchId = 2)
+    val cents = Similarity.buildIvfCentroidTable(spark, dir)
+    Streams.foldIvfBatch(chunks.last.toSeq.toDF("vec_id", "embedding"),
+      cents, stateDir, batchId = 2)
     val after = Streams.ivfServeFromState(spark, dir, stateDir)
       .collect().map(_.toSeq).toSeq
     assert(after == got, "replaying the last batch changed the served ranking")
